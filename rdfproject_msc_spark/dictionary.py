@@ -47,6 +47,43 @@ class Dictionary:
         # reads it when present; ``None`` keeps the derive-on-attach
         # path (externally built dictionaries).
         self.sv_df = sv_df
+        # ``extend`` with driver rows keeps them in ONE local relation
+        # next to this base, so a chain of extensions stays two leaves
+        self._base, self._base_sv, self._local = self.df, sv_df, ()
+
+    def extend(self, fresh) -> "Dictionary":
+        """This dictionary plus new ``(id, term)`` rows: a list of tuples
+        sized by a request (``rank_new_terms``), or a data-sized
+        DataFrame. The STR-value relation, when present, extends by the
+        new rows' ``__sv`` — computed over the new rows alone (for driver
+        rows, on the local relation)."""
+        from rdfproject_msc_spark.sparql.planner import _lex_str_value
+        from rdfproject_msc_spark.store import local_relation
+
+        def with_sv(df):
+            return df.select(
+                "id",
+                "term",
+                _lex_str_value(F.col("id"), F.col("term")).alias("__sv"),
+            )
+
+        if isinstance(fresh, DataFrame):
+            sv = self.sv_df
+            return Dictionary(
+                self.df.unionAll(fresh.select("id", "term")),
+                self.broadcast_hint,
+                sv_df=None if sv is None else sv.unionAll(with_sv(fresh)),
+            )
+        local = self._local + tuple(fresh)
+        extra = local_relation(self.df.sparkSession, local, ["id", "term"])
+        sv = self._base_sv
+        out = Dictionary(
+            self._base.unionAll(extra),
+            self.broadcast_hint,
+            sv_df=None if sv is None else sv.unionAll(with_sv(extra)),
+        )
+        out._base, out._base_sv, out._local = self._base, sv, local
+        return out
 
     def _dict_side(self) -> DataFrame:
         return F.broadcast(self.df) if self.broadcast_hint else self.df

@@ -149,6 +149,7 @@ class Engine:
             self.term_style = "lexical"
         else:
             raise ValueError(f"unknown triples format: {fmt!r}")
+        self._release_store()
         self.store = TripleStore(
             df, layout=layout, cluster_by=cluster_by, **store_kwargs
         )
@@ -210,6 +211,7 @@ class Engine:
         for a reference-convention dictionary that was re-saved as
         parquet). ``dict_broadcast`` defaults False: built dictionaries
         scale with the corpus."""
+        self._release_store()
         self.store = TripleStore.read(
             self.spark, path, layout=layout, cluster_by=cluster_by
         )
@@ -257,11 +259,16 @@ class Engine:
     # -- SPARQL 1.1 Update (copy-on-write) ---------------------------------
     def update(self, update_str: str, negative_when=None) -> "Engine":
         """Apply a SPARQL UPDATE request (INSERT DATA / DELETE DATA /
-        DELETE WHERE / DELETE…INSERT…WHERE / CLEAR — sparql/update.py)
-        to this engine: the store is swapped for a copy-on-write clone,
-        the dictionary extends when INSERT introduces new terms, and
-        the SQL views re-register. Nothing on disk changes until
-        ``save()`` — the updated snapshot is a logical plan."""
+        DELETE WHERE / DELETE…INSERT…WHERE / LOAD / CLEAR and graph
+        management — sparql/update.py) to this engine. The store keeps
+        its base relation and folds each row-level change, once, into
+        two small materialized sets — ``added`` and ``removed`` — that
+        every later read composes as ``base ▷ removed ∪ added``; CLEAR,
+        DROP, COPY and MOVE replace the base instead. New terms append
+        to the dictionary, and the SQL views re-register. Nothing on
+        disk changes until ``save()``, which writes the composed
+        relation. Relations planned before the update must be planned
+        again: the superseded delta is released."""
         from rdfproject_msc_spark.sparql.update import apply_update
 
         apply_update(self, update_str, negative_when=negative_when)
@@ -355,10 +362,14 @@ class Engine:
     def vacuum(self, reindex: bool = False) -> dict:
         """Compact after an update chain: drop dictionary terms no
         longer referenced by any triple or quad (DELETE never retires
-        terms on its own), cut the stacked copy-on-write lineage by
-        materializing the compacted snapshot (``localCheckpoint`` —
-        executor-local; call ``save()`` for a durable copy), and release
-        the ingest caches the snapshot no longer reads.
+        terms on its own), fold the base and its pending ``added`` /
+        ``removed`` sets into one materialized snapshot
+        (``localCheckpoint`` — executor-local; call ``save()`` for a
+        durable copy), and release the superseded deltas and the ingest
+        caches the snapshot no longer reads. Reads need no vacuum to
+        stay fast — updates keep the store's plan bounded — so what it
+        buys is the dropped dead terms and one checkpoint in place of
+        base + delta.
 
         ``reindex=False`` (default) preserves every surviving id —
         query answers are bit-for-bit identical, encoded ids included.
@@ -371,7 +382,6 @@ class Engine:
         from pyspark.sql import functions as F
 
         from rdfproject_msc_spark.sources.ntriples import _lex_ranks
-        from rdfproject_msc_spark.sparql.update import _clone_store
 
         store = self._require_store()
         if self.dictionary is None:
@@ -475,7 +485,8 @@ class Engine:
         self.dictionary = Dictionary(
             new_dict, broadcast_hint=self.dictionary.broadcast_hint
         )
-        self.store = _clone_store(store, df=new_df, quads=new_quads)
+        self.store = store.with_base(new_df, new_quads, pin=False)
+        store.release_deltas()
         if self._register_as:
             self.store.register(self.spark, self._register_as)
         self.release_caches()
@@ -484,6 +495,11 @@ class Engine:
             "terms_after": after,
             "dropped": dropped,
         }
+
+    def _release_store(self) -> None:
+        """Release the pending update deltas of the store being replaced."""
+        if self.store is not None:
+            self.store.release_deltas()
 
     def _require_store(self) -> TripleStore:
         if self.store is None:

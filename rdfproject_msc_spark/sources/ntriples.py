@@ -253,13 +253,7 @@ def build_dictionary(
         .unionAll(parsed.select(F.col("o_term").alias("term")))
         .distinct()
     )
-    if negative_when is None:
-        neg = F.lit(False)
-    elif isinstance(negative_when, str):
-        neg = F.expr(negative_when)
-    else:
-        neg = negative_when
-    classed = terms.withColumn("__neg", neg)
+    classed = terms.withColumn("__neg", _negative_expr(negative_when))
     pos = _lex_ranks(
         classed.filter(~F.col("__neg")).select("term"), npart, caches
     )
@@ -304,23 +298,8 @@ def extend_dictionary(
         .distinct()
     )
     fresh = terms.join(dictionary.select("term"), "term", "left_anti")
-    if negative_when is None:
-        neg = F.lit(False)
-    elif isinstance(negative_when, str):
-        neg = F.expr(negative_when)
-    else:
-        neg = negative_when
-    classed = fresh.withColumn("__neg", neg)
-    # one bounded aggregation: the append bases (0 when a class is empty,
-    # so a first append onto an empty class starts at 1 / -1)
-    row = dictionary.agg(
-        F.coalesce(
-            F.max(F.when(F.col("id") > 0, F.col("id"))), F.lit(0)
-        ).alias("pos_base"),
-        F.coalesce(
-            F.max(F.when(F.col("id") < 0, -F.col("id"))), F.lit(0)
-        ).alias("neg_base"),
-    ).first()
+    classed = fresh.withColumn("__neg", _negative_expr(negative_when))
+    row = _append_bases(dictionary)
     pos = _lex_ranks(
         classed.filter(~F.col("__neg")).select("term"), npart, caches
     )
@@ -335,6 +314,60 @@ def extend_dictionary(
             "term",
         )
     )
+
+
+def _negative_expr(negative_when) -> Column:
+    if negative_when is None:
+        return F.lit(False)
+    if isinstance(negative_when, str):
+        return F.expr(negative_when)
+    return negative_when
+
+
+def _append_bases(dictionary: DataFrame):
+    """One bounded aggregation: the append bases (0 when a class is
+    empty, so a first append onto an empty class starts at 1 / -1)."""
+    return dictionary.agg(
+        F.coalesce(
+            F.max(F.when(F.col("id") > 0, F.col("id"))), F.lit(0)
+        ).alias("pos_base"),
+        F.coalesce(
+            F.max(F.when(F.col("id") < 0, -F.col("id"))), F.lit(0)
+        ).alias("neg_base"),
+    ).first()
+
+
+def rank_new_terms(
+    dictionary: DataFrame,
+    terms,
+    negative_when: Column | str | None = None,
+) -> list[tuple[int, str]]:
+    """The driver-side twin of ``extend_dictionary`` for term sets sized
+    by a request (SPARQL Update constants and graph names): ``terms`` the
+    ``dictionary`` does not hold → their ``(id, term)`` rows, bit-identical
+    to ``extend_dictionary``'s. ``negative_when`` is evaluated over a local
+    relation (no job); the only job is the append-bases aggregate.
+    Ranking sorts by code point, which is the UTF-8 byte order Spark's
+    binary string ordering uses."""
+    terms = sorted(set(terms))
+    if not terms:
+        return []
+    from rdfproject_msc_spark.store import local_relation
+
+    classed = (
+        local_relation(dictionary.sparkSession, [(t,) for t in terms], ["term"])
+        .select("term", _negative_expr(negative_when).alias("__neg"))
+        .collect()
+    )
+    row = _append_bases(dictionary)
+    out = []
+    for neg, base, sign in ((False, row["pos_base"], 1),
+                            (True, row["neg_base"], -1)):
+        # a NULL class drops the term, as extend_dictionary's filters do
+        ranked = [r["term"] for r in classed if r["__neg"] is neg]
+        out += [(sign * (int(base) + k), t)
+                for k, t in enumerate(ranked, start=1)]
+    return out
 
 
 def encode_triples(parsed: DataFrame, dictionary: DataFrame) -> DataFrame:

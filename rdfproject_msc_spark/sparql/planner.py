@@ -176,7 +176,12 @@ def _dict_relation(dictionary: "Dictionary", id_name: str, term_name: str):
             # the ingest pre-derived (and persisted) the STR values —
             # read them instead of re-running the unescape chain over
             # |dict| rows on every attach (r13, guide §2.3)
-            d = sv.select("id", "term", F.col("__sv").alias(term_name + _SV))
+            # ids are long like Dictionary.df's; an already-long id stays
+            # a bare column, so the attach still matches a cached sv_df
+            sid = F.col("id")
+            if dict(sv.dtypes)["id"] != "bigint":
+                sid = sid.cast("long").alias("id")
+            d = sv.select(sid, "term", F.col("__sv").alias(term_name + _SV))
         else:
             d = dictionary.df.withColumn(
                 term_name + _SV, _lex_str_value(F.col("id"), F.col("term"))
@@ -2055,7 +2060,7 @@ def _plan_group(
             gid = int(gval) if gkind == "id" else term_ids[gval]
             scoped = TripleStore(
                 store.quads_for_graph(gid), layout="single",
-                quads=store._quads,
+                quads=store.quads_relation,
             )
             sctx = _PlanCtx(scoped, term_ids, dictionary, ctx.litids)
             sctx._counter = ctx._counter  # plan-wide-unique col suffixes

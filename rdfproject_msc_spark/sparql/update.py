@@ -5,7 +5,7 @@ query it (PartitionQueryingSubject.java:55 — there is no write path
 anywhere). This module adds the UPDATE half of the SPARQL surface the
 way a Spark engine can honestly offer it: **copy-on-write over
 immutable DataFrames**. An update never mutates files in place — it
-derives a NEW logical triple relation (base ∪ inserts \ deletes), swaps
+derives a new store (the same base plus a folded delta, below), swaps
 it into the Engine, and re-registers the SQL views. Persisting the
 updated snapshot is an explicit ``Engine.save()`` — the same
 "write once, prune forever" story as ingest.
@@ -14,7 +14,7 @@ Supported operations (';'-separated, PREFIX decls shared):
 
 - ``INSERT DATA { triples… GRAPH <g> { triples… } … }`` — ground
   triples/quads. Terms NOT in the dictionary are appended through
-  ``sources/ntriples.extend_dictionary`` (existing ids untouched,
+  ``sources/ntriples.rank_new_terms`` (existing ids untouched,
   deterministic), so an update can introduce brand-new vocabulary.
 - ``DELETE DATA { … }`` — ground; a term absent from the dictionary
   means the triple cannot exist, so that row is a no-op (§3.1.2).
@@ -56,21 +56,36 @@ variables not bound by the WHERE group (a typo guard, like the
 planner's unknown-filter-var reject; the spec would silently drop the
 instantiation).
 
+Base + delta (store.py): an update never rewrites the store's base
+relation. Every row-level form — INSERT/DELETE DATA, DELETE/INSERT
+WHERE, LOAD, ADD — goes through ``TripleStore.with_changes``, which
+probes the base ONCE for the changed keys and folds the change into two
+materialized, deduplicated sets: ``removed ∪= D∩base; added −= D``, then
+``removed −= I; added ∪= I−base``. Reads compose ``base ▷ removed ∪
+added``, so the plan has the same leaves after one update or a hundred,
+each update's work is paid once instead of by every later read, and the
+base keeps its ``sign`` partition pruning. CLEAR /
+DROP / COPY / MOVE replace the base instead (``_clone_store``);
+``save()`` writes the composed relation and ``Engine.vacuum()`` folds
+both sets into one checkpoint.
+
 Scale design (the asymmetry drives every join below):
 
 - Ground payloads (INSERT/DELETE DATA, template constants) are bounded
   by the query STRING — driver-side handling is query-sized, never
-  data-sized (the ``encode_terms`` precedent, dictionary.py:57).
-- INSERT set-semantics never shuffles the store: the "already
-  present?" probe is ``store ⋈ broadcast(delta)`` (one scan, result ≤
-  |delta|), and the union of the survivors is exchange-free.
-- DELETE anti-joins broadcast the delete set when it is query-sized
-  (ground DATA); a DELETE WHERE match set is DATA-sized, so that
-  anti-join carries no hint — AQE picks (shuffled when it must).
-- The updated store is cloned WITHOUT re-running layout clustering:
-  stacking a ``repartitionByRange`` per update would re-shuffle 100 TB
-  per statement. The base relation keeps whatever layout it had; the
-  delta rides along unclustered until the next ``save()``.
+  data-sized (the ``encode_terms`` precedent). New terms rank on the
+  driver (``rank_new_terms``) with the ids ``extend_dictionary`` would
+  give; the one job is the append-bases aggregate.
+- A change that fits a local delta (``LOCAL_DELTA_ROWS``) folds on the
+  driver: a hash-set filter over the base is its only job, and reads
+  apply the sets as that filter plus a local relation — no join and no
+  broadcast exchange per read.
+- A data-sized change (a WHERE matching more rows, a LOAD) folds in one
+  distributed aggregation with no broadcast hint — AQE picks — and the
+  sets become a ``localCheckpoint``, released once superseded.
+- Layout clustering never re-runs: a ``repartitionByRange`` per update
+  would re-shuffle the corpus per statement. The delta rides along
+  unclustered until the next ``save()``.
 """
 
 from __future__ import annotations
@@ -91,7 +106,11 @@ from rdfproject_msc_spark.sparql.parser import (
     _skip_string,
     _skip_ws,
 )
-from rdfproject_msc_spark.store import TripleStore
+from rdfproject_msc_spark.store import (
+    LOCAL_DELTA_ROWS,
+    TripleStore,
+    local_relation,
+)
 
 TRIPLE_SCHEMA = "s long, p long, o long"
 QUAD_SCHEMA = "g long, s long, p long, o long"
@@ -642,21 +661,24 @@ def _clone_store(
     quads: DataFrame | None | str = "keep",
     graphs_disjoint: bool | None = None,
 ) -> TripleStore:
-    """Copy-on-write clone: swap the backing relations WITHOUT re-running
-    layout clustering (a ``repartitionByRange`` per update statement
-    would re-shuffle the corpus per statement; the delta rides
-    unclustered until the next ``save()``)."""
-    new = TripleStore.__new__(TripleStore)
-    new.layout = store.layout
-    new.cluster_by = store.cluster_by
-    new.num_partitions = store.num_partitions
-    new.broadcast_negative = store.broadcast_negative
-    new._df = store._df if df is None else df
-    new._quads = store._quads if isinstance(quads, str) else quads
-    new.graphs_disjoint = (
-        store.graphs_disjoint if graphs_disjoint is None else graphs_disjoint
-    )
-    return new
+    """Replace a base: the copy reads ``df`` as its default-graph base
+    and/or ``quads`` as its quad base, with that relation's pending delta
+    emptied (CLEAR / DROP / COPY / MOVE, RDFS materialization, vacuum).
+    Layout clustering does NOT re-run: a ``repartitionByRange`` per
+    statement would re-shuffle the corpus. Row-level changes go through
+    ``TripleStore.with_changes`` instead, which keeps the base and folds
+    into its delta."""
+    return store.with_base(df, quads, graphs_disjoint)
+
+
+def _append_terms(spark, dictionary: Dictionary, terms, negative_when):
+    """Append request-sized ``terms`` the dictionary lacks: ids ranked on
+    the driver (``rank_new_terms``, bit-identical to ``extend_dictionary``)
+    → (extended Dictionary, {term: id})."""
+    from rdfproject_msc_spark.sources.ntriples import rank_new_terms
+
+    rows = rank_new_terms(dictionary.df, terms, negative_when)
+    return dictionary.extend(rows), {t: i for i, t in rows}
 
 
 def _resolve_ground(
@@ -725,27 +747,10 @@ def _resolve_ground(
     known = dictionary.lookup_terms(texts) if texts else {}
     missing = [t for t in texts if t not in known]
     if extend and missing:
-        from rdfproject_msc_spark.sources.ntriples import extend_dictionary
-
-        parsed = spark.createDataFrame(
-            [(t, t, t) for t in missing],
-            "s_term string, p_term string, o_term string",
+        dictionary, fresh = _append_terms(
+            spark, dictionary, missing, negative_when
         )
-        fresh = extend_dictionary(
-            dictionary.df, parsed, negative_when=negative_when
-        )
-        # payload-bounded collect: the term set comes from the update
-        # STRING, never from data (the encode_terms precedent)
-        for r in fresh.collect():
-            known[r["term"]] = r["id"]
-        dictionary = Dictionary(
-            dictionary.df.unionAll(
-                spark.createDataFrame(
-                    [(known[t], t) for t in missing], "id long, term string"
-                )
-            ),
-            broadcast_hint=dictionary.broadcast_hint,
-        )
+        known.update(fresh)
     rows = []
     for q in quads:
         ids = []
@@ -766,87 +771,55 @@ def _resolve_ground(
     return rows, dictionary
 
 
-def _insert_triples(spark: SparkSession, store: TripleStore, rows) -> TripleStore:
-    """Set-union a query-sized delta into the default graph: one
-    broadcast semi probe of the store (scan, no shuffle), union the
-    genuinely-new rows."""
-    # dedupe driver-side: the payload is a Python list already, and a
-    # DataFrame .distinct() would put a (pointless) hash exchange over
-    # the query-sized delta into every downstream plan
-    delta = spark.createDataFrame(sorted(set(rows)), TRIPLE_SCHEMA)
-    present = store.df.join(F.broadcast(delta), ["s", "p", "o"], "left_semi")
-    fresh = delta.join(F.broadcast(present), ["s", "p", "o"], "left_anti")
-    return _clone_store(store, df=store.df.unionAll(fresh))
-
-
 def _insert_quads(spark: SparkSession, store: TripleStore, rows) -> TripleStore:
-    delta = spark.createDataFrame(sorted(set(rows)), QUAD_SCHEMA)
-    if store.has_quads:
-        base = store.quads
-        present = base.join(
-            F.broadcast(delta), ["g", "s", "p", "o"], "left_semi"
-        )
-        fresh = delta.join(
-            F.broadcast(present), ["g", "s", "p", "o"], "left_anti"
-        )
-        new_quads = base.unionAll(fresh)
-    else:
-        new_quads = delta
-        base = None
+    rows = sorted(set(rows))
     disjoint = store.graphs_disjoint
-    if disjoint:
+    if disjoint and store.has_quads:
         # the flag licenses skipping the RDF-merge dedup (store.py):
         # preserve it only if the delta provably keeps every (s,p,o)
         # in one graph — a bounded broadcast probe, else drop to False
-        probe_base = base if base is not None else spark.createDataFrame([], QUAD_SCHEMA)
-        d = delta.select(
-            "s", "p", "o", F.col("g").alias("__g_new")
-        )
+        d = local_relation(spark, rows, ["__g_new", "s", "p", "o"])
         cross = (
-            probe_base.join(F.broadcast(d), ["s", "p", "o"], "inner")
+            store.quads.join(F.broadcast(d), ["s", "p", "o"], "inner")
             .filter(F.col("g") != F.col("__g_new"))
             .limit(1)
             .count()
         )
-        within = (
-            delta.groupBy("s", "p", "o")
-            .agg(F.count_distinct("g").alias("ng"))
-            .filter(F.col("ng") > 1)
-            .limit(1)
-            .count()
-        )
-        disjoint = cross == 0 and within == 0
-    return _clone_store(store, quads=new_quads, graphs_disjoint=disjoint)
-
-
-def _delete_rows(
-    spark: SparkSession, store: TripleStore, rows, broadcast_hint: bool
-) -> TripleStore:
-    """Anti-join a delete set out of the default graph. ``broadcast_hint``
-    marks query-sized sets (ground DATA); data-sized sets (WHERE
-    matches) carry no hint — AQE picks the strategy."""
-    delta = spark.createDataFrame(rows, TRIPLE_SCHEMA)
-    return _delete_df(store, delta, broadcast_hint)
-
-
-def _delete_df(
-    store: TripleStore, delta: DataFrame, broadcast_hint: bool
-) -> TripleStore:
-    side = F.broadcast(delta) if broadcast_hint else delta
-    return _clone_store(
-        store, df=store.df.join(side, ["s", "p", "o"], "left_anti")
+        disjoint = cross == 0
+    if disjoint:
+        graphs: dict = {}
+        for g, *spo in rows:
+            graphs.setdefault(tuple(spo), set()).add(g)
+        disjoint = all(len(gs) == 1 for gs in graphs.values())
+    return store.with_changes(
+        inserted=rows, quads=True, graphs_disjoint=disjoint
     )
 
 
-def _delete_quads(spark: SparkSession, store: TripleStore, rows) -> TripleStore:
-    if not store.has_quads:
-        return store  # no named graphs: nothing those rows could match
-    delta = spark.createDataFrame(rows, QUAD_SCHEMA)
-    return _clone_store(
-        store,
-        quads=store.quads.join(
-            F.broadcast(delta), ["g", "s", "p", "o"], "left_anti"
-        ),
+def _fold_matches(
+    store: TripleStore,
+    deleted: DataFrame | None,
+    inserted: DataFrame | None,
+    quads: bool = False,
+    graphs_disjoint: bool | None = None,
+) -> TripleStore:
+    """Fold the change sets a WHERE clause instantiated: collected to the
+    driver in one action when they fit a local delta (the request-sized
+    fold), folded distributed otherwise."""
+    parts = [
+        d.withColumn("__del", F.lit(flag))
+        for d, flag in ((deleted, True), (inserted, False))
+        if d is not None
+    ]
+    if not parts:
+        return store
+    both = parts[0] if len(parts) == 1 else parts[0].unionAll(parts[1])
+    got = both.limit(LOCAL_DELTA_ROWS + 1).collect()
+    if len(got) <= LOCAL_DELTA_ROWS:
+        deleted = [tuple(r)[:-1] for r in got if r["__del"]]
+        inserted = [tuple(r)[:-1] for r in got if not r["__del"]]
+    return store.with_changes(
+        deleted, inserted, quads=quads, graphs_disjoint=graphs_disjoint
     )
 
 
@@ -891,7 +864,7 @@ def _instantiate(solutions: DataFrame, templates, const_ids):
         out = parts[0]
         for p in parts[1:]:
             out = out.unionAll(p)
-        return out.distinct()
+        return out  # duplicates collapse in the store's delta fold
 
     return _union(tri_parts), _union(quad_parts)
 
@@ -906,30 +879,15 @@ def _slot_gid(engine, slot) -> int | None:
 
 def _ensure_gid(engine, slot, negative_when) -> int:
     """Resolve a destination graph slot, APPENDING the label to the
-    dictionary when new (same incremental path as INSERT DATA: existing
-    ids untouched, payload-bounded collect — one term)."""
+    dictionary when new (same driver-side append as INSERT DATA:
+    existing ids untouched)."""
     gid = _slot_gid(engine, slot)
     if gid is not None:
         return gid
-    from rdfproject_msc_spark.sources.ntriples import extend_dictionary
-
-    spark = engine.spark
-    text = slot[1]
-    parsed = spark.createDataFrame(
-        [(text, text, text)],
-        "s_term string, p_term string, o_term string",
+    engine.dictionary, fresh = _append_terms(
+        engine.spark, engine.dictionary, [slot[1]], negative_when
     )
-    fresh = extend_dictionary(
-        engine.dictionary.df, parsed, negative_when=negative_when
-    )
-    gid = int(fresh.collect()[0]["id"])
-    engine.dictionary = Dictionary(
-        engine.dictionary.df.unionAll(
-            spark.createDataFrame([(gid, text)], "id long, term string")
-        ),
-        broadcast_hint=engine.dictionary.broadcast_hint,
-    )
-    return gid
+    return fresh[slot[1]]
 
 
 def _named_graph_exists(store: TripleStore, gid: int | None) -> bool:
@@ -1024,10 +982,9 @@ def _apply_graph_manage(
         return store  # same graph: no-op (§3.2.5–7)
     if op.dst == "default":
         if op.op == "add":
-            # set union: RDF graphs are sets — only genuinely-new rows
-            # join in (data-sized anti-join, no hint: AQE picks)
-            fresh = src_rows.join(store.df, ["s", "p", "o"], "left_anti")
-            new = _clone_store(store, df=store.df.unionAll(fresh))
+            # set union: RDF graphs are sets — the delta fold keeps only
+            # genuinely-new rows (data-sized: no hint, AQE picks)
+            new = store.with_changes(inserted=src_rows)
         else:
             new = _clone_store(store, df=src_rows)
         if op.op == "move":
@@ -1039,30 +996,29 @@ def _apply_graph_manage(
     relabeled = src_rows.select(
         F.lit(dst_gid).cast("long").alias("g"), "s", "p", "o"
     )
-    base = (
-        store.quads
-        if store.has_quads
-        else spark.createDataFrame([], QUAD_SCHEMA)
-    )
-    if op.op == "add":
-        existing = base.filter(F.col("g") == F.lit(dst_gid)).select(
-            "s", "p", "o"
-        )
-        fresh = src_rows.join(existing, ["s", "p", "o"], "left_anti")
-        new_quads = base.unionAll(
-            fresh.select(F.lit(dst_gid).cast("long").alias("g"), "s", "p", "o")
-        )
-    else:  # copy / move replace the destination graph
-        new_quads = base.filter(F.col("g") != F.lit(dst_gid)).unionAll(
-            relabeled
-        )
     if not store.has_quads:
         disjoint = True  # the result holds exactly one named graph
     elif op.op == "move" and op.src != "default":
         disjoint = store.graphs_disjoint  # relabel + remove preserves
     else:
         disjoint = False  # rows added to the quad relation: conservative
-    new = _clone_store(store, quads=new_quads, graphs_disjoint=disjoint)
+    if op.op == "add":
+        new = store.with_changes(
+            inserted=relabeled, quads=True, graphs_disjoint=disjoint
+        )
+    else:  # copy / move replace the destination graph
+        base = (
+            store.quads
+            if store.has_quads
+            else spark.createDataFrame([], QUAD_SCHEMA)
+        )
+        new = _clone_store(
+            store,
+            quads=base.filter(F.col("g") != F.lit(dst_gid)).unionAll(
+                relabeled
+            ),
+            graphs_disjoint=disjoint,
+        )
     if op.op == "move":
         if op.src == "default":
             new = _clone_store(
@@ -1080,418 +1036,381 @@ def apply_update(engine, src: str, negative_when=None) -> None:
     (later operations see earlier results). Mutates ``engine.store``
     (copy-on-write clone) and, when INSERT introduces new terms,
     ``engine.dictionary``."""
-    from rdfproject_msc_spark.sparql.planner import sparql_to_df
-
     spark = engine.spark
     ops = parse_update(src, term_style=engine.term_style)
     if negative_when is None:
         negative_when = getattr(engine, "_negative_when", None)
     for op in ops:
         store = engine._require_store()
-        if isinstance(op, GroundData):
-            if not op.quads:
-                continue
-            rows, new_dict = _resolve_ground(
-                spark, engine.dictionary, op.quads, op.insert, negative_when
-            )
-            if op.insert:
-                engine.dictionary = new_dict
-            t_rows = [r[1:] for r in rows if r[0] is None]
-            q_rows = [r for r in rows if r[0] is not None]
-            if op.insert:
-                if t_rows:
-                    store = _insert_triples(spark, store, t_rows)
-                if q_rows:
-                    store = _insert_quads(spark, store, q_rows)
-            else:
-                if t_rows:
-                    store = _delete_rows(spark, store, t_rows, broadcast_hint=True)
-                if q_rows:
-                    store = _delete_quads(spark, store, q_rows)
-            engine.store = store
-        elif isinstance(op, Modify):
-            # WITH (§3.1.3): default-graph template entries retarget to
-            # the named graph; explicit GRAPH blocks keep their own
-            def _retarget(tpl):
-                if op.with_slot is None:
-                    return tpl
-                return tuple(
-                    (g if g is not None else op.with_slot, tp)
-                    for g, tp in tpl
-                )
-
-            delete_tpl = _retarget(op.delete_tpl)
-            insert_tpl = _retarget(op.insert_tpl)
-            tpl_vars = sorted(
-                {
-                    str(slot[1])
-                    for g_slot, tp in delete_tpl + insert_tpl
-                    for slot in ((g_slot,) if g_slot else ())
-                    + (tp.s, tp.p, tp.o)
-                    if slot[0] == "var"
-                    # template blank nodes are NEVER WHERE bindings —
-                    # §3.1.3.2 instantiates them fresh per solution
-                    # (minted below), so they must not project
-                    and not str(slot[1]).startswith("__bn")
-                }
-            )
-            proj = (
-                " ".join(f"?{v}" for v in tpl_vars) if tpl_vars else "*"
-            )
-            # USING [NAMED] lowers verbatim onto FROM / FROM NAMED —
-            # §3.1.3: when present the WHERE's dataset is exactly what
-            # the clauses describe. Absent USING, WITH's graph is the
-            # active default (FROM <g>); a GRAPH block inside would
-            # then see an EMPTY named-graph set under the planner's
-            # exact-dataset rule while the spec keeps the full graph
-            # store — reject rather than silently narrow.
-            if op.using:
-                dataset = " ".join(
-                    ("FROM NAMED " if kind == "named" else "FROM ") + tok
-                    for kind, tok in op.using
-                )
-            elif op.with_token is not None:
-                if re.search(r"\bGRAPH\b", op.where_src, re.I):
-                    raise SparqlSyntaxError(
-                        "GRAPH blocks inside a WITH-scoped WHERE need "
-                        "explicit USING NAMED clauses (the planner's "
-                        "dataset is exactly what the clauses describe; "
-                        "WITH alone would silently hide every named "
-                        "graph from the block)"
-                    )
-                dataset = f"FROM {op.with_token}"
-            else:
-                dataset = ""
-            query = (
-                f"{op.prefixes_src}\nSELECT {proj} {dataset} "
-                f"WHERE {{ {op.where_src} }}"
-            )
-            solutions = sparql_to_df(
-                store, query, engine.dictionary, term_style=engine.term_style
-            )
-            # INSERT-template blank nodes (§3.1.3.2, r11): one FRESH
-            # node per solution — label = "_:u" + a template digest
-            # (positional, stable under anonymous-label renaming) + a
-            # solution-value key + the label's index; co-refers across
-            # that solution's template triples, distinct across
-            # solutions and across different templates, and replay-
-            # deterministic (value-equal duplicate solutions mint the
-            # same node — the inserted graph is a set). The labels are
-            # DATA-sized vocabulary: distributed incremental append
-            # (eager checkpoint, rank caches released), the engine's
-            # dictionary extends for real — inserts persist.
-            fresh_labels: list[str] = []
-            for g_slot, tp in insert_tpl:
-                for slot in (tp.s, tp.o):
-                    name = str(slot[1])
-                    if (
-                        slot[0] == "var"
-                        and name.startswith("__bn")
-                        and name not in fresh_labels
-                    ):
-                        fresh_labels.append(name)
-            if fresh_labels:
-                import hashlib as _hashlib
-
-                from rdfproject_msc_spark.sources.ntriples import (
-                    extend_dictionary,
-                )
-
-                canon = repr(
-                    [
-                        (
-                            g,
-                            tuple(
-                                ("bnode", fresh_labels.index(str(s[1])))
-                                if (
-                                    s[0] == "var"
-                                    and str(s[1]).startswith("__bn")
-                                )
-                                else s
-                                for s in (tp.s, tp.p, tp.o)
-                            ),
-                        )
-                        for g, tp in insert_tpl
-                    ]
-                )
-                tdig = _hashlib.md5(canon.encode()).hexdigest()[:8]
-                base_cols = sorted(solutions.columns)
-                key = F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.coalesce(F.col(c).cast("string"), F.lit(""))
-                            for c in base_cols
-                        ],
-                    )
-                )
-                lab_rel = None
-                for k, lbl in enumerate(fresh_labels):
-                    solutions = solutions.withColumn(
-                        f"__ulab{k}",
-                        F.concat(
-                            F.lit(f"_:u{tdig}-"), key, F.lit(f"-{k}")
-                        ),
-                    )
-                    part = solutions.select(
-                        F.col(f"__ulab{k}").alias("s_term")
-                    )
-                    lab_rel = (
-                        part if lab_rel is None else lab_rel.unionAll(part)
-                    )
-                parsed = lab_rel.select(
-                    "s_term",
-                    F.col("s_term").alias("p_term"),
-                    F.col("s_term").alias("o_term"),
-                )
-                mint_caches: list = []
-                fresh_ids = extend_dictionary(
-                    engine.dictionary.df, parsed, caches=mint_caches
-                ).localCheckpoint(eager=True)
-                for c in mint_caches:
-                    c.unpersist()  # the checkpoint no longer reads them
-                engine.dictionary = Dictionary(
-                    engine.dictionary.df.unionAll(fresh_ids),
-                    broadcast_hint=engine.dictionary.broadcast_hint,
-                )
-                ext = engine.dictionary.df
-                for k, lbl in enumerate(fresh_labels):
-                    m = ext.withColumnRenamed(
-                        "id", f"__uid{k}"
-                    ).withColumnRenamed("term", f"__ut{k}")
-                    solutions = (
-                        solutions.join(
-                            m,
-                            F.col(f"__ulab{k}") == F.col(f"__ut{k}"),
-                            "left",
-                        )
-                        .drop(f"__ut{k}")
-                        .withColumn(lbl, F.col(f"__uid{k}"))
-                        .drop(f"__uid{k}", f"__ulab{k}")
-                    )
-            # template constants: insert-side terms may be NEW (extend);
-            # delete-side unknown terms simply instantiate nothing
-            ins_texts = sorted(
-                {
-                    slot[1]
-                    for g_slot, tp in insert_tpl
-                    for slot in ((g_slot,) if g_slot else ())
-                    + (tp.s, tp.p, tp.o)
-                    if slot[0] == "term"
-                }
-            )
-            del_texts = sorted(
-                {
-                    slot[1]
-                    for g_slot, tp in delete_tpl
-                    for slot in ((g_slot,) if g_slot else ())
-                    + (tp.s, tp.p, tp.o)
-                    if slot[0] == "term"
-                }
-            )
-            const_ids = engine.dictionary.lookup_terms(
-                sorted(set(ins_texts) | set(del_texts))
-            )
-            new_terms = [t for t in ins_texts if t not in const_ids]
-            if new_terms:
-                _, engine.dictionary = _resolve_ground(
-                    spark,
-                    engine.dictionary,
-                    tuple(
-                        (None, ("term", t), ("term", t), ("term", t))
-                        for t in new_terms
-                    ),
-                    extend=True,
-                    negative_when=negative_when,
-                )
-                const_ids.update(engine.dictionary.lookup_terms(new_terms))
-            # both sets instantiate against the SAME pre-state solutions.
-            # localCheckpoint the match-sized DELTAS (not the store): it
-            # truncates the solutions lineage so chained updates don't
-            # stack recomputes, and the copy is bounded by the match set
-            solutions = solutions.persist()
-            try:
-                del_tri, del_q = _instantiate(
-                    solutions, delete_tpl, const_ids
-                )
-                ins_tri, ins_q = _instantiate(
-                    solutions, insert_tpl, const_ids
-                )
-                ck = lambda d: (  # noqa: E731
-                    d.localCheckpoint(eager=True) if d is not None else None
-                )
-                del_tri, del_q = ck(del_tri), ck(del_q)
-                ins_tri, ins_q = ck(ins_tri), ck(ins_q)
-                if del_tri is not None:
-                    store = _delete_df(store, del_tri, broadcast_hint=False)
-                if del_q is not None and store.has_quads:
-                    store = _clone_store(
-                        store,
-                        quads=store.quads.join(
-                            del_q, ["g", "s", "p", "o"], "left_anti"
-                        ),
-                    )
-                if ins_tri is not None:
-                    # insert into the POST-delete state (§3.1.3: deletes
-                    # apply first); set semantics without broadcasting a
-                    # data-sized side — one keyed anti-join, AQE picks
-                    fresh = ins_tri.join(
-                        store.df, ["s", "p", "o"], "left_anti"
-                    )
-                    store = _clone_store(store, df=store.df.unionAll(fresh))
-                if ins_q is not None:
-                    if store.has_quads:
-                        freshq = ins_q.join(
-                            store.quads, ["g", "s", "p", "o"], "left_anti"
-                        )
-                        new_quads = store.quads.unionAll(freshq)
-                    else:
-                        new_quads = ins_q
-                    # a data-sized quad insert: re-proving disjointness
-                    # would cost a corpus join per statement — drop the
-                    # flag conservatively (write_quads re-proves at save)
-                    store = _clone_store(
-                        store, quads=new_quads, graphs_disjoint=False
-                    )
-                engine.store = store
-            finally:
-                solutions.unpersist()
-        elif isinstance(op, Load):
-            # ground file ingestion composed from the incremental
-            # raw-RDF first mile: parse → extend_dictionary (existing
-            # ids untouched) → encode → set-union into the target graph
-            if op.path.endswith((".nq", ".trig")):
-                raise SparqlSyntaxError(
-                    "LOAD takes a TRIPLE document (N-Triples/Turtle); "
-                    "datasets (N-Quads/TriG) carry their own graph "
-                    "labels — use the ingest surface for those"
-                )
-            if engine.dictionary is None:
-                raise SparqlSyntaxError(
-                    "LOAD needs a dictionary-backed store (the parsed "
-                    "terms must encode); load or ingest one first"
-                )
-            if engine.term_style != "lexical":
-                # a raw RDF document parses to full lexical forms;
-                # appending those to a localized-convention dictionary
-                # would silently split every resource into two terms
-                raise SparqlSyntaxError(
-                    "LOAD parses RDF documents into lexical-form terms "
-                    "and the store's dictionary uses the localized "
-                    "convention — re-ingest the store from raw RDF, or "
-                    "add the data with INSERT DATA (whose constants "
-                    "normalize per the engine's term style)"
-                )
-            if op.path.endswith(".ttl"):
-                from rdfproject_msc_spark.sources.turtle import (
-                    ingest_turtle as _load_ingest,
-                )
-            else:
-                from rdfproject_msc_spark.sources.ntriples import (
-                    ingest_ntriples as _load_ingest,
-                )
-            load_caches: list = []
-            try:
-                df, dict_df = _load_ingest(
-                    spark,
-                    op.path,
-                    dictionary=engine.dictionary.df,
-                    negative_when=negative_when,
-                    # always "fail", SILENT included: §3.1.4's SILENT
-                    # contract is failure → whole-operation NO-OP, not
-                    # partial ingest — a malformed line must not make
-                    # the same document load DIFFERENT data depending
-                    # on the flag. The try/except around the eager
-                    # checkpoint below turns the failure into the no-op.
-                    on_error="fail",
-                    caches=load_caches,
-                )
-                # an RDF document is a SET of triples: intra-document
-                # duplicates collapse before the store merge
-                df = df.distinct()
-                # materialize INSIDE the try: SILENT must swallow
-                # failures surfacing anywhere in the scan (a file
-                # deleted between listing and read, a corrupt member
-                # of a directory), not just the first-row probe —
-                # and the checkpoint severs the ingest-cache lineage
-                # so those caches release below
-                df = df.localCheckpoint(eager=True)
-                dict_df = dict_df.localCheckpoint(eager=True)
-            except Exception:
-                for c in load_caches:
-                    c.unpersist()
-                if op.silent:
-                    continue  # §3.1.4 SILENT: failure → no-op
-                raise
-            for c in load_caches:
-                c.unpersist()  # both outputs are checkpointed copies
-            engine.dictionary = Dictionary(
-                dict_df, broadcast_hint=engine.dictionary.broadcast_hint
-            )
-            if op.graph_slot is None:
-                fresh = df.join(store.df, ["s", "p", "o"], "left_anti")
-                store = _clone_store(store, df=store.df.unionAll(fresh))
-            else:
-                # the graph label itself may be a NEW term
-                _, engine.dictionary = _resolve_ground(
-                    spark,
-                    engine.dictionary,
-                    ((None, op.graph_slot, op.graph_slot, op.graph_slot),),
-                    extend=True,
-                    negative_when=negative_when,
-                )
-                slot = op.graph_slot
-                gid = (
-                    int(slot[1])
-                    if slot[0] == "id"
-                    else engine.dictionary.lookup_terms([slot[1]])[slot[1]]
-                )
-                q = df.select(
-                    F.lit(gid).cast("long").alias("g"), "s", "p", "o"
-                )
-                if store.has_quads:
-                    fresh = q.join(
-                        store.quads, ["g", "s", "p", "o"], "left_anti"
-                    )
-                    new_quads = store.quads.unionAll(fresh)
-                else:
-                    new_quads = q
-                # a data-sized single-graph insert: within-graph rows
-                # are trivially disjoint, but cross-graph duplicates
-                # against existing quads would need a corpus probe —
-                # drop the flag conservatively (save() re-proves)
-                store = _clone_store(
-                    store, quads=new_quads, graphs_disjoint=False
-                )
-            engine.store = store
-        elif isinstance(op, Clear):
-            if op.target in ("default", "all"):
-                empty = spark.createDataFrame([], TRIPLE_SCHEMA)
-                store = _clone_store(store, df=empty)
-            if op.target in ("named", "all") and store.has_quads:
-                store = _clone_store(
-                    store,
-                    quads=spark.createDataFrame([], QUAD_SCHEMA),
-                    graphs_disjoint=True,
-                )
-            if op.target == "graph" and store.has_quads:
-                slot = op.graph_slot
-                gid = (
-                    int(slot[1])
-                    if slot[0] == "id"
-                    else engine.dictionary.lookup_terms([slot[1]]).get(slot[1])
-                )
-                if gid is not None:
-                    store = _clone_store(
-                        store,
-                        quads=store.quads.filter(F.col("g") != F.lit(gid)),
-                    )
-            engine.store = store
-        elif isinstance(op, GraphManage):
-            engine.store = _apply_graph_manage(
-                engine, store, op, negative_when
-            )
-        else:  # pragma: no cover
-            raise AssertionError(f"unknown op {op!r}")
+        _apply_op(engine, store, op, negative_when)
+        # the replaced store's deltas the new one no longer reads
+        store.release_deltas(keep=engine.store)
     if getattr(engine, "_register_as", None):
         engine.store.register(spark, engine._register_as)
+
+
+def _apply_op(engine, store: TripleStore, op, negative_when) -> None:
+    """Apply one parsed operation, swapping ``engine.store`` (and
+    ``engine.dictionary`` when terms are appended)."""
+    from rdfproject_msc_spark.sparql.planner import sparql_to_df
+
+    spark = engine.spark
+    if isinstance(op, GroundData):
+        if not op.quads:
+            return
+        rows, new_dict = _resolve_ground(
+            spark, engine.dictionary, op.quads, op.insert, negative_when
+        )
+        if op.insert:
+            engine.dictionary = new_dict
+        t_rows = [r[1:] for r in rows if r[0] is None]
+        q_rows = [r for r in rows if r[0] is not None]
+        if t_rows:
+            store = store.with_changes(
+                **{"inserted" if op.insert else "deleted": t_rows}
+            )
+        if q_rows and op.insert:
+            store = _insert_quads(spark, store, q_rows)
+        elif q_rows and store.has_quads:
+            store = store.with_changes(deleted=q_rows, quads=True)
+        engine.store = store
+    elif isinstance(op, Modify):
+        # WITH (§3.1.3): default-graph template entries retarget to
+        # the named graph; explicit GRAPH blocks keep their own
+        def _retarget(tpl):
+            if op.with_slot is None:
+                return tpl
+            return tuple(
+                (g if g is not None else op.with_slot, tp)
+                for g, tp in tpl
+            )
+
+        delete_tpl = _retarget(op.delete_tpl)
+        insert_tpl = _retarget(op.insert_tpl)
+        tpl_vars = sorted(
+            {
+                str(slot[1])
+                for g_slot, tp in delete_tpl + insert_tpl
+                for slot in ((g_slot,) if g_slot else ())
+                + (tp.s, tp.p, tp.o)
+                if slot[0] == "var"
+                # template blank nodes are NEVER WHERE bindings —
+                # §3.1.3.2 instantiates them fresh per solution
+                # (minted below), so they must not project
+                and not str(slot[1]).startswith("__bn")
+            }
+        )
+        proj = (
+            " ".join(f"?{v}" for v in tpl_vars) if tpl_vars else "*"
+        )
+        # USING [NAMED] lowers verbatim onto FROM / FROM NAMED —
+        # §3.1.3: when present the WHERE's dataset is exactly what
+        # the clauses describe. Absent USING, WITH's graph is the
+        # active default (FROM <g>); a GRAPH block inside would
+        # then see an EMPTY named-graph set under the planner's
+        # exact-dataset rule while the spec keeps the full graph
+        # store — reject rather than silently narrow.
+        if op.using:
+            dataset = " ".join(
+                ("FROM NAMED " if kind == "named" else "FROM ") + tok
+                for kind, tok in op.using
+            )
+        elif op.with_token is not None:
+            if re.search(r"\bGRAPH\b", op.where_src, re.I):
+                raise SparqlSyntaxError(
+                    "GRAPH blocks inside a WITH-scoped WHERE need "
+                    "explicit USING NAMED clauses (the planner's "
+                    "dataset is exactly what the clauses describe; "
+                    "WITH alone would silently hide every named "
+                    "graph from the block)"
+                )
+            dataset = f"FROM {op.with_token}"
+        else:
+            dataset = ""
+        query = (
+            f"{op.prefixes_src}\nSELECT {proj} {dataset} "
+            f"WHERE {{ {op.where_src} }}"
+        )
+        solutions = sparql_to_df(
+            store, query, engine.dictionary, term_style=engine.term_style
+        )
+        # INSERT-template blank nodes (§3.1.3.2, r11): one FRESH
+        # node per solution — label = "_:u" + a template digest
+        # (positional, stable under anonymous-label renaming) + a
+        # solution-value key + the label's index; co-refers across
+        # that solution's template triples, distinct across
+        # solutions and across different templates, and replay-
+        # deterministic (value-equal duplicate solutions mint the
+        # same node — the inserted graph is a set). The labels are
+        # DATA-sized vocabulary: distributed incremental append
+        # (eager checkpoint, rank caches released), the engine's
+        # dictionary extends for real — inserts persist.
+        fresh_labels: list[str] = []
+        for g_slot, tp in insert_tpl:
+            for slot in (tp.s, tp.o):
+                name = str(slot[1])
+                if (
+                    slot[0] == "var"
+                    and name.startswith("__bn")
+                    and name not in fresh_labels
+                ):
+                    fresh_labels.append(name)
+        if fresh_labels:
+            import hashlib as _hashlib
+
+            from rdfproject_msc_spark.sources.ntriples import (
+                extend_dictionary,
+            )
+
+            canon = repr(
+                [
+                    (
+                        g,
+                        tuple(
+                            ("bnode", fresh_labels.index(str(s[1])))
+                            if (
+                                s[0] == "var"
+                                and str(s[1]).startswith("__bn")
+                            )
+                            else s
+                            for s in (tp.s, tp.p, tp.o)
+                        ),
+                    )
+                    for g, tp in insert_tpl
+                ]
+            )
+            tdig = _hashlib.md5(canon.encode()).hexdigest()[:8]
+            base_cols = sorted(solutions.columns)
+            key = F.md5(
+                F.concat_ws(
+                    "|",
+                    *[
+                        F.coalesce(F.col(c).cast("string"), F.lit(""))
+                        for c in base_cols
+                    ],
+                )
+            )
+            lab_rel = None
+            for k, lbl in enumerate(fresh_labels):
+                solutions = solutions.withColumn(
+                    f"__ulab{k}",
+                    F.concat(
+                        F.lit(f"_:u{tdig}-"), key, F.lit(f"-{k}")
+                    ),
+                )
+                part = solutions.select(
+                    F.col(f"__ulab{k}").alias("s_term")
+                )
+                lab_rel = (
+                    part if lab_rel is None else lab_rel.unionAll(part)
+                )
+            parsed = lab_rel.select(
+                "s_term",
+                F.col("s_term").alias("p_term"),
+                F.col("s_term").alias("o_term"),
+            )
+            mint_caches: list = []
+            fresh_ids = extend_dictionary(
+                engine.dictionary.df, parsed, caches=mint_caches
+            ).localCheckpoint(eager=True)
+            for c in mint_caches:
+                c.unpersist()  # the checkpoint no longer reads them
+            engine.dictionary = engine.dictionary.extend(fresh_ids)
+            ext = engine.dictionary.df
+            for k, lbl in enumerate(fresh_labels):
+                m = ext.withColumnRenamed(
+                    "id", f"__uid{k}"
+                ).withColumnRenamed("term", f"__ut{k}")
+                solutions = (
+                    solutions.join(
+                        m,
+                        F.col(f"__ulab{k}") == F.col(f"__ut{k}"),
+                        "left",
+                    )
+                    .drop(f"__ut{k}")
+                    .withColumn(lbl, F.col(f"__uid{k}"))
+                    .drop(f"__uid{k}", f"__ulab{k}")
+                )
+        # template constants: insert-side terms may be NEW (extend);
+        # delete-side unknown terms simply instantiate nothing
+        ins_texts = sorted(
+            {
+                slot[1]
+                for g_slot, tp in insert_tpl
+                for slot in ((g_slot,) if g_slot else ())
+                + (tp.s, tp.p, tp.o)
+                if slot[0] == "term"
+            }
+        )
+        del_texts = sorted(
+            {
+                slot[1]
+                for g_slot, tp in delete_tpl
+                for slot in ((g_slot,) if g_slot else ())
+                + (tp.s, tp.p, tp.o)
+                if slot[0] == "term"
+            }
+        )
+        const_ids = engine.dictionary.lookup_terms(
+            sorted(set(ins_texts) | set(del_texts))
+        )
+        new_terms = [t for t in ins_texts if t not in const_ids]
+        if new_terms:
+            engine.dictionary, fresh = _append_terms(
+                spark, engine.dictionary, new_terms, negative_when
+            )
+            const_ids.update(fresh)
+        # both sets instantiate against the SAME pre-state solutions,
+        # persisted: each fold reads them once and cuts the lineage
+        solutions = solutions.persist()
+        try:
+            del_tri, del_q = _instantiate(solutions, delete_tpl, const_ids)
+            ins_tri, ins_q = _instantiate(solutions, insert_tpl, const_ids)
+            store = _fold_matches(store, del_tri, ins_tri)
+            if not store.has_quads:
+                del_q = None  # no named graphs: nothing to delete
+            # a data-sized quad insert: re-proving disjointness would
+            # cost a corpus join per statement — drop the flag
+            # conservatively (write_quads re-proves at save)
+            store = _fold_matches(
+                store,
+                del_q,
+                ins_q,
+                quads=True,
+                graphs_disjoint=False if ins_q is not None else None,
+            )
+            engine.store = store
+        finally:
+            solutions.unpersist()
+    elif isinstance(op, Load):
+        # ground file ingestion composed from the incremental
+        # raw-RDF first mile: parse → extend_dictionary (existing
+        # ids untouched) → encode → set-union into the target graph
+        if op.path.endswith((".nq", ".trig")):
+            raise SparqlSyntaxError(
+                "LOAD takes a TRIPLE document (N-Triples/Turtle); "
+                "datasets (N-Quads/TriG) carry their own graph "
+                "labels — use the ingest surface for those"
+            )
+        if engine.dictionary is None:
+            raise SparqlSyntaxError(
+                "LOAD needs a dictionary-backed store (the parsed "
+                "terms must encode); load or ingest one first"
+            )
+        if engine.term_style != "lexical":
+            # a raw RDF document parses to full lexical forms;
+            # appending those to a localized-convention dictionary
+            # would silently split every resource into two terms
+            raise SparqlSyntaxError(
+                "LOAD parses RDF documents into lexical-form terms "
+                "and the store's dictionary uses the localized "
+                "convention — re-ingest the store from raw RDF, or "
+                "add the data with INSERT DATA (whose constants "
+                "normalize per the engine's term style)"
+            )
+        if op.path.endswith(".ttl"):
+            from rdfproject_msc_spark.sources.turtle import (
+                ingest_turtle as _load_ingest,
+            )
+        else:
+            from rdfproject_msc_spark.sources.ntriples import (
+                ingest_ntriples as _load_ingest,
+            )
+        load_caches: list = []
+        try:
+            df, dict_df = _load_ingest(
+                spark,
+                op.path,
+                dictionary=engine.dictionary.df,
+                negative_when=negative_when,
+                # always "fail", SILENT included: §3.1.4's SILENT
+                # contract is failure → whole-operation NO-OP, not
+                # partial ingest — a malformed line must not make
+                # the same document load DIFFERENT data depending
+                # on the flag. The try/except around the eager
+                # checkpoint below turns the failure into the no-op.
+                on_error="fail",
+                caches=load_caches,
+            )
+            # keep the STR values next to an ingested dictionary
+            with_sv = engine.dictionary.sv_df is not None
+            if with_sv:
+                from rdfproject_msc_spark.sparql.planner import (
+                    _lex_str_value,
+                )
+
+                dict_df = dict_df.select(
+                    "id",
+                    "term",
+                    _lex_str_value(F.col("id"), F.col("term")).alias(
+                        "__sv"
+                    ),
+                )
+            # materialize INSIDE the try: SILENT must swallow
+            # failures surfacing anywhere in the scan (a file
+            # deleted between listing and read, a corrupt member
+            # of a directory), not just the first-row probe —
+            # and the checkpoint severs the ingest-cache lineage
+            # so those caches release below. Intra-document
+            # duplicates collapse in the store's delta fold.
+            df = df.localCheckpoint(eager=True)
+            dict_df = dict_df.localCheckpoint(eager=True)
+        except Exception:
+            for c in load_caches:
+                c.unpersist()
+            if op.silent:
+                return  # §3.1.4 SILENT: failure → no-op
+            raise
+        for c in load_caches:
+            c.unpersist()  # both outputs are checkpointed copies
+        engine.dictionary = Dictionary(
+            dict_df.select("id", "term"),
+            broadcast_hint=engine.dictionary.broadcast_hint,
+            sv_df=dict_df if with_sv else None,
+        )
+        if op.graph_slot is None:
+            store = store.with_changes(inserted=df)
+        else:
+            # the graph label itself may be a NEW term
+            gid = _ensure_gid(engine, op.graph_slot, negative_when)
+            # a data-sized single-graph insert: within-graph rows
+            # are trivially disjoint, but cross-graph duplicates
+            # against existing quads would need a corpus probe —
+            # drop the flag conservatively (save() re-proves)
+            store = store.with_changes(
+                inserted=df.select(
+                    F.lit(gid).cast("long").alias("g"), "s", "p", "o"
+                ),
+                quads=True,
+                graphs_disjoint=False,
+            )
+        engine.store = store
+    elif isinstance(op, Clear):
+        if op.target in ("default", "all"):
+            empty = spark.createDataFrame([], TRIPLE_SCHEMA)
+            store = _clone_store(store, df=empty)
+        if op.target in ("named", "all") and store.has_quads:
+            store = _clone_store(
+                store,
+                quads=spark.createDataFrame([], QUAD_SCHEMA),
+                graphs_disjoint=True,
+            )
+        if op.target == "graph" and store.has_quads:
+            slot = op.graph_slot
+            gid = (
+                int(slot[1])
+                if slot[0] == "id"
+                else engine.dictionary.lookup_terms([slot[1]]).get(slot[1])
+            )
+            if gid is not None:
+                store = _clone_store(
+                    store,
+                    quads=store.quads.filter(F.col("g") != F.lit(gid)),
+                )
+        engine.store = store
+    elif isinstance(op, GraphManage):
+        engine.store = _apply_graph_manage(
+            engine, store, op, negative_when
+        )
+    else:  # pragma: no cover
+        raise AssertionError(f"unknown op {op!r}")

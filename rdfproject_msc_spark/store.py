@@ -25,15 +25,268 @@ At 100 TB: the store is written once as sign-partitioned, range-clustered
 Parquet; every query then gets partition pruning + row-group skipping free,
 and predicate-key skew (few distinct predicates → giant partitions) is
 handled by AQE skew-join splitting rather than a fixed partition count.
+
+Updates (sparql/update.py) never rewrite the base relation. A store keeps
+the relation it was opened or ingested with as its *base*, plus at most
+one materialized delta per relation: ``added`` (visible rows the base
+lacks) and ``removed`` (base rows that were deleted), each key at most
+once. The views compose ``base ▷ removed ∪ added``, so the plan has the
+same leaves after one update or a hundred, and the base keeps its ``sign``
+partition pruning. A small delta is held on the driver: ``removed``
+applies as a hash-set filter that ships with the tasks and ``added`` is a
+local relation, so a read pays no extra join or broadcast. A large one is
+a checkpoint joined as a (broadcast when small enough) anti-join. A store
+with no pending delta plans exactly like the base alone.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 LAYOUTS = ("single", "sign_split")
 CLUSTER_KEYS = ("s", "p", None)
+
+TRIPLE_KEYS = ("s", "p", "o")
+QUAD_KEYS = ("g", "s", "p", "o")
+
+# a folded delta up to this many rows is held on the driver (reads apply
+# it as a filter and a local relation; nothing to release); a larger one
+# is a localCheckpoint, released explicitly once an update supersedes it
+LOCAL_DELTA_ROWS = 4096
+
+
+def local_relation(spark: SparkSession, rows, columns) -> DataFrame:
+    """Driver rows (ints, booleans, strings; no NULLs) as a local
+    relation: exact statistics, so joins broadcast it statically, and
+    projections or filters over it evaluate on the driver
+    (``createDataFrame`` gives an RDD scan of unknown size instead).
+    Strings travel hex-encoded, so any text is safe in the VALUES
+    clause."""
+
+    def lit(v):
+        if isinstance(v, bool):
+            return "TRUE" if v else "FALSE"
+        if isinstance(v, int):
+            return f"{v}L"
+        return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
+
+    values = ", ".join(
+        "(" + ", ".join(lit(v) for v in row) + ")" for row in rows
+    )
+    return spark.sql(
+        f"SELECT * FROM VALUES {values} AS t({', '.join(columns)})"
+    )
+
+
+def _in_rows(keys, rows) -> Column:
+    """``keys`` ∈ ``rows`` as a filter (never NULL): a hash-set probe that
+    ships with the tasks — no join, no broadcast exchange, and no hash
+    relation kept on the driver until the JVM collects it. The IN on the
+    first key alone is a cheap prefilter."""
+    firsts = ", ".join(sorted({f"{r[0]}L" for r in rows}))
+    tuples = ", ".join(
+        "(" + ", ".join(f"{v}L" for v in r) + ")" for r in rows
+    )
+    return F.coalesce(
+        F.expr(
+            f"{keys[0]} IN ({firsts}) AND ({', '.join(keys)}) IN ({tuples})"
+        ),
+        F.lit(False),
+    )
+
+
+# change-flag bits of one key in ``_fold`` (bit_or-aggregated per key)
+_REMOVED, _ADDED, _DELETE, _INSERT, _IN_BASE = 1, 2, 4, 8, 16
+
+
+class Delta:
+    """Pending changes to one base relation: ``added`` rows the base
+    lacks and ``removed`` base rows, each key once. A small delta is held
+    on the driver as ``rows`` (key tuple → True added / False removed); a
+    larger one is ``rel``, a ``localCheckpoint`` of ``keys + __added``
+    rows."""
+
+    def __init__(self, spark, keys, rows: dict | None = None, rel=None):
+        self.spark = spark
+        self.keys = list(keys)
+        self.rows = rows
+        self.rel = rel
+        if rows is not None:
+            added = [k for k, a in rows.items() if a]
+            removed = [k for k, a in rows.items() if not a]
+            self._added = (
+                local_relation(spark, added, self.keys) if added else None
+            )
+            self._removed = _in_rows(self.keys, removed) if removed else None
+            return
+        counts = dict(rel.groupBy("__added").count().collect())
+        self._added = (
+            rel.filter(F.col("__added")).select(*self.keys)
+            if counts.get(True) else None
+        )
+        self._removed = None
+        if counts.get(False):
+            rem = rel.filter(~F.col("__added")).select(*self.keys)
+            # broadcast the removed side when it fits Spark's threshold
+            limit = (
+                rel.sparkSession._jsparkSession.sessionState().conf()
+                .autoBroadcastJoinThreshold()
+            )
+            self._removed = (
+                F.broadcast(rem) if 0 <= counts[False] * 32 <= limit else rem
+            )
+
+    def frame(self) -> DataFrame:
+        """The delta as ``keys + __added`` rows."""
+        if self.rel is not None:
+            return self.rel
+        return local_relation(
+            self.spark,
+            [k + (a,) for k, a in self.rows.items()],
+            self.keys + ["__added"],
+        )
+
+    def compose(self, base: DataFrame, where=None) -> DataFrame:
+        """``base ▷ removed ∪ added``; ``where`` restricts the added rows
+        to the slice ``base`` was cut to (a sign-class view)."""
+        out = base
+        if isinstance(self._removed, Column):
+            out = out.filter(~self._removed)
+        elif self._removed is not None:
+            out = out.join(self._removed, self.keys, "left_anti")
+        if self._added is not None:
+            add = self._added
+            out = out.unionAll(add if where is None else add.filter(where))
+        return out
+
+    def release(self) -> None:
+        """Drop a checkpointed delta's blocks (one held on the driver has
+        none). Relations planned over it can no longer run."""
+        if self.rel is not None:
+            self.rel._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def _materialize(spark, keys, rows) -> Delta | None:
+    """Folded ``(key..., added)`` rows → the Delta holding them."""
+    if not rows:
+        return None
+    if len(rows) <= LOCAL_DELTA_ROWS:
+        return Delta(spark, keys, rows={tuple(r[:-1]): r[-1] for r in rows})
+    schema = ", ".join(f"{k} long" for k in keys) + ", __added boolean"
+    rel = spark.createDataFrame(rows, schema).localCheckpoint(eager=True)
+    return Delta(spark, keys, rel=rel)
+
+
+def _fold_rows(
+    base: DataFrame, delta: Delta | None, keys, deleted, inserted
+) -> Delta | None:
+    """``_fold`` for request-sized change rows (lists of key tuples)
+    over a delta held on the driver: the base probe is the only job, and
+    the set algebra runs on the driver."""
+    if not (deleted or inserted):
+        return delta
+    changed = sorted(set(deleted) | set(inserted))
+    present = {
+        tuple(r)
+        for r in base.select(*keys).filter(_in_rows(keys, changed)).collect()
+    }
+    state = {} if delta is None else dict(delta.rows)
+    for k in deleted:
+        if k in present:
+            state[k] = False
+        else:
+            state.pop(k, None)
+    for k in inserted:
+        if k in present:
+            state.pop(k, None)
+        else:
+            state[k] = True
+    return _materialize(
+        base.sparkSession, keys, [k + (a,) for k, a in state.items()]
+    )
+
+
+def _fold(
+    base: DataFrame,
+    delta: Delta | None,
+    keys,
+    deleted,
+    inserted,
+) -> Delta | None:
+    """The delta after deleting ``deleted`` and then inserting
+    ``inserted`` (SPARQL Update's order) on top of ``delta``: one probe
+    of the base for the changed keys, then one aggregation per key over
+    the old delta, the changes and the probe. Per key, with b = "in the
+    base": visible before = (b ∧ ¬removed) ∨ added, visible after =
+    inserted ∨ (visible before ∧ ¬deleted); the key is in the new
+    ``removed`` when b ∧ ¬after and in the new ``added`` when ¬b ∧ after.
+    ``deleted``/``inserted`` are DataFrames (data-sized: the probe
+    leaves the join strategy to AQE), or lists of key tuples sized by the
+    request (folded on the driver by ``_fold_rows`` while they fit a
+    local delta; broadcast in the probe otherwise)."""
+    keys = list(keys)
+    spark = base.sparkSession
+    ground = all(d is None or isinstance(d, list) for d in (deleted, inserted))
+    if (
+        ground
+        and sum(len(d) for d in (deleted, inserted) if d) <= LOCAL_DELTA_ROWS
+        and (delta is None or delta.rows is not None)
+    ):
+        return _fold_rows(base, delta, keys, deleted or [], inserted or [])
+    schema = ", ".join(f"{k} long" for k in keys)
+    deleted, inserted = (
+        spark.createDataFrame(d, schema) if isinstance(d, list) else d
+        for d in (deleted, inserted)
+    )
+    changes = [
+        d.select(*keys) for d in (deleted, inserted) if d is not None
+    ]
+    if not changes:
+        return delta
+    probe = changes[0] if len(changes) == 1 else changes[0].unionAll(changes[1])
+    present = base.select(*keys).join(
+        F.broadcast(probe) if ground else probe, keys, "left_semi"
+    )
+
+    def tagged(df, bit):
+        return df.select(*keys, F.lit(bit).alias("__f"))
+
+    parts = [tagged(present, _IN_BASE)]
+    if deleted is not None:
+        parts.append(tagged(deleted, _DELETE))
+    if inserted is not None:
+        parts.append(tagged(inserted, _INSERT))
+    if delta is not None:
+        parts.append(
+            delta.frame().select(
+                *keys,
+                F.when(F.col("__added"), F.lit(_ADDED))
+                .otherwise(F.lit(_REMOVED))
+                .alias("__f"),
+            )
+        )
+    rows = parts[0]
+    for p in parts[1:]:
+        rows = rows.unionAll(p)
+    f = F.col("__f")
+
+    def has(bit):
+        return f.bitwiseAND(bit) != 0
+
+    in_base = has(_IN_BASE | _REMOVED)
+    before = (in_base & ~has(_REMOVED)) | has(_ADDED)
+    after = has(_INSERT) | (before & ~has(_DELETE))
+    out = (
+        rows.groupBy(*keys)
+        .agg(F.bit_or("__f").alias("__f"))
+        .filter(in_base != after)
+        .select(*keys, (~in_base).alias("__added"))
+    )
+    got = out.limit(LOCAL_DELTA_ROWS + 1).collect()
+    if len(got) <= LOCAL_DELTA_ROWS:
+        return _materialize(spark, keys, [tuple(r) for r in got])
+    return Delta(spark, keys, rel=out.localCheckpoint(eager=True))
 
 
 class TripleStore:
@@ -75,6 +328,11 @@ class TripleStore:
         self._quads = (
             quads.select("g", "s", "p", "o") if quads is not None else None
         )
+        # pending update deltas of the default graph and the quads, and
+        # superseded ones a base relation may still read (module doc)
+        self._delta: Delta | None = None
+        self._qdelta: Delta | None = None
+        self._pinned: tuple = ()
         # invariant: no (s, p, o) triple appears in more than one named
         # graph. The RDF-merge semantics of a multi-graph FROM then need
         # NO duplicate elimination, so the planner skips the merge's
@@ -113,17 +371,25 @@ class TripleStore:
     def _spo(df: DataFrame) -> DataFrame:
         return df.select("s", "p", "o")
 
+    def _with_delta(self, base: DataFrame, where=None) -> DataFrame:
+        base = self._spo(base)
+        if self._delta is None:
+            return base
+        return self._delta.compose(base, where)
+
     @property
     def df(self) -> DataFrame:
         """The full triple relation (Positive ∪ Negative when split)."""
-        return self._spo(self._df)
+        return self._with_delta(self._df)
 
     @property
     def positive(self) -> DataFrame:
         """Subjects ≥ 0 (P4; PartitionQueryingBRDSubject.java:100-104)."""
         if self._has_sign:
-            return self._spo(self._df.filter(F.col("sign") == 1))
-        return self._spo(self._df.filter(F.col("s") >= 0))
+            base = self._df.filter(F.col("sign") == 1)
+        else:
+            base = self._df.filter(F.col("s") >= 0)
+        return self._with_delta(base, F.col("s") >= 0)
 
     @property
     def negative(self) -> DataFrame:
@@ -137,8 +403,10 @@ class TripleStore:
         plans that need the pruned scan (sign=0 PartitionFilter on a
         persisted store) but must leave the join strategy to AQE."""
         if self._has_sign:
-            return self._spo(self._df.filter(F.col("sign") == 0))
-        return self._spo(self._df.filter(F.col("s") < 0))
+            base = self._df.filter(F.col("sign") == 0)
+        else:
+            base = self._df.filter(F.col("s") < 0)
+        return self._with_delta(base, F.col("s") < 0)
 
     # backwards-compatible private alias
     _negative_raw = negative_raw
@@ -150,6 +418,14 @@ class TripleStore:
     # g-partitioned store that is directory-level partition pruning, the
     # same "write once, prune forever" story as the sign split.
     @property
+    def quads_relation(self) -> DataFrame | None:
+        """The quad relation with its pending delta; None without named
+        graphs."""
+        if self._quads is None or self._qdelta is None:
+            return self._quads
+        return self._qdelta.compose(self._quads)
+
+    @property
     def quads(self) -> DataFrame:
         """The named-graph quad relation; raises when the store was built
         without one (a triples-only dataset has no named graphs)."""
@@ -158,7 +434,7 @@ class TripleStore:
                 "store has no named graphs: construct with quads=DataFrame"
                 "(g, s, p, o) or attach_quads()"
             )
-        return self._quads.select("g", "s", "p", "o")
+        return self.quads_relation.select("g", "s", "p", "o")
 
     @property
     def has_quads(self) -> bool:
@@ -168,6 +444,7 @@ class TripleStore:
         self, quads: DataFrame, graphs_disjoint: bool | None = None
     ) -> None:
         self._quads = quads.select("g", "s", "p", "o")
+        self._qdelta = None
         if graphs_disjoint is not None:
             self.graphs_disjoint = graphs_disjoint
 
@@ -246,6 +523,7 @@ class TripleStore:
         marker proves it sound — no trust-me flag involved. An explicit
         caller declaration (``graphs_disjoint=True``) is still honored."""
         self._quads = self.read_quads(spark, path).select("g", "s", "p", "o")
+        self._qdelta = None
         if self.quads_disjoint_proven(spark, path):
             self.graphs_disjoint = True
 
@@ -267,6 +545,84 @@ class TripleStore:
             self.positive.createOrReplaceTempView("Positive")
             self._negative_raw.createOrReplaceTempView("Negative")
 
+    # -- updates ------------------------------------------------------------
+    def _copy(self) -> "TripleStore":
+        new = TripleStore.__new__(TripleStore)
+        new.__dict__.update(self.__dict__)
+        return new
+
+    def with_changes(
+        self,
+        deleted: DataFrame | list | None = None,
+        inserted: DataFrame | list | None = None,
+        *,
+        quads: bool = False,
+        graphs_disjoint: bool | None = None,
+    ) -> "TripleStore":
+        """A copy of this store with ``deleted`` removed and then
+        ``inserted`` added (set semantics) on the default graph, or on
+        the quad relation with ``quads=True``. The base is probed once
+        and the change folds into the one materialized delta (``_fold``);
+        the base itself is untouched. The changes are DataFrames or
+        lists of key tuples (ground INSERT/DELETE DATA rows)."""
+        new = self._copy()
+        if graphs_disjoint is not None:
+            new.graphs_disjoint = graphs_disjoint
+        if quads:
+            base = self._quads
+            if base is None:
+                base = new._quads = self._df.sparkSession.createDataFrame(
+                    [], "g long, s long, p long, o long"
+                )
+            new._qdelta = _fold(
+                base, self._qdelta, QUAD_KEYS, deleted, inserted
+            )
+        else:
+            new._delta = _fold(
+                self._spo(self._df), self._delta, TRIPLE_KEYS, deleted,
+                inserted,
+            )
+        return new
+
+    def with_base(
+        self,
+        df: DataFrame | None = None,
+        quads: DataFrame | None | str = "keep",
+        graphs_disjoint: bool | None = None,
+        pin: bool = True,
+    ) -> "TripleStore":
+        """A copy whose default-graph base (``df``) and/or quad base
+        (``quads``; ``None`` drops the named graphs) is replaced and that
+        relation's delta emptied, WITHOUT re-running layout clustering.
+        A new base may read this store's views, so every delta it held
+        stays pinned (kept from ``release_deltas``); ``pin=False`` when
+        the new bases are materialized copies."""
+        new = self._copy()
+        new._pinned = self._pinned + self._live_deltas() if pin else ()
+        if df is not None:
+            new._df = df
+            new._delta = None
+        if not isinstance(quads, str):
+            new._quads = (
+                quads.select("g", "s", "p", "o") if quads is not None else None
+            )
+            new._qdelta = None
+        if graphs_disjoint is not None:
+            new.graphs_disjoint = graphs_disjoint
+        return new
+
+    def _live_deltas(self) -> tuple:
+        return tuple(d for d in (self._delta, self._qdelta) if d is not None)
+
+    def release_deltas(self, keep: "TripleStore | None" = None) -> None:
+        """Release the checkpointed deltas this store holds or pins,
+        except those ``keep`` still holds or pins. Relations planned over
+        this store before the call can no longer run."""
+        kept = () if keep is None else keep._live_deltas() + keep._pinned
+        for d in self._live_deltas() + self._pinned:
+            if not any(d is k for k in kept):
+                d.release()
+
     # -- persistence --------------------------------------------------------
     def write(self, path: str) -> None:
         """Persist as Parquet — the "write once, prune forever" half of the
@@ -275,7 +631,7 @@ class TripleStore:
         Positive/Negative SQL), and range clustering is preserved as
         row-group sort order (min/max stats → scan skipping on the cluster
         key)."""
-        df = self._spo(self._df)
+        df = self.df
         if self.layout == "sign_split":
             df = df.withColumn("sign", (F.col("s") >= 0).cast("int"))
             df.write.mode("overwrite").partitionBy("sign").parquet(path)
@@ -302,5 +658,7 @@ class TripleStore:
         store.broadcast_negative = kwargs.get("broadcast_negative", False)
         store._df = df  # already laid out on disk; no re-shuffle on read
         store._quads = None  # attach_quads(read_quads(...)) to add graphs
+        store._delta = store._qdelta = None
+        store._pinned = ()
         store.graphs_disjoint = kwargs.get("graphs_disjoint", False)
         return store
