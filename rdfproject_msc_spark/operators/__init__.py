@@ -9,7 +9,6 @@ is unavoidable):
 - ``textstats``  quality scores, language ID, fingerprints, token counts
 - ``decontam``   benchmark decontamination via word-n-gram overlap
 - ``lmscore``    unigram LM quality scoring (per-doc surprisal)
-- ``pca``        PCA dimensionality reduction for embedding columns
 - ``hashvec``    feature-hashing vectorizer (text → hashed-TF embedding)
 - ``bm25``       zero-shuffle BM25 lexical top-k retrieval
 - ``multimodal`` binary payload + typed metadata; mapInPandas decode stages

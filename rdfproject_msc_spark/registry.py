@@ -1288,7 +1288,7 @@ SELECT ?c ?n ?e WHERE {
 
 def sparql_compat(spark, sf_dir):
     """Bound-mask branch decomposition for clause joins over nullable
-    keys (sparql/planner.py `_left_mask_branches`): the accumulated
+    keys (sparql/planner.py `_mask_pairs`): the accumulated
     solutions split into the ?e-bound branch (a hash LEFT ANTI join
     against the click events) and the ?e-unbound branch (kept outright —
     SPARQL §18.5 domain-disjointness), then union. Every branch stays a

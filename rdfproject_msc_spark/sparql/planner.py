@@ -1070,6 +1070,17 @@ def _encode_constants(bgp: BGPQuery, dictionary: Dictionary | None) -> dict[str,
     return dictionary.encode_terms(sorted(terms))
 
 
+def _slot_id(term_ids: dict[str, int], slot) -> int | None:
+    """The encoded id of a constant slot (an inline id or a dictionary
+    term); None for a variable or UNDEF slot."""
+    kind, val = slot
+    if kind == "id":
+        return int(val)
+    if kind == "term":
+        return term_ids[val]
+    return None
+
+
 def _pattern_scan(
     store: TripleStore, tp, term_ids: dict[str, int], idx: int,
     graph_var: str | None = None,
@@ -1085,19 +1096,11 @@ def _pattern_scan(
     reaches here — the planner rewrites it to a plain plan over that one
     graph's triples (g-equality pushed into the quad scan)."""
 
-    def resolve(slot) -> int | None:
-        kind, val = slot
-        if kind == "id":
-            return int(val)
-        if kind == "term":
-            return term_ids[val]
-        return None
-
     slots = dict(tp.slots)
     if graph_var is not None:
         slots["g"] = ("var", graph_var)
     bound = {
-        pos: resolve(slot)
+        pos: _slot_id(term_ids, slot)
         for pos, slot in slots.items()
         if slot[0] != "notin"
     }
@@ -1111,7 +1114,7 @@ def _pattern_scan(
     # position — still one pushdown-able scan predicate, no set machinery
     for pos, slot in slots.items():
         if slot[0] == "notin":
-            excluded = [resolve(s) for s in slot[1]]
+            excluded = [_slot_id(term_ids, s) for s in slot[1]]
             conds.append(~F.col(pos).isin(excluded))
     if conds:
         df = df.filter(reduce(lambda a, b: a & b, conds))
@@ -1151,6 +1154,15 @@ def _order_patterns(patterns) -> list:
     return ordered
 
 
+def _suffixed(df: DataFrame, suffix: str) -> tuple[DataFrame, dict[str, str]]:
+    """Rename every column to `<col>_<suffix>` so a planned relation never
+    collides with bound columns before a join; returns (df, old→new)."""
+    renames = {c: f"{c}_{suffix}" for c in df.columns}
+    for old, new in renames.items():
+        df = df.withColumnRenamed(old, new)
+    return df, renames
+
+
 class _PlanCtx:
     """Mutable per-plan state threaded through the recursive group planner:
     store / dictionary / encoded constants plus a counter producing
@@ -1167,6 +1179,14 @@ class _PlanCtx:
 
     def nid(self) -> int:
         return next(self._counter)
+
+    def scoped(self, store: TripleStore) -> "_PlanCtx":
+        """The same plan over another store (a constant GRAPH block's
+        triples, a graph path's struct-keyed virtual store), sharing the
+        column-suffix counter."""
+        sub = _PlanCtx(store, self.term_ids, self.dictionary, self.litids)
+        sub._counter = self._counter
+        return sub
 
 
 def _join_group(
@@ -1188,10 +1208,7 @@ def _join_group(
             order = [v for v in var_cols]
             continue
         shared = [v for v in var_cols if v in bound_cols]
-        # rename this pattern's columns to avoid collisions before the join
-        renames = {c: f"{c}_{idx}" for c in scan.columns}
-        for old, new in renames.items():
-            scan = scan.withColumnRenamed(old, new)
+        scan, renames = _suffixed(scan, str(idx))
         if shared:
             cond = reduce(
                 lambda a, b: a & b,
@@ -1211,20 +1228,25 @@ def _join_group(
     return joined, bound_cols, order
 
 
-def _reject_nullable_join_keys(
-    shared: list[str], nullable_vars: set[str], clause: str
-) -> None:
-    """SPARQL's unbound-is-compatible semantics and Spark's NULL==x→NULL
-    disagree on nullable join keys: a semi/anti/left join keyed on a
-    variable that can be unbound would silently keep/drop the wrong rows.
-    Reject rather than guess (matching the parser's stance on disjoint
-    OPTIONAL/MINUS groups)."""
-    bad = sorted(set(shared) & nullable_vars)
-    if bad:
+def _key_cond(lcols: dict[str, str], rcols: dict[str, str], keys) -> Column:
+    """Equi-join conjunction over `keys` (literal TRUE when empty: every
+    pair of rows is compatible)."""
+    cs = [F.col(lcols[v]) == F.col(rcols[v]) for v in keys]
+    return reduce(lambda a, b: a & b, cs) if cs else F.lit(True)
+
+
+def _check_mask_cap(lnv: list[str], rnv: list[str], clause: str) -> None:
+    """Every bound-mask lowering splits each side by which of its
+    nullable join keys are bound — at most 2^(|lnv|+|rnv|) branch
+    pairs, bounded at plan time (never data-dependent) by one cap."""
+    n = 2 ** (len(lnv) + len(rnv))
+    if n > 16:
         raise SparqlSyntaxError(
-            f"{clause} references variables that may be unbound "
-            f"(bound only in OPTIONAL or in some UNION arms): "
-            f"{['?' + v for v in bad]}"
+            f"{clause} keyed on variables that may be unbound (outer: "
+            f"{['?' + v for v in lnv]}, group: {['?' + v for v in rnv]}) "
+            f"expands to {n} disjoint bound-mask join branches (cap 16) — "
+            "bind fewer OPTIONAL/UNION variables before reusing them as "
+            "join keys"
         )
 
 
@@ -1255,36 +1277,32 @@ def _compat_inner_join(
     mask) on [always-bound shared vars] + [vars in case B]; the union of
     branches is exactly the Join multiset (the cases partition it). The
     merged binding per branch is coalesce(left, right), kept under the
-    LEFT column name so downstream bookkeeping is unchanged.
+    LEFT column name so downstream bookkeeping is unchanged. Unlike the
+    per-left-row clauses (`_mask_pairs`), a var nullable on both sides
+    takes three cases here, not four: the B/L0/R0 split never pairs a
+    left-unbound row twice.
 
     Branch count is ∏(1 + lnull(v) + rnull(v)) over nullable shared vars —
-    bounded at plan time (cap below), never data-dependent. Each branch
-    re-executes the child plans' (pruned, pushdown-filtered) scans —
-    total scan work is branch-count × pruned-scan, bounded by the cap;
-    cached/in-memory children are read once per branch from the cache.
-    An all-unbound branch with no remaining key is a genuine SPARQL
-    cartesian and compiles to crossJoin of the two FILTERED (hence
-    small) sides.
+    bounded at plan time by the shared bound-mask cap, never
+    data-dependent. Each branch re-executes the child plans' (pruned,
+    pushdown-filtered) scans — total scan work is branch-count ×
+    pruned-scan, bounded by the cap; cached/in-memory children are read
+    once per branch from the cache. An all-unbound branch with no
+    remaining key is a genuine SPARQL cartesian and compiles to crossJoin
+    of the two FILTERED (hence small) sides.
 
     After this join a shared v can remain unbound only when BOTH sides can
     be unbound (branch L0 meeting a right-null row) — callers update their
     nullable set accordingly."""
     nv = [v for v in shared if v in lnull or v in rnull]
+    _check_mask_cap(
+        [v for v in nv if v in lnull], [v for v in nv if v in rnull], clause
+    )
     safe = [v for v in shared if v not in nv]
     cases_per_var = [
         ["B"] + (["L0"] if v in lnull else []) + (["R0"] if v in rnull else [])
         for v in nv
     ]
-    n_branches = 1
-    for c in cases_per_var:
-        n_branches *= len(c)
-    if n_branches > 16:
-        raise SparqlSyntaxError(
-            f"{clause} over {len(nv)} possibly-unbound shared variables "
-            f"({['?' + v for v in nv]}) expands to {n_branches} disjoint "
-            "bound-mask join branches (cap 16) — bind fewer OPTIONAL/UNION "
-            "variables before reusing them in a join"
-        )
     base_cols = list(joined.columns)
     shared_right = {scols[v] for v in shared}
     right_keep = [c for c in sdf.columns if c not in shared_right]
@@ -1307,11 +1325,7 @@ def _compat_inner_join(
                     l = l.filter(F.col(lc).isNotNull())
                 r = r.filter(F.col(rc).isNull())
         if keys:
-            cond = reduce(
-                lambda a, b: a & b,
-                [F.col(bound_cols[v]) == F.col(scols[v]) for v in keys],
-            )
-            j = l.join(r, cond, "inner")
+            j = l.join(r, _key_cond(bound_cols, scols, keys), "inner")
         else:
             j = l.crossJoin(r)
         out = []
@@ -1326,90 +1340,137 @@ def _compat_inner_join(
     return reduce(lambda a, b: a.unionByName(b), branches)
 
 
-def _check_mask_product_cap(lnv: list[str], rnv: list[str], clause: str):
-    """Keys nullable on BOTH sides take the PRODUCT of the left and
-    right bound-mask decompositions — 2^(|lnv|+|rnv|) disjoint branch
-    pairs, plan-bounded by the same cap as the single-sided forms."""
-    if 2 ** (len(lnv) + len(rnv)) > 16:
-        raise SparqlSyntaxError(
-            f"{clause} keyed on variables possibly unbound on BOTH sides "
-            f"(outer: {['?' + v for v in lnv]}, group: "
-            f"{['?' + v for v in rnv]}) expands to "
-            f"{2 ** (len(lnv) + len(rnv))} disjoint bound-mask join "
-            "branch pairs (cap 16) — bind fewer OPTIONAL/UNION variables "
-            "on one side"
-        )
-
-
-def _left_mask_branches(
-    joined: DataFrame,
-    bound_cols: dict[str, str],
-    shared: list[str],
-    lnv: list[str],
-    clause: str,
-):
-    """Partition the accumulated solution multiset by which of the
-    left-nullable shared variables are actually bound, yielding
-    (left_branch_df, keys) pairs where `keys` are the shared vars bound
-    in that branch. Valid for every per-left-row clause (OPTIONAL's
-    null-extension, MINUS/EXISTS's keep-or-drop, VALUES): a row's match
-    set depends only on its own bound mask, so branching the LEFT side
-    and unioning the per-branch results is exact — and every branch stays
-    a hash join (the OR-of-null-equality form would force a nested-loop
-    join at scale). Branch count 2^|lnv| is plan-bounded (cap 16)."""
-    if 2 ** len(lnv) > 16:
-        raise SparqlSyntaxError(
-            f"{clause} over {len(lnv)} possibly-unbound shared variables "
-            f"({['?' + v for v in lnv]}) expands to {2 ** len(lnv)} disjoint "
-            "bound-mask join branches (cap 16) — bind fewer OPTIONAL/UNION "
-            "variables before reusing them in a join"
-        )
-    always = [v for v in shared if v not in lnv]
-    for combo in itertools.product([True, False], repeat=len(lnv)):
-        l = joined
-        keys = list(always)
-        for v, bound in zip(lnv, combo):
-            c = F.col(bound_cols[v])
-            l = l.filter(c.isNotNull() if bound else c.isNull())
-            if bound:
-                keys.append(v)
-        yield l, keys
-
-
-def _right_mask_branches(
-    gdf: DataFrame,
+def _join_compatible(
+    left: DataFrame,
+    lcols: dict[str, str],
+    lnull: set[str],
+    right: DataFrame,
     rcols: dict[str, str],
+    rnull: set[str],
     shared: list[str],
+    clause: str,
+) -> DataFrame:
+    """§18.2.2.2 Join of two solution relations — the one inner-join
+    choice behind group joins, closures, paths, GRAPH blocks, subqueries
+    and UNION arms: `_compat_inner_join` when a shared variable may be
+    unbound on either side, else a hash equi-join, else (nothing shared)
+    a cross join. The result keeps `left`'s columns (shared values under
+    the left names) plus `right`'s unshared ones."""
+    if any(v in lnull or v in rnull for v in shared):
+        return _compat_inner_join(
+            left, lcols, lnull, right, rcols, rnull, shared, clause
+        )
+    if shared:
+        return left.join(
+            right, _key_cond(lcols, rcols, shared), "inner"
+        ).drop(*[rcols[v] for v in shared])
+    return left.crossJoin(right)
+
+
+def _mask_branches(df: DataFrame, cols: dict[str, str], nv: list[str]):
+    """Partition a solution multiset by which of the nullable variables
+    `nv` are bound: yields (branch_df, bound_vars) for each of the 2^|nv|
+    masks, all-bound first. No nullable var = one unfiltered branch."""
+    for combo in itertools.product([True, False], repeat=len(nv)):
+        b = df
+        for v, bound in zip(nv, combo):
+            c = F.col(cols[v])
+            b = b.filter(c.isNotNull() if bound else c.isNull())
+        yield b, [v for v, bound in zip(nv, combo) if bound]
+
+
+def _mask_pairs(
+    left: DataFrame,
+    lcols: dict[str, str],
+    lnv: list[str],
+    right: DataFrame,
+    rcols: dict[str, str],
     rnv: list[str],
+    shared: list[str],
     clause: str,
 ):
-    """Right-side analogue of _left_mask_branches: partition the CHILD
-    group's solution multiset by which of ITS nullable shared variables
-    are actually bound, yielding (child_branch_df, keys) pairs. Used for
-    group-INTERNAL nullability (the child of an OPTIONAL/MINUS/EXISTS
-    leaves a shared var optionally bound): a child row with ?v unbound is
-    compatible with ANY outer binding (§18.2.1), so that branch drops the
-    ?v conjunct — the per-outer-row match set becomes the union of the
-    per-branch hash-join matches, matched rows come from per-branch inner
-    joins and no-match rows fall out of CHAINED anti joins. Every branch
-    stays a hash equi-join; 2^|rnv| is plan-bounded (cap 16)."""
-    if 2 ** len(rnv) > 16:
-        raise SparqlSyntaxError(
-            f"{clause} group leaves {len(rnv)} shared variables possibly "
-            f"unbound ({['?' + v for v in rnv]}) — {2 ** len(rnv)} disjoint "
-            "bound-mask branches exceeds the plan cap (16); bind fewer "
-            "OPTIONAL/UNION variables inside the group"
+    """The bound-mask decomposition behind every per-left-row clause
+    (OPTIONAL's null-extension, MINUS/EXISTS's keep-or-drop, multi-var
+    VALUES). SPARQL's unbound-is-compatible rule (§18.2.1) and Spark's
+    NULL==x→NULL disagree on nullable join keys, so both sides split by
+    bound mask: `lnv` are the shared vars the accumulated (left) solution
+    may leave unbound, `rnv` those the child (right) group may. Yields
+    each left branch with its right branches, as (left_branch,
+    [(right_branch, keys), ...]) where `keys` are the shared vars bound
+    on BOTH sides of that pair — an unbound var is compatible with
+    anything, so it contributes no conjunct.
+
+    A left row's match set depends only on its own mask, so per-branch
+    results union exactly, and the right branches partition the child
+    rows, so per-pair matches never double-count. Every pair stays a
+    hash equi-join (the OR-of-null-equality form would force a
+    nested-loop join at scale). A side with no nullable key is one
+    unfiltered branch, so the plain, left-only, right-only and
+    both-sided cases are one loop; 2^(|lnv|+|rnv|) is capped at plan
+    time. Key order follows the left branch when the left is masked,
+    else the right branch (always-bound keys first)."""
+    _check_mask_cap(lnv, rnv, clause)
+    rights = [
+        (r, [v for v in shared if v not in rnv] + rb)
+        for r, rb in _mask_branches(right, rcols, rnv)
+    ]
+    for l, lb in _mask_branches(left, lcols, lnv):
+        kl = [v for v in shared if v not in lnv] + lb
+        yield l, [
+            (r, [v for v in kl if v in kr] if lnv else kr) for r, kr in rights
+        ]
+
+
+def _filter_ends(
+    pairs: DataFrame, s_id: int | None, o_id: int | None,
+    s_col: str = "cs", o_col: str = "co",
+) -> DataFrame:
+    """Constant path endpoints as equality filters on a pair relation."""
+    if s_id is not None:
+        pairs = pairs.filter(F.col(s_col) == F.lit(s_id))
+    if o_id is not None:
+        pairs = pairs.filter(F.col(o_col) == F.lit(o_id))
+    return pairs
+
+
+def _zero_length_pairs(
+    triples: DataFrame, s_id: int | None, o_id: int | None
+) -> DataFrame:
+    """§18.4 ZeroLengthPath pairs (cs, co) over the default graph: the
+    var-var form binds every term of the GRAPH (distinct subjects ∪
+    objects — one aggregation over the two columns, no join) to itself;
+    a constant endpoint matches itself regardless of graph membership
+    (one literal row, no scan; two different constants match nothing)."""
+    if s_id is None and o_id is None:
+        nodes = (
+            triples.select(F.col("s").alias("cs"))
+            .union(triples.select(F.col("o").alias("cs")))
+            .distinct()
         )
-    always = [v for v in shared if v not in rnv]
-    for combo in itertools.product([True, False], repeat=len(rnv)):
-        rb = gdf
-        keys = list(always)
-        for v, bound in zip(rnv, combo):
-            c = F.col(rcols[v])
-            rb = rb.filter(c.isNotNull() if bound else c.isNull())
-            if bound:
-                keys.append(v)
-        yield rb, keys
+        return nodes.select("cs", F.col("cs").alias("co"))
+    seeds = {i for i in (s_id, o_id) if i is not None}
+    return triples.sparkSession.createDataFrame(
+        [(i, i) for i in seeds] if len(seeds) == 1 else [],
+        "cs long, co long",
+    )
+
+
+def _graph_self_pairs(
+    quads: DataFrame, s_id: int | None, o_id: int | None
+) -> DataFrame:
+    """Zero-length pairs of a constant endpoint under GRAPH ?g: the
+    constant matches itself in EVERY named graph, even ones where the
+    term does not occur — distinct graphs × one (g, constant) self-pair
+    (two different constants never match)."""
+    seeds = {i for i in (s_id, o_id) if i is not None}
+    gs_ = quads.select("g").distinct()
+    if len(seeds) > 1:
+        gs_ = gs_.filter(F.lit(False))
+    return gs_.select(
+        F.struct(F.col("g"), F.lit(min(seeds)).cast("long").alias("n")).alias(
+            "cs"
+        )
+    ).select(F.col("cs"), F.col("cs").alias("co"))
 
 
 def _compile_path_relation(
@@ -1443,25 +1504,16 @@ def _compile_path_relation(
     store = ctx.store
     kind = node[0]
     if kind == "pred":
-        k, val = node[1]
-        pid = int(val) if k == "id" else ctx.term_ids[val]
+        pid = _slot_id(ctx.term_ids, node[1])
         t = store.table_for_subject(None).filter(F.col("p") == F.lit(pid))
-        if src_id is not None:
-            t = t.filter(F.col("s") == F.lit(src_id))
-        if dst_id is not None:
-            t = t.filter(F.col("o") == F.lit(dst_id))
+        t = _filter_ends(t, src_id, dst_id, "s", "o")
         return t.select(F.col("s").alias("cs"), F.col("o").alias("co"))
     if kind == "npred":
         # negated property set: one NOT-IN scan predicate (§9.1), same as
         # the pattern-level lowering — still pushdown-able
-        excluded = [
-            int(val) if k == "id" else ctx.term_ids[val] for k, val in node[1]
-        ]
+        excluded = [_slot_id(ctx.term_ids, slot) for slot in node[1]]
         t = store.table_for_subject(None).filter(~F.col("p").isin(excluded))
-        if src_id is not None:
-            t = t.filter(F.col("s") == F.lit(src_id))
-        if dst_id is not None:
-            t = t.filter(F.col("o") == F.lit(dst_id))
+        t = _filter_ends(t, src_id, dst_id, "s", "o")
         return t.select(F.col("s").alias("cs"), F.col("o").alias("co"))
     if kind == "inv":
         r = _compile_path_relation(ctx, node[1], dst_id, src_id)
@@ -1568,31 +1620,13 @@ def _compile_path_relation(
         return transitive_closure(
             inner, src="cs", dst="co", src_id=src_id, dst_id=dst_id
         )
-    spark = inner.sparkSession
-    if src_id is None and dst_id is None:
-        g = store.table_for_subject(None)
-        nodes = (
-            g.select(F.col("s").alias("cs"))
-            .union(g.select(F.col("o").alias("cs")))
-            .distinct()
-        )
-        zero = nodes.select("cs", F.col("cs").alias("co"))
-    else:
-        seeds = {i for i in (src_id, dst_id) if i is not None}
-        zero = spark.createDataFrame(
-            [(i, i) for i in seeds] if len(seeds) == 1 else [],
-            "cs long, co long",
-        )
+    zero = _zero_length_pairs(store.table_for_subject(None), src_id, dst_id)
     if mode == "*":
         step = transitive_closure(
             inner, src="cs", dst="co", src_id=src_id, dst_id=dst_id
         )
     else:  # "?": the inner relation itself, endpoint-filtered
-        step = inner
-        if src_id is not None:
-            step = step.filter(F.col("cs") == F.lit(src_id))
-        if dst_id is not None:
-            step = step.filter(F.col("co") == F.lit(dst_id))
+        step = _filter_ends(inner, src_id, dst_id)
     return zero.unionByName(step).distinct()
 
 
@@ -1651,1463 +1685,1022 @@ def _scope_subquery_to_graph(sub, gvar: str):
     )
 
 
+class _Sol:
+    """The solution ONE group accumulates while its clauses lower in
+    written order: the relation (`df`, None before the first clause),
+    var→column map, first-appearance order, the variables that may hold
+    NULL (SPARQL "unbound" — bound only inside an OPTIONAL, or by
+    some-but-not-all UNION arms) and the BIND targets holding STRING
+    values. `graph_var` is the group's ``GRAPH ?g`` scope (None
+    outside one)."""
+
+    def __init__(self, graph_var: str | None = None):
+        self.df: DataFrame | None = None
+        self.cols: dict[str, str] = {}
+        self.order: list[str] = []
+        self.nullable: set[str] = set()
+        self.string_targets: set[str] = set()
+        self.graph_var = graph_var
+
+
+def _attach_term(
+    df: DataFrame, dictionary: Dictionary, id_col: str, sid: str, tcol: str
+) -> DataFrame:
+    """Left-join the dictionary term of id column `id_col` as `tcol`
+    (plus its `tcol + __sv` STR value under the lexical style): a
+    dangling id yields NULL, SPARQL's error-on-unbound input."""
+    d = _dict_relation(dictionary, sid, tcol)
+    return df.join(d, F.col(id_col) == F.col(sid), "left").drop(sid)
+
+
+def _compose_inner(ctx, sol, sdf, scols, sorder, snull, clause) -> None:
+    """Join one planned relation into the accumulated solution —
+    §18.2.2.2 Join with §18.2.1 compatible-bindings semantics when a
+    shared variable is nullable on either side. The shared machinery
+    behind pattern runs, closures, paths, subgroups, GRAPH blocks and
+    subqueries (they differ only in how their relation is produced)."""
+    sdf, renames = _suffixed(sdf, f"n{ctx.nid()}")
+    scols = {v: renames[c] for v, c in scols.items()}
+    if sol.df is None:
+        sol.df, sol.cols, sol.order = sdf, dict(scols), list(sorder)
+        sol.nullable.update(snull)
+        return
+    shared = [v for v in scols if v in sol.cols]
+    sol.df = _join_compatible(
+        sol.df, sol.cols, sol.nullable, sdf, scols, snull, shared, clause
+    )
+    # the merged value stays unbound only where BOTH sides can be
+    sol.nullable -= set(shared) - set(snull)
+    for v in sorder:
+        if v not in sol.cols:
+            sol.cols[v] = scols[v]
+            sol.order.append(v)
+            if v in snull:
+                sol.nullable.add(v)
+
+
+def _lower_pattern_run(ctx, sol, tps) -> None:
+    """A maximal run of consecutively written triple patterns — one
+    BGP (§18.2.2.5), join-ordered most-bound-first WITHIN the run.
+    Runs split by OPTIONAL/MINUS keep their written position: BGP
+    joins commute with each other but not with LeftJoin/Minus."""
+    rdf, rcols, rorder = _join_group(
+        ctx, _order_patterns(tps), sol.graph_var
+    )
+    if sol.df is None:
+        sol.df, sol.cols, sol.order = rdf, rcols, rorder
+    else:
+        _compose_inner(ctx, sol, rdf, rcols, rorder, set(), "group join")
+
+
+def _pair_scan(pairs, s_slot, o_slot, tag, i, s_id, o_id, graph_var):
+    """Bind a path's endpoint pair relation (cs, co) to its variables:
+    constant endpoints filter, a repeated variable (`?x :p+ ?x`, cycle
+    membership) keeps the s=o pairs, and each distinct variable becomes
+    a `v{tag}{i}_` column. Under GRAPH ?g the endpoints are (g, node)
+    structs: the graph binds ?g, and an endpoint variable named like the
+    graph variable is the same repeated-variable filter. A path with no
+    variable yields one marker row when any pair exists."""
+    s_n, o_n = ("cs.n", "co.n") if graph_var is not None else ("cs", "co")
+    pairs = _filter_ends(pairs, s_id, o_id, s_n, o_n)
+    if s_slot[0] == "var" and o_slot[0] == "var" and s_slot[1] == o_slot[1]:
+        pairs = pairs.filter(F.col(s_n) == F.col(o_n))
+    var_cols: dict[str, str] = {}
+    keep = []
+    if graph_var is not None:
+        if s_slot[0] == "var" and s_slot[1] == graph_var:
+            pairs = pairs.filter(F.col("cs.g") == F.col("cs.n"))
+        if o_slot[0] == "var" and o_slot[1] == graph_var:
+            pairs = pairs.filter(F.col("cs.g") == F.col("co.n"))
+        var_cols[graph_var] = f"vg{i}_{graph_var}"
+        keep.append(F.col("cs.g").alias(var_cols[graph_var]))
+    for pos, slot in ((s_n, s_slot), (o_n, o_slot)):
+        if slot[0] == "var" and slot[1] not in var_cols:
+            var_cols[slot[1]] = f"v{tag}{i}_{slot[1]}"
+            keep.append(F.col(pos).alias(var_cols[slot[1]]))
+    if keep:
+        return pairs.select(*keep), var_cols
+    return pairs.select(F.lit(1).alias(f"_{tag}{i}")).limit(1), var_cols
+
+
+def _graph_closure_pairs(quads, pid, s_id, o_id, mode) -> DataFrame:
+    """`?s :p+ ?o` inside GRAPH ?var (§13.3 × §9.1): reachability is
+    PER GRAPH — a path never crosses graphs — so the closure runs over
+    composite `(g, node)` struct keys: an edge in graph g connects
+    (g,s)→(g,o), and the generic semi-naive iteration joins on struct
+    equality unchanged. Constant endpoints post-filter the closure (the
+    seeded-BFS shortcut needs one constant seed NODE, but here the seed
+    differs per graph). `p*` / `p?` add the §18.4 zero-length pairs PER
+    GRAPH: var-var form = every (g, term-of-g) bound to itself (one
+    distinct over both quad node positions — the same term-universe
+    materialization as the default-graph form, graph-keyed); a constant
+    endpoint matches itself in EVERY named graph."""
+    gedges = quads.filter(F.col("p") == F.lit(pid)).select(
+        F.struct(F.col("g"), F.col("s").alias("n")).alias("gs"),
+        F.struct(F.col("g"), F.col("o").alias("n")).alias("go"),
+    )
+    if mode == "+":
+        return transitive_closure(gedges, src="gs", dst="go")
+    if s_id is None and o_id is None:
+        nodes = (
+            quads.select(F.struct(F.col("g"), F.col("s").alias("n")).alias("gn"))
+            .union(
+                quads.select(
+                    F.struct(F.col("g"), F.col("o").alias("n")).alias("gn")
+                )
+            )
+            .distinct()
+        )
+        zero = nodes.select(F.col("gn").alias("cs"), F.col("gn").alias("co"))
+    else:
+        zero = _graph_self_pairs(quads, s_id, o_id)
+    if mode == "*":
+        step = transitive_closure(gedges, src="gs", dst="go")
+    else:  # "?": one filtered edge scan
+        step = gedges.select(F.col("gs").alias("cs"), F.col("go").alias("co"))
+    return zero.unionByName(step).distinct()
+
+
+def _lower_closure(ctx, sol, item) -> None:
+    """Closure-family paths (§9.1): DISTINCT pairs joined into the group
+    like a required pattern (closure-bound variables are never null).
+      p+  reachability via operators.graph.transitive_closure (a constant
+          endpoint becomes a seeded BFS — bounded neighborhood, never the
+          full closure);
+      p*  reachability ∪ the §18.4 zero-length pairs;
+      p?  one filtered edge scan ∪ the zero-length pairs."""
+    s_slot, p_slot, o_slot, mode = item
+    ci = ctx.nid()
+    pid, s_id, o_id = (
+        _slot_id(ctx.term_ids, slot) for slot in (p_slot, s_slot, o_slot)
+    )
+    ends = (s_id, o_id)
+    if sol.graph_var is not None:
+        pairs = _graph_closure_pairs(ctx.store.quads, pid, s_id, o_id, mode)
+    else:
+        triples = ctx.store.table_for_subject(None)
+        edges = triples.filter(F.col("p") == F.lit(pid))
+        if mode == "?":  # a single filtered edge scan
+            step = _filter_ends(
+                edges.select(F.col("s").alias("cs"), F.col("o").alias("co")),
+                s_id, o_id,
+            )
+        else:
+            step = transitive_closure(
+                edges, src="s", dst="o", src_id=s_id, dst_id=o_id
+            )
+        if mode == "+":
+            pairs, ends = step, (None, None)  # the seeded BFS applied them
+        else:
+            # ∪ the zero-length pairs; the endpoints re-apply in
+            # _pair_scan: the zero-length row of an s=o-constrained pair
+            # survives only when both constants agree
+            pairs = (
+                _zero_length_pairs(triples, s_id, o_id)
+                .unionByName(step)
+                .distinct()
+            )
+    scan, var_cols = _pair_scan(
+        pairs, s_slot, o_slot, "c", ci, *ends, sol.graph_var
+    )
+    _compose_inner(ctx, sol, scan, var_cols, list(var_cols), set(), "group join")
+
+
+def _lower_path(ctx, sol, item) -> None:
+    """Composite path expressions (§9.1 nested forms): compile the AST to
+    a pair relation, apply endpoint constants, and join like a required
+    pattern — the same shape as the single-predicate closure."""
+    s_slot, ast, o_slot = item
+    pi = ctx.nid()
+    s_id, o_id = _slot_id(ctx.term_ids, s_slot), _slot_id(ctx.term_ids, o_slot)
+    if sol.graph_var is None:
+        pairs = _compile_path_relation(ctx, ast, s_id, o_id)
+    else:
+        # composite path inside GRAPH ?var: compile the SAME path AST
+        # against a VIRTUAL store whose s/o are (g, node) structs —
+        # every operator in _compile_path_relation is type-agnostic
+        # (scans filter on p, seq/closure join on full-struct equality,
+        # so chains never cross graphs; the zero-length term universe
+        # comes from the struct s∪o, i.e. per graph). Constant endpoints
+        # post-filter (the seed shortcut needs one constant NODE; here
+        # it differs per graph).
+        vdf = ctx.store.quads.select(
+            F.struct(F.col("g"), F.col("s").alias("n")).alias("s"),
+            F.col("p"),
+            F.struct(F.col("g"), F.col("o").alias("n")).alias("o"),
+        )
+        pairs = _compile_path_relation(
+            ctx.scoped(TripleStore(vdf)), ast, None, None
+        )
+        if (
+            ast[0] == "clos"
+            and ast[2] in ("*", "?")
+            and (s_id is not None or o_id is not None)
+        ):
+            # the compiled per-graph term universe only covers graphs
+            # containing the constant; §18.4 matches it in every graph
+            pairs = pairs.unionByName(
+                _graph_self_pairs(ctx.store.quads, s_id, o_id)
+            ).distinct()
+    scan, var_cols = _pair_scan(
+        pairs, s_slot, o_slot, "p", pi, s_id, o_id, sol.graph_var
+    )
+    _compose_inner(ctx, sol, scan, var_cols, list(var_cols), set(), "group join")
+
+
+def _lower_subgroup(ctx, sol, sub) -> None:
+    """A plain nested subgroup `{ ... }` → inner join on the shared
+    variables (§18.2.2.2 Join): the child group plans standalone —
+    including its own OPTIONALs, UNIONs and filters — then composes."""
+    planned = _plan_group(ctx, sub, graph_var=sol.graph_var)
+    _compose_inner(ctx, sol, *planned, "group join")
+
+
+def _lower_graph(ctx, sol, item) -> None:
+    """A GRAPH block (§13.3): the child group plans with the named-graph
+    QUAD relation as its scan source, then composes like a subgroup
+    (§18.2.2.2 Join). A CONSTANT graph name rewrites to a plain plan
+    over that ONE graph's triples — the g-equality pushes into the quad
+    scan (partition pruning on a write_quads layout) and every engine
+    feature (closures, paths, subqueries, nested GRAPH via the carried
+    quads) works unchanged inside the block. A graph VARIABLE instead
+    threads through the subtree's pattern scans as a fourth slot: within
+    the block it join-keys every pattern to the same graph; outside it
+    is an ordinary required (never-null) variable."""
+    gslot, sub = item
+    if gslot[0] == "var":
+        planned = _plan_group(ctx, sub, graph_var=gslot[1])
+    else:
+        scoped = TripleStore(
+            ctx.store.quads_for_graph(_slot_id(ctx.term_ids, gslot)),
+            layout="single",
+            quads=ctx.store.quads_relation,
+        )
+        planned = _plan_group(ctx.scoped(scoped), sub)
+    _compose_inner(ctx, sol, *planned, "GRAPH join")
+
+
+def _lower_subselect(ctx, sol, sub) -> None:
+    """A subquery `{ SELECT ... }` (§12): planned as a complete
+    standalone query via plan_bgp (own constant encoding, grouping,
+    modifiers), then joined on the shared PROJECTED variables —
+    §18.2.4.4: only the projection is visible outside. A subquery
+    sharing no variable cross-joins (the scalar-aggregate idiom
+    `{ SELECT (COUNT(*) AS ?t) ... }`: a 1-row broadcast side, which AQE
+    plans as a broadcast nested loop). Nullability is conservative: any
+    projected variable not bound by the subquery's required patterns
+    (OPTIONAL-bound, some-UNION-arms, BIND over those) counts nullable;
+    grouped aggregates ride the same rule."""
+    if sol.graph_var is not None:
+        # §13.3: the active graph scopes the subquery too — evaluate it
+        # PER GRAPH via a pure algebraic rewrite (no per-graph loop):
+        # GRAPH ?g { SELECT P WHERE W } becomes the standalone
+        # { SELECT ?g P WHERE { GRAPH ?g { W } } } with ?g appended to
+        # the GROUP BY keys, so aggregates partition per graph, DISTINCT
+        # de-duplicates per graph, and the projected ?g join-keys the
+        # result to the enclosing block's graph binding
+        sub = _scope_subquery_to_graph(sub, sol.graph_var)
+    sdf = plan_bgp(ctx.store, sub, ctx.dictionary)
+    svars = list(sdf.columns)
+    snull = set(svars) - sub.where.required_vars()
+    _compose_inner(ctx, sol, sdf, {v: v for v in svars}, svars, snull, "subquery")
+
+
+def _lower_union(ctx, sol, block) -> None:
+    """A UNION block (SPARQL 1.1 §5.4 alternatives; the generalization of
+    the reference translator's hand-emitted Positive UNION ALL Negative,
+    MyOpVisitorBase.java:106-123). Duplicates preserved: UNION ALL
+    semantics, matching SPARQL's multiset algebra. Arms are full groups
+    (each may carry its own OPTIONALs / nested groups / filters).
+
+    When prior bindings exist, each arm is joined to them SEPARATELY on
+    the variables THAT ARM binds, and the per-arm join results are
+    union'd. Joining a pre-unioned (null-extended) arm stack would drop
+    every solution from an arm that does not bind a shared variable
+    (NULL==x is NULL), where SPARQL's compatible-binding join keeps it —
+    and per-arm joins keep every join a hash equi-join (no null-tolerant
+    OR-condition that would force a nested-loop join at scale)."""
+    bi = ctx.nid()
+    arm_order: list[str] = []  # this block's vars in first-appearance order
+    arms = []
+    for ai, arm in enumerate(block):
+        adf, acols, aorder, anull = _plan_group(
+            ctx, arm, graph_var=sol.graph_var
+        )
+        adf, renames = _suffixed(adf, f"b{bi}a{ai}")
+        arms.append(({v: renames[c] for v, c in acols.items()}, adf, anull))
+        for v in aorder:
+            if v not in arm_order:
+                arm_order.append(v)
+    ucols = {v: f"u{bi}_{v}" for v in arm_order}
+    if sol.df is None:  # first content of a pure-union group
+        normalized = [
+            adf.select(
+                *[F.col(acols[v]).alias(ucols[v]) for v in arm_order if v in acols]
+            )
+            for acols, adf, _ in arms
+        ]
+        sol.df = reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            normalized,
+        )
+        sol.cols, sol.order = dict(ucols), list(arm_order)
+    else:
+        base_cols = list(sol.df.columns)
+        per_arm = []
+        for acols, adf, anull in arms:
+            shared = [v for v in acols if v in sol.cols]
+            j = _join_compatible(
+                sol.df, sol.cols, sol.nullable, adf, acols, anull, shared,
+                "UNION",
+            )
+            # merged binding for a shared var is the prior-side value;
+            # fresh vars get u_ columns, null-extended by the union
+            per_arm.append(
+                j.select(
+                    *[F.col(c) for c in base_cols],
+                    *[
+                        F.col(acols[v]).alias(ucols[v])
+                        for v in arm_order
+                        if v in acols and v not in sol.cols
+                    ],
+                )
+            )
+        sol.df = reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), per_arm
+        )
+        for v in arm_order:
+            if v not in sol.cols:
+                sol.cols[v] = ucols[v]
+                sol.order.append(v)
+    # a union-bound var is nullable unless every arm binds it in its
+    # required part
+    for v in arm_order:
+        if sol.cols[v] == ucols[v] and (
+            not all(v in acols for acols, _, _ in arms)
+            or any(v in anull for _, _, anull in arms)
+        ):
+            sol.nullable.add(v)
+    # a var nullable BEFORE the block becomes bound when every arm
+    # required-binds it: each per-arm compatible join coalesced the
+    # merged value, so no branch leaves it NULL
+    for v in list(sol.nullable):
+        if (
+            v in sol.cols
+            and sol.cols[v] != ucols.get(v)
+            and arms
+            and all(v in acols and v not in anull for acols, _, anull in arms)
+        ):
+            sol.nullable.discard(v)
+
+
+def _plan_child(ctx, sol, grp, tag: str, **kw):
+    """Plan a child group of an OPTIONAL/MINUS/EXISTS standalone and
+    suffix ALL its columns (`_{tag}{gi}`) so they never collide with
+    bound ones. Returns (gi, df, var→column, first-appearance order,
+    shared vars, the shared vars the outer solution may leave unbound,
+    the shared vars the child may leave unbound)."""
+    gdf, gcols, gorder, gnull = _plan_group(
+        ctx, grp, graph_var=sol.graph_var, **kw
+    )
+    gi = ctx.nid()
+    gdf, renames = _suffixed(gdf, f"{tag}{gi}")
+    rcols = {v: renames[c] for v, c in gcols.items()}
+    shared = [v for v in gcols if v in sol.cols]
+    lnv = [v for v in shared if v in sol.nullable]
+    rnv = [v for v in shared if v in gnull]
+    return gi, gdf, rcols, gorder, shared, lnv, rnv
+
+
+def _lower_optional(ctx, sol, opt) -> None:
+    """An OPTIONAL child group → LEFT OUTER JOIN on the shared variables
+    (SPARQL 1.1 §5.3 compatible-bindings semantics): the child composes
+    inner-first (recursively — it may hold its own OPTIONALs/UNIONs),
+    then left-joins, so group-local constraints bind before
+    null-extension — the same machinery as the reference's J3
+    left-outer shape (PartitionQueryingBRDSubject.java:156).
+
+    Nullable keys take the `_mask_pairs` decomposition, and the query
+    picks one of two join shapes. When the child leaves no shared var
+    nullable, each left branch LEFT-joins the child (an unbound outer ?v
+    drops its conjunct and the merged binding coalesces from the child).
+    When it does (group-INTERNAL nullability), matched rows come from
+    per-right-branch hash INNER joins and a left row matching no branch
+    falls out of CHAINED anti joins, null-extended by the union —
+    LeftJoin(P1, P2, F) exactly in both shapes."""
+    gi, gdf, rcols, gorder, shared, lnv, rnv = _plan_child(
+        ctx, sol, opt, "g", defer_filters=True
+    )
+    # the child's DIRECT FILTERs fold into the join condition —
+    # SPARQL's LeftJoin(P1, P2, F) (§18.2.2.2): a match failing F is
+    # kept null-extended, not dropped. The equi-conjuncts still drive a
+    # hash join; the filter rides as the residual join predicate.
+    # String-function leaves attach the variable's dictionary term to
+    # whichever join SIDE binds the variable before the left join; a
+    # dangling term yields NULL → the condition errors →
+    # null-extension, SPARQL's error-in-F behavior.
+    gflts = opt.filters
+    gstr_set = {v for expr in gflts for v in filter_expr_strfn_vars(expr)}
+    if _ACTIVE_STYLE.get() == "lexical":
+        # same bare-numeric-comparison attach rule as group filters
+        gstr_set |= {
+            v
+            for expr in gflts
+            for v in filter_expr_barecmp_vars(expr)
+            if not sol.cols.get(v, "").startswith("vb_")
+            and not rcols.get(v, "").startswith("vb_")
+        }
+    gterms: dict[str, str] = {}
+    if gstr_set and ctx.dictionary is None:
+        raise SparqlSyntaxError(
+            "string-function FILTERs need a dictionary to resolve terms"
+        )
+    for v in sorted(gstr_set):
+        tcol, sid = f"__oterm{gi}_{v}", f"__osid{gi}_{v}"
+        if v in rcols:  # group-bound: attach to the group side
+            gdf = _attach_term(gdf, ctx.dictionary, rcols[v], sid, tcol)
+        else:  # outer-bound: attach to the accumulated side
+            sol.df = _attach_term(sol.df, ctx.dictionary, sol.cols[v], sid, tcol)
+        gterms[v] = tcol
+    fconds = [
+        _compile_filter(expr, {**sol.cols, **rcols}, gterms, ctx.litids)
+        for expr in gflts
+    ]
+    # merged values for left-nullable vars coalesce left-then-right,
+    # under the left column names
+    shared_right = {rcols[v] for v in shared}
+    merged = {sol.cols[v]: rcols[v] for v in lnv}
+    out = [
+        F.coalesce(F.col(c), F.col(merged[c])).alias(c)
+        if c in merged
+        else F.col(c)
+        for c in sol.df.columns
+    ] + [F.col(c) for c in gdf.columns if c not in shared_right]
+    # no child-nullable key = one child branch, left-joined; else inner
+    # joins per child branch plus the chained-anti-join remainder
+    how = "inner" if rnv else "left"
+    parts = []
+    for l, rights in _mask_pairs(
+        sol.df, sol.cols, lnv, gdf, rcols, rnv, shared, "OPTIONAL"
+    ):
+        remaining = l
+        for rb, keys in rights:
+            cond = _key_cond(sol.cols, rcols, keys)
+            for fc in fconds:
+                cond = cond & fc
+            parts.append(l.join(rb, cond, how).select(*out))
+            if rnv:
+                remaining = remaining.join(rb, cond, "left_anti")
+        if rnv:
+            parts.append(remaining)
+    sol.df = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+    )
+    if gterms:
+        sol.df = sol.df.drop(*gterms.values())
+        sol.df = sol.df.drop(*[c + _SV for c in gterms.values()])
+    for v in gorder:
+        if v not in sol.cols:
+            sol.cols[v] = rcols[v]
+            sol.order.append(v)
+            sol.nullable.add(v)  # null when the left join has no match
+
+
+def _lower_minus(ctx, sol, m) -> None:
+    """A MINUS child group → LEFT ANTI JOIN on the shared variables
+    (SPARQL 1.1 §8.3): a binding is removed when the group produces a
+    compatible binding with domain overlap (§18.5). Over nullable keys
+    (`_mask_pairs`) an unbound ?v is compatible with anything, so it
+    contributes no conjunct, and a pair whose key set is empty is
+    dom-disjoint and removes nothing; chained anti joins per left branch
+    = survives every child branch."""
+    _, gdf, rcols, _, shared, lnv, rnv = _plan_child(ctx, sol, m, "m")
+    if not shared:
+        # positionally domain-disjoint (the variables this group shares
+        # textually — e.g. a later BIND's target — are not bound YET):
+        # §8.3 keeps every solution, a no-op. Fully disjoint MINUS still
+        # rejects at validation.
+        return
+    branches = []
+    for l, rights in _mask_pairs(
+        sol.df, sol.cols, lnv, gdf, rcols, rnv, shared, "MINUS"
+    ):
+        for rb, keys in rights:
+            if keys:  # §18.5: an empty key set is a dom-disjoint pair
+                l = l.join(rb, _key_cond(sol.cols, rcols, keys), "left_anti")
+        branches.append(l)
+    sol.df = reduce(lambda a, b: a.unionByName(b), branches)
+
+
+def _lower_exists(ctx, sol, item) -> None:
+    """A FILTER [NOT] EXISTS child group → LEFT SEMI / LEFT ANTI join on
+    the shared variables (SPARQL 1.1 §8.1.1): existence tests never add
+    bindings, they only keep/remove rows. Over nullable keys
+    (`_mask_pairs`) a row passes when ANY child branch matches it: each
+    left branch's rows partition by FIRST matching branch (semi keeps
+    them, anti feeds the next branch), and NOT EXISTS keeps what no
+    branch matched. An empty key set (every shared var unbound, or none
+    shared) is a literal-true condition — the nonempty-group gate, with
+    the group side broadcast."""
+    neg, e = item
+    _, gdf, rcols, _, shared, lnv, rnv = _plan_child(ctx, sol, e, "e")
+    out = []
+    for l, rights in _mask_pairs(
+        sol.df, sol.cols, lnv, gdf, rcols, rnv, shared, "EXISTS"
+    ):
+        kept = []
+        for rb, keys in rights:
+            cond = _key_cond(sol.cols, rcols, keys)
+            if not neg:
+                kept.append(l.join(rb, cond, "left_semi"))
+            l = l.join(rb, cond, "left_anti")  # unmatched: try the next
+        out.append(l if neg else reduce(lambda a, b: a.unionByName(b), kept))
+    sol.df = reduce(lambda a, b: a.unionByName(b), out)
+
+
+def _lower_bind(ctx, sol, item) -> None:
+    """A BIND assignment (§10.1): a computed column over already-bound
+    variables (including OPTIONAL-bound ones: NULL propagates through
+    the arithmetic, leaving the target unbound — SPARQL's expression
+    error semantics). Plain withColumn projections — zero extra plan
+    cost, and Catalyst folds them into the surrounding stage. Targets
+    holding STRING values (LANG/DATATYPE/STR/xsd:string/string
+    expressions) join `sol.string_targets`: a later string expression
+    referencing one uses the column as-is instead of attaching a
+    dictionary term."""
+    bvar, bexpr = item
+    cname = f"vb_{bvar}"
+    dictionary = ctx.dictionary
+    lexical = _ACTIVE_STYLE.get() == "lexical"
+    # §18.2.2.2 (r7): a BIND expression variable this group does not
+    # bind is UNBOUND when the BIND evaluates (groups plan bottom-up) —
+    # mirror the nested-group FILTER rule: compile the reference as a
+    # NULL column, the expression errors → the target is unbound. Only
+    # NESTED groups reach here with such variables (root-group
+    # validation rejects unknown vars as typos). The NULL columns are
+    # TEMPORARY (dropped below): registering the outer var as bound-NULL
+    # would corrupt the parent's compatible-bindings join where that var
+    # IS bound.
+    missing = sorted(arith_expr_vars(bexpr) - set(sol.cols))
+    fcols = sol.cols
+    tmp_unb: list[str] = []
+    if missing:
+        fcols = dict(sol.cols)
+        for mv in missing:
+            cn = f"__bunb{ctx.nid()}_{mv}"
+            sol.df = sol.df.withColumn(cn, F.lit(None).cast("long"))
+            fcols[mv] = cn
+            tmp_unb.append(cn)
+    if bexpr[0] == "strexpr":
+        # BIND(SUBSTR/STRBEFORE/STRAFTER/REPLACE/CONCAT/UCASE/LCASE
+        # (...) AS ?y) (§17.4.3, r7): string manipulation over term
+        # text. Each ID variable the expression reads gets ONE
+        # dictionary term join (the strfn strategy); the functions
+        # compile to JVM column expressions (substring / locate /
+        # regexp_replace / concat — whole-stage codegen, no Python).
+        # NULL inputs propagate through every function → the target
+        # is unbound (SPARQL expression-error semantics).
+        if dictionary is None:
+            raise SparqlSyntaxError(
+                "string-expression BINDs need a dictionary to resolve terms"
+            )
+        need = {
+            v for v in strexpr_vars(bexpr[1]) if v not in sol.string_targets
+        }
+        tcols: dict[str, str] = {}
+        for v in sorted(need):
+            bi = ctx.nid()
+            tcol = f"__sterm{bi}_{v}"
+            tcols[v] = tcol
+            if v in missing:
+                # outer-unbound reference: its term is NULL — no
+                # dictionary join needed
+                sol.df = sol.df.withColumn(tcol, F.lit(None).cast("string"))
+                if lexical:
+                    sol.df = sol.df.withColumn(
+                        tcol + _SV, F.lit(None).cast("string")
+                    )
+                continue
+            sol.df = _attach_term(
+                sol.df, dictionary, sol.cols[v], f"__ssid{bi}", tcol
+            )
+
+        def _idc(v):
+            return F.col(fcols[v])
+
+        def _tc(v):
+            if v in sol.string_targets:
+                return None  # string target IS its own STR value
+            if lexical:
+                # the dictionary-side derived STR value (sof/svar
+                # consumes it verbatim under this style)
+                return F.col(tcols[v] + _SV)
+            return F.col(tcols[v])
+
+        sol.df = sol.df.withColumn(
+            cname, _compile_strexpr(bexpr[1], _idc, _tc, fcols)
+        )
+        if tcols or tmp_unb:
+            sol.df = sol.df.drop(*tcols.values(), *tmp_unb)
+            sol.df = sol.df.drop(*[c + _SV for c in tcols.values()])
+        sol.cols[bvar] = cname
+        sol.order.append(bvar)
+        sol.nullable.add(bvar)
+        sol.string_targets.add(bvar)
+        return
+    if bexpr[0] in ("termfn_expr", "cast_expr"):
+        # BIND(LANG(?x) AS ?l) / BIND(DATATYPE(?x) AS ?d): attach the
+        # source variable's dictionary term (one broadcast left join,
+        # same as the strfn strategy) and compute the STRING value
+        # column-side. IRIs/blanks/unbound ERROR → NULL → the target is
+        # unbound for those solutions (always nullable).
+        _, fn, src_var = bexpr
+        if dictionary is None:
+            raise SparqlSyntaxError(
+                "LANG()/DATATYPE()/STR()/xsd:T() BINDs need a "
+                "dictionary to resolve terms"
+            )
+        bi = ctx.nid()
+        tcol = f"__bterm{bi}_{src_var}"
+        if src_var in missing:
+            # outer-unbound reference: id and term are both NULL — no
+            # dictionary join needed; the fn errors → unbound
+            sol.df = sol.df.withColumn(tcol, F.lit(None).cast("string"))
+            if lexical:
+                sol.df = sol.df.withColumn(
+                    tcol + _SV, F.lit(None).cast("string")
+                )
+        else:
+            sol.df = _attach_term(
+                sol.df, dictionary, sol.cols[src_var], f"__bsid{bi}", tcol
+            )
+        idc, tc = F.col(fcols[src_var]), F.col(tcol)
+        if bexpr[0] == "cast_expr":
+            # BIND(xsd:T(?x) AS ?y) (§17.5, r7): typed-VALUE column from
+            # the term text; uncastable kinds → NULL → unbound
+            ex = _term_cast(fn, idc, tc)
+        elif fn == "str":
+            # STR(?x) (§17.4.2.5): localized = term text
+            # (dictionary-absent id = integer literal, decimal form);
+            # lexical = the dictionary-side derived value
+            ex = (
+                F.col(tcol + _SV)
+                if lexical
+                else F.when(idc.isNotNull(), F.coalesce(tc, idc.cast("string")))
+            )
+        elif fn == "lang":
+            ex = _term_lang(idc, tc)
+        else:
+            ex = _term_datatype(idc, tc)
+        sol.df = sol.df.withColumn(cname, ex).drop(tcol, *tmp_unb)
+        if lexical:
+            sol.df = sol.df.drop(tcol + _SV)
+        sol.cols[bvar] = cname
+        sol.order.append(bvar)
+        sol.nullable.add(bvar)
+        if bexpr[0] == "termfn_expr":
+            sol.string_targets.add(bvar)  # STR/LANG/DATATYPE are strings
+        return
+    btm: dict[str, str] | None = None
+    bhelpers: list[str] = []
+    if lexical and dictionary is not None and bexpr[0] != "var":
+        # lexical store (r11): BIND arithmetic over PATTERN variables
+        # evaluates typed numeric VALUES, not encoded ids (lexicographic
+        # ranks there) — attach each id-valued operand's term and route
+        # through _term_numeric via _compile_arith's termmap, the same
+        # value semantics as the cmp FILTER leaf. Computed (vb_/string)
+        # sources and outer-unbound NULL columns already hold values;
+        # identity binds COPY the id column.
+        btm = {}
+        for v in sorted(arith_expr_vars(bexpr)):
+            col = fcols.get(v, "")
+            if v in missing or col.startswith("vb_") or v in sol.string_targets:
+                continue
+            bi = ctx.nid()
+            tcol = f"__baterm{bi}_{v}"
+            sol.df = _attach_term(sol.df, dictionary, col, f"__baid{bi}", tcol)
+            btm[v] = tcol
+            bhelpers += [tcol, tcol + _SV]
+    sol.df = sol.df.withColumn(cname, _compile_arith(bexpr, fcols, btm))
+    if bhelpers:
+        sol.df = sol.df.drop(*bhelpers)
+    if tmp_unb:
+        sol.df = sol.df.drop(*tmp_unb)
+    sol.cols[bvar] = cname
+    sol.order.append(bvar)
+    # bool(btm): a lexically-routed operand can be a non-numeric term —
+    # a type ERROR (NULL) leaves the target unbound (§17.3)
+    if missing or bool(btm) or arith_expr_vars(bexpr) & sol.nullable:
+        sol.nullable.add(bvar)
+
+
+def _lower_values(ctx, sol, item) -> None:
+    """A single-variable VALUES block → isin() over the resolved ids: an
+    In predicate Catalyst pushes into the Parquet scan (bounded by query
+    size, like all constant encoding — never a data-sized driver
+    structure)."""
+    var, entries = item
+    ids = [_slot_id(ctx.term_ids, e) for e in entries]
+    if var not in sol.cols:
+        # §18.2.2.2: inline VALUES is a JOIN with the data block — a
+        # variable no EARLIER clause bound joins as a fresh binding (each
+        # solution replicates per value; the block is query-sized, so
+        # the literal relation broadcasts)
+        vcol = f"vv{ctx.nid()}_{var}"
+        vals_df = sol.df.sparkSession.createDataFrame(
+            [(i,) for i in ids], f"{vcol} long"
+        )
+        sol.df = sol.df.crossJoin(F.broadcast(vals_df))
+        sol.cols[var] = vcol
+        sol.order.append(var)
+        return
+    if var not in sol.nullable:
+        sol.df = sol.df.filter(F.col(sol.cols[var]).isin(ids))
+        return
+    # §18.2.1: an unbound ?var is compatible with EVERY data row of the
+    # VALUES block and the merged solution binds it — so the unbound
+    # rows replicate once per value (a broadcast cross join against the
+    # query-sized literal relation), while bound rows keep the isin
+    # pushdown filter
+    vcol = f"__vals{ctx.nid()}"
+    vals_df = sol.df.sparkSession.createDataFrame(
+        [(i,) for i in ids], f"{vcol} long"
+    )
+    c = F.col(sol.cols[var])
+    bound_b = sol.df.filter(c.isNotNull()).filter(c.isin(ids))
+    null_b = (
+        sol.df.filter(c.isNull())
+        .crossJoin(F.broadcast(vals_df))
+        .withColumn(sol.cols[var], F.col(vcol))
+        .drop(vcol)
+    )
+    sol.df = bound_b.unionByName(null_b)
+    sol.nullable.discard(var)  # every surviving row binds ?var
+
+
+def _rows_unifiable(a, b) -> bool:
+    """Two VALUES rows are UNIFIABLE when some solution could match both:
+    every variable both rows define agrees (UNDEF constrains nothing).
+    Mixed id/term slots count as potentially-equal (a term resolves to
+    an id only at plan time), erring toward the exact join path."""
+    return not any(
+        ka == kb and ka != "undef" and va != vb
+        for (ka, va), (kb, vb) in zip(a, b)
+    )
+
+
+def _lower_values_multi(ctx, sol, item) -> None:
+    """A multi-variable VALUES block (set semantics — duplicate rows are
+    rejected by the parser). A solution matching k rows must appear k
+    TIMES in the VALUES join (§18.2.2.6 multiset semantics), which a row
+    FILTER cannot produce — so only a block over required-bound vars
+    with pairwise non-unifiable rows reduces to a filter; the rest JOIN
+    a broadcast literal relation."""
+    vars_, rows = item
+    # a variable no EARLIER clause bound joins as a fresh binding:
+    # materialize it unbound (all-NULL) and let the nullable path below
+    # merge the block's values in — the data block is a JOIN
+    # (§18.2.2.2), not a filter
+    for v in vars_:
+        if v not in sol.cols:
+            c = f"vm{ctx.nid()}_{v}"
+            sol.df = sol.df.withColumn(c, F.lit(None).cast("long"))
+            sol.cols[v] = c
+            sol.order.append(v)
+            sol.nullable.add(v)
+    lnv = [v for v in vars_ if v in sol.nullable]
+    overlapping = any(
+        _rows_unifiable(rows[i], rows[j])
+        for i in range(len(rows))
+        for j in range(i + 1, len(rows))
+    )
+    if not lnv and not overlapping:
+        # all vars required-bound and rows pairwise disjoint: the block
+        # reduces to one OR-of-ANDs row filter — UNDEF slots are
+        # wildcards (no conjunct), and disjointness makes the OR exactly
+        # the multiset join result
+        row_conds = []
+        for row in rows:
+            conds = [
+                F.col(sol.cols[v]) == F.lit(_slot_id(ctx.term_ids, slot))
+                for v, slot in zip(vars_, row)
+                if slot[0] != "undef"
+            ]
+            row_conds.append(
+                reduce(lambda a, b: a & b, conds) if conds else F.lit(True)
+            )
+        sol.df = sol.df.filter(reduce(lambda a, b: a | b, row_conds))
+        return
+    # possibly-unbound vars, or unifiable (non-disjoint) rows (r7): JOIN
+    # with a broadcast literal relation (UNDEF = NULL). Left bound-mask
+    # branches keep compatibility exact: in a branch, a var bound on the
+    # left matches rows whose slot is UNDEF or equal (a solution matching
+    # k rows joins k times — the multiset duplication the filter form
+    # cannot express); an unbound var takes the row's value (coalesce
+    # merge — NULL slot leaves it unbound). The join is a broadcast
+    # nested-loop against a QUERY-sized relation (a few rows), bounded
+    # at plan time like all constant encoding.
+    vi = ctx.nid()
+    rcols = {v: f"vr{vi}_{v}" for v in vars_}
+    schema = ", ".join(f"{rcols[v]} long" for v in vars_)
+    data = [tuple(_slot_id(ctx.term_ids, slot) for slot in row) for row in rows]
+    vals_df = sol.df.sparkSession.createDataFrame(data, schema)
+    colvar = {sol.cols[v]: v for v in vars_}
+    branches = []
+    for l, rights in _mask_pairs(
+        sol.df, sol.cols, lnv, F.broadcast(vals_df), rcols, [], list(vars_),
+        "VALUES",
+    ):
+        ((r, keys),) = rights
+        conds = [
+            F.col(rcols[v]).isNull() | (F.col(sol.cols[v]) == F.col(rcols[v]))
+            for v in keys
+        ]
+        cond = reduce(lambda a, b: a & b, conds) if conds else F.lit(True)
+        out = [
+            F.coalesce(F.col(c), F.col(rcols[colvar[c]])).alias(c)
+            if c in colvar and colvar[c] in lnv and colvar[c] not in keys
+            else F.col(c)
+            for c in l.columns
+        ]
+        branches.append(l.join(r, cond, "inner").select(*out))
+    sol.df = reduce(lambda a, b: a.unionByName(b), branches)
+    # a var every row DEFINES is bound in every surviving solution
+    for vix, v in enumerate(vars_):
+        if v in lnv and all(row[vix][0] != "undef" for row in rows):
+            sol.nullable.discard(v)
+
+
+def _lower_group_filters(ctx, sol, filters) -> None:
+    """Group-scoped FILTER constraints, applied at group end (§18.2.2.3)
+    BEFORE projection so non-projected variables filter too; Catalyst
+    pushes var-vs-constant comparisons into the scans and splits
+    top-level conjunctions for pushdown on both join sides.
+    String-function leaves (§17.4.3) reference TERMS, but the relation
+    holds dictionary-encoded ids: attach each string-filtered variable's
+    term via ONE dictionary join, keyed on the id. The join is a left
+    join (a dangling id yields NULL → the predicate errors → the row
+    drops, SPARQL's STR-of-unbound error semantics), but Catalyst
+    rewrites left-join + null-intolerant predicate into an inner join
+    and pushes the string match into the DICTIONARY scan — so the match
+    evaluates over |dict| distinct terms, never per solution row."""
+    # §18.2.2.2 (r6): a filter variable this group does not bind is
+    # UNBOUND when the filter evaluates (groups plan bottom-up) — compile
+    # the reference as a NULL literal column: comparisons error → false
+    # (row drops), BOUND → false, !BOUND → true. Only NESTED groups reach
+    # here with such variables (the root group's validation rejects
+    # unknown vars as typos).
+    fvars = {v for expr in filters for v in filter_expr_vars(expr)}
+    fmap = dict(sol.cols)
+    unbound_cols: list[str] = []
+    for v in sorted(fvars - set(sol.cols)):
+        cn = f"__unb{ctx.nid()}_{v}"
+        sol.df = sol.df.withColumn(cn, F.lit(None).cast("long"))
+        fmap[v] = cn
+        unbound_cols.append(cn)
+    lexical = _ACTIVE_STYLE.get() == "lexical"
+    str_vars = {v for expr in filters for v in filter_expr_strfn_vars(expr)}
+    if lexical:
+        # bare numeric comparisons evaluate typed VALUES over the term
+        # text on lexical stores — attach terms for their variables too,
+        # except computed (BIND-target) columns, which hold values and
+        # compare directly
+        str_vars |= {
+            v
+            for expr in filters
+            for v in filter_expr_barecmp_vars(expr)
+            if not sol.cols.get(v, "").startswith("vb_")
+        }
+    if any(v in sol.cols for v in str_vars) and ctx.dictionary is None:
+        raise SparqlSyntaxError(
+            "string-function FILTERs need a dictionary to resolve terms"
+        )
+    termmap: dict[str, str] = {}
+    for v in sorted(str_vars):
+        fi = ctx.nid()
+        if v not in sol.cols:  # unbound: its term is NULL too
+            cn = f"__unbt{fi}_{v}"
+            sol.df = sol.df.withColumn(cn, F.lit(None).cast("string"))
+            if lexical:
+                sol.df = sol.df.withColumn(
+                    cn + _SV, F.lit(None).cast("string")
+                )
+            termmap[v] = cn
+            continue
+        termmap[v] = f"__term{fi}_{v}"
+        sol.df = _attach_term(
+            sol.df, ctx.dictionary, sol.cols[v], f"__sid{fi}_{v}", termmap[v]
+        )
+    for expr in filters:
+        sol.df = sol.df.filter(_compile_filter(expr, fmap, termmap, ctx.litids))
+    if termmap:
+        sol.df = sol.df.drop(*termmap.values())
+        sol.df = sol.df.drop(*[c + _SV for c in termmap.values()])
+    if unbound_cols:
+        sol.df = sol.df.drop(*unbound_cols)
+
+
+# clause kind → (lowering, GroupPattern field holding its items), in the
+# historical fixed clause order a group with no recorded order uses
+_LOWERINGS = {
+    "closure": (_lower_closure, "closures"),
+    "path": (_lower_path, "paths"),
+    "subgroup": (_lower_subgroup, "subgroups"),
+    "graph": (_lower_graph, "graphs"),
+    "subselect": (_lower_subselect, "subselects"),
+    "union": (_lower_union, "unions"),
+    "optional": (_lower_optional, "optionals"),
+    "bind": (_lower_bind, "binds"),
+    "minus": (_lower_minus, "minuses"),
+    "exists": (_lower_exists, "exists"),
+    "values": (_lower_values, "values"),
+    "values_multi": (_lower_values_multi, "values_multi"),
+}
+# clauses that need a solution to act on: leading, they start from Z
+_LEFTLIKE = frozenset(
+    ("optional", "bind", "minus", "exists", "values", "values_multi")
+)
+
+
 def _plan_group(
     ctx: _PlanCtx, grp: GroupPattern, defer_filters: bool = False,
     graph_var: str | None = None,
 ) -> tuple[DataFrame, dict[str, str], list[str], set[str]]:
     """Plan ONE group graph pattern recursively (SPARQL 1.1 §18.2.2.2's
-    bottom-up algebra): child groups plan standalone and compose into the
-    accumulated solution — plain subgroups by inner join, UNION blocks by
-    per-arm join + multiset union, OPTIONAL by left join (direct child
-    filters folded into the join condition when `defer_filters` was set by
-    the caller), MINUS/EXISTS by anti/semi join — exactly the machinery
-    the flat single-level planner pinned, now applied at every depth.
+    bottom-up algebra): each clause lowers in WRITTEN order into the
+    group's accumulated solution (`_Sol`) through one module-level
+    `_lower_*(ctx, sol, item)` function per clause kind, then the
+    group's FILTERs apply (skipped when `defer_filters`: an OPTIONAL
+    child's filters fold into its LeftJoin condition instead). Child
+    groups plan standalone and compose — subgroups, GRAPH blocks,
+    subqueries, closures and paths by inner join (`_compose_inner`),
+    UNION blocks by per-arm join + multiset union, OPTIONAL by left
+    join, MINUS/EXISTS by anti/semi join.
 
     Returns (df, var→column map, first-appearance order, nullable vars).
-    `nullable` tracks variables that can hold NULL (SPARQL "unbound") —
-    bound only inside an OPTIONAL, or by some-but-not-all UNION arms.
     Spark's NULL==x is NULL, which silently inverts SPARQL's
-    unbound-is-compatible rule (§18.2.1), so joins keyed on nullable vars
-    take a bound-mask branch decomposition everywhere: the two-sided
-    `_compat_inner_join` at group-join / subquery / UNION-arm sites, and
-    the left-side `_left_mask_branches` form at OPTIONAL / MINUS /
-    EXISTS / single-var VALUES (whose match semantics are per-left-row).
-    Group-INTERNAL nullability (the child of an OPTIONAL/MINUS/EXISTS
-    itself leaving a shared var optionally bound) lowers via the
-    RIGHT-side bound-mask decomposition (_right_mask_branches); only
-    keys nullable on BOTH sides and nullable multi-var VALUES still
-    reject rather than guess.
+    unbound-is-compatible rule (§18.2.1), so joins keyed on nullable
+    vars take a bound-mask branch decomposition everywhere under one
+    plan-time cap (`_check_mask_cap`): the two-sided B/L0/R0
+    `_compat_inner_join` behind every inner join (`_join_compatible`),
+    and the left × right mask product `_mask_pairs` behind OPTIONAL,
+    MINUS, EXISTS and multi-var VALUES (per-left-row semantics; a side
+    with no nullable key is one unfiltered branch).
+
+    Dispatch: §18.2.2.6 translates a group's elements in WRITTEN order,
+    and the order is OBSERVABLE whenever a Join-family clause follows an
+    OPTIONAL/MINUS that left a shared variable nullable (Join does not
+    commute with LeftJoin/Minus — found by the clause fuzzer in
+    tests/test_sparql_compat.py). Consecutive triple patterns form one
+    BGP run (BGP joins commute within the run, so the most-bound-first
+    ordering still applies inside it). A group whose FIRST clause is
+    OPTIONAL/MINUS/BIND/VALUES/EXISTS starts from Z — the multiset
+    holding one empty solution (§18.2.2.6's initial state), a
+    zero-column one-row relation — so LeftJoin(Z, A) = A when A is
+    nonempty else the null-extended empty solution, Extend and data
+    blocks apply literally, and Minus/EXISTS gate trivially. One
+    documented deviation: FILTER [NOT] EXISTS applies at its written
+    position (paired with its non-substitution semi-join semantics;
+    plain FILTER expressions still apply at group end per §18.2.2.3).
 
     ``graph_var`` set = this group is (part of) a ``GRAPH ?g`` block
     (§13.3): triple-pattern scans read the quad relation binding ?g, and
     the context inherits into every child group (OPTIONAL bodies, UNION
     arms, nested `{}`) — per §13.3 the active graph scopes the WHOLE
-    enclosed pattern. A nested GRAPH block re-scopes (its own loop below
-    ignores the inherited context). Constant-graph blocks never set this:
-    they rewrite to a plain plan over the one graph's triples, so all of
-    the closure/path/subquery machinery works unchanged there; under a
-    graph VARIABLE, closures/paths/subqueries reject (a closure would
-    have to run per named graph) rather than silently compute over the
-    union of graphs."""
-    store, term_ids, dictionary = ctx.store, ctx.term_ids, ctx.dictionary
-    joined: DataFrame | None = None
-    bound_cols: dict[str, str] = {}
-    order: list[str] = []
-    nullable_vars: set[str] = set()
-
-    def _compose_inner(sdf, scols, sorder, snull, clause):
-        """Join one planned relation into the accumulated solution —
-        §18.2.2.2 Join with §18.2.1 compatible-bindings semantics when a
-        shared variable is nullable on either side. The shared machinery
-        behind pattern runs, closures, paths, subgroups, GRAPH blocks and
-        subqueries (they differ only in how their relation is produced)."""
-        nonlocal joined, bound_cols, order
-        ni = ctx.nid()
-        renames = {c: f"{c}_n{ni}" for c in sdf.columns}
-        for old, new in renames.items():
-            sdf = sdf.withColumnRenamed(old, new)
-        scols = {v: renames[c] for v, c in scols.items()}
-        if joined is None:
-            joined, bound_cols, order = sdf, dict(scols), list(sorder)
-            nullable_vars.update(snull)
-            return
-        shared = [v for v in scols if v in bound_cols]
-        nv = [v for v in shared if v in nullable_vars or v in snull]
-        if nv:
-            # compatible-bindings join (§18.2.1): a shared var unbound on
-            # either side joins by compatibility, not NULL-equality
-            joined = _compat_inner_join(
-                joined, bound_cols, nullable_vars,
-                sdf, scols, snull, shared, clause,
-            )
-            for v in nv:  # merged value unbound only when BOTH sides can be
-                if not (v in nullable_vars and v in snull):
-                    nullable_vars.discard(v)
-        elif shared:
-            cond = reduce(
-                lambda a, b: a & b,
-                [F.col(bound_cols[v]) == F.col(scols[v]) for v in shared],
-            )
-            joined = joined.join(sdf, cond, "inner").drop(
-                *[scols[v] for v in shared]
-            )
-        else:
-            joined = joined.crossJoin(sdf)
-        for v in sorder:
-            if v not in bound_cols:
-                bound_cols[v] = scols[v]
-                order.append(v)
-                if v in snull:
-                    nullable_vars.add(v)
-
-    def _do_pattern_run(tps):
-        """A maximal run of consecutively written triple patterns — one
-        BGP (§18.2.2.5), join-ordered most-bound-first WITHIN the run.
-        Runs split by OPTIONAL/MINUS keep their written position: BGP
-        joins commute with each other but not with LeftJoin/Minus."""
-        nonlocal joined, bound_cols, order
-        rdf, rcols, rorder = _join_group(ctx, _order_patterns(tps), graph_var)
-        if joined is None:
-            joined, bound_cols, order = rdf, rcols, rorder
-        else:
-            _compose_inner(rdf, rcols, rorder, set(), "group join")
-
-    # closure-family paths (§9.1): DISTINCT pairs joined into the group
-    # like a required pattern (closure-bound variables are never null).
-    #   p+  reachability via operators.graph.transitive_closure (a constant
-    #       endpoint becomes a seeded BFS — bounded neighborhood, never the
-    #       full closure);
-    #   p*  reachability ∪ the §18.4 zero-length pairs;
-    #   p?  one filtered edge scan ∪ the zero-length pairs.
-    # Zero-length pairs (§18.4 ZeroLengthPath): var-var form binds every
-    # term of the GRAPH (distinct subjects ∪ objects — one aggregation over
-    # the two columns, no join) to itself; a constant endpoint matches
-    # itself regardless of graph membership (one literal row, no scan).
-    def _do_graph_closure(item, ci):
-        """`?s :p+ ?o` inside GRAPH ?var (§13.3 × §9.1): reachability is
-        PER GRAPH — a path never crosses graphs — so the closure runs
-        over composite `(g, node)` struct keys: an edge in graph g
-        connects (g,s)→(g,o), and the generic semi-naive iteration joins
-        on struct equality unchanged. Constant endpoints post-filter the
-        closure (the seeded-BFS shortcut needs one constant seed NODE,
-        but here the seed differs per graph). `p*` / `p?` add the §18.4
-        zero-length pairs PER GRAPH: var-var form = every (g, term-of-g)
-        bound to itself (one distinct over both quad node positions —
-        the same term-universe materialization as the default-graph
-        form, graph-keyed); a constant endpoint matches itself in EVERY
-        named graph (distinct graphs × one literal row)."""
-        s_slot, p_slot, o_slot, mode = item
-
-        def _res_g(slot):
-            kind, val = slot
-            if kind == "id":
-                return int(val)
-            if kind == "term":
-                return term_ids[val]
-            return None
-
-        pid, s_id, o_id = _res_g(p_slot), _res_g(s_slot), _res_g(o_slot)
-        q = store.quads.filter(F.col("p") == F.lit(pid))
-        gedges = q.select(
-            F.struct(F.col("g"), F.col("s").alias("n")).alias("gs"),
-            F.struct(F.col("g"), F.col("o").alias("n")).alias("go"),
-        )
-        if mode == "+":
-            pairs = transitive_closure(gedges, src="gs", dst="go")
-        else:
-            quads_all = store.quads
-            if s_id is None and o_id is None:
-                nodes = (
-                    quads_all.select(
-                        F.struct(F.col("g"), F.col("s").alias("n")).alias(
-                            "gn"
-                        )
-                    )
-                    .union(
-                        quads_all.select(
-                            F.struct(
-                                F.col("g"), F.col("o").alias("n")
-                            ).alias("gn")
-                        )
-                    )
-                    .distinct()
-                )
-                zero = nodes.select(
-                    F.col("gn").alias("cs"), F.col("gn").alias("co")
-                )
-            else:
-                seeds = {i for i in (s_id, o_id) if i is not None}
-                gs_ = quads_all.select("g").distinct()
-                if len(seeds) > 1:  # two DIFFERENT constants never match
-                    gs_ = gs_.filter(F.lit(False))
-                seed = min(seeds)
-                zero = gs_.select(
-                    F.struct(
-                        F.col("g"), F.lit(seed).cast("long").alias("n")
-                    ).alias("cs")
-                ).select(F.col("cs"), F.col("cs").alias("co"))
-            if mode == "*":
-                step = transitive_closure(gedges, src="gs", dst="go")
-            else:  # "?": one filtered edge scan
-                step = gedges.select(
-                    F.col("gs").alias("cs"), F.col("go").alias("co")
-                )
-            pairs = zero.unionByName(step).distinct()
-        if s_id is not None:
-            pairs = pairs.filter(F.col("cs.n") == F.lit(s_id))
-        if o_id is not None:
-            pairs = pairs.filter(F.col("co.n") == F.lit(o_id))
-        if s_slot[0] == "var" and o_slot[0] == "var" and s_slot[1] == o_slot[1]:
-            pairs = pairs.filter(F.col("cs.n") == F.col("co.n"))
-        # the graph var equal to an endpoint var: same repeated-var filter
-        if s_slot[0] == "var" and s_slot[1] == graph_var:
-            pairs = pairs.filter(F.col("cs.g") == F.col("cs.n"))
-        if o_slot[0] == "var" and o_slot[1] == graph_var:
-            pairs = pairs.filter(F.col("cs.g") == F.col("co.n"))
-        var_cols: dict[str, str] = {}
-        keep = []
-        gcol = f"vg{ci}_{graph_var}"
-        keep.append(F.col("cs.g").alias(gcol))
-        var_cols[graph_var] = gcol
-        for path_, slot in (("cs.n", s_slot), ("co.n", o_slot)):
-            if slot[0] == "var" and slot[1] not in var_cols:
-                col = f"vc{ci}_{slot[1]}"
-                keep.append(F.col(path_).alias(col))
-                var_cols[slot[1]] = col
-        scan = pairs.select(*keep)
-        _compose_inner(scan, var_cols, list(var_cols), set(), "group join")
-
-    def _do_closure(item):
-        s_slot, p_slot, o_slot, mode = item
-        ci = ctx.nid()
-        if graph_var is not None:
-            _do_graph_closure(item, ci)
-            return
-
-        def _res(slot):
-            kind, val = slot
-            if kind == "id":
-                return int(val)
-            if kind == "term":
-                return term_ids[val]
-            return None
-
-        pid, s_id, o_id = _res(p_slot), _res(s_slot), _res(o_slot)
-        edges = store.table_for_subject(None).filter(F.col("p") == F.lit(pid))
-        if mode == "+":
-            pairs = transitive_closure(
-                edges, src="s", dst="o", src_id=s_id, dst_id=o_id
-            )
-        else:
-            spark = edges.sparkSession
-            if s_id is None and o_id is None:
-                g = store.table_for_subject(None)
-                nodes = (
-                    g.select(F.col("s").alias("cs"))
-                    .union(g.select(F.col("o").alias("cs")))
-                    .distinct()
-                )
-                zero = nodes.select("cs", F.col("cs").alias("co"))
-            else:
-                seeds = {i for i in (s_id, o_id) if i is not None}
-                zero = spark.createDataFrame(
-                    [(i, i) for i in seeds] if len(seeds) == 1 else [],
-                    "cs long, co long",
-                )
-            if mode == "*":
-                step = transitive_closure(
-                    edges, src="s", dst="o", src_id=s_id, dst_id=o_id
-                )
-            else:  # "?": a single filtered edge scan
-                step = edges.select(
-                    F.col("s").alias("cs"), F.col("o").alias("co")
-                )
-                if s_id is not None:
-                    step = step.filter(F.col("cs") == F.lit(s_id))
-                if o_id is not None:
-                    step = step.filter(F.col("co") == F.lit(o_id))
-            pairs = zero.unionByName(step).distinct()
-            # re-apply endpoint constants: the zero-length row for an
-            # s=o-constrained pair survives only when both constants agree
-            if s_id is not None:
-                pairs = pairs.filter(F.col("cs") == F.lit(s_id))
-            if o_id is not None:
-                pairs = pairs.filter(F.col("co") == F.lit(o_id))
-        var_cols: dict[str, str] = {}
-        keep = []
-        if s_slot[0] == "var" and o_slot[0] == "var" and s_slot[1] == o_slot[1]:
-            # cycle membership: ?x :p+ ?x
-            pairs = pairs.filter(F.col("cs") == F.col("co"))
-        for pos, slot in (("cs", s_slot), ("co", o_slot)):
-            if slot[0] == "var" and slot[1] not in var_cols:
-                col = f"vc{ci}_{slot[1]}"
-                keep.append(F.col(pos).alias(col))
-                var_cols[slot[1]] = col
-        scan = (
-            pairs.select(*keep)
-            if keep
-            else pairs.select(F.lit(1).alias(f"_c{ci}")).limit(1)
-        )
-        _compose_inner(scan, var_cols, list(var_cols), set(), "group join")
-
-    # composite path expressions (§9.1 nested forms): compile the AST to a
-    # pair relation, apply endpoint constants, and join like a required
-    # pattern — the same shape as the single-predicate closure fast path
-    def _do_path(item):
-        s_slot, ast, o_slot = item
-        pi = ctx.nid()
-
-        def _res_p(slot):
-            kind, val = slot
-            if kind == "id":
-                return int(val)
-            if kind == "term":
-                return term_ids[val]
-            return None
-
-        s_id, o_id = _res_p(s_slot), _res_p(o_slot)
-        if graph_var is not None:
-            # composite path inside GRAPH ?var: compile the SAME path AST
-            # against a VIRTUAL store whose s/o are (g, node) structs —
-            # every operator in _compile_path_relation is type-agnostic
-            # (scans filter on p, seq/closure join on full-struct
-            # equality, so chains never cross graphs; the zero-length
-            # term universe comes from the struct s∪o, i.e. per graph).
-            # Constant endpoints post-filter (the seed shortcut needs one
-            # constant NODE; here it differs per graph).
-            vdf = store.quads.select(
-                F.struct(F.col("g"), F.col("s").alias("n")).alias("s"),
-                F.col("p"),
-                F.struct(F.col("g"), F.col("o").alias("n")).alias("o"),
-            )
-            vctx = _PlanCtx(
-                TripleStore(vdf), term_ids, dictionary, ctx.litids
-            )
-            vctx._counter = ctx._counter
-            pairs = _compile_path_relation(vctx, ast, None, None)
-            if (
-                ast[0] == "clos"
-                and ast[2] in ("*", "?")
-                and (s_id is not None or o_id is not None)
-            ):
-                # §18.4 ZeroLengthPath with a constant endpoint: the
-                # constant matches itself in EVERY named graph, even ones
-                # where the term does not occur — the compiled per-graph
-                # term universe only covers graphs containing the term,
-                # so union in (distinct graphs × constant self-pair),
-                # exactly like the single-predicate _do_graph_closure.
-                seeds = {i for i in (s_id, o_id) if i is not None}
-                gs_ = store.quads.select("g").distinct()
-                if len(seeds) > 1:  # two DIFFERENT constants never match
-                    gs_ = gs_.filter(F.lit(False))
-                seed = min(seeds)
-                selfp = gs_.select(
-                    F.struct(
-                        F.col("g"), F.lit(seed).cast("long").alias("n")
-                    ).alias("cs")
-                ).select(F.col("cs"), F.col("cs").alias("co"))
-                pairs = pairs.unionByName(selfp).distinct()
-            if s_id is not None:
-                pairs = pairs.filter(F.col("cs.n") == F.lit(s_id))
-            if o_id is not None:
-                pairs = pairs.filter(F.col("co.n") == F.lit(o_id))
-            if (
-                s_slot[0] == "var"
-                and o_slot[0] == "var"
-                and s_slot[1] == o_slot[1]
-            ):
-                pairs = pairs.filter(F.col("cs.n") == F.col("co.n"))
-            if s_slot[0] == "var" and s_slot[1] == graph_var:
-                pairs = pairs.filter(F.col("cs.g") == F.col("cs.n"))
-            if o_slot[0] == "var" and o_slot[1] == graph_var:
-                pairs = pairs.filter(F.col("cs.g") == F.col("co.n"))
-            var_cols = {graph_var: f"vg{pi}_{graph_var}"}
-            keep = [F.col("cs.g").alias(var_cols[graph_var])]
-            for path_, slot in (("cs.n", s_slot), ("co.n", o_slot)):
-                if slot[0] == "var" and slot[1] not in var_cols:
-                    col = f"vp{pi}_{slot[1]}"
-                    keep.append(F.col(path_).alias(col))
-                    var_cols[slot[1]] = col
-            scan = pairs.select(*keep)
-            _compose_inner(
-                scan, var_cols, list(var_cols), set(), "group join"
-            )
-            return
-        pairs = _compile_path_relation(ctx, ast, s_id, o_id)
-        if s_id is not None:
-            pairs = pairs.filter(F.col("cs") == F.lit(s_id))
-        if o_id is not None:
-            pairs = pairs.filter(F.col("co") == F.lit(o_id))
-        if s_slot[0] == "var" and o_slot[0] == "var" and s_slot[1] == o_slot[1]:
-            pairs = pairs.filter(F.col("cs") == F.col("co"))
-        var_cols = {}
-        keep = []
-        for pos, slot in (("cs", s_slot), ("co", o_slot)):
-            if slot[0] == "var" and slot[1] not in var_cols:
-                col = f"vp{pi}_{slot[1]}"
-                keep.append(F.col(pos).alias(col))
-                var_cols[slot[1]] = col
-        scan = (
-            pairs.select(*keep)
-            if keep
-            else pairs.select(F.lit(1).alias(f"_p{pi}")).limit(1)
-        )
-        _compose_inner(scan, var_cols, list(var_cols), set(), "group join")
-
-    # plain nested subgroups `{ ... }` → inner join on the shared
-    # variables (§18.2.2.2 Join): the child group plans standalone —
-    # including its own OPTIONALs, UNIONs and filters — then composes
-    def _do_subgroup(sub):
-        sdf, scols, sorder, snull = _plan_group(ctx, sub, graph_var=graph_var)
-        _compose_inner(sdf, scols, sorder, snull, "group join")
-
-    # GRAPH blocks (§13.3): the child group plans with the named-graph
-    # QUAD relation as its scan source, then composes like a subgroup
-    # (§18.2.2.2 Join). A CONSTANT graph name rewrites to a plain plan
-    # over that ONE graph's triples — the g-equality pushes into the quad
-    # scan (partition pruning on a write_quads layout) and every engine
-    # feature (closures, paths, subqueries, nested GRAPH via the carried
-    # quads) works unchanged inside the block. A graph VARIABLE instead
-    # threads through the subtree's pattern scans as a fourth slot:
-    # within the block it join-keys every pattern to the same graph;
-    # outside it is an ordinary required (never-null) variable.
-    def _do_graph(item):
-        gslot, sub = item
-        gkind, gval = gslot
-        if gkind == "var":
-            sdf, scols, sorder, snull = _plan_group(ctx, sub, graph_var=gval)
-        else:
-            gid = int(gval) if gkind == "id" else term_ids[gval]
-            scoped = TripleStore(
-                store.quads_for_graph(gid), layout="single",
-                quads=store.quads_relation,
-            )
-            sctx = _PlanCtx(scoped, term_ids, dictionary, ctx.litids)
-            sctx._counter = ctx._counter  # plan-wide-unique col suffixes
-            sdf, scols, sorder, snull = _plan_group(sctx, sub)
-        _compose_inner(sdf, scols, sorder, snull, "GRAPH join")
-
-    # subqueries `{ SELECT ... }` (§12): planned as complete standalone
-    # queries via plan_bgp (own constant encoding, grouping, modifiers),
-    # then joined on the shared PROJECTED variables — §18.2.4.4: only the
-    # projection is visible outside. A subquery sharing no variable cross-
-    # joins (the scalar-aggregate idiom `{ SELECT (COUNT(*) AS ?t) ... }`:
-    # a 1-row broadcast side, which AQE plans as a broadcast nested loop).
-    # Nullability is conservative: any projected variable not bound by the
-    # subquery's required patterns (OPTIONAL-bound, some-UNION-arms, BIND
-    # over those) counts nullable; grouped aggregates ride the same rule.
-    def _do_subselect(sub):
-        if graph_var is not None:
-            # §13.3: the active graph scopes the subquery too — evaluate
-            # it PER GRAPH via a pure algebraic rewrite (no per-graph
-            # loop): GRAPH ?g { SELECT P WHERE W } becomes the standalone
-            # { SELECT ?g P WHERE { GRAPH ?g { W } } } with ?g appended
-            # to the GROUP BY keys, so aggregates partition per graph,
-            # DISTINCT de-duplicates per graph, and the projected ?g
-            # join-keys the result to the enclosing block's graph binding
-            sub = _scope_subquery_to_graph(sub, graph_var)
-        sdf = plan_bgp(store, sub, dictionary)
-        svars = list(sdf.columns)
-        # §12: only the subquery's PROJECTION is visible; any projected
-        # var not bound by its required patterns counts nullable
-        snull = set(svars) - sub.where.required_vars()
-        _compose_inner(sdf, {v: v for v in svars}, svars, snull, "subquery")
-
-    # UNION block (SPARQL 1.1 §5.4 alternatives; the generalization of the
-    # reference translator's hand-emitted Positive UNION ALL Negative,
-    # MyOpVisitorBase.java:106-123). Duplicates preserved: UNION ALL
-    # semantics, matching SPARQL's multiset algebra. Arms are full groups
-    # (each may carry its own OPTIONALs / nested groups / filters).
-    #
-    # When prior bindings exist, each arm is joined to them SEPARATELY on
-    # the variables THAT ARM binds, and the per-arm join results are
-    # union'd. Joining a pre-unioned (null-extended) arm stack would drop
-    # every solution from an arm that does not bind a shared variable
-    # (NULL==x is NULL), where SPARQL's compatible-binding join keeps it —
-    # and per-arm joins keep every join a hash equi-join (no null-tolerant
-    # OR-condition that would force a nested-loop join at scale).
-    def _do_union(block):
-        nonlocal joined, bound_cols, order
-        bi = ctx.nid()
-        arm_order: list[str] = []  # this block's vars in first-appearance order
-        arms = []
-        for ai, arm in enumerate(block):
-            adf, acols, aorder, anull = _plan_group(
-                ctx, arm, graph_var=graph_var
-            )
-            renames = {c: f"{c}_b{bi}a{ai}" for c in adf.columns}
-            for old, new in renames.items():
-                adf = adf.withColumnRenamed(old, new)
-            arms.append(
-                ({v: renames[c] for v, c in acols.items()}, adf, anull)
-            )
-            for v in aorder:
-                if v not in arm_order:
-                    arm_order.append(v)
-        ucols = {v: f"u{bi}_{v}" for v in arm_order}
-        if joined is None:  # first content of a pure-union group
-            normalized = [
-                adf.select(
-                    *[
-                        F.col(acols[v]).alias(ucols[v])
-                        for v in arm_order
-                        if v in acols
-                    ]
-                )
-                for acols, adf, _ in arms
-            ]
-            joined = reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True),
-                normalized,
-            )
-            bound_cols, order = dict(ucols), list(arm_order)
-        else:
-            base_cols = list(joined.columns)
-            per_arm = []
-            for acols, adf, anull in arms:
-                shared = [v for v in acols if v in bound_cols]
-                nv = [
-                    v for v in shared if v in nullable_vars or v in anull
-                ]
-                if nv:
-                    # a shared var an earlier block left nullable (or the
-                    # arm binds only optionally) joins by §18.2.1
-                    # compatibility; merged values land under the base
-                    # column names, so the select below is unchanged
-                    j = _compat_inner_join(
-                        joined, bound_cols, nullable_vars,
-                        adf, acols, anull, shared, "UNION",
-                    )
-                elif shared:
-                    cond = reduce(
-                        lambda a, b: a & b,
-                        [
-                            F.col(bound_cols[v]) == F.col(acols[v])
-                            for v in shared
-                        ],
-                    )
-                    j = joined.join(adf, cond, "inner")
-                else:
-                    j = joined.crossJoin(adf)
-                # merged binding for a shared var is the (equal) prior-side
-                # value; fresh vars get u_ columns, null-extended by union
-                j = j.select(
-                    *[F.col(c) for c in base_cols],
-                    *[
-                        F.col(acols[v]).alias(ucols[v])
-                        for v in arm_order
-                        if v in acols and v not in bound_cols
-                    ],
-                )
-                per_arm.append(j)
-            joined = reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True),
-                per_arm,
-            )
-            for v in arm_order:
-                if v not in bound_cols:
-                    bound_cols[v] = ucols[v]
-                    order.append(v)
-        # a union-bound var is nullable unless every arm binds it in its
-        # required part
-        for v in arm_order:
-            if bound_cols[v] == ucols[v] and (
-                not all(v in acols for acols, _, _ in arms)
-                or any(v in anull for _, _, anull in arms)
-            ):
-                nullable_vars.add(v)
-        # a var nullable BEFORE the block becomes bound when every arm
-        # required-binds it: each per-arm compatible join coalesced the
-        # merged value, so no branch leaves it NULL
-        for v in list(nullable_vars):
-            if (
-                v in bound_cols
-                and bound_cols[v] != ucols.get(v)
-                and arms
-                and all(
-                    v in acols and v not in anull for acols, _, anull in arms
-                )
-            ):
-                nullable_vars.discard(v)
-
-    # OPTIONAL child groups → LEFT OUTER JOIN on the shared variables
-    # (SPARQL 1.1 §5.3 compatible-bindings semantics): the child composes
-    # inner-first (recursively — it may hold its own OPTIONALs/UNIONs),
-    # then left-joins, so group-local constraints bind before
-    # null-extension — the same machinery as the reference's J3 left-outer
-    # shape (PartitionQueryingBRDSubject.java:156).
-    def _do_optional(opt):
-        nonlocal joined
-        gdf, gcols, gorder, gnull = _plan_group(
-            ctx, opt, defer_filters=True, graph_var=graph_var
-        )
-        gi = ctx.nid()
-        # suffix ALL group columns so they never collide with bound ones
-        renames = {c: f"{c}_g{gi}" for c in gdf.columns}
-        for old, new in renames.items():
-            gdf = gdf.withColumnRenamed(old, new)
-        shared = [v for v in gcols if v in bound_cols]
-        lnv = [v for v in shared if v in nullable_vars]
-        # group-INTERNAL nullability (the child leaves a shared var
-        # optionally bound) lowers via the RIGHT-side bound-mask branch
-        # decomposition below; keys nullable on BOTH sides (r9) take the
-        # PRODUCT of left and right mask branches — per pair, the
-        # conjuncts are the vars bound on both sides — under the same
-        # plan-bounded cap the single-sided forms use
-        rnv = [v for v in shared if v in gnull]
-        if rnv and lnv:
-            _check_mask_product_cap(lnv, rnv, "OPTIONAL")
-        # the child's DIRECT FILTERs fold into the join condition —
-        # SPARQL's LeftJoin(P1, P2, F) (§18.2.2.2): a match failing F is
-        # kept null-extended, not dropped. The equi-conjuncts still drive
-        # a hash join; the filter rides as the residual join predicate.
-        # String-function leaves attach the variable's dictionary term to
-        # whichever join SIDE binds the variable before the left join; a
-        # dangling term yields NULL → the condition errors →
-        # null-extension, SPARQL's error-in-F behavior.
-        gflts = opt.filters
-        gstr_set = {
-            v for expr in gflts for v in filter_expr_strfn_vars(expr)
-        }
-        if _ACTIVE_STYLE.get() == "lexical":
-            # same bare-numeric-comparison attach rule as group filters
-            gstr_set |= {
-                v
-                for expr in gflts
-                for v in filter_expr_barecmp_vars(expr)
-                if not bound_cols.get(v, "").startswith("vb_")
-                and not gcols.get(v, "").startswith("vb_")
-            }
-        gstr_vars = sorted(gstr_set)
-        gterms: dict[str, str] = {}
-        if gstr_vars and dictionary is None:
-            raise SparqlSyntaxError(
-                "string-function FILTERs need a dictionary to resolve terms"
-            )
-        for v in gstr_vars:
-            tcol = f"__oterm{gi}_{v}"
-            d = _dict_relation(dictionary, f"__osid{gi}_{v}", tcol)
-            if v in gcols:  # group-bound: attach to the group side
-                gdf = gdf.join(
-                    d,
-                    F.col(renames[gcols[v]]) == F.col(f"__osid{gi}_{v}"),
-                    "left",
-                ).drop(f"__osid{gi}_{v}")
-            else:  # outer-bound: attach to the accumulated side
-                joined = joined.join(
-                    d,
-                    F.col(bound_cols[v]) == F.col(f"__osid{gi}_{v}"),
-                    "left",
-                ).drop(f"__osid{gi}_{v}")
-            gterms[v] = tcol
-        gmap = dict(bound_cols)
-        gmap.update({v: renames[c] for v, c in gcols.items()})
-        fconds = [
-            _compile_filter(expr, gmap, gterms, ctx.litids) for expr in gflts
-        ]
-
-        def _opt_left_join(l, keys):
-            cs = [
-                F.col(bound_cols[v]) == F.col(renames[gcols[v]]) for v in keys
-            ]
-            cond = reduce(lambda a, b: a & b, cs) if cs else F.lit(True)
-            for fc in fconds:
-                cond = cond & fc
-            return l.join(gdf, cond, "left")
-
-        if rnv and lnv:
-            # BOTH sides nullable (r9): the left×right mask-branch
-            # product. Per (L, R) pair the equi conjuncts are the shared
-            # vars bound on BOTH sides; matched rows come from per-pair
-            # hash INNER joins over the LEFT branch (right branches
-            # partition the child rows disjointly, so unioning per-pair
-            # matches emits every compatible pair exactly once); merged
-            # values for left-nullable vars coalesce left-then-right;
-            # a left row matching NO pair falls out of the chained anti
-            # joins and null-extends — LeftJoin(P1,P2,F) exactly.
-            rcols = {v: renames[c] for v, c in gcols.items()}
-            shared_right = {rcols[v] for v in shared}
-            base_cols = list(joined.columns)
-            right_keep = [c for c in gdf.columns if c not in shared_right]
-            merged = {bound_cols[v]: rcols[v] for v in lnv}
-            right_branches = list(
-                _right_mask_branches(gdf, rcols, shared, rnv, "OPTIONAL")
-            )
-            parts = []
-            for l, kl in _left_mask_branches(
-                joined, bound_cols, shared, lnv, "OPTIONAL"
-            ):
-                remaining = l
-                for rb, kr in right_branches:
-                    keys = [v for v in kl if v in kr]
-                    cs = [
-                        F.col(bound_cols[v]) == F.col(rcols[v])
-                        for v in keys
-                    ]
-                    cond = reduce(lambda a, b: a & b, cs) if cs else F.lit(True)
-                    for fc in fconds:
-                        cond = cond & fc
-                    j = l.join(rb, cond, "inner")
-                    out = [
-                        F.coalesce(F.col(c), F.col(merged[c])).alias(c)
-                        if c in merged
-                        else F.col(c)
-                        for c in base_cols
-                    ]
-                    out.extend(F.col(c) for c in right_keep)
-                    parts.append(j.select(*out))
-                    remaining = remaining.join(rb, cond, "left_anti")
-                parts.append(remaining)
-            joined = reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True),
-                parts,
-            )
-        elif rnv:
-            # §18.2.1 compatible LeftJoin, group-internal nullability:
-            # matched solutions come from per-child-mask hash INNER joins
-            # (a child row with unbound ?v drops the conjunct; the merged
-            # ?v is the outer value), no-match rows fall out of CHAINED
-            # anti joins (unmatched in EVERY branch) and null-extend via
-            # unionByName(allowMissingColumns) — exactly LeftJoin(P1,P2,F)
-            rcols = {v: renames[c] for v, c in gcols.items()}
-            shared_right = {rcols[v] for v in shared}
-            base_cols = list(joined.columns)
-            right_keep = [c for c in gdf.columns if c not in shared_right]
-            parts = []
-            remaining = joined
-            for rb, keys in _right_mask_branches(
-                gdf, rcols, shared, rnv, "OPTIONAL"
-            ):
-                cs = [F.col(bound_cols[v]) == F.col(rcols[v]) for v in keys]
-                cond = reduce(lambda a, b: a & b, cs) if cs else F.lit(True)
-                for fc in fconds:
-                    cond = cond & fc
-                j = joined.join(rb, cond, "inner")
-                parts.append(
-                    j.select(
-                        *[F.col(c) for c in base_cols],
-                        *[F.col(c) for c in right_keep],
-                    )
-                )
-                remaining = remaining.join(rb, cond, "left_anti")
-            joined = reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True),
-                parts + [remaining],
-            )
-        elif lnv:
-            # §18.2.1 compatible LeftJoin: an unbound outer ?v matches any
-            # group row (no ?v conjunct in that branch) and the merged
-            # binding coalesces from the group side; null-extension stays
-            # per-left-row, so unioning per-mask left joins is exact
-            shared_right = {renames[gcols[v]] for v in shared}
-            base_cols = list(joined.columns)
-            merged = {bound_cols[v]: renames[gcols[v]] for v in lnv}
-            right_keep = [c for c in gdf.columns if c not in shared_right]
-            branches = []
-            for l, keys in _left_mask_branches(
-                joined, bound_cols, shared, lnv, "OPTIONAL"
-            ):
-                j = _opt_left_join(l, keys)
-                out = [
-                    F.coalesce(F.col(c), F.col(merged[c])).alias(c)
-                    if c in merged
-                    else F.col(c)
-                    for c in base_cols
-                ]
-                out.extend(F.col(c) for c in right_keep)
-                branches.append(j.select(*out))
-            joined = reduce(lambda a, b: a.unionByName(b), branches)
-        else:
-            joined = _opt_left_join(joined, shared)
-            joined = joined.drop(*[renames[gcols[v]] for v in shared])
-        if gterms:
-            joined = joined.drop(*gterms.values())
-            joined = joined.drop(*[c + _SV for c in gterms.values()])
-        for v in gorder:
-            if v not in bound_cols:
-                bound_cols[v] = renames[gcols[v]]
-                order.append(v)
-                nullable_vars.add(v)  # null when the left join has no match
-
-    # BIND assignments (§10.1): computed columns over already-bound
-    # variables (including OPTIONAL-bound ones: NULL propagates through
-    # the arithmetic, leaving the target unbound — SPARQL's expression
-    # error semantics). Plain withColumn projections — zero extra plan
-    # cost, and Catalyst folds them into the surrounding stage.
-    # BIND targets holding STRING values (LANG/DATATYPE/STR/xsd:string/
-    # string expressions): a later string expression referencing one uses
-    # the column as-is instead of attaching a dictionary term
-    string_targets: set[str] = set()
-
-    def _do_bind(item):
-        nonlocal joined
-        bvar, bexpr = item
-        cname = f"vb_{bvar}"
-        # §18.2.2.2 (r7): a BIND expression variable this group does not
-        # bind is UNBOUND when the BIND evaluates (groups plan
-        # bottom-up) — mirror the nested-group FILTER rule: compile the
-        # reference as a NULL column, the expression errors → the target
-        # is unbound. Only NESTED groups reach here with such variables
-        # (root-group validation rejects unknown vars as typos). The
-        # NULL columns are TEMPORARY (dropped below): registering the
-        # outer var as bound-NULL would corrupt the parent's
-        # compatible-bindings join where that var IS bound.
-        missing = sorted(arith_expr_vars(bexpr) - set(bound_cols))
-        fcols = bound_cols
-        tmp_unb: list[str] = []
-        if missing:
-            fcols = dict(bound_cols)
-            for mv in missing:
-                cn = f"__bunb{ctx.nid()}_{mv}"
-                joined = joined.withColumn(cn, F.lit(None).cast("long"))
-                fcols[mv] = cn
-                tmp_unb.append(cn)
-        if bexpr[0] == "strexpr":
-            # BIND(SUBSTR/STRBEFORE/STRAFTER/REPLACE/CONCAT/UCASE/LCASE
-            # (...) AS ?y) (§17.4.3, r7): string manipulation over term
-            # text. Each ID variable the expression reads gets ONE
-            # dictionary term join (the strfn strategy); the functions
-            # compile to JVM column expressions (substring / locate /
-            # regexp_replace / concat — whole-stage codegen, no Python).
-            # NULL inputs propagate through every function → the target
-            # is unbound (SPARQL expression-error semantics).
-            if dictionary is None:
-                raise SparqlSyntaxError(
-                    "string-expression BINDs need a dictionary to "
-                    "resolve terms"
-                )
-            need = {
-                v
-                for v in strexpr_vars(bexpr[1])
-                if v not in string_targets
-            }
-            tcols: dict[str, str] = {}
-            for v in sorted(need):
-                bi = ctx.nid()
-                tcol = f"__sterm{bi}_{v}"
-                if v in missing:
-                    # outer-unbound reference: its term is NULL — no
-                    # dictionary join needed
-                    joined = joined.withColumn(
-                        tcol, F.lit(None).cast("string")
-                    )
-                    if _ACTIVE_STYLE.get() == "lexical":
-                        joined = joined.withColumn(
-                            tcol + _SV, F.lit(None).cast("string")
-                        )
-                    tcols[v] = tcol
-                    continue
-                d = _dict_relation(dictionary, f"__ssid{bi}", tcol)
-                joined = joined.join(
-                    d,
-                    F.col(bound_cols[v]) == F.col(f"__ssid{bi}"),
-                    "left",
-                ).drop(f"__ssid{bi}")
-                tcols[v] = tcol
-
-            def _idc(v):
-                return F.col(fcols[v])
-
-            def _tc(v):
-                if v in string_targets:
-                    return None  # string target IS its own STR value
-                if _ACTIVE_STYLE.get() == "lexical":
-                    # the dictionary-side derived STR value (sof/svar
-                    # consumes it verbatim under this style)
-                    return F.col(tcols[v] + _SV)
-                return F.col(tcols[v])
-
-            joined = joined.withColumn(
-                cname, _compile_strexpr(bexpr[1], _idc, _tc, fcols)
-            )
-            if tcols or tmp_unb:
-                joined = joined.drop(*tcols.values(), *tmp_unb)
-                joined = joined.drop(*[c + _SV for c in tcols.values()])
-            bound_cols[bvar] = cname
-            order.append(bvar)
-            nullable_vars.add(bvar)
-            string_targets.add(bvar)
-            return
-        if bexpr[0] in ("termfn_expr", "cast_expr"):
-            # BIND(LANG(?x) AS ?l) / BIND(DATATYPE(?x) AS ?d): attach the
-            # source variable's dictionary term (one broadcast left join,
-            # same as the strfn strategy) and compute the STRING value
-            # column-side. IRIs/blanks/unbound ERROR → NULL → the target
-            # is unbound for those solutions (always nullable).
-            _, fn, src_var = bexpr
-            if dictionary is None:
-                raise SparqlSyntaxError(
-                    "LANG()/DATATYPE()/STR()/xsd:T() BINDs need a "
-                    "dictionary to resolve terms"
-                )
-            bi = ctx.nid()
-            tcol = f"__bterm{bi}_{src_var}"
-            lexical = _ACTIVE_STYLE.get() == "lexical"
-            if src_var in missing:
-                # outer-unbound reference: id and term are both NULL —
-                # no dictionary join needed; the fn errors → unbound
-                joined = joined.withColumn(tcol, F.lit(None).cast("string"))
-                if lexical:
-                    joined = joined.withColumn(
-                        tcol + _SV, F.lit(None).cast("string")
-                    )
-            else:
-                d = _dict_relation(dictionary, f"__bsid{bi}", tcol)
-                joined = joined.join(
-                    d,
-                    F.col(bound_cols[src_var]) == F.col(f"__bsid{bi}"),
-                    "left",
-                ).drop(f"__bsid{bi}")
-            idc, tc = F.col(fcols[src_var]), F.col(tcol)
-            if bexpr[0] == "cast_expr":
-                # BIND(xsd:T(?x) AS ?y) (§17.5, r7): typed-VALUE column
-                # from the term text; uncastable kinds → NULL → unbound
-                ex = _term_cast(fn, idc, tc)
-            elif fn == "str":
-                # STR(?x) (§17.4.2.5): localized = term text
-                # (dictionary-absent id = integer literal, decimal
-                # form); lexical = the dictionary-side derived value
-                ex = (
-                    F.col(tcol + _SV)
-                    if lexical
-                    else F.when(
-                        idc.isNotNull(), F.coalesce(tc, idc.cast("string"))
-                    )
-                )
-            elif fn == "lang":
-                ex = _term_lang(idc, tc)
-            else:
-                ex = _term_datatype(idc, tc)
-            joined = joined.withColumn(cname, ex).drop(tcol, *tmp_unb)
-            if lexical:
-                joined = joined.drop(tcol + _SV)
-            bound_cols[bvar] = cname
-            order.append(bvar)
-            nullable_vars.add(bvar)
-            if bexpr[0] == "termfn_expr":
-                string_targets.add(bvar)  # STR/LANG/DATATYPE are strings
-            return
-        btm: dict[str, str] | None = None
-        bhelpers: list[str] = []
-        if (
-            _ACTIVE_STYLE.get() == "lexical"
-            and dictionary is not None
-            and bexpr[0] != "var"  # identity binds COPY the id column
-        ):
-            # lexical store (r11): BIND arithmetic over PATTERN
-            # variables evaluates typed numeric VALUES, not encoded ids
-            # (lexicographic ranks there) — attach each id-valued
-            # operand's term and route through _term_numeric via
-            # _compile_arith's termmap, the same value semantics as the
-            # cmp FILTER leaf. Computed (vb_/string) sources and
-            # outer-unbound NULL columns already hold values.
-            btm = {}
-            for v in sorted(arith_expr_vars(bexpr)):
-                col = fcols.get(v, "")
-                if (
-                    v in missing
-                    or col.startswith("vb_")
-                    or v in string_targets
-                ):
-                    continue
-                bi = ctx.nid()
-                tcol = f"__baterm{bi}_{v}"
-                d = _dict_relation(dictionary, f"__baid{bi}", tcol)
-                joined = joined.join(
-                    d, F.col(col) == F.col(f"__baid{bi}"), "left"
-                ).drop(f"__baid{bi}")
-                btm[v] = tcol
-                bhelpers += [tcol, tcol + _SV]
-        joined = joined.withColumn(cname, _compile_arith(bexpr, fcols, btm))
-        if bhelpers:
-            joined = joined.drop(*bhelpers)
-        if tmp_unb:
-            joined = joined.drop(*tmp_unb)
-        bound_cols[bvar] = cname
-        order.append(bvar)
-        # bool(btm): a lexically-routed operand can be a non-numeric
-        # term — a type ERROR (NULL) leaves the target unbound (§17.3)
-        if missing or bool(btm) or arith_expr_vars(bexpr) & nullable_vars:
-            nullable_vars.add(bvar)
-
-    # MINUS child groups → LEFT ANTI JOIN on the shared variables (SPARQL
-    # 1.1 §8.3): a binding is removed when the group produces a compatible
-    # binding. The parser guarantees ≥1 shared variable (disjoint-domain
-    # MINUS is rejected), so the anti-join condition is never empty.
-    def _do_minus(m):
-        nonlocal joined
-        gdf, gcols, _, gnull = _plan_group(ctx, m, graph_var=graph_var)
-        mi = ctx.nid()
-        renames = {c: f"{c}_m{mi}" for c in gdf.columns}
-        for old, new in renames.items():
-            gdf = gdf.withColumnRenamed(old, new)
-        shared = [v for v in gcols if v in bound_cols]
-        if not shared:
-            # positionally domain-disjoint (the variables this group
-            # shares textually — e.g. a later BIND's target — are not
-            # bound YET): §8.3 keeps every solution, a no-op. Fully
-            # disjoint MINUS still rejects at validation.
-            return
-        lnv = [v for v in shared if v in nullable_vars]
-        rnv = [v for v in shared if v in gnull]
-        if rnv and lnv:
-            # BOTH sides nullable (r9): left×right mask product — a
-            # solution is removed when ANY pair matches it with ≥1
-            # both-bound var (§18.5: an empty effective key set means
-            # dom-disjoint, which Minus KEEPS); chained anti joins per
-            # left branch = survives every pair
-            _check_mask_product_cap(lnv, rnv, "MINUS")
-            rcols = {v: renames[c] for v, c in gcols.items()}
-            right_branches = list(
-                _right_mask_branches(gdf, rcols, shared, rnv, "MINUS")
-            )
-            branches = []
-            for l, kl in _left_mask_branches(
-                joined, bound_cols, shared, lnv, "MINUS"
-            ):
-                remaining = l
-                for rb, kr in right_branches:
-                    keys = [v for v in kl if v in kr]
-                    if not keys:
-                        continue  # §18.5 dom-disjoint pair
-                    cond = reduce(
-                        lambda a, b: a & b,
-                        [
-                            F.col(bound_cols[v]) == F.col(rcols[v])
-                            for v in keys
-                        ],
-                    )
-                    remaining = remaining.join(rb, cond, "left_anti")
-                branches.append(remaining)
-            joined = reduce(lambda a, b: a.unionByName(b), branches)
-            return
-        if rnv:
-            # group-internal nullability: a solution is removed when ANY
-            # child bound-mask branch matches it compatibly WITH domain
-            # overlap (§18.5); a branch whose effective key set is empty
-            # is dom-disjoint and removes nothing. Chained anti joins =
-            # survives every branch.
-            rcols = {v: renames[c] for v, c in gcols.items()}
-            remaining = joined
-            for rb, keys in _right_mask_branches(
-                gdf, rcols, shared, rnv, "MINUS"
-            ):
-                if not keys:
-                    continue  # §18.5 dom-disjoint branch
-                cond = reduce(
-                    lambda a, b: a & b,
-                    [F.col(bound_cols[v]) == F.col(rcols[v]) for v in keys],
-                )
-                remaining = remaining.join(rb, cond, "left_anti")
-            joined = remaining
-            return
-        if lnv:
-            # §18.5 Minus over possibly-unbound keys: an unbound ?v is
-            # compatible with anything, so it contributes no conjunct —
-            # and a branch where EVERY shared var is unbound has
-            # dom(μ1)∩dom(μ2)=∅, which Minus KEEPS unconditionally
-            branches = []
-            for l, keys in _left_mask_branches(
-                joined, bound_cols, shared, lnv, "MINUS"
-            ):
-                if keys:
-                    cond = reduce(
-                        lambda a, b: a & b,
-                        [
-                            F.col(bound_cols[v]) == F.col(renames[gcols[v]])
-                            for v in keys
-                        ],
-                    )
-                    branches.append(l.join(gdf, cond, "left_anti"))
-                else:
-                    branches.append(l)
-            joined = reduce(lambda a, b: a.unionByName(b), branches)
-        else:
-            cond = reduce(
-                lambda a, b: a & b,
-                [
-                    F.col(bound_cols[v]) == F.col(renames[gcols[v]])
-                    for v in shared
-                ],
-            )
-            joined = joined.join(gdf, cond, "left_anti")
-
-    # FILTER [NOT] EXISTS child groups → LEFT SEMI / LEFT ANTI join on the
-    # shared variables (SPARQL 1.1 §8.1.1): existence tests never add
-    # bindings, they only keep/remove rows — exactly Spark's semi/anti
-    # join semantics.
-    def _do_exists(item):
-        nonlocal joined
-        neg, e = item
-        gdf, gcols, _, gnull = _plan_group(ctx, e, graph_var=graph_var)
-        ei = ctx.nid()
-        renames = {c: f"{c}_e{ei}" for c in gdf.columns}
-        for old, new in renames.items():
-            gdf = gdf.withColumnRenamed(old, new)
-        shared = [v for v in gcols if v in bound_cols]
-        lnv = [v for v in shared if v in nullable_vars]
-        rnv = [v for v in shared if v in gnull]
-        jt = "left_anti" if neg else "left_semi"
-        if rnv and lnv:
-            # BOTH sides nullable (r9): left×right mask product — a row
-            # passes the existence test when ANY pair matches it (empty
-            # key set = every-row-compatible = nonempty-group gate);
-            # partition each left branch's rows by FIRST matching pair
-            _check_mask_product_cap(lnv, rnv, "EXISTS")
-            rcols = {v: renames[c] for v, c in gcols.items()}
-            right_branches = list(
-                _right_mask_branches(gdf, rcols, shared, rnv, "EXISTS")
-            )
-            out_branches = []
-            for l, kl in _left_mask_branches(
-                joined, bound_cols, shared, lnv, "EXISTS"
-            ):
-                remaining = l
-                kept = []
-                for rb, kr in right_branches:
-                    keys = [v for v in kl if v in kr]
-                    cs = [
-                        F.col(bound_cols[v]) == F.col(rcols[v])
-                        for v in keys
-                    ]
-                    cond = reduce(lambda a, b: a & b, cs) if cs else F.lit(True)
-                    kept.append(remaining.join(rb, cond, "left_semi"))
-                    remaining = remaining.join(rb, cond, "left_anti")
-                out_branches.append(
-                    remaining
-                    if neg
-                    else reduce(lambda a, b: a.unionByName(b), kept)
-                )
-            joined = reduce(lambda a, b: a.unionByName(b), out_branches)
-            return
-        if rnv:
-            # group-internal nullability: a row passes the existence test
-            # when ANY child bound-mask branch matches it — partition the
-            # outer rows by FIRST matching branch (semi keeps them, anti
-            # feeds the next branch); NOT EXISTS = what no branch matched
-            rcols = {v: renames[c] for v, c in gcols.items()}
-            remaining = joined
-            kept = []
-            for rb, keys in _right_mask_branches(
-                gdf, rcols, shared, rnv, "EXISTS"
-            ):
-                cs = [F.col(bound_cols[v]) == F.col(rcols[v]) for v in keys]
-                cond = reduce(lambda a, b: a & b, cs) if cs else F.lit(True)
-                kept.append(remaining.join(rb, cond, "left_semi"))
-                remaining = remaining.join(rb, cond, "left_anti")
-            joined = (
-                remaining
-                if neg
-                else reduce(lambda a, b: a.unionByName(b), kept)
-            )
-            return
-        if not shared:
-            # positionally domain-disjoint existence test: every binding
-            # is compatible, so the gate is just "is the group nonempty"
-            # — a literal-true semi/anti condition (group side broadcasts)
-            joined = joined.join(gdf, F.lit(True), jt)
-            return
-        if lnv:
-            # compatible-bindings existence test: unbound ?v contributes
-            # no conjunct; the all-unbound branch keeps (drops for NOT
-            # EXISTS) its rows iff the group is nonempty — a literal-true
-            # semi/anti condition (the group side broadcasts)
-            branches = []
-            for l, keys in _left_mask_branches(
-                joined, bound_cols, shared, lnv, "EXISTS"
-            ):
-                cs = [
-                    F.col(bound_cols[v]) == F.col(renames[gcols[v]])
-                    for v in keys
-                ]
-                cond = reduce(lambda a, b: a & b, cs) if cs else F.lit(True)
-                branches.append(l.join(gdf, cond, jt))
-            joined = reduce(lambda a, b: a.unionByName(b), branches)
-        else:
-            cond = reduce(
-                lambda a, b: a & b,
-                [
-                    F.col(bound_cols[v]) == F.col(renames[gcols[v]])
-                    for v in shared
-                ],
-            )
-            joined = joined.join(gdf, cond, jt)
-
-    # VALUES blocks → isin() over the resolved ids: an In predicate
-    # Catalyst pushes into the Parquet scan (bounded by query size, like
-    # all constant encoding — never a data-sized driver structure).
-    def _do_values(item):
-        nonlocal joined
-        var, entries = item
-        ids = [
-            int(val) if kind == "id" else term_ids[val] for kind, val in entries
-        ]
-        if var not in bound_cols:
-            # §18.2.2.2: inline VALUES is a JOIN with the data block — a
-            # variable no EARLIER clause bound joins as a fresh binding
-            # (each solution replicates per value; the block is
-            # query-sized, so the literal relation broadcasts)
-            vcol = f"vv{ctx.nid()}_{var}"
-            vals_df = joined.sparkSession.createDataFrame(
-                [(i,) for i in ids], f"{vcol} long"
-            )
-            joined = joined.crossJoin(F.broadcast(vals_df))
-            bound_cols[var] = vcol
-            order.append(var)
-            return
-        if var in nullable_vars:
-            # §18.2.1: an unbound ?var is compatible with EVERY data row
-            # of the VALUES block and the merged solution binds it — so
-            # the unbound rows replicate once per value (a broadcast
-            # cross join against the query-sized literal relation), while
-            # bound rows keep the isin pushdown filter
-            vcol = f"__vals{ctx.nid()}"
-            vals_df = joined.sparkSession.createDataFrame(
-                [(i,) for i in ids], f"{vcol} long"
-            )
-            c = F.col(bound_cols[var])
-            bound_b = joined.filter(c.isNotNull()).filter(c.isin(ids))
-            null_b = (
-                joined.filter(c.isNull())
-                .crossJoin(F.broadcast(vals_df))
-                .withColumn(bound_cols[var], F.col(vcol))
-                .drop(vcol)
-            )
-            joined = bound_b.unionByName(null_b)
-            nullable_vars.discard(var)  # every surviving row binds ?var
-        else:
-            joined = joined.filter(F.col(bound_cols[var]).isin(ids))
-
-    # multi-variable VALUES → OR-of-ANDs over the resolved ids: one
-    # single-pass row filter, bounded by query size (never a data-sized
-    # structure); set semantics (duplicate rows rejected by the parser)
-    def _do_values_multi(item):
-        nonlocal joined
-        vars_, rows = item
-        # a variable no EARLIER clause bound joins as a fresh binding:
-        # materialize it unbound (all-NULL) and let the nullable path
-        # below merge the block's values in — the data block is a JOIN
-        # (§18.2.2.2), not a filter
-        for v in vars_:
-            if v not in bound_cols:
-                c = f"vm{ctx.nid()}_{v}"
-                joined = joined.withColumn(c, F.lit(None).cast("long"))
-                bound_cols[v] = c
-                order.append(v)
-                nullable_vars.add(v)
-        lnv = [v for v in vars_ if v in nullable_vars]
-
-        # two rows are UNIFIABLE when some solution could match both
-        # (every variable both rows define agrees — UNDEF constrains
-        # nothing); a solution matching k rows must appear k TIMES in the
-        # VALUES join (§18.2.2.6 multiset semantics), which a row FILTER
-        # cannot produce — those blocks take the join lowering below.
-        # Mixed id/term slots count as potentially-equal (a term resolves
-        # to an id only at plan time), erring toward the exact path.
-        def _unifiable(a, b):
-            return not any(
-                ka == kb and ka != "undef" and va != vb
-                for (ka, va), (kb, vb) in zip(a, b)
-            )
-
-        overlapping = any(
-            _unifiable(rows[i], rows[j])
-            for i in range(len(rows))
-            for j in range(i + 1, len(rows))
-        )
-
-        if not lnv and not overlapping:
-            # all vars required-bound and rows pairwise disjoint: the
-            # block reduces to one OR-of-ANDs row filter — UNDEF slots
-            # are wildcards (no conjunct), and disjointness makes the OR
-            # exactly the multiset join result
-            def _row_cond(row):
-                conds = [
-                    F.col(bound_cols[v])
-                    == F.lit(int(val) if kind == "id" else term_ids[val])
-                    for v, (kind, val) in zip(vars_, row)
-                    if kind != "undef"
-                ]
-                return (
-                    reduce(lambda a, b: a & b, conds)
-                    if conds
-                    else F.lit(True)
-                )
-
-            joined = joined.filter(
-                reduce(lambda a, b: a | b, [_row_cond(r) for r in rows])
-            )
-            return
-
-        # possibly-unbound vars, or unifiable (non-disjoint) rows (r7):
-        # JOIN with a broadcast literal relation (UNDEF = NULL). Left
-        # bound-mask branches keep compatibility exact: in a branch, a
-        # var bound on the left matches rows whose slot is UNDEF or
-        # equal (a solution matching k rows joins k times — the multiset
-        # duplication the filter form cannot express); an unbound var
-        # takes the row's value (coalesce merge — NULL slot leaves it
-        # unbound). The join is a broadcast nested-loop against a
-        # QUERY-sized relation (a few rows), bounded at plan time like
-        # all constant encoding.
-        vi = ctx.nid()
-        rcols = {v: f"vr{vi}_{v}" for v in vars_}
-        schema = ", ".join(f"{rcols[v]} long" for v in vars_)
-        data = [
-            tuple(
-                None
-                if kind == "undef"
-                else (int(val) if kind == "id" else term_ids[val])
-                for kind, val in row
-            )
-            for row in rows
-        ]
-        vals_df = joined.sparkSession.createDataFrame(data, schema)
-        colvar = {bound_cols[v]: v for v in vars_}
-        branches = []
-        for l, keys in _left_mask_branches(
-            joined, bound_cols, list(vars_), lnv, "VALUES"
-        ):
-            conds = [
-                F.col(rcols[v]).isNull()
-                | (F.col(bound_cols[v]) == F.col(rcols[v]))
-                for v in keys
-            ]
-            cond = reduce(lambda a, b: a & b, conds) if conds else F.lit(True)
-            j = l.join(F.broadcast(vals_df), cond, "inner")
-            out = [
-                F.coalesce(F.col(c), F.col(rcols[colvar[c]])).alias(c)
-                if c in colvar and colvar[c] in lnv and colvar[c] not in keys
-                else F.col(c)
-                for c in l.columns
-            ]
-            branches.append(j.select(*out))
-        joined = reduce(lambda a, b: a.unionByName(b), branches)
-        # a var every row DEFINES is bound in every surviving solution
-        for vix, v in enumerate(vars_):
-            if v in lnv and all(row[vix][0] != "undef" for row in rows):
-                nullable_vars.discard(v)
-
-    # ---- dispatch: §18.2.2.6 translates a group's elements in WRITTEN
-    # order, and the order is OBSERVABLE whenever a Join-family clause
-    # follows an OPTIONAL/MINUS that left a shared variable nullable
-    # (Join does not commute with LeftJoin/Minus — found by the clause
-    # fuzzer in tests/test_sparql_compat.py). Consecutive triple patterns
-    # form one BGP run (BGP joins commute within the run, so the
-    # most-bound-first ordering still applies inside it). A group whose
-    # FIRST clause is OPTIONAL/MINUS/BIND/VALUES/EXISTS starts from Z —
-    # the multiset holding one empty solution (§18.2.2.6's initial
-    # state), a zero-column one-row relation — so LeftJoin(Z, A) = A
-    # when A is nonempty else the null-extended empty solution, Extend
-    # and data blocks apply literally, and Minus/EXISTS gate trivially.
-    # One documented deviation: FILTER [NOT] EXISTS applies at its
-    # written position (paired with its non-substitution semi-join
-    # semantics; plain FILTER expressions still apply at group end per
-    # §18.2.2.3).
-    _HANDLERS = {
-        "closure": (_do_closure, grp.closures),
-        "path": (_do_path, grp.paths),
-        "subgroup": (_do_subgroup, grp.subgroups),
-        "graph": (_do_graph, grp.graphs),
-        "subselect": (_do_subselect, grp.subselects),
-        "union": (_do_union, grp.unions),
-        "optional": (_do_optional, grp.optionals),
-        "bind": (_do_bind, grp.binds),
-        "minus": (_do_minus, grp.minuses),
-        "exists": (_do_exists, grp.exists),
-        "values": (_do_values, grp.values),
-        "values_multi": (_do_values_multi, grp.values_multi),
-    }
-    _LEFTLIKE = frozenset(
-        ("optional", "bind", "minus", "exists", "values", "values_multi")
-    )
-
-    def _canonical_entries():
-        out = [("pattern", k) for k in range(len(grp.patterns))]
-        for kind in _HANDLERS:
-            out.extend((kind, k) for k in range(len(_HANDLERS[kind][1])))
-        return out
-
+    enclosed pattern. A nested GRAPH block re-scopes. Constant-graph
+    blocks never set this: they rewrite to a plain plan over the one
+    graph's triples, so all of the closure/path/subquery machinery works
+    unchanged there; under a graph VARIABLE, closures and paths run over
+    (g, node) struct keys and subqueries rewrite to per-graph form."""
+    sol = _Sol(graph_var)
+    canonical = [("pattern", k) for k in range(len(grp.patterns))] + [
+        (kind, k)
+        for kind, (_, field) in _LOWERINGS.items()
+        for k in range(len(getattr(grp, field)))
+    ]
     entries = list(grp.seq)
-    if sorted(entries) != sorted(_canonical_entries()):
-        # programmatically built group (no recorded order): the historical
-        # fixed clause order — patterns, then each kind in _HANDLERS order
-        entries = _canonical_entries()
-
+    if sorted(entries) != sorted(canonical):
+        # programmatically built group (no recorded order): the
+        # historical fixed clause order
+        entries = canonical
     i = 0
     while i < len(entries):
         kind, k = entries[i]
-        if joined is None and kind in _LEFTLIKE:
-            joined = store.df.sparkSession.range(1).drop("id")  # Z
+        if sol.df is None and kind in _LEFTLIKE:
+            sol.df = ctx.store.df.sparkSession.range(1).drop("id")  # Z
         if kind == "pattern":
             run = []
             while i < len(entries) and entries[i][0] == "pattern":
                 run.append(grp.patterns[entries[i][1]])
                 i += 1
-            _do_pattern_run(run)
-        else:
-            fn, items = _HANDLERS[kind]
-            fn(items[k])
-            i += 1
-
-    # group-scoped FILTER constraints (skipped when the caller folds them
-    # into a LeftJoin condition instead — OPTIONAL children). String-
-    # function leaves (§17.4.3) reference TERMS, but the relation holds
-    # dictionary-encoded ids: attach each string-filtered variable's term
-    # via ONE dictionary join, keyed on the id. The join is a left join
-    # (a dangling id yields NULL → the predicate errors → the row drops,
-    # SPARQL's STR-of-unbound error semantics), but Catalyst rewrites
-    # left-join + null-intolerant predicate into an inner join and pushes
-    # the string match into the DICTIONARY scan — so the match evaluates
-    # over |dict| distinct terms, never per solution row.
+            _lower_pattern_run(ctx, sol, run)
+            continue
+        lower, field = _LOWERINGS[kind]
+        lower(ctx, sol, getattr(grp, field)[k])
+        i += 1
     if not defer_filters and grp.filters:
-        # §18.2.2.2 (r6): a filter variable this group does not bind is
-        # UNBOUND when the filter evaluates (groups plan bottom-up) —
-        # compile the reference as a NULL literal column: comparisons
-        # error → false (row drops), BOUND → false, !BOUND → true. Only
-        # NESTED groups reach here with such variables (the root group's
-        # validation rejects unknown vars as typos).
-        fvars = {v for expr in grp.filters for v in filter_expr_vars(expr)}
-        fmap = dict(bound_cols)
-        unbound_cols: list[str] = []
-        for v in sorted(fvars - set(bound_cols)):
-            cn = f"__unb{ctx.nid()}_{v}"
-            joined = joined.withColumn(cn, F.lit(None).cast("long"))
-            fmap[v] = cn
-            unbound_cols.append(cn)
-        str_vars = {
-            v for expr in grp.filters for v in filter_expr_strfn_vars(expr)
-        }
-        if _ACTIVE_STYLE.get() == "lexical":
-            # bare numeric comparisons evaluate typed VALUES over the
-            # term text on lexical stores — attach terms for their
-            # variables too, except computed (BIND-target) columns,
-            # which hold values and compare directly
-            str_vars |= {
-                v
-                for expr in grp.filters
-                for v in filter_expr_barecmp_vars(expr)
-                if not bound_cols.get(v, "").startswith("vb_")
-            }
-        str_vars = sorted(str_vars)
-        termmap: dict[str, str] = {}
-        if (
-            any(v in bound_cols for v in str_vars)
-            and dictionary is None
-        ):
-            raise SparqlSyntaxError(
-                "string-function FILTERs need a dictionary to resolve terms"
-            )
-        lexical = _ACTIVE_STYLE.get() == "lexical"
-        for v in str_vars:
-            fi = ctx.nid()
-            if v not in bound_cols:  # unbound: its term is NULL too
-                cn = f"__unbt{fi}_{v}"
-                joined = joined.withColumn(cn, F.lit(None).cast("string"))
-                if lexical:
-                    joined = joined.withColumn(
-                        cn + _SV, F.lit(None).cast("string")
-                    )
-                termmap[v] = cn
-                continue
-            d = _dict_relation(dictionary, f"__sid{fi}_{v}", f"__term{fi}_{v}")
-            joined = joined.join(
-                d, F.col(bound_cols[v]) == F.col(f"__sid{fi}_{v}"), "left"
-            ).drop(f"__sid{fi}_{v}")
-            termmap[v] = f"__term{fi}_{v}"
-        # applied BEFORE projection so non-projected variables filter too;
-        # Catalyst pushes var-vs-constant comparisons into the scans and
-        # splits top-level conjunctions for pushdown on both join sides
-        for expr in grp.filters:
-            joined = joined.filter(
-                _compile_filter(expr, fmap, termmap, ctx.litids)
-            )
-        if termmap:
-            joined = joined.drop(*termmap.values())
-            joined = joined.drop(*[c + _SV for c in termmap.values()])
-        if unbound_cols:
-            joined = joined.drop(*unbound_cols)
-
-    return joined, bound_cols, order, nullable_vars
+        _lower_group_filters(ctx, sol, grp.filters)
+    return sol.df, sol.cols, sol.order, sol.nullable
 
 
 def _dataset_scoped_store(
@@ -3129,12 +2722,8 @@ def _dataset_scoped_store(
             "FROM/FROM NAMED need a store with named graphs (quads)"
         )
 
-    def res(slot):
-        kind, val = slot
-        return int(val) if kind == "id" else term_ids[val]
-
-    from_ids = sorted({res(s) for s in bgp.dataset_default})
-    named_ids = sorted({res(s) for s in bgp.dataset_named})
+    from_ids = sorted({_slot_id(term_ids, s) for s in bgp.dataset_default})
+    named_ids = sorted({_slot_id(term_ids, s) for s in bgp.dataset_named})
     quads = store.quads
     if not from_ids:  # FROM NAMED only: empty default graph
         default = quads.select("s", "p", "o").filter(F.lit(False))
@@ -3225,10 +2814,7 @@ def _plan_bgp(
     # IN filters — the description is every triple the resource appears in
     # as subject or object (documented symmetric form), as a graph set.
     if bgp.describe_terms:
-        ids = [
-            int(val) if kind == "id" else term_ids[val]
-            for kind, val in bgp.describe_terms
-        ]
+        ids = [_slot_id(term_ids, slot) for slot in bgp.describe_terms]
         t = store.table_for_subject(None)
         return t.filter(
             F.col("s").isin(ids) | F.col("o").isin(ids)

@@ -43,6 +43,29 @@ def _full_suite_ids() -> set[str]:
         }
 
 
+def pytest_report_header(config):
+    if os.environ.get("RUN_FULL_TESTS"):
+        return "RUN_FULL_TESTS=1: deferred tests run"
+    return (
+        f"deferred to RUN_FULL_TESTS=1: {len(_full_suite_ids())} tests "
+        "(tests/full_suite_tests.txt) plus those marked full; a node id "
+        "named on the command line still runs"
+    )
+
+
+def _named_node_ids(config) -> list[str]:
+    """Command-line arguments that name a test node (`file::test`),
+    rewritten relative to the rootdir the way item node ids are."""
+    out = []
+    for arg in config.args:
+        if "::" not in arg:
+            continue
+        path, rest = arg.split("::", 1)
+        rel = os.path.relpath(os.path.abspath(path), str(config.rootpath))
+        out.append(rel.replace(os.sep, "/") + "::" + rest)
+    return out
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("RUN_FULL_TESTS"):
         return
@@ -51,6 +74,12 @@ def pytest_collection_modifyitems(config, items):
         "verify-window budget, tests/_budget.py)"
     )
     deferred = _full_suite_ids()
+    named = _named_node_ids(config)
     for item in items:
+        if any(
+            item.nodeid == n or item.nodeid.startswith((n + "[", n + "::"))
+            for n in named
+        ):
+            continue  # collected by node id, not by file or directory
         if "full" in item.keywords or item.nodeid in deferred:
             item.add_marker(skip)

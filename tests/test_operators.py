@@ -386,47 +386,6 @@ def test_mixture_sample_matches_duckdb_oracle(spark, sf_dir):
     assert by_src["src3"] == 25
 
 
-def test_pca_then_ivf_composition(spark, sf_dir):
-    """The dimensionality-reduction → ANN-index composition a real
-    embedding pipeline runs: PCA-project 64-dim vectors to 16 dims (pure
-    codegen), then IVF-index and probe the PROJECTED column. Pins that
-    the stack composes end-to-end and that the reduced-space probe still
-    finds reduced-space neighbors (recall vs brute force in the SAME
-    projected space — PCA changes the metric, so the baseline must be
-    projected too)."""
-    from rdfproject_msc_spark.operators import pca
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    comps, ratio, mean = pca.pca_fit(emb, vec_col="embedding", k=16)
-    proj = pca.pca_project(
-        emb, comps, mean, vec_col="embedding", out_col="pca"
-    ).select("vec_id", "pca")
-    exact = {
-        r.vec_id
-        for r in similarity.cosine_topk_to(
-            proj, query_id=0, k=10, vec_col="pca"
-        ).collect()
-    }
-    approx = {
-        r.vec_id
-        for r in similarity.ivf_topk_to(
-            proj,
-            query_id=0,
-            k=10,
-            dim=16,
-            n_centroids=8,
-            nprobe=4,
-            n_iter=2,
-            vec_col="pca",
-        ).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.5, f"projected-space IVF recall {recall}"
-    # the 16 components must explain a nontrivial share of variance even
-    # on near-random data (16/64 = 25% is the random floor)
-    assert sum(ratio) >= 0.25
-
-
 def test_chunk_documents_matches_duckdb_oracle(spark, sf_dir):
     """Overlapping token-window chunking vs an exact DuckDB twin
     (string_split_regex + generate_series + list slicing)."""

@@ -124,15 +124,43 @@ def test_compat_var_rebinds_to_non_null(compat_store):
     )
 
 
-def test_branch_cap_rejects(compat_store):
-    """3 both-sides-nullable shared vars → 27 disjoint branches > 16: the
-    planner rejects with the cap named rather than emitting a huge plan."""
-    arm = "{ ?s 1 ?a OPTIONAL { ?s 2 ?x } OPTIONAL { ?s 2 ?y } OPTIONAL { ?s 2 ?z } }"
+_ARM = "{ ?s 1 ?a OPTIONAL { ?s 2 ?x } OPTIONAL { ?s 2 ?y } OPTIONAL { ?s 2 ?z } }"
+# five left-nullable keys: 2^5 = 32 bound-mask branches
+_FIVE = "".join(f"OPTIONAL {{ ?s 2 ?x{i} }} " for i in range(1, 6))
+_FIVE_BODY = "{ ?x1 3 ?x2 . ?x3 3 ?x4 . ?x5 3 ?q }"
+BRANCH_CAP_QUERIES = {
+    # 3 both-sides-nullable shared vars → 27 disjoint branches
+    "inner_join": (
+        f"SELECT * WHERE {{ {_ARM} "
+        f"{_ARM.replace('?s', '?t').replace('?a', '?b')} }}"
+    ),
+    "optional": f"SELECT * WHERE {{ ?s 1 ?a {_FIVE} OPTIONAL {_FIVE_BODY} }}",
+    "minus": f"SELECT * WHERE {{ ?s 1 ?a {_FIVE} MINUS {_FIVE_BODY} }}",
+    "exists": (
+        f"SELECT * WHERE {{ ?s 1 ?a {_FIVE} FILTER EXISTS {_FIVE_BODY} }}"
+    ),
+    "values_multi": (
+        f"SELECT * WHERE {{ ?s 1 ?a {_FIVE} "
+        "VALUES (?x1 ?x2 ?x3 ?x4 ?x5) { (1 2 3 4 5) } }"
+    ),
+    # 2 outer-nullable + 3 child-nullable keys: each side alone is under
+    # the cap (4 and 8 branches), their product (32) is not
+    "optional_both_sides": (
+        "SELECT * WHERE { ?s 1 ?x3 OPTIONAL { ?s 2 ?x1 } "
+        "OPTIONAL { ?s 2 ?x2 } OPTIONAL { ?s 2 ?j "
+        "OPTIONAL { ?j 3 ?x1 } OPTIONAL { ?j 3 ?x2 } OPTIONAL { ?j 3 ?x3 } } }"
+    ),
+}
+
+
+@pytest.mark.parametrize("form", sorted(BRANCH_CAP_QUERIES))
+def test_branch_cap_rejects(compat_store, form):
+    """Every bound-mask lowering (two-sided inner join, OPTIONAL, MINUS,
+    FILTER EXISTS, multi-var VALUES, and OPTIONAL keyed on variables
+    nullable on both sides) rejects a key set whose branch count
+    exceeds the cap, naming it, rather than emitting a huge plan."""
     with pytest.raises(SparqlSyntaxError, match="bound-mask"):
-        sparql_to_df(
-            compat_store,
-            f"SELECT * WHERE {{ {arm} {arm.replace('?s', '?t').replace('?a', '?b')} }}",
-        )
+        sparql_to_df(compat_store, BRANCH_CAP_QUERIES[form])
 
 
 # --- property test: Spark plan ≡ direct Python §18.2.1 Join -----------

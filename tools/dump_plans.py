@@ -1,55 +1,208 @@
-"""Dump `.explain("formatted")` for registry queries into
-plans/<round>/<name>_<tag>.txt — the optimization round's evidence files.
+"""Write one normalized OPTIMIZED LOGICAL plan per SPARQL query into a
+directory — the plan-identity check for planner refactors: run it on
+two checkouts and compare with `diff -r`.
 
-Usage: python tools/dump_plans.py <tag> [name ...]
-  tag: "before" or "after"; optional names restrict the set.
+Usage: python tools/dump_plans.py OUT_DIR SF_DIR
+  OUT_DIR  output directory (created; one file per query)
+  SF_DIR   registry data directory (e.g. the sf0.001 test data)
 Env:
-  PLANS_OUT   output dir (default /root/repo/plans/r13)
-  PLANS_SF    data dir   (default /root/testdata/sf0.01)
   PLANS_REPO  repo root to import from (default: this script's parent)
 
-Each query runs an action first (count) so AQE's final plan is captured
-alongside the initial one in the formatted output.
+Query sets, one subdirectory each:
+  registry/     the sparql*/rdf* registry rows (`spec.fn(spark, SF_DIR)`)
+  w3c/          the W3C query-evaluation entries (tests/w3c manifests)
+  conformance/  the spec-conformance cases (tests/test_spec_conformance)
+  masks/        nullable-key clauses over a small in-memory store — the
+                bound-mask lowerings none of the sets above reach
+
+A query that raises writes `ERROR <type>: <first message line>` instead
+of a plan, so a changed rejection shows in the diff too. Normalization
+strips only what differs between two runs of the same code: expression
+ids, plan ids, AQE stage and codegen counters, RDD ids and the checkout
+and temp-directory paths.
 """
 
 from __future__ import annotations
 
 import os
+import re
+import shutil
 import sys
+import tempfile
 
 REPO = os.environ.get(
     "PLANS_REPO", os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 sys.path.insert(0, REPO)
 
-SF = os.environ.get("PLANS_SF", "/root/testdata/sf0.01")
-OUT = os.environ.get("PLANS_OUT", "/root/repo/plans/r13")
+_MASK_ROWS = [
+    (1, 1, 7), (2, 1, 9), (3, 1, 8), (4, 1, 11), (1, 2, 10), (2, 2, 20),
+    (4, 2, 30), (10, 3, 7), (30, 3, 99), (1, 5, 7), (2, 5, 9),
+]
+_CHILD = "{ ?s 2 ?j OPTIONAL { ?j 3 ?x } }"
+_LEFT = "?s 1 ?a OPTIONAL { ?s 2 ?x }"
+MASK_QUERIES = {
+    "optional_plain": "SELECT * WHERE { ?s 1 ?a OPTIONAL { ?s 2 ?x } }",
+    "optional_left": f"SELECT * WHERE {{ {_LEFT} OPTIONAL {{ ?x 3 ?o }} }}",
+    "optional_left_filter": (
+        f"SELECT * WHERE {{ {_LEFT} OPTIONAL {{ ?x 3 ?o FILTER(?o > 7) }} }}"
+    ),
+    "optional_right": f"SELECT * WHERE {{ ?s 1 ?x OPTIONAL {_CHILD} }}",
+    "optional_right_two_keys": (
+        "SELECT * WHERE { ?s 5 ?x . ?x 3 ?k "
+        "OPTIONAL { ?s 2 ?k OPTIONAL { ?k 3 ?x } } }"
+    ),
+    "optional_both": f"SELECT * WHERE {{ {_LEFT} OPTIONAL {_CHILD} }}",
+    "optional_both_filter": (
+        f"SELECT * WHERE {{ {_LEFT} OPTIONAL "
+        "{ ?s 2 ?j OPTIONAL { ?j 3 ?x } FILTER(?j > 1) } }"
+    ),
+    "minus_plain": "SELECT * WHERE { ?s 1 ?a MINUS { ?s 2 ?x } }",
+    "minus_left": f"SELECT * WHERE {{ {_LEFT} MINUS {{ ?x 3 ?m }} }}",
+    "minus_right": f"SELECT * WHERE {{ ?s 1 ?x MINUS {_CHILD} }}",
+    "minus_both": f"SELECT * WHERE {{ {_LEFT} MINUS {_CHILD} }}",
+    "minus_disjoint": "SELECT * WHERE { ?s 1 ?a MINUS { ?x 3 ?m } BIND(1 AS ?m) }",
+    "exists_plain": "SELECT * WHERE { ?s 1 ?a FILTER EXISTS { ?s 2 ?x } }",
+    "exists_left": f"SELECT * WHERE {{ {_LEFT} FILTER EXISTS {{ ?x 3 ?e }} }}",
+    "not_exists_left": (
+        f"SELECT * WHERE {{ {_LEFT} FILTER NOT EXISTS {{ ?x 3 ?e }} }}"
+    ),
+    "exists_right": f"SELECT * WHERE {{ ?s 1 ?x FILTER EXISTS {_CHILD} }}",
+    "not_exists_right": (
+        f"SELECT * WHERE {{ ?s 1 ?x FILTER NOT EXISTS {_CHILD} }}"
+    ),
+    "exists_both": f"SELECT * WHERE {{ {_LEFT} FILTER EXISTS {_CHILD} }}",
+    "not_exists_both": (
+        f"SELECT * WHERE {{ {_LEFT} FILTER NOT EXISTS {_CHILD} }}"
+    ),
+    "exists_disjoint": (
+        "SELECT * WHERE { ?s 1 ?a FILTER EXISTS { ?x 3 ?m } BIND(1 AS ?m) }"
+    ),
+    "values_single_nullable": f"SELECT * WHERE {{ {_LEFT} VALUES ?x {{ 5 7 }} }}",
+    "values_single_fresh": "SELECT * WHERE { VALUES ?s { 1 2 } ?s 1 ?a }",
+    "values_multi_filter": (
+        "SELECT * WHERE { ?s 1 ?a VALUES (?s ?a) { (1 7) (2 UNDEF) } }"
+    ),
+    "values_multi_nullable": (
+        f"SELECT * WHERE {{ {_LEFT} VALUES (?s ?x) {{ (1 5) (2 6) (3 UNDEF) }} }}"
+    ),
+    "values_multi_fresh": (
+        "SELECT * WHERE { ?s 1 ?a VALUES (?s ?x) { (1 5) (1 6) (2 UNDEF) } "
+        "OPTIONAL { ?s 2 ?x } }"
+    ),
+    "group_join_left": f"SELECT * WHERE {{ {_LEFT} {{ ?x 3 ?g }} }}",
+    "group_join_both": (
+        f"SELECT * WHERE {{ {_LEFT} {{ ?t 2 ?x OPTIONAL {{ ?x 3 ?g }} }} "
+        "{ ?t 5 ?g } }"
+    ),
+    "union_nullable": (
+        f"SELECT * WHERE {{ {_LEFT} {{ ?x 3 ?u }} UNION {{ ?s 5 ?x }} }}"
+    ),
+    "union_plain": "SELECT * WHERE { ?s 1 ?a { ?s 2 ?u } UNION { ?s 5 ?w } }",
+    "subquery_nullable": (
+        f"SELECT * WHERE {{ {_LEFT} {{ SELECT ?x ?y WHERE {{ ?x 3 ?y }} }} }}"
+    ),
+    "bind_nullable": f"SELECT * WHERE {{ {_LEFT} BIND(?x + 1 AS ?b) }}",
+    "closure": "SELECT * WHERE { ?s 3+ ?o }",
+    "closure_star_seeded": "SELECT * WHERE { 10 3* ?o }",
+    "closure_opt_seeded": "SELECT * WHERE { ?s 2? 30 }",
+    "path_seq": "SELECT * WHERE { ?s 2/3 ?o }",
+    "path_star_var": "SELECT * WHERE { ?s (2/3)* ?o }",
+    "path_star_seeded": "SELECT * WHERE { 1 (2/3)* ?o }",
+}
+
+_NORMALIZE = [
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"\*\(\d+\)"), "*()"),
+    (re.compile(r"codegen id : \d+"), "codegen id : "),
+    (re.compile(r"(QueryStage) \d+"), r"\1 "),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+]
+
+
+def normalize(plan: str, paths: list[str]) -> str:
+    for path in paths:
+        plan = plan.replace(path, "<path>")
+    for pat, rep in _NORMALIZE:
+        plan = pat.sub(rep, plan)
+    return plan
+
+
+def _write(out_dir: str, sub: str, name: str, build, paths) -> None:
+    os.makedirs(os.path.join(out_dir, sub), exist_ok=True)
+    safe = re.sub(r"[^A-Za-z0-9_.-]", "_", name)
+    try:
+        df = build()
+        text = df._jdf.queryExecution().optimizedPlan().toString()
+        text = normalize(text, paths)
+    except Exception as exc:  # noqa: BLE001 — the rejection IS the output
+        msg = (str(exc).strip().splitlines() or [""])[0]
+        text = f"ERROR {type(exc).__name__}: {normalize(msg, paths)}\n"
+    with open(os.path.join(out_dir, sub, safe + ".txt"), "w") as f:
+        f.write(text)
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    only = set(sys.argv[2:])
-    os.makedirs(OUT, exist_ok=True)
-
+    out_dir, sf_dir = sys.argv[1], sys.argv[2]
+    from rdfproject_msc_spark.engine import Engine
     from rdfproject_msc_spark.registry import REGISTRY
     from rdfproject_msc_spark.session import get_spark
+    from rdfproject_msc_spark.sparql.planner import sparql_to_df
+    from rdfproject_msc_spark.store import TripleStore
 
-    spark = get_spark(app_name=f"plans-{tag}", cpus=8)
+    import tests.test_spec_conformance as conformance
+    import tests.test_w3c_manifests as w3c
+
+    # untruncated file locations: the truncation point moves with the
+    # checkout path's length
+    spark = get_spark(
+        app_name="dump-plans", cpus=4,
+        extra_conf={"spark.sql.maxMetadataStringLength": "100000"},
+    )
+    tmp = tempfile.mkdtemp(prefix="dump_plans_")
+    paths = [tmp, os.path.realpath(REPO), REPO]
+
     for name, spec in REGISTRY.items():
-        if not spec.headline or (only and name not in only):
+        if name.startswith(("sparql", "rdf")):
+            _write(out_dir, "registry", name,
+                   lambda: spec.fn(spark, sf_dir), paths)
+
+    engines = w3c.w3c_engines.__wrapped__(spark)
+    for e in w3c.ENTRIES:
+        if not e["type"].endswith("QueryEvaluationTest>"):
             continue
-        try:
-            df = spec.fn(spark, SF)
-            df.count()  # finalize the adaptive plan
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            with open(f"{OUT}/{name}_{tag}.txt", "w") as f:
-                f.write(plan)
-            print(f"ok   {name}", flush=True)
-        except Exception as exc:  # noqa: BLE001
-            print(f"FAIL {name}: {exc}", flush=True)
+        with open(e["query"], encoding="utf-8") as f:
+            query = f.read()
+
+        def build(e=e, query=query):
+            eng = engines(e["data"], tuple(e.get("graph_data") or ()))
+            return eng.sparql(query, decode=True, strict_terms=False)
+
+        _write(out_dir, "w3c", f"{e['suite']}_{e['id']}", build, paths)
+
+    built = {}
+    for key, text in conformance.DATA.items():
+        path = os.path.join(tmp, key, "data.ttl")
+        os.makedirs(os.path.dirname(path))
+        with open(path, "w") as f:
+            f.write(text)
+        built[key] = Engine(spark).load_triples(path, fmt="ttl")
+    for case in conformance.CASES:
+        eng = built[case["data"]]
+        _write(out_dir, "conformance", case["name"],
+               lambda: eng.sparql(
+                   case["query"], decode=True, strict_terms=False
+               ), paths)
+
+    store = TripleStore(
+        spark.createDataFrame(_MASK_ROWS, "s long, p long, o long")
+    )
+    for name, query in MASK_QUERIES.items():
+        _write(out_dir, "masks", name,
+               lambda: sparql_to_df(store, query), paths)
     spark.stop()
+    shutil.rmtree(tmp)
 
 
 if __name__ == "__main__":
