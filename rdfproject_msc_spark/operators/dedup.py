@@ -327,7 +327,12 @@ def _simhash_sig_udf():
         weights = np.float64(2) ** np.arange(32)  # 2^b exact in float64
         out = np.empty(len(packed), dtype=object)
         out[:] = None
-        arrs = [np.asarray(p, dtype=np.int64) for p in packed]
+        # a NULL packed array (NULL text) is an empty one: no shingles,
+        # NULL signature
+        arrs = [
+            np.asarray(p if p is not None else (), dtype=np.int64)
+            for p in packed
+        ]
         lens = np.fromiter((len(a) for a in arrs), dtype=np.int64)
         idx = np.flatnonzero(lens)
         pos = 0

@@ -88,6 +88,24 @@ earlier string BIND targets and each other (nested), lowered to
 ('strexpr', tree) — `_parse_str_expr` — and compiled to JVM column
 expressions with one dictionary join per distinct source variable.
 
+Structure. Every expression parser runs over one `_Tokens` cursor,
+which carries the grammar's error label ("bad FILTER / BIND / string
+expression") and the argument shapes calls share (`?v`, `?v` or
+`STR(?v)`, string and integer literals, an operator). There is one
+grammar per expression kind: FILTER (`_parse_filter_expr` — the
+connectives over `_comparison`, whose function-call leaves are the
+`_FILTER_CALLS` table of `_f_*(cursor, name)` parsers), arithmetic
+(`_arith` — BIND bodies and every FILTER comparison operand) and
+string manipulation (`_parse_str_expr` — the `_STR_CALLS` table);
+the property-path parser walks a path's characters with the same
+cursor. The FILTER leaf kinds live in one table (`_LEAVES`: variables
+read, and whether through ids, one literal lookup, or the term text)
+that one walker serves all five `filter_expr_*` collectors from.
+`parse_sparql` runs module-level phases in a fixed order: query form
+(`_query_form`), WHERE group, GROUP BY expression keys, projection and
+aggregates (`_projection`), scope checks (one `_check_agg_args`),
+trailing VALUES, HAVING, grouping checks, ORDER BY, final checks.
+
 Term forms (normalization mirrors MyOpVisitorBase.java:74-78):
   ?x / $x          variable
   pfx:name         declared prefix → expanded to <iri+name>, then localized
@@ -111,6 +129,8 @@ _VALUES_ROW = re.compile(r"\(([^()]*)\)")
 # a keyword only when it stands alone (preceded by a delimiter and followed
 # by a non-word char) — terms like :node_OPTIONAL2 never match
 _WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+# a `?v` / `$v` variable in modifier and VALUES text
+_VAR_NAME = re.compile(r"[?$](\w+)")
 _GROUP_KEYWORDS = frozenset(
     {"OPTIONAL", "MINUS", "FILTER", "BIND", "VALUES", "UNION", "GRAPH", "SERVICE"}
 )
@@ -122,8 +142,8 @@ _GROUP_KEYWORDS = frozenset(
 # equality, [NOT] IN with terms, REGEX/CONTAINS/STRSTARTS/STRENDS,
 # BOUND) each have dedicated leaf forms below, as do the term-kind
 # accessors (LANG/DATATYPE/isIRI/isLiteral/isBlank/isNumeric/
-# LANGMATCHES — evaluated over the dictionary term text). Casts are
-# rejected explicitly.
+# LANGMATCHES — evaluated over the dictionary term text), as do
+# constructor-cast and accessor comparisons (castcmp).
 #
 # Expression AST (BGPQuery.filters elements):
 #   (var, op, ('num', int) | ('var', name))   comparison leaf
@@ -231,6 +251,12 @@ _FROM_CLAUSE = re.compile(r"FROM\s+(?P<named>NAMED\s+)?(?P<src>\S+)", re.I)
 # projection items: a plain variable, or a parenthesized aggregate
 # `(AGG([DISTINCT] ?v|*) AS ?alias)` (SPARQL 1.1 §11; one paren level)
 _PROJ_ITEM = re.compile(r"[?$]\w+|" + _PAREN4)
+# date/time accessors and numeric rounders (§17.4.5, §17.4.4): typed-VALUE
+# derivations over the term text, in FILTER comparisons, BIND bodies,
+# aggregate args and ORDER BY keys
+_VALUE_FNS = ("YEAR", "MONTH", "DAY", "HOURS", "MINUTES", "SECONDS",
+              "FLOOR", "CEIL", "ROUND")
+_VALUE_FN_RE = "|".join(_VALUE_FNS)
 _AGG_ITEM = re.compile(
     r"^\(\s*(?P<func>COUNT|SUM|AVG|MIN|MAX|SAMPLE|GROUP_CONCAT)\s*\(\s*"
     r"(?P<distinct>DISTINCT\s+)?"
@@ -238,8 +264,8 @@ _AGG_ITEM = re.compile(
     # cast / accessor call args (r7): `SUM(xsd:decimal(?p))`,
     # `MIN(YEAR(?d))`, `COUNT(STRLEN(?x))` — desugared below onto a
     # synthetic BIND, so the aggregate itself sees a plain variable
-    r"|(?:xsd:\w+|YEAR|MONTH|DAY|HOURS|MINUTES|SECONDS|FLOOR|CEIL|ROUND"
-    r"|STRLEN)\s*\(\s*(?:STR\s*\(\s*[?$]\w+\s*\)|[?$]\w+)\s*\)"
+    r"|(?:xsd:\w+|" + _VALUE_FN_RE + r"|STRLEN)"
+    r"\s*\(\s*(?:STR\s*\(\s*[?$]\w+\s*\)|[?$]\w+)\s*\)"
     # one function call with args nested up to two levels (r8):
     # `GROUP_CONCAT(UCASE(STR(?s)))`, `MIN(SUBSTR(STR(?x), 1, 3))` —
     # anchored on a leading callable name so `COUNT(?a) + COUNT(?b)`
@@ -252,8 +278,8 @@ _AGG_ITEM = re.compile(
 )
 # a cast/accessor aggregate arg (the r7 desugar branch above)
 _AGG_CALL_ARG = re.compile(
-    r"(?:xsd:\w+|YEAR|MONTH|DAY|HOURS|MINUTES|SECONDS|FLOOR|CEIL|ROUND"
-    r"|STRLEN|SUBSTR|STRBEFORE|STRAFTER|REPLACE|CONCAT|UCASE|LCASE"
+    r"(?:xsd:\w+|" + _VALUE_FN_RE
+    + r"|STRLEN|SUBSTR|STRBEFORE|STRAFTER|REPLACE|CONCAT|UCASE|LCASE"
     r"|MD5|SHA1|SHA256|SHA384|SHA512|ENCODE_FOR_URI)\s*\(.*\)",
     re.I | re.S,
 )
@@ -866,6 +892,99 @@ def _tokenize_filter(src: str) -> list[str]:
     return toks
 
 
+_INT = re.compile(r"-?\d+")
+
+
+class _Tokens:
+    """Cursor over one expression's tokens — shared by the FILTER, BIND
+    (arithmetic) and string-expression grammars, and by the property-path
+    parser over a path's characters. ``label`` names the grammar in every
+    error (``bad FILTER expression '<src>': ...``); ``prefixes`` resolves
+    prefixed-name IRI constants in FILTER term comparisons. The argument
+    helpers below are the shapes every function call shares: ``?v``,
+    ``?v`` or ``STR(?v)``, string and integer literals, an operator."""
+
+    def __init__(self, src: str, label: str, prefixes=None, toks=None):
+        self.src = src
+        self.label = label
+        self.prefixes = prefixes
+        self.toks = _tokenize_filter(src) if toks is None else toks
+        self.pos = 0
+
+    def fail(self, msg: str):
+        raise SparqlSyntaxError(
+            f"bad {self.label} expression {self.src!r}: {msg}"
+        )
+
+    def peek(self, ahead: int = 0):
+        i = self.pos + ahead
+        return self.toks[i] if i < len(self.toks) else None
+
+    def take(self, expected=None):
+        t = self.peek()
+        if t is None or (expected is not None and t != expected):
+            self.fail(f"expected {expected or 'a term'}, got {t!r}")
+        self.pos += 1
+        return t
+
+    def parse(self, grammar):
+        """Run ``grammar(self)`` over the whole token list."""
+        node = grammar(self)
+        if self.pos != len(self.toks):
+            self.fail(f"trailing tokens {self.toks[self.pos:]!r}")
+        return node
+
+    def var(self, what: str) -> str:
+        t = self.take()
+        if not t.startswith(("?", "$")):
+            self.fail(f"{what}, got {t!r}")
+        return t[1:]
+
+    def var_arg(self, what: str) -> str:
+        """`(?v)` → v."""
+        self.take("(")
+        v = self.var(f"{what} takes a variable")
+        self.take(")")
+        return v
+
+    def str_var(self, what: str) -> tuple[str, bool]:
+        """`?v` or `STR(?v)` → (v, whether STR() was written)."""
+        has_str = (self.peek() or "").lower() == "str" and self.peek(1) == "("
+        if has_str:
+            self.take()
+            self.take("(")
+        v = self.var(f"{what} takes a variable (optionally STR(?var))")
+        if has_str:
+            self.take(")")
+        return v, has_str
+
+    def str_var_arg(self, what: str) -> tuple[str, bool]:
+        """`(?v)` or `(STR(?v))` → (v, whether STR() was written)."""
+        self.take("(")
+        out = self.str_var(what)
+        self.take(")")
+        return out
+
+    def string(self, what: str) -> str:
+        """A plain string literal → its unescaped text."""
+        t = self.take()
+        if not (t.startswith('"') and t.endswith('"')):
+            self.fail(f"{what}, got {t!r}")
+        return _unescape(t[1:-1])
+
+    def integer(self, what: str, pattern=_INT) -> int:
+        t = self.take()
+        if not pattern.fullmatch(t):
+            self.fail(f"{what}, got {t!r}")
+        return int(t)
+
+    def op(self, what: str, ops=_CMP_OPS) -> str:
+        t = self.take()
+        if t not in ops:
+            self.fail(f"{what}, got {t!r}")
+        return t
+
+
 def _localize_datatype(tok: str) -> str:
     """Normalize a datatype IRI / prefixed name from a FILTER to the
     engine's localized ':name' form (same convention as _localize_iri);
@@ -1002,8 +1121,7 @@ def _parse_bind_body(body_expr: str):
             else ("cast_expr", kind, src_v)
         )
     am = re.fullmatch(
-        r"\s*(YEAR|MONTH|DAY|HOURS|MINUTES|SECONDS|FLOOR|CEIL|ROUND)"
-        r"\s*\(\s*([?$]\w+)\s*\)\s*",
+        rf"\s*({_VALUE_FN_RE})\s*\(\s*([?$]\w+)\s*\)\s*",
         body_expr,
         re.I,
     )
@@ -1095,214 +1213,182 @@ def _parse_str_expr(src: str):
       ('concat', (args...))
       ('ucase'|'lcase', sub)
     """
-    toks = _tokenize_filter(src)
-    pos = 0
+    return _Tokens(src, "string").parse(_sexpr)
 
-    def peek():
-        return toks[pos] if pos < len(toks) else None
 
-    def take(expected=None):
-        nonlocal pos
-        if pos >= len(toks) or (
-            expected is not None and toks[pos] != expected
-        ):
-            raise SparqlSyntaxError(
-                f"bad string expression {src!r}: expected "
-                f"{expected or 'a term'}, got {peek()!r}"
+def _sexpr(cur: _Tokens):
+    t = cur.take()
+    if t.startswith('"'):
+        if "^^" in t:
+            cur.fail(
+                "typed literals have no string value here; use a plain literal"
             )
-        pos += 1
-        return toks[pos - 1]
+        return ("slit", _unescape(t[1:-1]))
+    if t.startswith(("?", "$")):
+        return ("svar", t[1:])
+    up = t.lower()
+    if up in _STR_CALLS and cur.peek() == "(":
+        return _STR_CALLS[up](cur, up)
+    cur.fail(
+        "expected a string function, STR(?x), a variable, or a string "
+        f"literal, got {t!r}"
+    )
 
-    def str_lit(what: str) -> str:
-        t = take()
-        if not (t.startswith('"') and t.endswith('"')):
-            raise SparqlSyntaxError(
-                f"bad string expression {src!r}: {what} must be a string "
-                f"literal, got {t!r}"
-            )
-        return _unescape(t[1:-1])
 
-    def int_lit(what: str) -> int:
-        t = take()
-        if not re.fullmatch(r"\d+", t):
-            raise SparqlSyntaxError(
-                f"bad string expression {src!r}: {what} must be a "
-                f"non-negative integer, got {t!r}"
-            )
-        return int(t)
+def _s_unary(cur: _Tokens, up: str):
+    """One string argument: UCASE / LCASE, the §17.4.4.10-14 hashes,
+    ENCODE_FOR_URI (§17.4.3.11: percent-encode everything outside the
+    RFC 3986 unreserved set, uppercase hex) and IRI / URI (§17.4.2.6:
+    an IRI term built in the AMBIENT term style, captured here and
+    applied by the planner — localized ':last-segment' per
+    MyOpVisitorBase.java:74-78, or the lexical '<iri>' form)."""
+    cur.take("(")
+    a = _sexpr(cur)
+    cur.take(")")
+    if up in _HASH_FNS:
+        return ("hash", up, a)
+    if up == "encode_for_uri":
+        return ("encuri", a)
+    if up in ("iri", "uri"):
+        return ("iri", a, _TERM_STYLE.get())
+    return (up, a)
 
-    def sexpr():
-        t = take()
-        up = t.lower()
-        if t.startswith('"'):
-            if "^^" in t:
-                raise SparqlSyntaxError(
-                    f"bad string expression {src!r}: typed literals have "
-                    "no string value here; use a plain literal"
-                )
-            return ("slit", _unescape(t[1:-1]))
-        if t.startswith(("?", "$")):
-            return ("svar", t[1:])
-        if up == "str" and peek() == "(":
-            take("(")
-            v = take()
-            if not v.startswith(("?", "$")):
-                raise SparqlSyntaxError(
-                    f"bad string expression {src!r}: STR takes a "
-                    f"variable, got {v!r}"
-                )
-            take(")")
-            return ("sof", v[1:])
-        if up in ("ucase", "lcase") and peek() == "(":
-            take("(")
-            a = sexpr()
-            take(")")
-            return (up, a)
-        if up in _HASH_FNS and peek() == "(":
-            take("(")
-            a = sexpr()
-            take(")")
-            return ("hash", up, a)
-        if up == "encode_for_uri" and peek() == "(":
-            # §17.4.3.11: percent-encode everything outside the RFC 3986
-            # unreserved set, uppercase hex
-            take("(")
-            a = sexpr()
-            take(")")
-            return ("encuri", a)
-        if up == "strlang" and peek() == "(":
-            # §17.4.2.8: construct a language-tagged literal TERM — the
-            # result is the engine's canonical term text '"lex"@tag'
-            # (lowercase tag, the dictionary convention), so it compares
-            # and joins against stored terms
-            take("(")
-            a = sexpr()
-            take(",")
-            tag = str_lit("STRLANG language tag")
-            take(")")
-            if not re.fullmatch(r"[A-Za-z]+(?:-[A-Za-z0-9]+)*", tag):
-                raise SparqlSyntaxError(
-                    f"bad string expression {src!r}: STRLANG tag must be "
-                    f"a BCP-47 shape, got {tag!r}"
-                )
-            return ("strlang", a, tag.lower())
-        if up == "strdt" and peek() == "(":
-            # §17.4.2.9: construct a typed literal TERM — canonical text
-            # '"lex"^^:localdt' with the datatype localized exactly like
-            # every constant IRI (shared _localize_datatype)
-            take("(")
-            a = sexpr()
-            take(",")
-            dt = take()
-            take(")")
-            # lexical style keeps a full '<iri>' datatype verbatim (the
-            # built-dictionary convention); prefixed datatype names still
-            # localize — the string-expr grammar carries no PREFIX map,
-            # so full-IRI datatypes are the lexical-mode spelling
-            if _TERM_STYLE.get() == "lexical" and dt.startswith("<"):
-                return ("strdt", a, dt)
-            return ("strdt", a, _localize_datatype(dt))
-        if up in ("iri", "uri") and peek() == "(":
-            # §17.4.2.6: construct an IRI TERM from the string value in
-            # the AMBIENT term style (captured here, applied by the
-            # planner): localized (last '/'-segment, leading ':' — the
-            # reference normalization MyOpVisitorBase.java:74-78) or the
-            # lexical '<iri>' form, so the result matches the
-            # dictionary's convention either way
-            take("(")
-            a = sexpr()
-            take(")")
-            return ("iri", a, _TERM_STYLE.get())
-        if up == "substr" and peek() == "(":
-            take("(")
-            a = sexpr()
-            take(",")
-            start = int_lit("SUBSTR start")
-            ln = None
-            if peek() == ",":
-                take()
-                ln = int_lit("SUBSTR length")
-            take(")")
-            return ("substr", a, start, ln)
-        if up in ("strbefore", "strafter") and peek() == "(":
-            take("(")
-            a = sexpr()
-            take(",")
-            sep = str_lit(f"{up.upper()} separator")
-            take(")")
-            return (up, a, sep)
-        if up == "replace" and peek() == "(":
-            take("(")
-            a = sexpr()
-            take(",")
-            pat = str_lit("REPLACE pattern")
-            take(",")
-            rep = str_lit("REPLACE replacement")
-            flags = ""
-            if peek() == ",":
-                take()
-                fl = take()
-                if fl != '"i"':
-                    raise SparqlSyntaxError(
-                        f"bad string expression {src!r}: REPLACE supports "
-                        f'only the "i" flag, got {fl!r}'
-                    )
-                flags = "i"
-            take(")")
-            return ("replace", a, pat, rep, flags)
-        if up == "if" and peek() == "(":
-            # string IF (§17.4.1.2 over string branches): the condition
-            # is the FILTER grammar's numeric/BOUND subset (string
-            # leaves inside the condition reject at compile — they would
-            # need their own term attachment)
-            nonlocal pos
-            take("(")
-            depth = 0
-            cond_toks = []
-            while pos < len(toks):
-                t2 = toks[pos]
-                if t2 == "(":
-                    depth += 1
-                elif t2 == ")":
-                    if depth == 0:
-                        break
-                    depth -= 1
-                elif t2 == "," and depth == 0:
-                    break
-                cond_toks.append(t2)
-                pos += 1
-            if not cond_toks:
-                raise SparqlSyntaxError(
-                    f"bad string expression {src!r}: empty IF condition"
-                )
-            cond = _parse_filter_expr(" ".join(cond_toks))
-            take(",")
-            a = sexpr()
-            take(",")
-            b = sexpr()
-            take(")")
-            return ("sif", cond, a, b)
-        if up in ("concat", "coalesce") and peek() == "(":
-            take("(")
-            args = [sexpr()]
-            while peek() == ",":
-                take()
-                args.append(sexpr())
-            take(")")
-            # string COALESCE (§17.4.1.3 over string expressions): the
-            # post-OPTIONAL fallback idiom COALESCE(STR(?x), "none")
-            return ("concat" if up == "concat" else "scoalesce", tuple(args))
-        raise SparqlSyntaxError(
-            f"bad string expression {src!r}: expected a string function, "
-            f"STR(?x), a variable, or a string literal, got {t!r}"
-        )
 
-    node = sexpr()
-    if pos != len(toks):
-        raise SparqlSyntaxError(
-            f"bad string expression {src!r}: trailing tokens {toks[pos:]!r}"
-        )
-    return node
+def _s_strlang(cur: _Tokens, up: str):
+    """§17.4.2.8: a language-tagged literal TERM — the engine's canonical
+    text '"lex"@tag' (lowercase tag, the dictionary convention), so it
+    compares and joins against stored terms."""
+    cur.take("(")
+    a = _sexpr(cur)
+    cur.take(",")
+    tag = cur.string("STRLANG language tag must be a string literal")
+    cur.take(")")
+    if not re.fullmatch(r"[A-Za-z]+(?:-[A-Za-z0-9]+)*", tag):
+        cur.fail(f"STRLANG tag must be a BCP-47 shape, got {tag!r}")
+    return ("strlang", a, tag.lower())
+
+
+def _s_strdt(cur: _Tokens, up: str):
+    """§17.4.2.9: a typed literal TERM — canonical text '"lex"^^:localdt'
+    with the datatype localized like every constant IRI. Lexical style
+    keeps a full '<iri>' datatype verbatim (the built-dictionary
+    convention); prefixed datatype names still localize — this grammar
+    carries no PREFIX map, so full-IRI datatypes are the lexical-mode
+    spelling."""
+    cur.take("(")
+    a = _sexpr(cur)
+    cur.take(",")
+    dt = cur.take()
+    cur.take(")")
+    if _TERM_STYLE.get() == "lexical" and dt.startswith("<"):
+        return ("strdt", a, dt)
+    return ("strdt", a, _localize_datatype(dt))
+
+
+_NAT = re.compile(r"\d+")
+
+
+def _s_substr(cur: _Tokens, up: str):
+    cur.take("(")
+    a = _sexpr(cur)
+    cur.take(",")
+    start = cur.integer("SUBSTR start must be a non-negative integer", _NAT)
+    ln = None
+    if cur.peek() == ",":
+        cur.take()
+        ln = cur.integer("SUBSTR length must be a non-negative integer", _NAT)
+    cur.take(")")
+    return ("substr", a, start, ln)
+
+
+def _s_strbefore(cur: _Tokens, up: str):
+    """STRBEFORE / STRAFTER: the separator is a string literal."""
+    cur.take("(")
+    a = _sexpr(cur)
+    cur.take(",")
+    sep = cur.string(f"{up.upper()} separator must be a string literal")
+    cur.take(")")
+    return (up, a, sep)
+
+
+def _s_replace(cur: _Tokens, up: str):
+    cur.take("(")
+    a = _sexpr(cur)
+    cur.take(",")
+    pat = cur.string("REPLACE pattern must be a string literal")
+    cur.take(",")
+    rep = cur.string("REPLACE replacement must be a string literal")
+    flags = ""
+    if cur.peek() == ",":
+        cur.take()
+        fl = cur.take()
+        if fl != '"i"':
+            cur.fail(f'REPLACE supports only the "i" flag, got {fl!r}')
+        flags = "i"
+    cur.take(")")
+    return ("replace", a, pat, rep, flags)
+
+
+def _s_if(cur: _Tokens, up: str):
+    """String IF (§17.4.1.2 over string branches): the condition is the
+    FILTER grammar's numeric/BOUND subset (string leaves inside the
+    condition reject at compile — they would need their own term
+    attachment)."""
+    cur.take("(")
+    depth = 0
+    start = cur.pos
+    while cur.peek() is not None:
+        t = cur.peek()
+        if t == "(":
+            depth += 1
+        elif t == ")":
+            if depth == 0:
+                break
+            depth -= 1
+        elif t == "," and depth == 0:
+            break
+        cur.pos += 1
+    if cur.pos == start:
+        cur.fail("empty IF condition")
+    cond = _parse_filter_expr(" ".join(cur.toks[start : cur.pos]))
+    cur.take(",")
+    a = _sexpr(cur)
+    cur.take(",")
+    b = _sexpr(cur)
+    cur.take(")")
+    return ("sif", cond, a, b)
+
+
+def _s_concat(cur: _Tokens, up: str):
+    """CONCAT, and string COALESCE (§17.4.1.3 over string expressions:
+    the post-OPTIONAL fallback idiom COALESCE(STR(?x), "none"))."""
+    cur.take("(")
+    args = [_sexpr(cur)]
+    while cur.peek() == ",":
+        cur.take()
+        args.append(_sexpr(cur))
+    cur.take(")")
+    return ("concat" if up == "concat" else "scoalesce", tuple(args))
+
+
+# string-expression functions: lowercase name → parser(cursor, name),
+# called with the cursor on the opening parenthesis
+_STR_CALLS = {
+    "str": lambda cur, up: ("sof", cur.var_arg("STR")),
+    **dict.fromkeys(
+        ("ucase", "lcase", "encode_for_uri", "iri", "uri", *_HASH_FNS),
+        _s_unary,
+    ),
+    "strlang": _s_strlang,
+    "strdt": _s_strdt,
+    "substr": _s_substr,
+    "strbefore": _s_strbefore,
+    "strafter": _s_strbefore,
+    "replace": _s_replace,
+    "if": _s_if,
+    "concat": _s_concat,
+    "coalesce": _s_concat,
+}
 
 
 def strexpr_vars(node) -> set[str]:
@@ -1369,1026 +1455,624 @@ def _parse_filter_expr(src: str, prefixes: dict[str, str] | None = None):
     term-equality comparisons (`?x != :b`); callers without a prefix
     map in scope (string-expression IF conditions) pass None and full
     ``<iri>`` spellings still work."""
-    toks = _tokenize_filter(src)
-    pos = 0
+    return _Tokens(src, "FILTER", prefixes).parse(_or_expr)
 
-    def peek():
-        return toks[pos] if pos < len(toks) else None
 
-    def take(expected=None):
-        nonlocal pos
-        if pos >= len(toks) or (expected is not None and toks[pos] != expected):
-            raise SparqlSyntaxError(
-                f"bad FILTER expression {src!r}: expected "
-                f"{expected or 'a term'}, got {peek()!r}"
-            )
-        pos += 1
-        return toks[pos - 1]
-
-    def or_expr():
-        node = and_expr()
-        while peek() == "||":
-            take()
-            node = ("or", node, and_expr())
-        return node
-
-    def and_expr():
-        node = unary()
-        while peek() == "&&":
-            take()
-            node = ("and", node, unary())
-        return node
-
-    def unary():
-        if peek() == "!":
-            take()
-            return ("not", unary())
-        if peek() == "(":
-            take()
-            node = or_expr()
-            take(")")
-            return node
-        return comparison()
-
-    def strfn_call(name: str):
-        """`NAME([STR(]?var[)], "pattern"[, "i"])` → strfn leaf."""
-        take("(")
-        arg = take()
-        if arg.lower() == "str":  # optional STR(?x) wrapper (§17.4.2.5)
-            take("(")
-            arg = take()
-            take(")")
-        if not arg.startswith(("?", "$")):
-            raise SparqlSyntaxError(
-                f"bad FILTER expression {src!r}: {name.upper()} takes a "
-                f"variable (optionally STR(?var)), got {arg!r}"
-            )
-        take(",")
-        pat = take()
-        if not (pat.startswith('"') and pat.endswith('"')):
-            raise SparqlSyntaxError(
-                f"bad FILTER expression {src!r}: {name.upper()} pattern "
-                f"must be a string literal, got {pat!r}"
-            )
-        flags = ""
-        if peek() == ",":
-            take()
-            fl = take()
-            if name != "regex" or fl != '"i"':
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: only REGEX supports a "
-                    f'flags argument, and only "i", got {fl!r}'
-                )
-            flags = "i"
-        take(")")
-        return ("strfn", name, arg[1:], _unescape(pat[1:-1]), flags)
-
-    def arith_operand():
-        """One comparison side: an integer-arithmetic expression over
-        variables and literals (the BIND grammar, §17.3 operator
-        mappings), parsed in-place from this token stream."""
-        nonlocal pos
-
-        def peek_a():
-            return toks[pos] if pos < len(toks) else None
-
-        def take_a(expected=None):
-            nonlocal pos
-            if pos >= len(toks) or (
-                expected is not None and toks[pos] != expected
-            ):
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: expected "
-                    f"{expected or 'an operand'}, got {peek_a()!r}"
-                )
-            pos += 1
-            return toks[pos - 1]
-
-        def split_negative():
-            t = peek_a()
-            if t is not None and re.fullmatch(r"-\d+", t):
-                toks[pos] = t[1:]
-                toks.insert(pos, "-")
-
-        def add_expr():
-            node = mul_expr()
-            split_negative()
-            while peek_a() in ("+", "-"):
-                o = take_a()
-                node = (o, node, mul_expr())
-                split_negative()
-            return node
-
-        def mul_expr():
-            node = atom()
-            while peek_a() in ("*", "/"):
-                o = take_a()
-                node = (o, node, atom())
-            return node
-
-        def if_cond_a():
-            neg = False
-            while peek_a() == "!":
-                take_a()
-                neg = not neg
-            if peek_a() is not None and peek_a().upper() == "BOUND":
-                take_a()
-                take_a("(")
-                v = take_a()
-                if not v.startswith(("?", "$")):
-                    raise SparqlSyntaxError(
-                        f"bad FILTER expression {src!r}: BOUND takes a "
-                        "variable"
-                    )
-                take_a(")")
-                node = ("bound", v[1:])
-            else:
-                left = add_expr()
-                o = take_a()
-                if o not in _CMP_OPS:
-                    raise SparqlSyntaxError(
-                        f"bad FILTER expression {src!r}: IF condition must "
-                        f"be [!]BOUND(?v) or a comparison, got {o!r}"
-                    )
-                node = ("icmp", o, left, add_expr())
-            return ("not", node) if neg else node
-
-        def atom():
-            if peek_a() == "(":
-                take_a()
-                node = add_expr()
-                take_a(")")
-                return node
-            t = take_a()
-            up = t.upper()
-            # same §17.4 functional forms as the BIND grammar — the AST
-            # nodes are shared, so one compiler serves both
-            if up in ("ABS", "COALESCE", "IF") and peek_a() == "(":
-                take_a("(")
-                if up == "ABS":
-                    node = ("abs", add_expr())
-                    take_a(")")
-                    return node
-                if up == "COALESCE":
-                    args = [add_expr()]
-                    while peek_a() == ",":
-                        take_a()
-                        args.append(add_expr())
-                    take_a(")")
-                    return ("coalesce", args)
-                cond = if_cond_a()
-                take_a(",")
-                then = add_expr()
-                take_a(",")
-                els = add_expr()
-                take_a(")")
-                return ("if", cond, then, els)
-            if t.startswith(("?", "$")):
-                return ("var", t[1:])
-            if re.fullmatch(r"-?\d+", t):
-                return ("num", int(t))
-            raise SparqlSyntaxError(
-                f"bad FILTER expression {src!r}: expected a variable, "
-                f"integer, or parenthesized arithmetic, got {t!r}"
-            )
-
-        return add_expr()
-
-    def in_list(var: str, negated: bool):
-        """`?v [NOT] IN (x1, x2, ...)` (§17.4.1.9-10): integer ids and/or
-        string terms. Integers → ('in', var, ids, negated); strings →
-        ('strin', var, texts, negated) — resolved to ids at plan time via
-        the same bounded lookup as term equality. A mixed list is the
-        disjunction of the two leaves (conjunction when negated — De
-        Morgan over the not-equals)."""
-        take("(")
-        ints: list[int] = []
-        texts: list[str] = []
-        while True:
-            t = take()
-            if re.fullmatch(r"-?\d+", t):
-                ints.append(int(t))
-            elif t.startswith('"'):
-                # plain or typed literal: IN is a term-identity test on
-                # this engine (one id per distinct term), so a typed
-                # literal resolves through the SAME normalization as a
-                # BGP constant — integer datatypes to ids, anything else
-                # to its canonical dictionary text
-                slot = _normalize_term(t)
-                (ints if slot[0] == "id" else texts).append(slot[1])
-            elif t.startswith("<") or re.fullmatch(r"\w*:\w+", t):
-                # IRI constants (r12): `?x IN (:a, <http://…/b>)` is the
-                # same term-identity test — the canonical term text
-                # resolves to its id through the bounded dictionary
-                # lookup the strin leaf already performs
-                slot = _normalize_term(t, prefixes)
-                if slot[0] == "id":
-                    ints.append(slot[1])
-                elif slot[0] == "term":
-                    texts.append(slot[1])
-                else:
-                    raise SparqlSyntaxError(
-                        f"bad FILTER expression {src!r}: IN lists take "
-                        f"constants, got {t!r}"
-                    )
-            else:
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: IN lists take "
-                    f"integer, string, or IRI constants, got {t!r}"
-                )
-            t = take()
-            if t == ")":
-                break
-            if t != ",":
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: expected ',' or ')' "
-                    f"in IN list, got {t!r}"
-                )
-        leaves = []
-        if ints:
-            leaves.append(("in", var, tuple(ints), negated))
-        if texts:
-            leaves.append(("strin", var, tuple(texts), negated))
-        if not leaves:
-            raise SparqlSyntaxError(
-                f"bad FILTER expression {src!r}: empty IN list"
-            )
-        if len(leaves) == 1:
-            return leaves[0]
-        return ("and" if negated else "or", leaves[0], leaves[1])
-
-    def streq_rhs(var_tok: str):
-        """Finish a term-equality comparison `<var-side> =|!= "literal"`
-        (§17.4.1.7 on this engine's term model: every distinct term has one
-        id, so string equality IS id identity). AST: ('streq', var, text,
-        negated) — a 4-tuple distinguished by its 'streq' tag."""
-        op = take()
-        lit = take()
-        if not (lit.startswith('"') and lit.endswith('"')):
-            raise SparqlSyntaxError(
-                f"bad FILTER expression {src!r}: term equality takes a "
-                f"string literal, got {lit!r}"
-            )
-        if _TERM_STYLE.get() == "lexical":
-            # the stored term is the QUOTED source-bytes form
-            return ("streq", var_tok[1:], lit, op == "!=")
-        return ("streq", var_tok[1:], _unescape(lit[1:-1]), op == "!=")
-
-    def comparison():
-        nonlocal pos
-        lhs = take()
-        if lhs.lower() == "bound" and peek() == "(":
-            # BOUND(?v) (§17.4.1.1): true iff the variable is bound — the
-            # one filter form that maps unbound to plain FALSE (not error);
-            # with ! it is SPARQL 1.0's negation-as-failure idiom
-            take("(")
-            v = take()
-            if not v.startswith(("?", "$")):
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: BOUND takes a "
-                    f"variable, got {v!r}"
-                )
-            take(")")
-            return ("bound", v[1:])
-        if lhs.lower() == "sameterm" and peek() == "(":
-            # sameTerm(?a, ?b) (§17.4.1.8): term identity IS id equality
-            # in the dictionary-encoded model (one id per distinct
-            # term), so it lowers to the plain equality leaf — unbound →
-            # error → filter-false, same as `=`; !sameTerm via the
-            # `not` unary. Constant operands: use a pattern constant
-            # instead (the planner's constant-encoding path) — rejected
-            # here to keep FILTER compilation dictionary-free.
-            take("(")
-            a = take()
-            take(",")
-            b = take()
-            take(")")
-            if not (
-                a.startswith(("?", "$")) and b.startswith(("?", "$"))
-            ):
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: sameTerm takes two "
-                    f"variables (for a constant, put the term in the "
-                    f"pattern), got {a!r}, {b!r}"
-                )
-            return (a[1:], "=", ("var", b[1:]))
-
-        def _take_var_arg(fname: str) -> str:
-            take("(")
-            v = take()
-            if not v.startswith(("?", "$")):
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: {fname} takes a "
-                    f"variable, got {v!r}"
-                )
-            take(")")
-            return v[1:]
-
-        if lhs.lower() in ("lang", "datatype") and peek() == "(":
-            # LANG(?x) = "en" / DATATYPE(?x) = xsd:date (§17.4.2.6-7):
-            # term-kind accessors over the dictionary text — the planner
-            # attaches the term column (same join as REGEX) and compiles
-            # the kind/lang/datatype derivation as column expressions.
-            # AST: ('termfn', fn, var, normalized-value, negated).
-            fn = lhs.lower()
-            v = _take_var_arg(fn.upper())
-            op = take()
-            if op not in ("=", "!="):
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: {fn.upper()}() "
-                    f"comparisons support = and != only, got {op!r}"
-                )
-            rhs = take()
-            if fn == "lang":
-                if not (rhs.startswith('"') and rhs.endswith('"')):
-                    raise SparqlSyntaxError(
-                        f"bad FILTER expression {src!r}: LANG() compares "
-                        f"against a string literal, got {rhs!r}"
-                    )
-                value = _unescape(rhs[1:-1]).lower()
-            else:
-                value = _localize_datatype(rhs)
-            return ("termfn", fn, v, value, op == "!=")
-        if lhs.lower() == "langmatches" and peek() == "(":
-            # LANGMATCHES(LANG(?x), "range") (§17.4.3.20, basic
-            # filtering): range "*" matches any tagged literal; otherwise
-            # the tag equals the range or extends it with a subtag.
-            take("(")
-            t2 = take()
-            if t2.lower() != "lang":
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: LANGMATCHES takes "
-                    f"LANG(?var) as its first argument, got {t2!r}"
-                )
-            v = _take_var_arg("LANG")
-            take(",")
-            rng = take()
-            if not (rng.startswith('"') and rng.endswith('"')):
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: LANGMATCHES range "
-                    f"must be a string literal, got {rng!r}"
-                )
-            take(")")
-            return ("langmatches", v, _unescape(rng[1:-1]).lower())
-        if (
-            lhs.lower() in ("isiri", "isuri", "isliteral", "isblank", "isnumeric")
-            and peek() == "("
-        ):
-            # type-checking predicates (§17.4.2.1-4): booleans over the
-            # term kind. isNumeric is true exactly for integer literals
-            # (dictionary-absent ids) — the engine's only numeric kind.
-            kind = {
-                "isiri": "iri",
-                "isuri": "iri",
-                "isliteral": "literal",
-                "isblank": "blank",
-                "isnumeric": "numeric",
-            }[lhs.lower()]
-            v = _take_var_arg(lhs)
-            return ("termis", kind, v)
-        def _take_str_var(fname: str) -> tuple[str, bool]:
-            """Argument of a string accessor: `?v` or `STR(?v)`. The
-            second slot records whether STR() was WRITTEN — §17.4.3
-            functions over a bare term error on non-strings (the
-            dictionary-absent integer literal drops), while an explicit
-            STR() gives every term a lexical form, integer literals
-            their decimal one (r8 — the DuckDB fuzz caught the two
-            forms being conflated)."""
-            take("(")
-            t2 = take()
-            if t2.lower() == "str":
-                v = _take_var_arg("STR")
-                take(")")
-                return v, True
-            if t2.startswith(("?", "$")):
-                v = t2[1:]
-            else:
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: {fname} takes a "
-                    f"variable or STR(?var), got {t2!r}"
-                )
-            take(")")
-            return v, False
-
-        if lhs.lower() == "strlen" and peek() == "(":
-            # STRLEN(STR(?x)) <op> n (§17.4.3.2): term LENGTH compared to
-            # an integer — evaluated over the dictionary term text (same
-            # join as REGEX); null-intolerant, so the dict join
-            # inner-izes and the length predicate pushes to the dict scan
-            v, has_str = _take_str_var("STRLEN")
-            op = take()
-            if op not in _CMP_OPS:
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: STRLEN comparison "
-                    f"needs an operator, got {op!r}"
-                )
-            num = take()
-            if not re.fullmatch(r"-?\d+", num):
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: STRLEN compares "
-                    f"against an integer, got {num!r}"
-                )
-            return ("strlen", v, op, int(num), has_str)
-        if (
-            lhs.lower()
-            in (
-                "year", "month", "day", "hours", "minutes", "seconds",
-                "floor", "ceil", "round",
-            )
-            and peek() == "("
-        ):
-            # date/time accessor / numeric-rounder comparison (r7):
-            # YEAR(?d) >= 2020, FLOOR(?p) = 19 — a typed-VALUE
-            # computation vs a numeric constant, riding the castcmp
-            # lowering (the kind names a `_term_cast` derivation)
-            kind = lhs.lower()
-            take("(")
-            v = take()
-            if not v.startswith(("?", "$")):
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: {lhs.upper()}() "
-                    f"takes a variable, got {v!r}"
-                )
-            take(")")
-            op = take()
-            if op not in _CMP_OPS:
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: {lhs.upper()} "
-                    f"comparison needs an operator, got {op!r}"
-                )
-            lit = take()
-            if _DEC_RE.fullmatch(lit) or re.fullmatch(r"-?\d+", lit):
-                rv = float(lit)
-            elif lit.startswith('"'):
-                k2, v2 = _classify_filter_literal(lit, src)
-                if k2 == "int":
-                    rv = float(v2)
-                elif k2 == "vnum":
-                    rv = v2
-                else:
-                    raise SparqlSyntaxError(
-                        f"bad FILTER expression {src!r}: {lhs.upper()} "
-                        f"compares against a numeric constant"
-                    )
-            else:
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: {lhs.upper()} "
-                    f"compares against a numeric constant, got {lit!r}"
-                )
-            return ("castcmp", kind, v[1:], op, "num", rv)
-        if (
-            re.fullmatch(
-                r"xsd:(integer|decimal|double|float|date|dateTime)",
-                lhs,
-                re.I,
-            )
-            and peek() == "("
-        ):
-            # explicit-cast comparison (§17.5 operand, r7):
-            # xsd:T([STR(]?x[)]) <op> constant — the cast VALUE compared
-            # against a matching-family constant
-            kind = _XSD_CAST_KINDS[lhs.split(":", 1)[1].lower()]
-            take("(")
-            v = take()
-            if v.lower() == "str" and peek() == "(":
-                take("(")
-                v = take()
-                take(")")
-            if not v.startswith(("?", "$")):
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: {lhs}() takes a "
-                    f"variable (optionally STR(?var)), got {v!r}"
-                )
-            take(")")
-            op = take()
-            if op not in _CMP_OPS:
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: cast comparison "
-                    f"needs an operator, got {op!r}"
-                )
-            lit = take()
-            if _DEC_RE.fullmatch(lit):
-                rk, rv = "num", float(lit)
-            elif re.fullmatch(r"-?\d+", lit):
-                rk, rv = "num", float(lit)
-            elif lit.startswith('"'):
-                k2, v2 = _classify_filter_literal(lit, src)
-                if k2 == "int":
-                    rk, rv = "num", float(v2)
-                elif k2 == "vnum":
-                    rk, rv = "num", v2
-                elif k2 in ("vdate", "vdt"):
-                    rk, rv = k2[1:], v2
-                else:
-                    raise SparqlSyntaxError(
-                        f"bad FILTER expression {src!r}: cast comparison "
-                        f"constant must be numeric or date-typed"
-                    )
-            else:
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: cast comparison "
-                    f"constant must be a number or typed literal, got "
-                    f"{lit!r}"
-                )
-            want_rk = {"date": "date", "dateTime": "dt"}.get(kind, "num")
-            if rk != want_rk:
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: xsd:{kind} cast "
-                    f"compared against a non-{kind} constant"
-                )
-            return ("castcmp", kind, v[1:], op, rk, rv)
-        if (
-            lhs.lower() in _STR_EXPR_FNS
-            and peek() == "("
-            and not (
-                # simple UCASE/LCASE(?v|STR(?v)) keeps the dedicated
-                # dictionary-side 'strcase' leaf below (type-strict:
-                # integer literals have no term text and DROP); every
-                # other string-expression form — SUBSTR/STRBEFORE/
-                # STRAFTER/REPLACE/CONCAT and nested UCASE/LCASE — takes
-                # the general strexpr comparison (r7)
-                lhs.lower() in ("ucase", "lcase")
-                and pos + 1 < len(toks)
-                and (
-                    toks[pos + 1].startswith(("?", "$"))
-                    or toks[pos + 1].lower() == "str"
-                )
-            )
-        ):
-            # FN(...) <op> "literal": re-render the call's token span and
-            # parse it with the string-expression grammar
-            start = pos - 1
-            depth = 0
-            j = pos
-            while j < len(toks):
-                if toks[j] == "(":
-                    depth += 1
-                elif toks[j] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
-            if depth != 0:
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: unbalanced parens in "
-                    f"{lhs.upper()}(...)"
-                )
-            expr_src = " ".join(toks[start : j + 1])
-            pos = j + 1
-            tree = _parse_str_expr(expr_src)
-            op = take()
-            if op not in _CMP_OPS:
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: string-expression "
-                    f"comparison needs an operator, got {op!r}"
-                )
-            lit = take()
-            if not (lit.startswith('"') and lit.endswith('"')):
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: string-expression "
-                    f"comparison takes a string literal, got {lit!r}"
-                )
-            return ("strexprcmp", tree, op, _unescape(lit[1:-1]))
-        if lhs.lower() in ("ucase", "lcase") and peek() == "(":
-            # UCASE/LCASE(STR(?x)) =|!= "literal" (§17.4.3.4-5):
-            # case-folded term equality, dictionary-side
-            fn = lhs.lower()
-            v, has_str = _take_str_var(fn.upper())
-            op = take()
-            if op not in ("=", "!="):
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: {fn.upper()}() "
-                    f"comparisons support = and != only, got {op!r}"
-                )
-            lit = take()
-            if not (lit.startswith('"') and lit.endswith('"')):
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: {fn.upper()}() "
-                    f"compares against a string literal, got {lit!r}"
-                )
-            return (
-                "strcase", fn, v, _unescape(lit[1:-1]), op == "!=", has_str
-            )
-        if lhs.lower() == "str" and peek() == "(":
-            # STR(?x) = "literal": localized = term equality (§17.4.2.5
-            # wrapper over the term model, id pushdown); lexical = a
-            # string comparison over the DERIVED STR value (so "Bob"
-            # matches '"Bob"', '"Bob"@en' and '<Bob>' alike — the spec's
-            # simple-literal comparison, not raw term text)
-            take("(")
-            v = take()
-            if not v.startswith(("?", "$")):
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: STR takes a "
-                    f"variable, got {v!r}"
-                )
-            take(")")
-            if peek() not in ("=", "!="):
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: STR() comparisons "
-                    f"support = and != only, got {peek()!r}"
-                )
-            if _TERM_STYLE.get() == "lexical":
-                op = take()
-                lit = take()
-                if not (lit.startswith('"') and lit.endswith('"')):
-                    raise SparqlSyntaxError(
-                        f"bad FILTER expression {src!r}: STR() compares "
-                        f"against a string literal, got {lit!r}"
-                    )
-                return (
-                    "strexprcmp", ("sof", v[1:]), op, _unescape(lit[1:-1])
-                )
-            return streq_rhs(v)
-        if _DEC_RE.fullmatch(lhs):
-            # reversed bare-decimal form `19.5 < ?x`
-            op = take()
-            if op not in _CMP_OPS:
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: a decimal constant "
-                    f"can only appear in a comparison, got {op!r}"
-                )
-            v = take()
-            if not v.startswith(("?", "$")):
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: a decimal comparison "
-                    f"takes a variable on the other side, got {v!r}"
-                )
-            return ("valcmp", v[1:], _MIRROR_OP[op], "num", float(lhs))
-        if lhs.startswith('"'):
-            # reversed form `"literal" <op> ?x` (plain or typed literal):
-            # mirror the operator and reuse the var-on-the-left leaves
-            op = take()
-            if op not in _CMP_OPS:
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: a literal can only "
-                    f"be compared with {_CMP_OPS}, got {op!r}"
-                )
-            v = take()
-            if not v.startswith(("?", "$")):
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: a literal comparison "
-                    f"takes a variable on the other side, got {v!r}"
-                )
-            return _literal_cmp_leaf(v[1:], _MIRROR_OP[op], lhs, src)
-        if lhs.lower() in _STR_FNS and peek() == "(":
-            return strfn_call(lhs.lower())
-        if lhs.startswith(("?", "$")):
-            nxt = peek()
-            if (
-                nxt in _CMP_OPS
-                and pos + 1 < len(toks)
-                and (
-                    toks[pos + 1].startswith('"')
-                    or _DEC_RE.fullmatch(toks[pos + 1])
-                )
-            ):
-                # ?x <op> literal: plain `?x = "lit"` term equality (the
-                # most common real-world FILTER form), typed-literal VALUE
-                # comparisons (`?d >= "2020-02-15"^^xsd:date`,
-                # `?p > "19.5"^^xsd:decimal`), and bare decimal constants
-                # (`?p > 19.5` — never a valid id, so always by value)
-                op = take()
-                lit = take()
-                if _DEC_RE.fullmatch(lit):
-                    return ("valcmp", lhs[1:], op, "num", float(lit))
-                return _literal_cmp_leaf(lhs[1:], op, lit, src)
-            if (
-                nxt in ("=", "!=")
-                and pos + 1 < len(toks)
-                and (
-                    toks[pos + 1].startswith("<")
-                    or re.fullmatch(r"\w*:\w+", toks[pos + 1])
-                )
-            ):
-                # `?x =|!= <iri>` / `pfx:name` — TERM equality against
-                # an IRI constant (§17.4.1.7 on the id model: term
-                # identity IS id identity). Lowers to the same 'streq'
-                # leaf as literal term equality — the planner resolves
-                # the canonical term text to its id with the bounded
-                # dictionary lookup, so the comparison runs as a plain
-                # id equi-filter, never a string scan.
-                op = take()
-                slot = _normalize_term(take(), prefixes)
-                if slot[0] != "term":
-                    raise SparqlSyntaxError(
-                        f"bad FILTER expression {src!r}: expected an "
-                        "IRI constant after the comparison"
-                    )
-                return ("streq", lhs[1:], slot[1], op == "!=")
-            if nxt is not None and nxt.lower() == "in":
-                take()
-                return in_list(lhs[1:], negated=False)
-            if (
-                nxt is not None
-                and nxt.lower() == "not"
-                and pos + 1 < len(toks)
-                and toks[pos + 1].lower() == "in"
-            ):
-                take()
-                take()
-                return in_list(lhs[1:], negated=True)
-        pos -= 1  # un-take: the operand parser re-reads lhs
-        l_expr = arith_operand()
-        op = take()
-        if op not in _CMP_OPS:
-            raise SparqlSyntaxError(
-                f"bad FILTER expression {src!r}: expected comparison "
-                f"operator, got {op!r}"
-            )
-        r_expr = arith_operand()
-        # legacy leaf shape when both sides are simple (the form every
-        # existing consumer and test pins): (var, op, ('num'|'var', x))
-        if l_expr[0] == "var" and r_expr[0] in ("num", "var"):
-            if (
-                _TERM_STYLE.get() == "lexical"
-                and r_expr[0] == "var"
-                and op not in ("=", "!=")
-            ):
-                raise SparqlSyntaxError(
-                    f"bad FILTER expression {src!r}: on a lexical store "
-                    "an ordered variable-variable comparison would "
-                    "compare rank-assigned dictionary ids (meaningless "
-                    "order); compare each variable against typed "
-                    "constants, or use xsd:T(?x) cast comparisons"
-                )
-            return (l_expr[1], op, r_expr)
-        return ("cmp", l_expr, op, r_expr)
-
-    node = or_expr()
-    if pos != len(toks):
-        raise SparqlSyntaxError(
-            f"bad FILTER expression {src!r}: trailing tokens {toks[pos:]!r}"
-        )
+def _or_expr(cur: _Tokens):
+    node = _and_expr(cur)
+    while cur.peek() == "||":
+        cur.take()
+        node = ("or", node, _and_expr(cur))
     return node
+
+
+def _and_expr(cur: _Tokens):
+    node = _unary(cur)
+    while cur.peek() == "&&":
+        cur.take()
+        node = ("and", node, _unary(cur))
+    return node
+
+
+def _unary(cur: _Tokens):
+    if cur.peek() == "!":
+        cur.take()
+        return ("not", _unary(cur))
+    if cur.peek() == "(":
+        cur.take()
+        node = _or_expr(cur)
+        cur.take(")")
+        return node
+    return _comparison(cur)
+
+
+def _comparison(cur: _Tokens):
+    """One FILTER leaf: a function call from `_FILTER_CALLS`, a reversed
+    `constant <op> ?x` form, a `?x` comparison against a literal / IRI /
+    IN list, or — the fallback — an arithmetic comparison."""
+    lhs = cur.take()
+    call = _FILTER_CALLS.get(lhs.lower())
+    if call is not None and cur.peek() == "(":
+        return call(cur, lhs)
+    if _DEC_RE.fullmatch(lhs):
+        # reversed bare-decimal form `19.5 < ?x`
+        op = cur.op("a decimal constant can only appear in a comparison")
+        v = cur.var("a decimal comparison takes a variable on the other side")
+        return ("valcmp", v, _MIRROR_OP[op], "num", float(lhs))
+    if lhs.startswith('"'):
+        # reversed form `"literal" <op> ?x` (plain or typed literal):
+        # mirror the operator and reuse the var-on-the-left leaves
+        op = cur.op(f"a literal can only be compared with {_CMP_OPS}")
+        v = cur.var("a literal comparison takes a variable on the other side")
+        return _literal_cmp_leaf(v, _MIRROR_OP[op], lhs, cur.src)
+    if lhs.startswith(("?", "$")):
+        leaf = _var_leaf(cur, lhs[1:])
+        if leaf is not None:
+            return leaf
+    cur.pos -= 1  # un-take: the operand grammar re-reads lhs
+    left = _arith(cur)
+    op = cur.op("expected comparison operator")
+    right = _arith(cur)
+    # legacy leaf shape when both sides are simple (the form every
+    # existing consumer and test pins): (var, op, ('num'|'var', x))
+    if left[0] == "var" and right[0] in ("num", "var"):
+        if (
+            _TERM_STYLE.get() == "lexical"
+            and right[0] == "var"
+            and op not in ("=", "!=")
+        ):
+            cur.fail(
+                "on a lexical store an ordered variable-variable comparison "
+                "would compare rank-assigned dictionary ids (meaningless "
+                "order); compare each variable against typed constants, or "
+                "use xsd:T(?x) cast comparisons"
+            )
+        return (left[1], op, right)
+    return ("cmp", left, op, right)
+
+
+def _var_leaf(cur: _Tokens, var: str):
+    """`?x` compared against a literal, an IRI, or an IN list — None when
+    the rest is an arithmetic comparison."""
+    nxt, after = cur.peek() or "", cur.peek(1) or ""
+    if nxt in _CMP_OPS and (after.startswith('"') or _DEC_RE.fullmatch(after)):
+        # ?x <op> literal: plain `?x = "lit"` term equality (the most
+        # common real-world FILTER form), typed-literal VALUE comparisons
+        # (`?d >= "2020-02-15"^^xsd:date`, `?p > "19.5"^^xsd:decimal`),
+        # and bare decimal constants (`?p > 19.5` — never a valid id, so
+        # always by value)
+        op = cur.take()
+        lit = cur.take()
+        if _DEC_RE.fullmatch(lit):
+            return ("valcmp", var, op, "num", float(lit))
+        return _literal_cmp_leaf(var, op, lit, cur.src)
+    if nxt in ("=", "!=") and (
+        after.startswith("<") or re.fullmatch(r"\w*:\w+", after)
+    ):
+        # `?x =|!= <iri>` / `pfx:name` — TERM equality against an IRI
+        # constant (§17.4.1.7 on the id model: term identity IS id
+        # identity). Lowers to the same 'streq' leaf as literal term
+        # equality — the planner resolves the canonical term text to its
+        # id with the bounded dictionary lookup, so the comparison runs
+        # as a plain id equi-filter, never a string scan.
+        op = cur.take()
+        slot = _normalize_term(cur.take(), cur.prefixes)
+        if slot[0] != "term":
+            cur.fail("expected an IRI constant after the comparison")
+        return ("streq", var, slot[1], op == "!=")
+    if nxt.lower() == "in":
+        cur.take()
+        return _in_list(cur, var, negated=False)
+    if nxt.lower() == "not" and after.lower() == "in":
+        cur.take()
+        cur.take()
+        return _in_list(cur, var, negated=True)
+    return None
+
+
+def _in_list(cur: _Tokens, var: str, negated: bool):
+    """`?v [NOT] IN (x1, x2, ...)` (§17.4.1.9-10): integer ids and/or
+    string terms. Integers → ('in', var, ids, negated); strings →
+    ('strin', var, texts, negated) — resolved to ids at plan time via
+    the same bounded lookup as term equality. A mixed list is the
+    disjunction of the two leaves (conjunction when negated — De
+    Morgan over the not-equals)."""
+    cur.take("(")
+    ints: list[int] = []
+    texts: list[str] = []
+    while True:
+        t = cur.take()
+        if _INT.fullmatch(t):
+            ints.append(int(t))
+        elif t.startswith('"'):
+            # plain or typed literal: IN is a term-identity test on
+            # this engine (one id per distinct term), so a typed
+            # literal resolves through the SAME normalization as a
+            # BGP constant — integer datatypes to ids, anything else
+            # to its canonical dictionary text
+            slot = _normalize_term(t)
+            (ints if slot[0] == "id" else texts).append(slot[1])
+        elif t.startswith("<") or re.fullmatch(r"\w*:\w+", t):
+            # IRI constants (r12): `?x IN (:a, <http://…/b>)` is the
+            # same term-identity test — the canonical term text
+            # resolves to its id through the bounded dictionary
+            # lookup the strin leaf already performs
+            slot = _normalize_term(t, cur.prefixes)
+            if slot[0] == "id":
+                ints.append(slot[1])
+            elif slot[0] == "term":
+                texts.append(slot[1])
+            else:
+                cur.fail(f"IN lists take constants, got {t!r}")
+        else:
+            cur.fail(
+                f"IN lists take integer, string, or IRI constants, got {t!r}"
+            )
+        t = cur.take()
+        if t == ")":
+            break
+        if t != ",":
+            cur.fail(f"expected ',' or ')' in IN list, got {t!r}")
+    leaves = []
+    if ints:
+        leaves.append(("in", var, tuple(ints), negated))
+    if texts:
+        leaves.append(("strin", var, tuple(texts), negated))
+    if not leaves:
+        cur.fail("empty IN list")
+    if len(leaves) == 1:
+        return leaves[0]
+    return ("and" if negated else "or", leaves[0], leaves[1])
+
+
+# ---- FILTER function-call leaves: _f_*(cursor, name as written), called
+# with the cursor on the opening parenthesis; `_FILTER_CALLS` below maps
+# each lowercase name to its parser.
+
+
+def _f_bound(cur: _Tokens, name: str):
+    """BOUND(?v) (§17.4.1.1): true iff the variable is bound — the one
+    filter form that maps unbound to plain FALSE (not error); with ! it
+    is SPARQL 1.0's negation-as-failure idiom."""
+    return ("bound", cur.var_arg("BOUND"))
+
+
+def _f_sameterm(cur: _Tokens, name: str):
+    """sameTerm(?a, ?b) (§17.4.1.8): term identity IS id equality in the
+    dictionary-encoded model (one id per distinct term), so it lowers to
+    the plain equality leaf — unbound → error → filter-false, same as
+    `=`; !sameTerm via the `not` unary. Constant operands: use a pattern
+    constant instead (the planner's constant-encoding path) — rejected
+    here to keep FILTER compilation dictionary-free."""
+    cur.take("(")
+    a = cur.take()
+    cur.take(",")
+    b = cur.take()
+    cur.take(")")
+    if not (a.startswith(("?", "$")) and b.startswith(("?", "$"))):
+        cur.fail(
+            "sameTerm takes two variables (for a constant, put the term in "
+            f"the pattern), got {a!r}, {b!r}"
+        )
+    return (a[1:], "=", ("var", b[1:]))
+
+
+def _f_termfn(cur: _Tokens, name: str):
+    """LANG(?x) = "en" / DATATYPE(?x) = xsd:date (§17.4.2.6-7): term-kind
+    accessors over the dictionary text — the planner attaches the term
+    column (same join as REGEX) and compiles the kind/lang/datatype
+    derivation as column expressions.
+    AST: ('termfn', fn, var, normalized-value, negated)."""
+    fn = name.lower()
+    v = cur.var_arg(fn.upper())
+    op = cur.op(
+        f"{fn.upper()}() comparisons support = and != only", ("=", "!=")
+    )
+    if fn == "lang":
+        value = cur.string("LANG() compares against a string literal").lower()
+    else:
+        value = _localize_datatype(cur.take())
+    return ("termfn", fn, v, value, op == "!=")
+
+
+def _f_langmatches(cur: _Tokens, name: str):
+    """LANGMATCHES(LANG(?x), "range") (§17.4.3.20, basic filtering):
+    range "*" matches any tagged literal; otherwise the tag equals the
+    range or extends it with a subtag."""
+    cur.take("(")
+    t = cur.take()
+    if t.lower() != "lang":
+        cur.fail(
+            f"LANGMATCHES takes LANG(?var) as its first argument, got {t!r}"
+        )
+    v = cur.var_arg("LANG")
+    cur.take(",")
+    rng = cur.string("LANGMATCHES range must be a string literal")
+    cur.take(")")
+    return ("langmatches", v, rng.lower())
+
+
+# type-checking predicates (§17.4.2.1-4): booleans over the term kind.
+# isNumeric is true exactly for integer literals (dictionary-absent ids)
+# — the engine's only numeric kind.
+_TERM_KINDS = {
+    "isiri": "iri",
+    "isuri": "iri",
+    "isliteral": "literal",
+    "isblank": "blank",
+    "isnumeric": "numeric",
+}
+
+
+def _f_termis(cur: _Tokens, name: str):
+    return ("termis", _TERM_KINDS[name.lower()], cur.var_arg(name))
+
+
+def _f_strlen(cur: _Tokens, name: str):
+    """STRLEN(STR(?x)) <op> n (§17.4.3.2): term LENGTH compared to an
+    integer — evaluated over the dictionary term text (same join as
+    REGEX); null-intolerant, so the dict join inner-izes and the length
+    predicate pushes to the dict scan."""
+    v, has_str = cur.str_var_arg("STRLEN")
+    op = cur.op("STRLEN comparison needs an operator")
+    n = cur.integer("STRLEN compares against an integer")
+    return ("strlen", v, op, n, has_str)
+
+
+def _f_castcmp(cur: _Tokens, name: str):
+    """A typed-VALUE computation compared against a constant, riding the
+    castcmp lowering (the kind names a planner `_term_cast` derivation):
+    YEAR(?d) >= 2020 / FLOOR(?p) = 19 (r7) against a numeric constant,
+    and the explicit cast xsd:T([STR(]?x[)]) <op> constant (§17.5
+    operand, r7) against a constant of the target's family.
+    AST: ('castcmp', kind, var, op, 'num'|'date'|'dt', value)."""
+    cast = ":" in name
+    if cast:
+        kind = _XSD_CAST_KINDS[name.split(":", 1)[1].lower()]
+        v, _ = cur.str_var_arg(f"{name}()")
+        what = "cast"
+        bad_const = "cast comparison constant must be numeric or date-typed"
+        bad_tok = "cast comparison constant must be a number or typed literal"
+    else:
+        kind = name.lower()
+        v = cur.var_arg(f"{name.upper()}()")
+        what = name.upper()
+        bad_const = bad_tok = f"{what} compares against a numeric constant"
+    op = cur.op(f"{what} comparison needs an operator")
+    lit = cur.take()
+    if _DEC_RE.fullmatch(lit) or _INT.fullmatch(lit):
+        rk, rv = "num", float(lit)
+    elif lit.startswith('"'):
+        k2, v2 = _classify_filter_literal(lit, cur.src)
+        if k2 == "int":
+            rk, rv = "num", float(v2)
+        elif k2 == "vnum":
+            rk, rv = "num", v2
+        elif cast and k2 in ("vdate", "vdt"):
+            rk, rv = k2[1:], v2
+        else:
+            cur.fail(bad_const)
+    else:
+        cur.fail(f"{bad_tok}, got {lit!r}")
+    if rk != {"date": "date", "dateTime": "dt"}.get(kind, "num"):
+        cur.fail(f"xsd:{kind} cast compared against a non-{kind} constant")
+    return ("castcmp", kind, v, op, rk, rv)
+
+
+def _f_strexpr(cur: _Tokens, name: str):
+    """FN(...) <op> "literal" over a string-manipulation expression (r7):
+    the call's token span re-renders and parses with the string-
+    expression grammar."""
+    start = cur.pos - 1
+    depth = 0
+    j = cur.pos
+    while j < len(cur.toks):
+        if cur.toks[j] == "(":
+            depth += 1
+        elif cur.toks[j] == ")":
+            depth -= 1
+            if depth == 0:
+                break
+        j += 1
+    if depth != 0:
+        cur.fail(f"unbalanced parens in {name.upper()}(...)")
+    tree = _parse_str_expr(" ".join(cur.toks[start : j + 1]))
+    cur.pos = j + 1
+    op = cur.op("string-expression comparison needs an operator")
+    lit = cur.string("string-expression comparison takes a string literal")
+    return ("strexprcmp", tree, op, lit)
+
+
+def _f_case(cur: _Tokens, name: str):
+    """UCASE/LCASE(?x | STR(?x)) =|!= "literal" (§17.4.3.4-5): case-folded
+    term equality, dictionary-side — type-strict: integer literals have
+    no term text and DROP. Any other argument (nested calls) takes the
+    general string-expression comparison."""
+    arg = cur.peek(1)
+    if arg is None or not (arg.startswith(("?", "$")) or arg.lower() == "str"):
+        return _f_strexpr(cur, name)
+    fn = name.lower()
+    v, has_str = cur.str_var_arg(fn.upper())
+    op = cur.op(
+        f"{fn.upper()}() comparisons support = and != only", ("=", "!=")
+    )
+    lit = cur.string(f"{fn.upper()}() compares against a string literal")
+    return ("strcase", fn, v, lit, op == "!=", has_str)
+
+
+def _f_str(cur: _Tokens, name: str):
+    """STR(?x) = "literal": localized = term equality (§17.4.2.5 wrapper
+    over the term model, id pushdown); lexical = a string comparison over
+    the DERIVED STR value (so "Bob" matches '"Bob"', '"Bob"@en' and
+    '<Bob>' alike — the spec's simple-literal comparison, not raw term
+    text). AST: ('streq', var, text, negated) on the id model."""
+    v = cur.var_arg("STR")
+    if cur.peek() not in ("=", "!="):
+        cur.fail(f"STR() comparisons support = and != only, got {cur.peek()!r}")
+    op = cur.take()
+    if _TERM_STYLE.get() == "lexical":
+        lit = cur.string("STR() compares against a string literal")
+        return ("strexprcmp", ("sof", v), op, lit)
+    lit = cur.string("term equality takes a string literal")
+    return ("streq", v, lit, op == "!=")
+
+
+def _f_strfn(cur: _Tokens, name: str):
+    """`NAME([STR(]?var[)], "pattern"[, "i"])` → ('strfn', name, var,
+    pattern, flags) for REGEX / CONTAINS / STRSTARTS / STRENDS."""
+    fn = name.lower()
+    cur.take("(")
+    v, _ = cur.str_var(fn.upper())
+    cur.take(",")
+    pat = cur.string(f"{fn.upper()} pattern must be a string literal")
+    flags = ""
+    if cur.peek() == ",":
+        cur.take()
+        fl = cur.take()
+        if fn != "regex" or fl != '"i"':
+            cur.fail(
+                'only REGEX supports a flags argument, and only "i", '
+                f"got {fl!r}"
+            )
+        flags = "i"
+    cur.take(")")
+    return ("strfn", fn, v, pat, flags)
+
+
+_FILTER_CALLS = {
+    "bound": _f_bound,
+    "sameterm": _f_sameterm,
+    "lang": _f_termfn,
+    "datatype": _f_termfn,
+    "langmatches": _f_langmatches,
+    **dict.fromkeys(_TERM_KINDS, _f_termis),
+    "strlen": _f_strlen,
+    **dict.fromkeys((f.lower() for f in _VALUE_FNS), _f_castcmp),
+    **dict.fromkeys(
+        (f"xsd:{k}" for k in _XSD_CAST_KINDS if k != "string"), _f_castcmp
+    ),
+    **dict.fromkeys(_STR_EXPR_FNS, _f_strexpr),
+    "ucase": _f_case,
+    "lcase": _f_case,
+    "str": _f_str,
+    **dict.fromkeys(_STR_FNS, _f_strfn),
+}
+
+
+def _vars1(node) -> set[str]:
+    return {node[1]}
+
+
+def _vars2(node) -> set[str]:
+    return {node[2]}
+
+
+# The legacy comparison leaf (var, op, ('num'|'var', x)) carries no tag;
+# `_leaf_tag` files it under this key.
+_IDCMP = "idcmp"
+# FILTER leaf table: tag → (variables the leaf reads, how it reads them)
+#   "id"    compares encoded ids — no dictionary term needed
+#   "lit"   resolves its literal(s) to ids with ONE bounded dictionary
+#           lookup (term equality / term IN lists) — never a term join
+#   "term"  derives a value from the dictionary term text: the planner
+#           attaches the variable's term column before compiling
+_LEAVES = {
+    _IDCMP: (
+        lambda n: {n[0]} | ({n[2][1]} if n[2][0] == "var" else set()),
+        "id",
+    ),
+    "cmp": (lambda n: arith_expr_vars(n[1]) | arith_expr_vars(n[3]), "id"),
+    "in": (_vars1, "id"),
+    "bound": (_vars1, "id"),
+    "streq": (_vars1, "lit"),
+    "strin": (_vars1, "lit"),
+    "strfn": (_vars2, "term"),
+    "valcmp": (_vars1, "term"),
+    "strexprcmp": (lambda n: strexpr_vars(n[1]), "term"),
+    "castcmp": (_vars2, "term"),
+    "termfn": (_vars2, "term"),
+    "termis": (_vars2, "term"),
+    "langmatches": (_vars1, "term"),
+    "strlen": (_vars1, "term"),
+    "strcase": (_vars2, "term"),
+}
+
+
+def _leaf_tag(node):
+    """The `_LEAVES` key of a FILTER AST leaf; None for a connective
+    ('not', e) / ('and'|'or', a, b)."""
+    if isinstance(node[1], str) and node[1] in _CMP_OPS:
+        return _IDCMP
+    return node[0] if node[0] in _LEAVES else None
+
+
+def _leaf_walk(node, pick) -> set:
+    """Union of ``pick(tag, leaf)`` over the leaves of a FILTER AST."""
+    tag = _leaf_tag(node)
+    if tag is not None:
+        return pick(tag, node)
+    if node[0] == "not":
+        return _leaf_walk(node[1], pick)
+    return _leaf_walk(node[1], pick) | _leaf_walk(node[2], pick)
+
+
+def _leaf_vars(node, kinds) -> set[str]:
+    return _leaf_walk(
+        node,
+        lambda tag, n: _LEAVES[tag][0](n) if _LEAVES[tag][1] in kinds else set(),
+    )
 
 
 def filter_expr_vars(node) -> set[str]:
     """All variables referenced by a FILTER expression AST."""
-    if isinstance(node[1], str) and node[1] in _CMP_OPS:  # comparison leaf
-        var, _, rhs = node
-        return {var} | ({rhs[1]} if rhs[0] == "var" else set())
-    if len(node) == 4 and node[0] == "cmp":  # arithmetic comparison leaf
-        return arith_expr_vars(node[1]) | arith_expr_vars(node[3])
-    if len(node) == 4 and node[0] in ("in", "streq", "strin"):
-        return {node[1]}  # [NOT] IN (ids/terms) / term-equality
-    if len(node) == 2 and node[0] == "bound":  # BOUND leaf
-        return {node[1]}
-    if len(node) == 5 and node[0] == "strfn":  # string-function leaf
-        return {node[2]}
-    if len(node) == 5 and node[0] == "valcmp":  # typed-value comparison
-        return {node[1]}
-    if len(node) == 4 and node[0] == "strexprcmp":  # string-expression cmp
-        return strexpr_vars(node[1])
-    if len(node) == 6 and node[0] == "castcmp":  # explicit-cast comparison
-        return {node[2]}
-    if len(node) == 5 and node[0] == "termfn":  # LANG/DATATYPE leaf
-        return {node[2]}
-    if len(node) == 3 and node[0] == "termis":  # isIRI/isLiteral/... leaf
-        return {node[2]}
-    if len(node) == 3 and node[0] == "langmatches":
-        return {node[1]}
-    if len(node) == 5 and node[0] == "strlen":  # STRLEN comparison leaf
-        return {node[1]}
-    if len(node) == 6 and node[0] == "strcase":  # UCASE/LCASE equality
-        return {node[2]}
-    if node[0] == "not":
-        return filter_expr_vars(node[1])
-    return filter_expr_vars(node[1]) | filter_expr_vars(node[2])
+    return _leaf_vars(node, ("id", "lit", "term"))
 
 
 def filter_expr_strfn_vars(node) -> set[str]:
-    """Variables appearing inside string-function leaves — the planner
-    attaches a dictionary term column for each before compiling. (streq
-    leaves are NOT included: term equality resolves its literal to an id
-    and needs no term column.)"""
-    if isinstance(node[1], str) and node[1] in _CMP_OPS:
-        return set()
-    if len(node) == 4 and node[0] in ("cmp", "in", "streq", "strin"):
-        return set()
-    if len(node) == 2 and node[0] == "bound":
-        return set()
-    if len(node) == 5 and node[0] == "strfn":
-        return {node[2]}
-    if len(node) == 5 and node[0] == "valcmp":
-        return {node[1]}  # value derivation reads the term text
-    if len(node) == 4 and node[0] == "strexprcmp":
-        return strexpr_vars(node[1])  # every referenced var needs a term
-    if len(node) == 6 and node[0] == "castcmp":
-        return {node[2]}  # the cast reads the term text
-    if len(node) == 5 and node[0] == "termfn":
-        return {node[2]}  # accessors read the term text too
-    if len(node) == 3 and node[0] == "termis":
-        return {node[2]}
-    if len(node) == 3 and node[0] == "langmatches":
-        return {node[1]}
-    if len(node) == 5 and node[0] == "strlen":
-        return {node[1]}
-    if len(node) == 6 and node[0] == "strcase":
-        return {node[2]}
-    if node[0] == "not":
-        return filter_expr_strfn_vars(node[1])
-    return filter_expr_strfn_vars(node[1]) | filter_expr_strfn_vars(node[2])
-
-
-def filter_expr_barecmp_vars(node) -> set[str]:
-    """Variables compared against a BARE numeric constant
-    (`?x > 40` — the legacy id-comparison leaf). Under
-    ``term_style="lexical"`` the planner evaluates these by typed
-    numeric VALUE (ids are lexicographic ranks there), which needs the
-    term attach this collector drives; localized plans never call it."""
-    if isinstance(node[1], str) and node[1] in _CMP_OPS:
-        var, _, rhs = node
-        return {var} if rhs[0] == "num" else set()
-    if len(node) == 4 and node[0] == "cmp":
-        # arithmetic comparison leaf (FILTER(?x > 5+0)): every variable
-        # operand needs the same typed-value routing as the bare form —
-        # raw ids are lexicographic ranks on lexical stores (r10 ADVICE)
-        return arith_expr_vars(node[1]) | arith_expr_vars(node[3])
-    if node[0] == "not":
-        return filter_expr_barecmp_vars(node[1])
-    if len(node) == 3 and node[0] in ("and", "or"):
-        return filter_expr_barecmp_vars(node[1]) | filter_expr_barecmp_vars(
-            node[2]
-        )
-    return set()
+    """Variables of the leaves that read the dictionary term text — the
+    planner attaches a dictionary term column for each before compiling.
+    (Term-equality leaves are NOT included: they resolve their literal to
+    an id and need no term column.)"""
+    return _leaf_vars(node, ("term",))
 
 
 def filter_expr_term_vars(node) -> set[str]:
     """Variables whose TERM (dictionary entry) the expression reads —
-    the string-function leaves plus term-equality / term-IN leaves
-    (which resolve their literal to an id and compare identities).
-    Used to reject HAVING over COMPUTED group keys (r7): a BIND-target
-    key is a value, not a dictionary id, so any term-semantics leaf
-    over it would silently misinterpret."""
-    if len(node) == 4 and node[0] in ("streq", "strin"):
-        return {node[1]}
-    if isinstance(node[1], str) and node[1] in _CMP_OPS:
-        return filter_expr_strfn_vars(node)
-    if node[0] == "not":
-        return filter_expr_term_vars(node[1])
-    if len(node) == 3 and node[0] in ("and", "or"):
-        return filter_expr_term_vars(node[1]) | filter_expr_term_vars(
-            node[2]
-        )
-    return filter_expr_strfn_vars(node)
+    the term-text leaves plus term-equality / term-IN leaves (which
+    resolve their literal to an id and compare identities). Used to
+    reject HAVING over COMPUTED group keys (r7): a BIND-target key is a
+    value, not a dictionary id, so any term-semantics leaf over it would
+    silently misinterpret."""
+    return _leaf_vars(node, ("lit", "term"))
+
+
+def filter_expr_barecmp_vars(node) -> set[str]:
+    """Variables compared against a BARE numeric constant
+    (`?x > 40` — the legacy id-comparison leaf), plus every variable of
+    an arithmetic comparison (FILTER(?x > 5+0) — r10 ADVICE). Under
+    ``term_style="lexical"`` the planner evaluates these by typed
+    numeric VALUE (ids are lexicographic ranks there), which needs the
+    term attach this collector drives; localized plans never call it."""
+
+    def pick(tag, n):
+        if tag == _IDCMP:
+            return {n[0]} if n[2][0] == "num" else set()
+        return _LEAVES[tag][0](n) if tag == "cmp" else set()
+
+    return _leaf_walk(node, pick)
 
 
 def filter_expr_streq_literals(node) -> set[str]:
-    """String literals in term-equality leaves — the planner resolves each
-    via ONE bounded dictionary lookup (never a term join) and compiles an
-    id equality; a literal absent from the dictionary appears in no triple
-    and constant-folds."""
-    if isinstance(node[1], str) and node[1] in _CMP_OPS:
-        return set()
-    if len(node) == 4 and node[0] == "streq":
-        return {node[2]}
-    if len(node) == 4 and node[0] == "strin":  # term IN-list literals
-        return set(node[2])
-    if len(node) == 4 and node[0] in ("cmp", "in"):
-        return set()
-    if len(node) == 2 and node[0] == "bound":
-        return set()
-    if len(node) == 5 and node[0] == "strfn":
-        return set()
-    if len(node) == 5 and node[0] == "valcmp":
-        return set()  # the constant is a value, never a dictionary id
-    if len(node) == 4 and node[0] == "strexprcmp":
-        return set()  # compared against the computed string, not an id
-    if len(node) == 6 and node[0] == "castcmp":
-        return set()  # the constant is a value, never a dictionary id
-    if len(node) == 5 and node[0] == "termfn":
-        return set()  # LANG/DATATYPE values compare as strings, not ids
-    if len(node) == 3 and node[0] in ("termis", "langmatches"):
-        return set()
-    if len(node) == 5 and node[0] == "strlen":
-        return set()
-    if len(node) == 6 and node[0] == "strcase":
-        return set()  # case-folded match cannot resolve to one id
-    if node[0] == "not":
-        return filter_expr_streq_literals(node[1])
-    return filter_expr_streq_literals(node[1]) | filter_expr_streq_literals(
-        node[2]
+    """String literals in term-equality and term-IN leaves — the planner
+    resolves each via ONE bounded dictionary lookup (never a term join)
+    and compiles an id equality; a literal absent from the dictionary
+    appears in no triple and constant-folds."""
+    return _leaf_walk(
+        node,
+        lambda tag, n: {n[2]} if tag == "streq"
+        else set(n[2]) if tag == "strin" else set(),
     )
 
 
 def _parse_arith_expr(src: str):
-    """Recursive-descent parse of a BIND arithmetic expression:
-    `*` binds tighter than `+`/`-`; leaves are variables, integers, and
-    the §17.4 functional forms ABS(e), COALESCE(e, ...), and
+    """Parse a BIND arithmetic expression (the `_arith` grammar)."""
+    return _Tokens(src, "BIND").parse(_arith)
+
+
+def _arith(cur: _Tokens):
+    """Integer arithmetic — the BIND grammar, also every FILTER
+    arithmetic comparison side (§17.3 operator mappings): `*` `/` bind
+    tighter than `+` `-`; atoms are variables, integers, parentheses and
+    the §17.4 functional forms ABS(e), COALESCE(e, ...) and
     IF(cond, then, else) with cond = [!]BOUND(?v) or an arithmetic
     comparison — the unbound-handling toolkit that pairs with the
-    engine's compatible-bindings joins."""
-    toks = _tokenize_filter(src)
-    pos = 0
-
-    def peek():
-        return toks[pos] if pos < len(toks) else None
-
-    def take(expected=None):
-        nonlocal pos
-        if pos >= len(toks) or (expected is not None and toks[pos] != expected):
-            raise SparqlSyntaxError(
-                f"bad BIND expression {src!r}: expected "
-                f"{expected or 'a term'}, got {peek()!r}"
-            )
-        pos += 1
-        return toks[pos - 1]
-
-    def split_negative():
-        # `?a -3` lexed the operand as one negative number; re-split it
-        # into a subtraction when a binary operator is expected here
-        nonlocal pos
-        t = peek()
-        if t is not None and re.fullmatch(r"-\d+", t):
-            toks[pos] = t[1:]
-            toks.insert(pos, "-")
-
-    def add_expr():
-        node = mul_expr()
-        split_negative()
-        while peek() in ("+", "-"):
-            op = take()
-            node = (op, node, mul_expr())
-            split_negative()
-        return node
-
-    def mul_expr():
-        node = atom()
-        while peek() in ("*", "/"):
-            op = take()
-            node = (op, node, atom())
-        return node
-
-    def if_cond():
-        neg = False
-        while peek() == "!":
-            take()
-            neg = not neg
-        if peek() is not None and peek().upper() == "BOUND":
-            take()
-            take("(")
-            v = take()
-            if not v.startswith(("?", "$")):
-                raise SparqlSyntaxError(
-                    f"bad BIND expression {src!r}: BOUND takes a variable"
-                )
-            take(")")
-            node = ("bound", v[1:])
-        else:
-            left = add_expr()
-            op = take()
-            if op not in _CMP_OPS:
-                raise SparqlSyntaxError(
-                    f"bad BIND expression {src!r}: IF condition must be "
-                    f"[!]BOUND(?v) or an arithmetic comparison, got {op!r}"
-                )
-            node = ("icmp", op, left, add_expr())
-        return ("not", node) if neg else node
-
-    def atom():
-        if peek() == "(":
-            take()
-            node = add_expr()
-            take(")")
-            return node
-        t = take()
-        up = t.upper()
-        if up in ("ABS", "COALESCE", "IF") and peek() == "(":
-            take("(")
-            if up == "ABS":
-                node = ("abs", add_expr())
-                take(")")
-                return node
-            if up == "COALESCE":
-                args = [add_expr()]
-                while peek() == ",":
-                    take()
-                    args.append(add_expr())
-                take(")")
-                return ("coalesce", args)
-            cond = if_cond()
-            take(",")
-            then = add_expr()
-            take(",")
-            els = add_expr()
-            take(")")
-            return ("if", cond, then, els)
-        if t.startswith(("?", "$")):
-            return ("var", t[1:])
-        if re.fullmatch(r"-?\d+", t):
-            return ("num", int(t))
-        raise SparqlSyntaxError(
-            f"bad BIND expression {src!r}: expected a variable, integer, "
-            f"or parenthesized expression, got {t!r}"
-        )
-
-    node = add_expr()
-    if pos != len(toks):
-        raise SparqlSyntaxError(
-            f"bad BIND expression {src!r}: trailing tokens {toks[pos:]!r}"
-        )
+    engine's compatible-bindings joins. AST nodes: ('num', n) |
+    ('var', v) | (op, a, b) | ('abs', a) | ('coalesce', [a, ...]) |
+    ('if', cond, then, else)."""
+    node = _arith_term(cur)
+    _split_negative(cur)
+    while cur.peek() in ("+", "-"):
+        op = cur.take()
+        node = (op, node, _arith_term(cur))
+        _split_negative(cur)
     return node
+
+
+def _split_negative(cur: _Tokens):
+    # `?a -3` lexed the operand as one negative number; re-split it into
+    # a subtraction where a binary operator is expected
+    t = cur.peek()
+    if t is not None and re.fullmatch(r"-\d+", t):
+        cur.toks[cur.pos] = t[1:]
+        cur.toks.insert(cur.pos, "-")
+
+
+def _arith_term(cur: _Tokens):
+    node = _arith_atom(cur)
+    while cur.peek() in ("*", "/"):
+        op = cur.take()
+        node = (op, node, _arith_atom(cur))
+    return node
+
+
+def _arith_atom(cur: _Tokens):
+    if cur.peek() == "(":
+        cur.take()
+        node = _arith(cur)
+        cur.take(")")
+        return node
+    t = cur.take()
+    up = t.upper()
+    if up in ("ABS", "COALESCE", "IF") and cur.peek() == "(":
+        cur.take("(")
+        if up == "ABS":
+            node = ("abs", _arith(cur))
+        elif up == "COALESCE":
+            args = [_arith(cur)]
+            while cur.peek() == ",":
+                cur.take()
+                args.append(_arith(cur))
+            node = ("coalesce", args)
+        else:
+            cond = _arith_cond(cur)
+            cur.take(",")
+            then = _arith(cur)
+            cur.take(",")
+            node = ("if", cond, then, _arith(cur))
+        cur.take(")")
+        return node
+    if t.startswith(("?", "$")):
+        return ("var", t[1:])
+    if _INT.fullmatch(t):
+        return ("num", int(t))
+    cur.fail(
+        "expected a variable, integer, or parenthesized expression, "
+        f"got {t!r}"
+    )
+
+
+def _arith_cond(cur: _Tokens):
+    """IF condition: [!]BOUND(?v) or an arithmetic comparison
+    ('icmp', op, a, b)."""
+    neg = False
+    while cur.peek() == "!":
+        cur.take()
+        neg = not neg
+    if (cur.peek() or "").upper() == "BOUND":
+        cur.take()
+        cur.take("(")
+        v = cur.take()
+        if not v.startswith(("?", "$")):
+            cur.fail("BOUND takes a variable")
+        cur.take(")")
+        node = ("bound", v[1:])
+    else:
+        left = _arith(cur)
+        op = cur.op(
+            "IF condition must be [!]BOUND(?v) or an arithmetic comparison"
+        )
+        node = ("icmp", op, left, _arith(cur))
+    return ("not", node) if neg else node
 
 
 def arith_expr_vars(node) -> set[str]:
@@ -2521,108 +2205,102 @@ def _parse_path_expr(src: str, prefixes: dict[str, str]):
     Per the grammar, `^p*` parses as `(^p)*` (the inverse binds to the
     path primary, the modifier to the whole element). Predicates must be
     constants — a variable or negated set inside a composite path is
-    malformed."""
-    pos, n = 0, len(src)
-
-    def error():
-        raise SparqlSyntaxError(f"malformed property path: {src!r}")
-
-    def peek():
-        return src[pos] if pos < n else None
-
-    def alt():
-        parts = [seq()]
-        while peek() == "|":
-            advance()
-            parts.append(seq())
-        return parts[0] if len(parts) == 1 else ("alt", parts)
-
-    def seq():
-        parts = [elt()]
-        while peek() == "/":
-            advance()
-            parts.append(elt())
-        return parts[0] if len(parts) == 1 else ("seq", parts)
-
-    def advance():
-        nonlocal pos
-        pos += 1
-
-    def elt():
-        inv = False
-        if peek() == "^":
-            advance()
-            inv = True
-        node = atom()
-        if inv:
-            node = ("inv", node)
-        while peek() in ("*", "+", "?"):
-            node = ("clos", node, src[pos])
-            advance()
-        return node
-
-    def pred_name():
-        nonlocal pos
-        start = pos
-        while pos < n and src[pos] not in _PATH_DELIMS and src[pos] != "!":
-            pos += 1
-        name = src[start:pos]
-        if not name or name[0] in "?$\"":
-            error()
-        slot = _normalize_term(name, prefixes)
-        if slot[0] == "var":
-            error()
-        return slot
-
-    def atom():
-        nonlocal pos
-        if peek() == "!":
-            # negated property set (§9.1 PathNegatedPropertySet): !p,
-            # !(p1|p2|...), with inverse members per the spec identity
-            #   !(P1|..|Pn|^Q1|..|^Qm) ≡ !(P1|..|Pn) | ^!(Q1|..|Qm)
-            # — a NOT-IN scan over the forward members unioned with the
-            # column-swap of a NOT-IN scan over the inverse members
-            advance()
-            fwd: list = []
-            inv: list = []
-
-            def member():
-                if peek() == "^":
-                    advance()
-                    inv.append(pred_name())
-                else:
-                    fwd.append(pred_name())
-
-            if peek() == "(":
-                advance()
-                member()
-                while peek() == "|":
-                    advance()
-                    member()
-                if peek() != ")":
-                    error()
-                advance()
-            else:
-                member()
-            parts = []
-            if fwd:
-                parts.append(("npred", tuple(fwd)))
-            if inv:
-                parts.append(("inv", ("npred", tuple(inv))))
-            return parts[0] if len(parts) == 1 else ("alt", parts)
-        if peek() == "(":
-            advance()
-            node = alt()
-            if peek() != ")":
-                error()
-            advance()
-            return node
-        return ("pred", pred_name())
-
-    node = alt()
-    if pos != n:
-        error()
+    malformed. The cursor runs over the path's characters."""
+    cur = _Tokens(src, "path", prefixes, toks=src)
+    node = _path_alt(cur)
+    if cur.pos != len(src):
+        _path_error(cur)
     return node
+
+
+def _path_error(cur: _Tokens):
+    raise SparqlSyntaxError(f"malformed property path: {cur.src!r}")
+
+
+def _path_alt(cur: _Tokens):
+    parts = [_path_seq(cur)]
+    while cur.peek() == "|":
+        cur.take()
+        parts.append(_path_seq(cur))
+    return parts[0] if len(parts) == 1 else ("alt", parts)
+
+
+def _path_seq(cur: _Tokens):
+    parts = [_path_elt(cur)]
+    while cur.peek() == "/":
+        cur.take()
+        parts.append(_path_elt(cur))
+    return parts[0] if len(parts) == 1 else ("seq", parts)
+
+
+def _path_elt(cur: _Tokens):
+    inv = cur.peek() == "^"
+    if inv:
+        cur.take()
+    node = _path_atom(cur)
+    if inv:
+        node = ("inv", node)
+    while cur.peek() in ("*", "+", "?"):
+        node = ("clos", node, cur.take())
+    return node
+
+
+def _path_pred(cur: _Tokens):
+    start = cur.pos
+    while cur.peek() not in (None, "!") and cur.peek() not in _PATH_DELIMS:
+        cur.pos += 1
+    name = cur.src[start : cur.pos]
+    if not name or name[0] in "?$\"":
+        _path_error(cur)
+    slot = _normalize_term(name, cur.prefixes)
+    if slot[0] == "var":
+        _path_error(cur)
+    return slot
+
+
+def _path_member(cur: _Tokens):
+    """One negated-set member: (inverse?, predicate slot)."""
+    inv = cur.peek() == "^"
+    if inv:
+        cur.take()
+    return inv, _path_pred(cur)
+
+
+def _path_atom(cur: _Tokens):
+    if cur.peek() == "!":
+        # negated property set (§9.1 PathNegatedPropertySet): !p,
+        # !(p1|p2|...), with inverse members per the spec identity
+        #   !(P1|..|Pn|^Q1|..|^Qm) ≡ !(P1|..|Pn) | ^!(Q1|..|Qm)
+        # — a NOT-IN scan over the forward members unioned with the
+        # column-swap of a NOT-IN scan over the inverse members
+        cur.take()
+        if cur.peek() == "(":
+            cur.take()
+            members = [_path_member(cur)]
+            while cur.peek() == "|":
+                cur.take()
+                members.append(_path_member(cur))
+            if cur.peek() != ")":
+                _path_error(cur)
+            cur.take()
+        else:
+            members = [_path_member(cur)]
+        fwd = tuple(slot for inv, slot in members if not inv)
+        inv = tuple(slot for inv, slot in members if inv)
+        parts = []
+        if fwd:
+            parts.append(("npred", fwd))
+        if inv:
+            parts.append(("inv", ("npred", inv)))
+        return parts[0] if len(parts) == 1 else ("alt", parts)
+    if cur.peek() == "(":
+        cur.take()
+        node = _path_alt(cur)
+        if cur.peek() != ")":
+            _path_error(cur)
+        cur.take()
+        return node
+    return ("pred", _path_pred(cur))
 
 
 def path_expr_has_closure(node) -> bool:
@@ -3132,7 +2810,7 @@ def _parse_group(
             # VALUES
             j = _skip_ws(src, m.end())
             if j < n and src[j] in "?$":
-                vm = re.compile(r"[?$](\w+)").match(src, j)
+                vm = _VAR_NAME.match(src, j)
                 if not vm:
                     raise SparqlSyntaxError("malformed VALUES variable")
                 vals_src, i = expect_brace(vm.end(), "VALUES")
@@ -3352,7 +3030,11 @@ def parse_sparql(
     convention) or "lexical" (full N-Triples lexical forms, for
     dictionaries built from raw RDF); see ``_TERM_STYLE``. None inherits
     the ambient style, which is how recursive subquery parses stay
-    consistent with their outer query."""
+    consistent with their outer query.
+
+    Phases, in the order their checks run: query form, WHERE group,
+    GROUP BY expression keys, projection and aggregates, scope checks,
+    trailing VALUES, HAVING, grouping checks, ORDER BY, final checks."""
     if term_style is not None:
         if term_style not in ("localized", "lexical"):
             raise SparqlSyntaxError(
@@ -3363,13 +3045,152 @@ def parse_sparql(
             return parse_sparql(query, outer_prefixes)
         finally:
             _TERM_STYLE.reset(token)
-    ask, tpl_src, describe_var = False, None, None
-    dataset_src = ""
+    form = _query_form(query)
+    if isinstance(form, BGPQuery):
+        return form
+    prefixes = _build_prolog_map(form.prefixes_src, outer_prefixes)
+    # dataset clauses (§13.2): FROM / FROM NAMED graph IRIs normalize
+    # exactly like pattern constants (localized ':name' terms or ids)
+    dataset_default: list[tuple[str, object]] = []
+    dataset_named: list[tuple[str, object]] = []
+    for fm in _FROM_CLAUSE.finditer(form.dataset_src):
+        slot = _normalize_term(fm.group("src"), prefixes)
+        if slot[0] == "var":
+            raise SparqlSyntaxError(
+                f"FROM takes a graph IRI, not a variable: ?{slot[1]}"
+            )
+        (dataset_named if fm.group("named") else dataset_default).append(slot)
+    # the WHERE clause parses as a RECURSIVE group graph pattern (§5.2):
+    # nested {} subgroups, OPTIONAL/MINUS/EXISTS bodies and UNION arms are
+    # full groups at arbitrary depth; one fresh-var source query-wide
+    root = _parse_group(form.bgp_src, prefixes, itertools.count())
+
+    aggs = _Aggs()
+    mods = _group_by_exprs(form.mods_src, aggs)
+    projection = _projection(form.proj_src, aggs)
+    if aggs.binds:
+        # synthetic BINDs merge after the written ones (same scoping /
+        # freshness validation)
+        nb = len(root.binds)
+        root = _dc_replace(
+            root,
+            binds=root.binds + tuple(aggs.binds),
+            seq=root.seq
+            + tuple(("bind", nb + k) for k in range(len(aggs.binds))),
+        )
+    if not root.has_required_content():
+        raise SparqlSyntaxError("empty basic graph pattern")
+
+    required_vars = root.required_vars()
+    # in-scope variables for projection / FILTER / ORDER BY validation:
+    # every pattern-bound variable plus every BIND target anywhere in the
+    # tree (a nested group's BIND target is visible once the group joins
+    # in). Per-group BIND scoping/freshness validates in
+    # _validate_group_tree below.
+    bind_targets = {
+        bvar for g in _walk_groups(root) for bvar, _ in g.binds
+    }
+    pattern_vars = root.all_vars() | bind_targets
+    # OPTIONAL-bound DESCRIBE vars are fine: an unbound binding names no
+    # resource and the planner filters it (§16.4); only a var bound
+    # NOWHERE is a typo
+    if form.describe_var is not None and form.describe_var not in pattern_vars:
+        raise SparqlSyntaxError(
+            f"DESCRIBE variable must be bound by the required patterns: "
+            f"?{form.describe_var}"
+        )
+    construct = _construct_template(form.tpl_src, prefixes, pattern_vars)
+    # structural validation of the whole group tree: share-variable checks
+    # for OPTIONAL/MINUS/EXISTS at every level, VALUES variable scoping,
+    # and nested-group FILTER scoping (root filters validate against
+    # pattern_vars, which includes BIND targets)
+    _validate_group_tree(root, own_filter_scope=pattern_vars)
+    if projection is not None:
+        aliases = aggs.aliases()
+        unknown = set(projection) - pattern_vars - aliases
+        if unknown:
+            raise SparqlSyntaxError(
+                f"projected variables not in BGP: {sorted(unknown)}"
+            )
+        if aliases & pattern_vars:
+            raise SparqlSyntaxError(
+                f"aggregate alias shadows a pattern variable: "
+                f"{sorted(aliases & pattern_vars)}"
+            )
+    _check_agg_args(aggs.aggregates, pattern_vars)
+
+    mods, root = _trailing_values(mods, root, required_vars, prefixes)
+    mods, having = _having(mods, aggs, prefixes)
+    # re-check: lifting added entries
+    _check_agg_args(aggs.aggregates, pattern_vars, bind_targets)
+    gm = _GROUP.search(mods)
+    group_by = (
+        tuple(v.lstrip("?$") for v in gm.group("keys").split()) if gm else ()
+    )
+    grouped = bool(group_by) or bool(aggs.aggregates)
+    _check_grouping(
+        grouped, projection, group_by, having, aggs, pattern_vars, bind_targets
+    )
+    mods, order_by = _order_by(mods, aggs, grouped, pattern_vars)
+    _check_order_keys(
+        order_by, grouped, projection, group_by, aggs, pattern_vars,
+        bind_targets,
+    )
+
+    lm = _LIMIT.search(mods)
+    om = _OFFSET.search(mods)
+    leftover = _OFFSET.sub("", _LIMIT.sub("", _GROUP.sub("", mods))).strip()
+    if leftover:
+        raise SparqlSyntaxError(f"unsupported solution modifiers: {leftover!r}")
+    return BGPQuery(
+        projection=projection,
+        where=root,
+        distinct=form.distinct,
+        ask=form.ask,
+        order_by=tuple(order_by),
+        limit=int(lm.group("n")) if lm else None,
+        construct=tuple(construct),
+        describe_var=form.describe_var,
+        offset=int(om.group("n")) if om else None,
+        group_by=group_by,
+        aggregates=tuple(aggs.aggregates),
+        having=tuple(having),
+        agg_exprs=tuple(aggs.exprs),
+        dataset_default=tuple(dataset_default),
+        dataset_named=tuple(dataset_named),
+        term_style=_TERM_STYLE.get(),
+        prefixes=_prefix_pairs(prefixes),
+    )
+
+
+def _prefix_pairs(prefixes: dict[str, str]) -> tuple:
+    return tuple(sorted((k, v) for k, v in prefixes.items() if k != "@base"))
+
+
+@dataclass(frozen=True)
+class _Form:
+    """A query's text split by its form: prolog, WHERE group, projection,
+    the solution modifiers after the group, and the dataset clauses."""
+
+    prefixes_src: str
+    bgp_src: str
+    dataset_src: str
+    proj_src: str = "*"
+    distinct: bool = False
+    mods_src: str = ""
+    ask: bool = False
+    tpl_src: str | None = None
+    describe_var: str | None = None
+
+
+def _query_form(query: str):
+    """Query-form phase: DESCRIBE / ASK / CONSTRUCT / SELECT → `_Form`.
+    DESCRIBE over constant resources (no WHERE) short-circuits to the
+    finished BGPQuery — its plan is a single filtered scan, no pattern
+    machinery involved."""
     dv = _DESCRIBE_VAR.match(query)
     dt = _DESCRIBE_TERMS.match(query) if not dv else None
     if dt:
-        # DESCRIBE with constant resources, no WHERE: short-circuit — the
-        # plan is a single filtered scan, no pattern machinery involved
         prefixes = _build_prolog_map(dt.group("prefixes"), None)
         slots = tuple(
             _normalize_term(t, prefixes)
@@ -3386,26 +3207,28 @@ def parse_sparql(
             projection=None,
             describe_terms=slots,
             term_style=_TERM_STYLE.get(),
-            prefixes=tuple(
-            sorted((k, v) for k, v in prefixes.items() if k != "@base")
-        ),
+            prefixes=_prefix_pairs(prefixes),
         )
     am = _ASK.match(query)
     cm = _CONSTRUCT.match(query) if not am else None
     cw = _CONSTRUCT_WHERE.match(query) if not (am or cm) else None
     if dv:
-        describe_var = dv.group("var")[1:]
-        prefixes_src, bgp_src = dv.group("prefixes"), dv.group("bgp")
-        proj_src, distinct_src, mods_src = "*", None, ""
-        dataset_src = dv.group("dataset") or ""
-    elif am:
+        return _Form(
+            dv.group("prefixes"),
+            dv.group("bgp"),
+            dv.group("dataset") or "",
+            describe_var=dv.group("var")[1:],
+        )
+    if am:
         # ASK (§16.3): does the pattern have ≥1 solution? Normalized to the
         # SELECT * machinery with the ask flag; no projection or modifiers.
-        ask = True
-        prefixes_src, bgp_src = am.group("prefixes"), am.group("bgp")
-        proj_src, distinct_src, mods_src = "*", None, ""
-        dataset_src = am.group("dataset") or ""
-    elif cm or cw:
+        return _Form(
+            am.group("prefixes"),
+            am.group("bgp"),
+            am.group("dataset") or "",
+            ask=True,
+        )
+    if cm or cw:
         # CONSTRUCT (§16.2): the template parses after PREFIX resolution;
         # solution modifiers are rejected (the output graph is a set —
         # ordering/slicing solutions would be invisible in it). The
@@ -3436,111 +3259,89 @@ def parse_sparql(
                     f"(§16.2.4), got {bad[0]!r} — use the full "
                     "CONSTRUCT { template } WHERE { patterns } form"
                 )
-        tpl_src = cm.group("tpl") if cm else cw.group("bgp")
-        prefixes_src, bgp_src = m_c.group("prefixes"), m_c.group("bgp")
-        proj_src, distinct_src, mods_src = "*", None, ""
-        dataset_src = m_c.group("dataset") or ""
-    else:
-        m = _QUERY.match(query)
-        if not m:
-            raise SparqlSyntaxError(
-                "expected: [PREFIX...] SELECT ?v...|* WHERE { patterns }, "
-                "ASK [WHERE] { patterns }, CONSTRUCT { template } WHERE "
-                "{ patterns }, DESCRIBE term..., or DESCRIBE ?x (one "
-                "variable) WHERE { patterns }"
-            )
-        prefixes_src = m.group("prefixes")
-        proj_src = m.group("proj").strip()
-        distinct_src = m.group("distinct")
-        dataset_src = m.group("dataset") or ""
-        bgp_src, end = _scan_delim(query, m.end(), "{", "}", "WHERE group")
-        mods_src = query[end:]
-    prefixes = _build_prolog_map(prefixes_src, outer_prefixes)
-    # dataset clauses (§13.2): FROM / FROM NAMED graph IRIs normalize
-    # exactly like pattern constants (localized ':name' terms or ids)
-    dataset_default: list[tuple[str, object]] = []
-    dataset_named: list[tuple[str, object]] = []
-    for fm in _FROM_CLAUSE.finditer(dataset_src):
-        slot = _normalize_term(fm.group("src"), prefixes)
-        if slot[0] == "var":
-            raise SparqlSyntaxError(
-                f"FROM takes a graph IRI, not a variable: ?{slot[1]}"
-            )
-        (dataset_named if fm.group("named") else dataset_default).append(slot)
-    # the WHERE clause parses as a RECURSIVE group graph pattern (§5.2):
-    # nested {} subgroups, OPTIONAL/MINUS/EXISTS bodies and UNION arms are
-    # full groups at arbitrary depth
-    path_counter = itertools.count()  # fresh-var source shared query-wide
-    root = _parse_group(bgp_src, prefixes, path_counter)
+        return _Form(
+            m_c.group("prefixes"),
+            m_c.group("bgp"),
+            m_c.group("dataset") or "",
+            tpl_src=cm.group("tpl") if cm else cw.group("bgp"),
+        )
+    m = _QUERY.match(query)
+    if not m:
+        raise SparqlSyntaxError(
+            "expected: [PREFIX...] SELECT ?v...|* WHERE { patterns }, "
+            "ASK [WHERE] { patterns }, CONSTRUCT { template } WHERE "
+            "{ patterns }, DESCRIBE term..., or DESCRIBE ?x (one "
+            "variable) WHERE { patterns }"
+        )
+    bgp_src, end = _scan_delim(query, m.end(), "{", "}", "WHERE group")
+    return _Form(
+        m.group("prefixes"),
+        bgp_src,
+        m.group("dataset") or "",
+        proj_src=m.group("proj").strip(),
+        distinct=bool(m.group("distinct")),
+        mods_src=query[end:],
+    )
 
-    # synthetic BINDs appended by SELECT-expression desugaring below; they
-    # merge after the written ones (same scoping/freshness validation)
-    binds: list[tuple[str, object]] = []
-    aggregates: list[tuple[str, str | None, bool, str, str | None]] = []
-    # post-aggregation expression aliases `(SUM(?x)/COUNT(?x) AS ?r)`:
-    # aggregate calls lift to hidden aliases, the remaining arithmetic
-    # computes OVER the grouped output (alias, arith AST)
-    agg_exprs: list[tuple[str, object]] = []
-    hidden_agg_counter = itertools.count()
 
-    # GROUP BY expression keys `GROUP BY (expr AS ?v)` (§11.2
-    # GroupCondition, r7): each parenthesized item desugars onto the BIND
-    # machinery — the expression becomes a synthetic BIND (same
-    # lowering, scoping and freshness validation as a SELECT expression)
-    # and the key the rest of the pipeline sees is the plain alias
-    # variable. Mixed plain/expression key lists work; a bare
-    # parenthesized expression without AS rejects (the key needs a name
-    # to be projectable, and silent auto-naming would hide typos).
-    gbm = re.search(r"GROUP\s+BY\s+", mods_src or "", re.I)
-    if gbm and "(" in mods_src[gbm.end() :]:
-        pos = gbm.end()
-        gb_items: list[str] = []
-        changed = False
-        while pos < len(mods_src):
-            pos = _skip_ws(mods_src, pos)
-            if pos >= len(mods_src):
-                break
-            if mods_src[pos] in "?$":
-                vm0 = re.compile(r"[?$](\w+)").match(mods_src, pos)
-                if not vm0:
-                    raise SparqlSyntaxError("malformed GROUP BY variable")
-                gb_items.append("?" + vm0.group(1))
-                pos = vm0.end()
-                continue
-            if mods_src[pos] == "(":
-                content, pos = _scan_delim(
-                    mods_src, pos, "(", ")", "GROUP BY"
+def _construct_template(tpl_src, prefixes, pattern_vars) -> list:
+    """The CONSTRUCT template's triples ([] for the other forms)."""
+    if tpl_src is None:
+        return []
+    construct = _parse_patterns(tpl_src, prefixes)
+    if not construct:
+        raise SparqlSyntaxError("empty CONSTRUCT template")
+    for tp in construct:
+        for v in tp.variables():
+            if v.startswith(_PATH_VAR_PREFIX):
+                raise SparqlSyntaxError(
+                    "property paths are not allowed in a CONSTRUCT "
+                    "template (§16.2: templates are plain triples)"
                 )
-                em0 = re.fullmatch(
-                    r"(?P<expr>.+)\s+AS\s+[?$](?P<alias>\w+)\s*",
-                    content,
-                    re.S | re.I,
+            if v not in pattern_vars:
+                if v.startswith("__bn"):
+                    # a template blank node with NO co-referring WHERE
+                    # label is §16.2's fresh-per-solution instantiation —
+                    # the planner mints one node per solution
+                    # (deterministic keyed labels)
+                    continue
+                # a var in NO pattern is a typo; vars bound only in
+                # OPTIONAL are fine — §16.2 drops a template's triple
+                # for solutions where its variable is unbound (the
+                # planner filters those rows per template)
+                raise SparqlSyntaxError(
+                    f"CONSTRUCT template variable must be bound by the "
+                    f"required patterns: ?{v}"
                 )
-                if not em0:
-                    raise SparqlSyntaxError(
-                        f"GROUP BY expression keys need a name: "
-                        f"({content.strip()!r}) — write (expr AS ?v)"
-                    )
-                binds.append(
-                    (em0.group("alias"), _parse_bind_body(em0.group("expr")))
-                )
-                gb_items.append("?" + em0.group("alias"))
-                changed = True
-                continue
-            break  # the next modifier (HAVING/ORDER/LIMIT/...) starts here
-        if changed:
-            mods_src = (
-                mods_src[: gbm.start()]
-                + "GROUP BY "
-                + " ".join(gb_items)
-                + " "
-                + mods_src[pos:]
-            )
+    return construct
 
-    def _lift_aggs(body: str) -> str:
+
+class _Aggs:
+    """What the projection and the solution modifiers collect:
+    ``binds`` — synthetic BINDs (GROUP BY expression keys, SELECT
+    expressions, cast/accessor aggregate args), merged after the written
+    ones; ``aggregates`` — (func, arg, distinct, alias, separator);
+    ``exprs`` — post-aggregation expression aliases
+    `(SUM(?x)/COUNT(?x) AS ?r)`: (alias, arithmetic over aggregate
+    aliases and group keys), computed OVER the grouped output."""
+
+    def __init__(self):
+        self.binds: list[tuple[str, object]] = []
+        self.aggregates: list[tuple[str, object, bool, str, str | None]] = []
+        self.exprs: list[tuple[str, object]] = []
+        self._hidden = itertools.count()
+
+    def aliases(self) -> set[str]:
+        """Names the grouped output holds beside the GROUP BY keys."""
+        return {alias for _, _, _, alias, _ in self.aggregates} | {
+            a for a, _ in self.exprs
+        }
+
+    def lift(self, body: str) -> str:
         """Replace every aggregate call in `body` with a hidden-alias
-        variable, registering the aggregate — shared by HAVING bodies and
-        SELECT expressions over aggregates."""
+        variable `?__haggN`, registering the aggregate — shared by HAVING
+        bodies, SELECT expressions over aggregates and grouped ORDER BY
+        expressions."""
 
         def repl(m: re.Match) -> str:
             func = m.group(1).lower()
@@ -3548,8 +3349,7 @@ def parse_sparql(
             arg = m.group(3)
             if arg == "*" and (func != "count" or distinct):
                 raise SparqlSyntaxError(f"{func.upper()}(*) is not supported")
-
-            alias = f"__hagg{next(hidden_agg_counter)}"
+            alias = f"__hagg{next(self._hidden)}"
             if arg == "*":
                 avar = None
             elif re.fullmatch(r"[?$]\w+", arg):
@@ -3559,219 +3359,199 @@ def parse_sparql(
                 # SELECT expressions / ORDER BY (r8): same per-row
                 # arithmetic-before-aggregation slot as projected ones
                 avar = ("expr", _parse_arith_expr(arg))
-            aggregates.append((func, avar, distinct, alias, None))
+            self.aggregates.append((func, avar, distinct, alias, None))
             return "?" + alias
 
         return _HAVING_AGG.sub(repl, body)
 
+
+def _group_by_exprs(mods: str, aggs: _Aggs) -> str:
+    """GROUP BY expression keys `GROUP BY (expr AS ?v)` (§11.2
+    GroupCondition, r7): each parenthesized item desugars onto the BIND
+    machinery — the expression becomes a synthetic BIND (same lowering,
+    scoping and freshness validation as a SELECT expression) and the key
+    the rest of the pipeline sees is the plain alias variable. Mixed
+    plain/expression key lists work; a bare parenthesized expression
+    without AS rejects (the key needs a name to be projectable, and
+    silent auto-naming would hide typos). Returns the modifiers with the
+    key list rewritten to plain variables."""
+    gbm = re.search(r"GROUP\s+BY\s+", mods, re.I)
+    if not gbm or "(" not in mods[gbm.end() :]:
+        return mods
+    pos = gbm.end()
+    keys: list[str] = []
+    changed = False
+    while pos < len(mods):
+        pos = _skip_ws(mods, pos)
+        if pos >= len(mods):
+            break
+        if mods[pos] in "?$":
+            vm = _VAR_NAME.match(mods, pos)
+            if not vm:
+                raise SparqlSyntaxError("malformed GROUP BY variable")
+            keys.append("?" + vm.group(1))
+            pos = vm.end()
+            continue
+        if mods[pos] == "(":
+            content, pos = _scan_delim(mods, pos, "(", ")", "GROUP BY")
+            em = re.fullmatch(
+                r"(?P<expr>.+)\s+AS\s+[?$](?P<alias>\w+)\s*",
+                content,
+                re.S | re.I,
+            )
+            if not em:
+                raise SparqlSyntaxError(
+                    f"GROUP BY expression keys need a name: "
+                    f"({content.strip()!r}) — write (expr AS ?v)"
+                )
+            aggs.binds.append(
+                (em.group("alias"), _parse_bind_body(em.group("expr")))
+            )
+            keys.append("?" + em.group("alias"))
+            changed = True
+            continue
+        break  # the next modifier (HAVING/ORDER/LIMIT/...) starts here
+    if not changed:
+        return mods
+    return f"{mods[: gbm.start()]}GROUP BY {' '.join(keys)} {mods[pos:]}"
+
+
+def _projection(proj_src: str, aggs: _Aggs):
+    """SELECT items → the projected names (None for `*`): plain
+    variables, aggregates `(AGG(arg) AS ?a)` and expressions
+    `(expr AS ?a)` — over aggregates (§11.1: projections may combine
+    aggregates arithmetically: the calls lift, the arithmetic computes
+    on the grouped output) or else a synthetic BIND (§18.2.4.4 Extend:
+    same lowering, same scope/freshness validation — accessors, casts
+    and string manipulations compose here exactly like in a written
+    BIND, r7)."""
     if proj_src == "*":
-        projection = None
-    else:
-        items: list[str] = []
-        for itm in _PROJ_ITEM.findall(proj_src):
-            if itm.startswith(("?", "$")):
-                items.append(itm[1:])
-                continue
-            am = _AGG_ITEM.match(itm)
-            if not am:
-                em = _EXPR_ITEM.match(itm)
-                if em and _HAVING_AGG.search(em.group("expr")):
-                    # expression OVER aggregates (§11.1: projections may
-                    # combine aggregates arithmetically): lift the calls,
-                    # compute the arithmetic on the grouped output
-                    lifted = _lift_aggs(em.group("expr"))
-                    agg_exprs.append(
-                        (em.group("alias"), _parse_arith_expr(lifted))
-                    )
-                    items.append(em.group("alias"))
-                    continue
-                if em:
-                    # SELECT expression → synthetic BIND (same lowering,
-                    # same scope/freshness validation further down);
-                    # accessors / casts / string manipulations compose
-                    # here exactly like in a written BIND (r7)
-                    binds.append(
-                        (
-                            em.group("alias"),
-                            _parse_bind_body(em.group("expr")),
-                        )
-                    )
-                    items.append(em.group("alias"))
-                    continue
-                raise SparqlSyntaxError(
-                    f"unsupported projection item: {itm!r} "
-                    "(supported: ?var, (AGG([DISTINCT] ?v|*) AS ?alias), "
-                    "or (expression AS ?alias))"
-                )
-            func = am.group("func").lower()
-            arg = am.group("arg").strip()
-            distinct_arg = bool(am.group("distinct"))
-            sep = am.group("sep")
-            if arg == "*" and (func != "count" or distinct_arg):
-                raise SparqlSyntaxError(f"{func.upper()}(*) is not supported")
-
-            if sep is not None and func != "group_concat":
-                raise SparqlSyntaxError(
-                    "SEPARATOR is only valid on GROUP_CONCAT"
-                )
-            if func == "group_concat" and sep is None:
-                sep = " "  # the §11 default separator
-            if arg == "*":
-                avar = None
-            elif re.fullmatch(r"[?$]\w+", arg):
-                avar = arg[1:]
-            elif re.fullmatch(r"STR\s*\(\s*[?$]\w+\s*\)", arg, re.I):
-                # aggregate over the DECODED term text (r7):
-                # MIN/MAX/SAMPLE/GROUP_CONCAT get STRING semantics
-                # (codepoint order / lexical concatenation), COUNT
-                # counts solutions with a bound argument; arg slot =
-                # ('str', var) — the planner attaches the dictionary
-                # term before the partial aggregation
-                if func in ("sum", "avg"):
-                    raise SparqlSyntaxError(
-                        f"{func.upper()}(STR(...)) is not numeric"
-                    )
-                avar = (
-                    "str",
-                    re.search(r"[?$](\w+)", arg).group(1),
-                )
-            elif _AGG_CALL_ARG.fullmatch(arg):
-                # cast / accessor aggregate args (r7):
-                # `SUM(xsd:decimal(?p))`, `AVG(YEAR(?d))`,
-                # `MIN(xsd:date(?d))`, `COUNT(STRLEN(?x))` — the typed
-                # VALUE computes once per solution row as a synthetic
-                # BIND (the §17.5 / §17.4.5 lowering, errors → NULL →
-                # skipped by the null-skipping aggregates, matching
-                # §11's error-removing card[...]), and the aggregate
-                # itself runs over a plain bound column
-                node = _parse_bind_body(arg)
-                if func in ("sum", "avg") and (
-                    node[0] == "termfn_expr"  # xsd:string ≡ STR
-                    or node[0] == "strexpr"  # computed string (r8)
-                    or (
-                        node[0] == "cast_expr"
-                        and node[1] in ("date", "dateTime")
-                    )
-                ):
-                    raise SparqlSyntaxError(
-                        f"{func.upper()}({arg}) is not numeric"
-                    )
-                synth = f"__aggb{len(binds)}"
-                binds.append((synth, node))
-                avar = synth
-            else:
-                # aggregate over an EXPRESSION (§11.1 — `SUM(?a * ?b)`,
-                # `GROUP_CONCAT(?a + ?b)`): the arithmetic computes per
-                # solution row BEFORE the aggregation; arg slot =
-                # ('expr', arith AST). GROUP_CONCAT stringifies the
-                # numeric value (r8) — the concat path casts to string.
-                avar = ("expr", _parse_arith_expr(arg))
-            aggregates.append(
-                (func, avar, distinct_arg, am.group("alias"), sep)
-            )
-            items.append(am.group("alias"))
-        if len(set(items)) != len(items):
-            raise SparqlSyntaxError(f"duplicate projection names: {items}")
-        projection = tuple(items)
-
-    if binds:
-        nb = len(root.binds)
-        root = _dc_replace(
-            root,
-            binds=root.binds + tuple(binds),
-            seq=root.seq
-            + tuple(("bind", nb + k) for k in range(len(binds))),
-        )
-    if not root.has_required_content():
-        raise SparqlSyntaxError("empty basic graph pattern")
-
-    required_vars = root.required_vars()
-    # in-scope variables for projection / FILTER / ORDER BY validation:
-    # every pattern-bound variable plus every BIND target anywhere in the
-    # tree (a nested group's BIND target is visible once the group joins
-    # in). Per-group BIND scoping/freshness validates in
-    # _validate_group_tree below.
-    binds = root.binds
-    bind_targets = {
-        bvar for g in _walk_groups(root) for bvar, _ in g.binds
-    }
-    pattern_vars = root.all_vars() | bind_targets
-
-    # OPTIONAL-bound DESCRIBE vars are fine: an unbound binding names no
-    # resource and the planner filters it (§16.4); only a var bound
-    # NOWHERE is a typo
-    if describe_var is not None and describe_var not in pattern_vars:
-        raise SparqlSyntaxError(
-            f"DESCRIBE variable must be bound by the required patterns: "
-            f"?{describe_var}"
-        )
-
-    construct: list[TriplePattern] = []
-    if tpl_src is not None:
-        construct = _parse_patterns(tpl_src, prefixes)
-        if not construct:
-            raise SparqlSyntaxError("empty CONSTRUCT template")
-        for tp in construct:
-            for v in tp.variables():
-                if v.startswith(_PATH_VAR_PREFIX):
-                    raise SparqlSyntaxError(
-                        "property paths are not allowed in a CONSTRUCT "
-                        "template (§16.2: templates are plain triples)"
-                    )
-                if v not in pattern_vars:
-                    if v.startswith("__bn"):
-                        # a template blank node with NO co-referring
-                        # WHERE label is §16.2's fresh-per-solution
-                        # instantiation — the planner mints one node
-                        # per solution (deterministic keyed labels)
-                        continue
-                    # a var in NO pattern is a typo; vars bound only in
-                    # OPTIONAL are fine — §16.2 drops a template's triple
-                    # for solutions where its variable is unbound (the
-                    # planner filters those rows per template)
-                    raise SparqlSyntaxError(
-                        f"CONSTRUCT template variable must be bound by the "
-                        f"required patterns: ?{v}"
-                    )
-    # structural validation of the whole group tree: share-variable checks
-    # for OPTIONAL/MINUS/EXISTS at every level, VALUES variable scoping,
-    # and nested-group FILTER scoping (root filters validate against
-    # pattern_vars, which includes BIND targets)
-    _validate_group_tree(root, own_filter_scope=pattern_vars)
-    aliases = {alias for _, _, _, alias, _ in aggregates} | {
-        a for a, _ in agg_exprs
-    }
-    if projection is not None:
-        unknown = set(projection) - pattern_vars - aliases
-        if unknown:
-            raise SparqlSyntaxError(f"projected variables not in BGP: {sorted(unknown)}")
-        if aliases & pattern_vars:
+        return None
+    items: list[str] = []
+    for itm in _PROJ_ITEM.findall(proj_src):
+        if itm.startswith(("?", "$")):
+            items.append(itm[1:])
+            continue
+        am = _AGG_ITEM.match(itm)
+        if am:
+            items.append(_aggregate_item(am, aggs))
+            continue
+        em = _EXPR_ITEM.match(itm)
+        if not em:
             raise SparqlSyntaxError(
-                f"aggregate alias shadows a pattern variable: "
-                f"{sorted(aliases & pattern_vars)}"
+                f"unsupported projection item: {itm!r} "
+                "(supported: ?var, (AGG([DISTINCT] ?v|*) AS ?alias), "
+                "or (expression AS ?alias))"
             )
+        expr = em.group("expr")
+        if _HAVING_AGG.search(expr):
+            aggs.exprs.append(
+                (em.group("alias"), _parse_arith_expr(aggs.lift(expr)))
+            )
+        else:
+            aggs.binds.append((em.group("alias"), _parse_bind_body(expr)))
+        items.append(em.group("alias"))
+    if len(set(items)) != len(items):
+        raise SparqlSyntaxError(f"duplicate projection names: {items}")
+    return tuple(items)
+
+
+def _aggregate_item(am: re.Match, aggs: _Aggs) -> str:
+    """One `(AGG([DISTINCT] arg [; SEPARATOR=...]) AS ?alias)` item →
+    its alias; the aggregate registers in ``aggs``."""
+    func = am.group("func").lower()
+    arg = am.group("arg").strip()
+    distinct = bool(am.group("distinct"))
+    sep = am.group("sep")
+    if arg == "*" and (func != "count" or distinct):
+        raise SparqlSyntaxError(f"{func.upper()}(*) is not supported")
+    if sep is not None and func != "group_concat":
+        raise SparqlSyntaxError("SEPARATOR is only valid on GROUP_CONCAT")
+    if func == "group_concat" and sep is None:
+        sep = " "  # the §11 default separator
+    if arg == "*":
+        avar = None
+    elif re.fullmatch(r"[?$]\w+", arg):
+        avar = arg[1:]
+    elif re.fullmatch(r"STR\s*\(\s*[?$]\w+\s*\)", arg, re.I):
+        # aggregate over the DECODED term text (r7): MIN/MAX/SAMPLE/
+        # GROUP_CONCAT get STRING semantics (codepoint order / lexical
+        # concatenation), COUNT counts solutions with a bound argument;
+        # arg slot = ('str', var) — the planner attaches the dictionary
+        # term before the partial aggregation
+        if func in ("sum", "avg"):
+            raise SparqlSyntaxError(f"{func.upper()}(STR(...)) is not numeric")
+        avar = ("str", re.search(r"[?$](\w+)", arg).group(1))
+    elif _AGG_CALL_ARG.fullmatch(arg):
+        # cast / accessor aggregate args (r7): `SUM(xsd:decimal(?p))`,
+        # `AVG(YEAR(?d))`, `MIN(xsd:date(?d))`, `COUNT(STRLEN(?x))` — the
+        # typed VALUE computes once per solution row as a synthetic BIND
+        # (the §17.5 / §17.4.5 lowering, errors → NULL → skipped by the
+        # null-skipping aggregates, matching §11's error-removing
+        # card[...]), and the aggregate itself runs over a plain bound
+        # column
+        node = _parse_bind_body(arg)
+        if func in ("sum", "avg") and (
+            node[0] == "termfn_expr"  # xsd:string ≡ STR
+            or node[0] == "strexpr"  # computed string (r8)
+            or (node[0] == "cast_expr" and node[1] in ("date", "dateTime"))
+        ):
+            raise SparqlSyntaxError(f"{func.upper()}({arg}) is not numeric")
+        avar = f"__aggb{len(aggs.binds)}"
+        aggs.binds.append((avar, node))
+    else:
+        # aggregate over an EXPRESSION (§11.1 — `SUM(?a * ?b)`,
+        # `GROUP_CONCAT(?a + ?b)`): the arithmetic computes per solution
+        # row BEFORE the aggregation; arg slot = ('expr', arith AST).
+        # GROUP_CONCAT stringifies the numeric value (r8) — the concat
+        # path casts to string.
+        avar = ("expr", _parse_arith_expr(arg))
+    aggs.aggregates.append((func, avar, distinct, am.group("alias"), sep))
+    return am.group("alias")
+
+
+def _check_agg_args(
+    aggregates, pattern_vars, bind_targets=frozenset(), listed=False
+):
+    """Every aggregate argument is bound by the WHERE group, and a STR()
+    argument by a pattern — a computed variable (one of
+    ``bind_targets``) is a VALUE, not a dictionary id, so STR() would
+    join it against unrelated terms (r7). ``listed`` reports the unbound
+    names of any argument as one list (the ORDER BY wording)."""
     for _, avar, _, _, _ in aggregates:
         if isinstance(avar, tuple) and avar[0] == "str":
             if avar[1] not in pattern_vars:
                 raise SparqlSyntaxError(
                     f"aggregate variable not in BGP: ?{avar[1]}"
                 )
-        elif isinstance(avar, tuple):
-            bad = arith_expr_vars(avar[1]) - pattern_vars
-            if bad:
+            if avar[1] in bind_targets:
                 raise SparqlSyntaxError(
-                    f"aggregate-expression variables not in BGP: "
-                    f"{['?' + v for v in sorted(bad)]}"
+                    f"STR() aggregates need a pattern-bound variable "
+                    f"(a computed variable has no dictionary term): "
+                    f"?{avar[1]}"
                 )
-        elif avar is not None and avar not in pattern_vars:
+            continue
+        if isinstance(avar, tuple):
+            bad = arith_expr_vars(avar[1]) - pattern_vars
+        else:
+            bad = {avar} - pattern_vars - {None}
+        names = ["?" + v for v in sorted(bad)]
+        if bad and listed:
+            raise SparqlSyntaxError(f"aggregate variables not in BGP: {names}")
+        if bad and isinstance(avar, tuple):
+            raise SparqlSyntaxError(
+                f"aggregate-expression variables not in BGP: {names}"
+            )
+        if bad:
             raise SparqlSyntaxError(f"aggregate variable not in BGP: ?{avar}")
-    # solution modifiers after the group pattern
-    mods = mods_src or ""
 
-    # trailing VALUES clause (§7.2.2): the spec's final algebra joins it
-    # with the WHERE pattern (§18.2.2.8 `pattern := Join(pattern, M)`),
-    # which is exactly the in-group VALUES compilation — so it merges
-    # into the root group (validated here; the tree was validated above)
+
+def _trailing_values(mods: str, root, required_vars, prefixes):
+    """Trailing VALUES clause (§7.2.2): the spec's final algebra joins it
+    with the WHERE pattern (§18.2.2.8 `pattern := Join(pattern, M)`),
+    which is exactly the in-group VALUES compilation — so it merges into
+    the root group (validated here; the tree was validated before).
+    Returns (modifiers without it, root)."""
     trailing_v = list(root.values)
     trailing_vm = list(root.values_multi)
     while True:
@@ -3780,7 +3560,7 @@ def parse_sparql(
             break
         j = _skip_ws(mods, vm.end())
         if j < len(mods) and mods[j] in "?$":
-            nm = re.compile(r"[?$](\w+)").match(mods, j)
+            nm = _VAR_NAME.match(mods, j)
             if not nm:
                 raise SparqlSyntaxError("malformed VALUES variable")
             vals_src, end = _scan_delim(
@@ -3819,32 +3599,34 @@ def parse_sparql(
         else:
             raise SparqlSyntaxError("unsupported VALUES form")
         mods = mods[: vm.start()] + " " + mods[end:]
-    if len(trailing_v) != len(root.values) or len(trailing_vm) != len(
+    if len(trailing_v) == len(root.values) and len(trailing_vm) == len(
         root.values_multi
     ):
-        root = _dc_replace(
-            root,
-            values=tuple(trailing_v),
-            values_multi=tuple(trailing_vm),
-            seq=root.seq
-            + tuple(
-                ("values", k)
-                for k in range(len(root.values), len(trailing_v))
-            )
-            + tuple(
-                ("values_multi", k)
-                for k in range(len(root.values_multi), len(trailing_vm))
-            ),
+        return mods, root
+    return mods, _dc_replace(
+        root,
+        values=tuple(trailing_v),
+        values_multi=tuple(trailing_vm),
+        seq=root.seq
+        + tuple(
+            ("values", k) for k in range(len(root.values), len(trailing_v))
         )
+        + tuple(
+            ("values_multi", k)
+            for k in range(len(root.values_multi), len(trailing_vm))
+        ),
+    )
 
-    # HAVING(expr) — extract with balanced parens, reusing the FILTER
-    # expression grammar; evaluated over the grouped OUTPUT columns.
-    # Aggregate CALLS inside HAVING (§11.5 allows constraints over
-    # aggregates that are not projected — `HAVING(SUM(?x) > 5)`) lift to
-    # HIDDEN aggregates: each call becomes a synthetic `?__haggN`
-    # variable, the aggregate computes alongside the projected ones, the
-    # filter applies over the grouped output, and the final projection
-    # drops the hidden column.
+
+def _having(mods: str, aggs: _Aggs, prefixes):
+    """HAVING(expr) — extracted with balanced parens, reusing the FILTER
+    expression grammar; evaluated over the grouped OUTPUT columns.
+    Aggregate CALLS inside HAVING (§11.5 allows constraints over
+    aggregates that are not projected — `HAVING(SUM(?x) > 5)`) lift to
+    HIDDEN aggregates: each call becomes a synthetic `?__haggN` variable,
+    the aggregate computes alongside the projected ones, the filter
+    applies over the grouped output, and the final projection drops the
+    hidden column. Returns (modifiers without it, HAVING expressions)."""
     having: list = []
     while True:
         hm = _HAVING.search(mods)
@@ -3860,58 +3642,38 @@ def parse_sparql(
         if depth:
             raise SparqlSyntaxError("unbalanced parentheses in HAVING")
         having.append(
-            _parse_filter_expr(_lift_aggs(mods[hm.end() : i - 1]), prefixes)
+            _parse_filter_expr(aggs.lift(mods[hm.end() : i - 1]), prefixes)
         )
         mods = mods[: hm.start()] + " " + mods[i:]
-    aliases = {alias for _, _, _, alias, _ in aggregates} | {
-        a for a, _ in agg_exprs
-    }
-    for _, avar, _, _, _ in aggregates:  # re-check: lifting added entries
-        if isinstance(avar, tuple) and avar[0] == "str":
-            if avar[1] not in pattern_vars:
-                raise SparqlSyntaxError(
-                    f"aggregate variable not in BGP: ?{avar[1]}"
-                )
-            if avar[1] in bind_targets:
-                # a computed variable is a VALUE, not a dictionary id —
-                # STR() would join it against unrelated terms (r7)
-                raise SparqlSyntaxError(
-                    f"STR() aggregates need a pattern-bound variable "
-                    f"(a computed variable has no dictionary term): "
-                    f"?{avar[1]}"
-                )
-        elif isinstance(avar, tuple):
-            bad = arith_expr_vars(avar[1]) - pattern_vars
-            if bad:
-                raise SparqlSyntaxError(
-                    f"aggregate-expression variables not in BGP: "
-                    f"{['?' + v for v in sorted(bad)]}"
-                )
-        elif avar is not None and avar not in pattern_vars:
-            raise SparqlSyntaxError(f"aggregate variable not in BGP: ?{avar}")
-    gm = _GROUP.search(mods)
-    group_by = (
-        tuple(v.lstrip("?$") for v in gm.group("keys").split()) if gm else ()
-    )
-    grouped = bool(group_by) or bool(aggregates)
+    return mods, having
+
+
+def _check_grouping(
+    grouped, projection, group_by, having, aggs, pattern_vars, bind_targets
+):
+    """HAVING, post-aggregation expressions and the projection against
+    the grouped output: only GROUP BY keys and aggregate aliases exist
+    after aggregation (§11.4's projection restriction — same rule as SQL
+    GROUP BY)."""
     if having and not grouped:
         raise SparqlSyntaxError("HAVING requires GROUP BY or aggregates")
     # post-aggregation expressions may reference group keys and (hidden)
     # aggregate aliases — nothing else exists in the grouped output
-    agg_alias_set = {alias for _, _, _, alias, _ in aggregates}
-    for a, ast in agg_exprs:
-        bad = arith_expr_vars(ast) - agg_alias_set - set(group_by)
+    agg_aliases = {alias for _, _, _, alias, _ in aggs.aggregates}
+    for _, ast in aggs.exprs:
+        bad = arith_expr_vars(ast) - agg_aliases - set(group_by)
         if bad:
             raise SparqlSyntaxError(
                 f"aggregate-expression variables must be GROUP BY keys or "
                 f"aggregates: {['?' + v for v in sorted(bad)]}"
             )
+    aliases = aggs.aliases()
     for expr in having:
         # string functions over a GROUP KEY's term are allowed (r6): the
         # planner attaches the key's dictionary term post-aggregation —
         # but an aggregate ALIAS has no term (it is a computed number)
         for v in sorted(filter_expr_strfn_vars(expr)):
-            if v not in set(group_by):
+            if v not in group_by:
                 raise SparqlSyntaxError(
                     f"HAVING string functions apply to GROUP BY keys "
                     f"(dictionary terms), not aggregates: ?{v}"
@@ -3928,241 +3690,183 @@ def parse_sparql(
                     f"dictionary term): ?{v}"
                 )
         for v in sorted(filter_expr_vars(expr)):
-            if v not in set(group_by) | aliases:
+            if v not in group_by and v not in aliases:
                 raise SparqlSyntaxError(
                     f"HAVING variable must be a GROUP BY key or an "
                     f"aggregate alias: ?{v}"
                 )
-    if grouped:
-        if projection is None:
-            raise SparqlSyntaxError("SELECT * cannot combine with GROUP BY/aggregates")
-        for v in group_by:
-            if v not in pattern_vars:
-                raise SparqlSyntaxError(f"GROUP BY variable not in BGP: ?{v}")
-        # every plain projected variable must be a grouping key (SPARQL 1.1
-        # §11.4's projection restriction — same rule as SQL GROUP BY)
-        bad = [v for v in projection if v not in aliases and v not in group_by]
-        if bad:
-            raise SparqlSyntaxError(
-                f"projected variables must be GROUP BY keys or aggregates: "
-                f"{['?' + v for v in bad]}"
-            )
-    # ORDER BY keys: plain variables, or parenthesized integer-arithmetic
-    # EXPRESSIONS (`ORDER BY (?a - ?b) DESC(?x + 1)`, §15.1 OrderCondition
-    # with BrackettedExpression) — an expression key becomes
-    # (('expr', arith AST), desc), compiled by the planner as a sort
-    # column over the bound variables BEFORE projection
-    order_by: list[tuple] = []
-    om = re.search(r"ORDER\s+BY\s+", mods, re.I)
-    if om:
-        pos = om.end()
-        consumed_end = pos
-        dir_open = re.compile(r"(ASC|DESC)\s*\(", re.I)
-        str_open = re.compile(r"STR\s*\(", re.I)
-        cast_open = re.compile(
-            r"(?:xsd:(integer|decimal|double|float|date|dateTime)"
-            r"|(YEAR|MONTH|DAY|HOURS|MINUTES|SECONDS|FLOOR|CEIL|ROUND))"
-            r"\s*\(\s*[?$](\w+)\s*\)",
-            re.I,
+    if not grouped:
+        return
+    if projection is None:
+        raise SparqlSyntaxError("SELECT * cannot combine with GROUP BY/aggregates")
+    for v in group_by:
+        if v not in pattern_vars:
+            raise SparqlSyntaxError(f"GROUP BY variable not in BGP: ?{v}")
+    # every plain projected variable must be a grouping key
+    bad = [v for v in projection if v not in aliases and v not in group_by]
+    if bad:
+        raise SparqlSyntaxError(
+            f"projected variables must be GROUP BY keys or aggregates: "
+            f"{['?' + v for v in bad]}"
         )
-        var_key = re.compile(r"[?$](\w+)")
-        _STR_KEY = re.compile(r"STR\s*\(\s*[?$](\w+)\s*\)", re.I)
-        while True:
-            pos = _skip_ws(mods, pos)
-            if pos >= len(mods):
-                consumed_end = pos
-                break
-            mdir = dir_open.match(mods, pos)
-            mstr = str_open.match(mods, pos) if not mdir else None
-            mcast = (
-                cast_open.match(mods, pos) if not (mdir or mstr) else None
+
+
+_ORDER_DIR = re.compile(r"(ASC|DESC)\s*\(", re.I)
+_ORDER_STR = re.compile(r"STR\s*\(", re.I)
+_ORDER_STR_KEY = re.compile(r"STR\s*\(\s*[?$](\w+)\s*\)", re.I)
+_ORDER_CAST = re.compile(
+    r"(?:xsd:(integer|decimal|double|float|date|dateTime)"
+    rf"|({_VALUE_FN_RE}))"
+    r"\s*\(\s*[?$](\w+)\s*\)",
+    re.I,
+)
+
+
+def _order_by(mods: str, aggs: _Aggs, grouped: bool, pattern_vars):
+    """ORDER BY keys: plain variables, STR(?x) and cast / accessor keys,
+    or parenthesized integer-arithmetic EXPRESSIONS (`ORDER BY (?a - ?b)
+    DESC(?x + 1)`, §15.1 OrderCondition with BrackettedExpression).
+    Returns (modifiers without the clause, [(key, desc)])."""
+    om = re.search(r"ORDER\s+BY\s+", mods, re.I)
+    if not om:
+        return mods, []
+    order_by: list[tuple] = []
+    pos = end = om.end()
+    while True:
+        pos = _skip_ws(mods, pos)
+        if pos >= len(mods):
+            end = pos
+            break
+        mdir = _ORDER_DIR.match(mods, pos)
+        mstr = not mdir and _ORDER_STR.match(mods, pos)
+        mcast = not (mdir or mstr) and _ORDER_CAST.match(mods, pos)
+        if mdir or mods[pos] == "(":
+            desc = bool(mdir) and mdir.group(1).upper() == "DESC"
+            inner, pos = _scan_delim(
+                mods, mdir.end() - 1 if mdir else pos, "(", ")", "ORDER BY"
             )
-            if mcast:
-                # bare xsd:T(?x) / YEAR(?x)-family key (r7): sort by the
-                # CAST/accessor VALUE of the term — numeric/date ordering
-                # over typed literals
-                kind = (
-                    _XSD_CAST_KINDS[mcast.group(1).lower()]
-                    if mcast.group(1)
-                    else mcast.group(2).lower()
-                )
-                order_by.append(
-                    (("cast", kind, mcast.group(3)), False)
-                )
-                pos = mcast.end()
-                consumed_end = pos
-                continue
-            if mdir:
-                desc = mdir.group(1).upper() == "DESC"
-                inner, pos = _scan_delim(
-                    mods, mdir.end() - 1, "(", ")", "ORDER BY"
-                )
-            elif mstr:
-                # bare STR(?x) key: sort by the DECODED term (r6)
-                v = var_key.match(mods, _skip_ws(mods, mstr.end()))
-                if not v:
-                    raise SparqlSyntaxError(
-                        "ORDER BY STR(...) takes a variable"
-                    )
-                pos = _skip_ws(mods, v.end())
-                if pos >= len(mods) or mods[pos] != ")":
-                    raise SparqlSyntaxError(
-                        "malformed ORDER BY STR(?var) key"
-                    )
-                pos += 1
-                order_by.append((("str", v.group(1)), False))
-                consumed_end = pos
-                continue
-            elif mods[pos] == "(":
-                desc = False
-                inner, pos = _scan_delim(mods, pos, "(", ")", "ORDER BY")
-            else:
-                mv = var_key.match(mods, pos)
-                if not mv:  # LIMIT / OFFSET / end of modifiers
-                    break
-                order_by.append((mv.group(1), False))
-                pos = mv.end()
-                consumed_end = pos
-                continue
-            txt = inner.strip()
-            sm = _STR_KEY.fullmatch(txt)
-            cm = cast_open.fullmatch(txt)
-            if sm:
-                # [ASC|DESC](STR(?x)): term-ordered sort key (r6)
-                order_by.append((("str", sm.group(1)), desc))
-            elif cm:
-                # [ASC|DESC](xsd:T(?x) / YEAR(?x)-family): cast/accessor
-                # VALUE sort key (r7)
-                kind = (
-                    _XSD_CAST_KINDS[cm.group(1).lower()]
-                    if cm.group(1)
-                    else cm.group(2).lower()
-                )
-                order_by.append((("cast", kind, cm.group(3)), desc))
-            elif re.fullmatch(r"[?$]\w+", txt):
-                order_by.append((txt[1:], desc))
-            elif grouped:
-                # ORDER BY expression under GROUP BY (r8, §15.1 with
-                # §11): aggregate calls lift to hidden `?__haggN`
-                # aggregates — the SAME desugaring HAVING and SELECT
-                # expressions over aggregates use — and the arithmetic
-                # compiles over the grouped output, where group keys and
-                # aggregate aliases are 1:1 columns. So
-                # `ORDER BY DESC(COUNT(?x))` sorts by a hidden count
-                # computed alongside the projected aggregates.
-                n_before = len(aggregates)
-                ast = _parse_arith_expr(_lift_aggs(inner))
-                for _, avar, _, _, _ in aggregates[n_before:]:
-                    # the earlier re-check loop already ran; validate
-                    # aggregate args lifted HERE against the BGP now
-                    bad = (
-                        arith_expr_vars(avar[1]) - pattern_vars
-                        if isinstance(avar, tuple)
-                        else (
-                            {avar} - pattern_vars
-                            if avar is not None
-                            else set()
-                        )
-                    )
-                    if bad:
-                        raise SparqlSyntaxError(
-                            "aggregate variables not in BGP: "
-                            f"{['?' + v for v in sorted(bad)]}"
-                        )
-                order_by.append((("gexpr", ast), desc))
-            else:
-                order_by.append((("expr", _parse_arith_expr(inner)), desc))
-            consumed_end = pos
-        mods = mods[: om.start()] + " " + mods[consumed_end:]
-        if not order_by:
-            raise SparqlSyntaxError("ORDER BY needs at least one sort key")
-    agg_alias_set = {alias for _, _, _, alias, _ in aggregates} | {
-        a for a, _ in agg_exprs
-    }
+            order_by.append(
+                (_order_expr_key(inner, aggs, grouped, pattern_vars), desc)
+            )
+        elif mstr:
+            # bare STR(?x) key: sort by the DECODED term (r6)
+            v = _VAR_NAME.match(mods, _skip_ws(mods, mstr.end()))
+            if not v:
+                raise SparqlSyntaxError("ORDER BY STR(...) takes a variable")
+            pos = _skip_ws(mods, v.end())
+            if pos >= len(mods) or mods[pos] != ")":
+                raise SparqlSyntaxError("malformed ORDER BY STR(?var) key")
+            pos += 1
+            order_by.append((("str", v.group(1)), False))
+        elif mcast:
+            # bare xsd:T(?x) / YEAR(?x)-family key (r7): sort by the
+            # CAST/accessor VALUE of the term — numeric/date ordering
+            # over typed literals
+            order_by.append((_cast_key(mcast), False))
+            pos = mcast.end()
+        else:
+            mv = _VAR_NAME.match(mods, pos)
+            if not mv:  # LIMIT / OFFSET / end of modifiers
+                break
+            order_by.append((mv.group(1), False))
+            pos = mv.end()
+        end = pos
+    if not order_by:
+        raise SparqlSyntaxError("ORDER BY needs at least one sort key")
+    return mods[: om.start()] + " " + mods[end:], order_by
+
+
+def _cast_key(m: re.Match):
+    kind = (
+        _XSD_CAST_KINDS[m.group(1).lower()] if m.group(1) else m.group(2).lower()
+    )
+    return ("cast", kind, m.group(3))
+
+
+def _order_expr_key(inner: str, aggs: _Aggs, grouped: bool, pattern_vars):
+    """A bracketted ORDER BY key `[ASC|DESC](...)`: STR(?x) (term order,
+    r6), a cast / accessor (VALUE order, r7), a variable, or arithmetic —
+    ('expr', ast), compiled by the planner as a sort column over the
+    bound variables BEFORE projection; under GROUP BY ('gexpr', ast)
+    (r8, §15.1 with §11): aggregate calls lift to hidden `?__haggN`
+    aggregates — the SAME desugaring HAVING and SELECT expressions over
+    aggregates use — and the arithmetic compiles over the grouped
+    output, where group keys and aggregate aliases are 1:1 columns. So
+    `ORDER BY DESC(COUNT(?x))` sorts by a hidden count computed
+    alongside the projected aggregates."""
+    txt = inner.strip()
+    sm = _ORDER_STR_KEY.fullmatch(txt)
+    if sm:
+        return ("str", sm.group(1))
+    cm = _ORDER_CAST.fullmatch(txt)
+    if cm:
+        return _cast_key(cm)
+    if re.fullmatch(r"[?$]\w+", txt):
+        return txt[1:]
+    if not grouped:
+        return ("expr", _parse_arith_expr(inner))
+    n_before = len(aggs.aggregates)
+    ast = _parse_arith_expr(aggs.lift(inner))
+    # the grouping checks already ran: validate the aggregate args lifted
+    # HERE against the WHERE group now
+    _check_agg_args(aggs.aggregates[n_before:], pattern_vars, listed=True)
+    return ("gexpr", ast)
+
+
+def _check_order_keys(
+    order_by, grouped, projection, group_by, aggs, pattern_vars, bind_targets
+):
+    """Final checks on the sort keys: each names a variable in scope —
+    after aggregation only the grouped output's columns."""
+    aliases = aggs.aliases()
     for key, _ in order_by:
-        if isinstance(key, tuple):  # expression / STR key
-            if key[0] == "gexpr":
-                # grouped-output expression key: every variable must be
-                # a column of the grouped output — a GROUP BY key or an
-                # aggregate alias (projected, post-agg, or hidden)
-                bad = arith_expr_vars(key[1]) - set(group_by) - agg_alias_set
-                if bad:
-                    raise SparqlSyntaxError(
-                        f"ORDER BY expression variables must be GROUP BY "
-                        f"keys or aggregates: "
-                        f"{['?' + v for v in sorted(bad)]}"
-                    )
-                continue
-            if grouped:
-                raise SparqlSyntaxError(
-                    "ORDER BY expressions are not supported with "
-                    "GROUP BY/aggregates (order by an aliased aggregate "
-                    "or group key instead)"
-                )
-            if key[0] == "str":
-                if key[1] not in pattern_vars:
-                    raise SparqlSyntaxError(
-                        f"ORDER BY STR variable not in BGP: ?{key[1]}"
-                    )
-                if key[1] in bind_targets:
-                    # a computed variable is a VALUE, not a dictionary
-                    # id — the term join would be nonsense; sort by the
-                    # plain variable instead (value order) (r7)
-                    raise SparqlSyntaxError(
-                        f"ORDER BY STR needs a pattern-bound variable "
-                        f"(a computed variable has no dictionary "
-                        f"term — sort by ?{key[1]} directly)"
-                    )
-                continue
-            if key[0] == "cast":
-                if key[2] not in pattern_vars:
-                    raise SparqlSyntaxError(
-                        f"ORDER BY cast variable not in BGP: ?{key[2]}"
-                    )
-                if key[2] in bind_targets:
-                    raise SparqlSyntaxError(
-                        f"ORDER BY casts need a pattern-bound variable "
-                        f"(a computed variable has no dictionary "
-                        f"term — sort by ?{key[2]} directly)"
-                    )
-                continue
-            unknown = arith_expr_vars(key[1]) - pattern_vars
-            if unknown:
-                raise SparqlSyntaxError(
-                    f"ORDER BY expression variables not in BGP: "
-                    f"{['?' + v for v in sorted(unknown)]}"
-                )
-        elif grouped:
-            # after aggregation only the output columns exist
-            if key not in projection:
+        if not isinstance(key, tuple):
+            if grouped and key not in projection:
                 raise SparqlSyntaxError(
                     f"ORDER BY variable not in the grouped projection: ?{key}"
                 )
-        elif key not in pattern_vars:
-            raise SparqlSyntaxError(f"ORDER BY variable not in BGP: ?{key}")
-    lm = _LIMIT.search(mods)
-    om2 = _OFFSET.search(mods)
-    leftover = _OFFSET.sub("", _LIMIT.sub("", _GROUP.sub("", mods))).strip()
-    if leftover:
-        raise SparqlSyntaxError(f"unsupported solution modifiers: {leftover!r}")
-    return BGPQuery(
-        projection=projection,
-        where=root,
-        distinct=bool(distinct_src),
-        ask=ask,
-        order_by=tuple(order_by),
-        limit=int(lm.group("n")) if lm else None,
-        construct=tuple(construct),
-        describe_var=describe_var,
-        offset=int(om2.group("n")) if om2 else None,
-        group_by=group_by,
-        aggregates=tuple(aggregates),
-        having=tuple(having),
-        agg_exprs=tuple(agg_exprs),
-        dataset_default=tuple(dataset_default),
-        dataset_named=tuple(dataset_named),
-        term_style=_TERM_STYLE.get(),
-        prefixes=tuple(
-            sorted((k, v) for k, v in prefixes.items() if k != "@base")
-        ),
-    )
+            if not grouped and key not in pattern_vars:
+                raise SparqlSyntaxError(f"ORDER BY variable not in BGP: ?{key}")
+            continue
+        if key[0] == "gexpr":
+            # grouped-output expression key: every variable must be a
+            # column of the grouped output — a GROUP BY key or an
+            # aggregate alias (projected, post-agg, or hidden)
+            bad = arith_expr_vars(key[1]) - set(group_by) - aliases
+            if bad:
+                raise SparqlSyntaxError(
+                    f"ORDER BY expression variables must be GROUP BY "
+                    f"keys or aggregates: "
+                    f"{['?' + v for v in sorted(bad)]}"
+                )
+            continue
+        if grouped:
+            raise SparqlSyntaxError(
+                "ORDER BY expressions are not supported with "
+                "GROUP BY/aggregates (order by an aliased aggregate "
+                "or group key instead)"
+            )
+        if key[0] in ("str", "cast"):
+            # a computed variable is a VALUE, not a dictionary id — the
+            # term join would be nonsense; sort by the plain variable
+            # instead (value order) (r7)
+            what, needs = (
+                ("STR", "STR needs") if key[0] == "str" else ("cast", "casts need")
+            )
+            if key[-1] not in pattern_vars:
+                raise SparqlSyntaxError(
+                    f"ORDER BY {what} variable not in BGP: ?{key[-1]}"
+                )
+            if key[-1] in bind_targets:
+                raise SparqlSyntaxError(
+                    f"ORDER BY {needs} a pattern-bound variable (a computed "
+                    f"variable has no dictionary term — sort by ?{key[-1]} "
+                    "directly)"
+                )
+            continue
+        unknown = arith_expr_vars(key[1]) - pattern_vars
+        if unknown:
+            raise SparqlSyntaxError(
+                f"ORDER BY expression variables not in BGP: "
+                f"{['?' + v for v in sorted(unknown)]}"
+            )

@@ -143,3 +143,18 @@ def test_prepare_training_set_contracts(spark, sf_dir):
         max_tokens=32, overlap=8, pack_budget=128,
     ).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
+
+
+def test_corpus_curate_scans_documents_once(spark, sf_dir):
+    """The curate pushdown barrier keeps the LSH and stats consumers on one
+    shared subtree: the executed corpus_curate plan reads the documents
+    table exactly once."""
+    from rdfproject_msc_spark.registry import corpus_curate
+
+    df = corpus_curate(spark, sf_dir)
+    df.collect()  # read the plan that ran, not a fresh count() plan
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("Initial Plan")[0]
+    scans = [ln for ln in final.splitlines() if "FileScan" in ln]
+    assert len(scans) == 1, scans
+    assert "documents" in scans[0], scans

@@ -102,3 +102,19 @@ def test_simhash_signature_plan_has_single_python_eval(spark):
     plan = sigs._jdf.queryExecution().executedPlan().toString()
     final = plan.split("Initial Plan")[0]  # AQE echoes the initial plan too
     assert final.count("ArrowEvalPython") == 1, final
+
+
+def test_simhash_udf_null_packed_row_gives_null_signature(spark):
+    """A NULL packed-shingle array (e.g. from a NULL text) is an empty
+    document: the UDF returns a NULL signature instead of failing the
+    task."""
+    df = spark.createDataFrame(
+        [(1, [3, 5]), (2, None), (3, [])], "id long, packed array<bigint>"
+    )
+    sig = dedup._simhash_sig_udf()
+    got = {
+        r["id"]: r["sig"]
+        for r in df.select("id", sig("packed").alias("sig")).collect()
+    }
+    assert got[2] is None and got[3] is None
+    assert got[1] is not None and len(got[1]) == 2

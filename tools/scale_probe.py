@@ -377,6 +377,10 @@ def generate(spark, src: str, out: str, factor: int) -> None:
                 key, F.col(key) + F.col("__copy") * F.lit(stride)
             )
         if fk is not None:  # shift FK with the referenced table's copies
+            assert ref in strides, (
+                f"{t}.{fk} references {ref}, which TABLES must list before "
+                f"{t} so its key stride is known"
+            )
             big = big.withColumn(
                 fk, F.col(fk) + F.col("__copy") * F.lit(strides[ref])
             )
