@@ -12,14 +12,46 @@ Constant lookups for the SPARQL translator (a handful of terms per query)
 are a targeted ``filter(...).collect()`` — bounded by query size, never by
 data size.
 
+Each ``Dictionary`` keeps two driver-side caches over those lookups:
+term → id for ``lookup_terms``/``encode_terms``, and id → term for
+``decode_ids`` (the endpoint's one-document results). A lookup runs one
+filter job for the keys its cache has not seen and answers the rest
+from the cache; a key the dictionary lacks is cached as absent. Each
+cache holds at most ``_CACHE_MAX`` entries and starts over when it
+would pass that. The caches cannot go stale because a ``Dictionary``
+never changes once built: ``extend``, ``Engine.vacuum``, ``Engine.open``
+and ``Engine.load_triples`` each build a new one, with empty caches.
+
 Id 0 is reserved: the translator's variable sentinel (MyOpVisitorBase.java:74-78).
 ``validate()`` enforces it plus id/term uniqueness at load time.
 """
 
 from __future__ import annotations
 
+from functools import cached_property
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# entries each lookup cache of one Dictionary may hold
+_CACHE_MAX = 65_536
+
+
+def _cached_lookup(cache: dict, keys, fetch) -> dict:
+    """The ``keys`` the dictionary holds → their values, running
+    ``fetch`` only for the keys ``cache`` has not seen; a key ``fetch``
+    does not find is cached as absent (None)."""
+    out = {k: cache[k] for k in keys if k in cache}
+    new = [k for k in dict.fromkeys(keys) if k not in out]
+    if new:
+        found = fetch(new)
+        fresh = {k: found.get(k) for k in new}
+        if len(cache) + len(fresh) > _CACHE_MAX:
+            cache.clear()
+        if len(fresh) <= _CACHE_MAX:
+            cache.update(fresh)
+        out.update(fresh)
+    return {k: v for k, v in out.items() if v is not None}
 
 
 class DictionaryError(ValueError):
@@ -39,24 +71,41 @@ class Dictionary:
             F.col("id").cast("long").alias("id"), F.col("term").alias("term")
         )
         self.broadcast_hint = broadcast_hint
-        # Optional pre-derived STR-value relation ``(id, term, __sv)`` —
-        # the §17.4.2.5 unquote/unescape chain evaluated ONCE (typically
-        # persisted by the raw-RDF ingest) instead of per term-attach
-        # join: every lexical-store attach re-derived it over |dict|
-        # rows per action before r13. The planner's ``_dict_relation``
-        # reads it when present; ``None`` keeps the derive-on-attach
-        # path (externally built dictionaries).
-        self.sv_df = sv_df
+        # the STR-value relation as given (persisted by the raw-RDF
+        # ingest), or None: ``sv_df`` then derives it from ``df``
+        self._given_sv = sv_df
         # ``extend`` with driver rows keeps them in ONE local relation
         # next to this base, so a chain of extensions stays two leaves
         self._base, self._base_sv, self._local = self.df, sv_df, ()
+        self._ids: dict[str, int | None] = {}
+        self._terms: dict[int, str | None] = {}
+
+    @cached_property
+    def sv_df(self) -> DataFrame:
+        """The STR-value relation ``(id, term, __sv)``: the §17.4.2.5
+        unquote/unescape chain over every term, which the planner's
+        lexical term attaches read instead of re-deriving it per
+        solution row. The one given to the constructor when there is
+        one; otherwise derived from ``df`` on first use and kept. The
+        derived relation is not persisted: decode joins over a cached
+        relation lose AQE's broadcast reuse."""
+        if self._given_sv is not None:
+            return self._given_sv
+        from rdfproject_msc_spark.sparql.planner import _lex_str_value
+
+        return self.df.select(
+            "id",
+            "term",
+            _lex_str_value(F.col("id"), F.col("term")).alias("__sv"),
+        )
 
     def extend(self, fresh) -> "Dictionary":
         """This dictionary plus new ``(id, term)`` rows: a list of tuples
         sized by a request (``rank_new_terms``), or a data-sized
-        DataFrame. The STR-value relation, when present, extends by the
-        new rows' ``__sv`` — computed over the new rows alone (for driver
-        rows, on the local relation)."""
+        DataFrame. A given STR-value relation extends by the new rows'
+        ``__sv`` — computed over the new rows alone (for driver rows, on
+        the local relation); a derived one derives again over the
+        extended ``df``."""
         from rdfproject_msc_spark.sparql.planner import _lex_str_value
         from rdfproject_msc_spark.store import local_relation
 
@@ -68,7 +117,7 @@ class Dictionary:
             )
 
         if isinstance(fresh, DataFrame):
-            sv = self.sv_df
+            sv = self._given_sv
             return Dictionary(
                 self.df.unionAll(fresh.select("id", "term")),
                 self.broadcast_hint,
@@ -110,8 +159,27 @@ class Dictionary:
         than erroring (the query is legal, its match set is empty)."""
         if not terms:
             return {}
-        rows = self.df.filter(F.col("term").isin(list(terms))).collect()
-        return {r["term"]: r["id"] for r in rows}
+
+        def fetch(new):
+            rows = self.df.filter(F.col("term").isin(new)).collect()
+            return {r["term"]: r["id"] for r in rows}
+
+        return _cached_lookup(self._ids, terms, fetch)
+
+    def decode_ids(self, ids) -> dict[int, str]:
+        """Bounded driver-side decode (id → term) for the ids of a
+        collected, row-capped result; ids absent from the dictionary
+        (the 0 sentinel, raw integer literals) are missing from the
+        result, as the decode join leaves them NULL."""
+        if not ids:
+            return {}
+
+        def fetch(new):
+            in_list = ", ".join(f"{int(i)}L" for i in new)
+            rows = self.df.filter(F.expr(f"id IN ({in_list})")).collect()
+            return {r["id"]: r["term"] for r in rows}
+
+        return _cached_lookup(self._terms, ids, fetch)
 
     def encode_terms(self, terms: list[str]) -> dict[str, int]:
         """Bounded driver-side lookup for SPARQL constants (term → id).

@@ -5,6 +5,9 @@ A thin stdlib front door over the Engine: ``GET /sparql?query=…`` and
 body) run through the same planner as ``Engine.sparql``, and the
 response is the content-negotiated W3C results document
 (sparql/results.py) — JSON by default, XML / CSV / TSV via ``Accept``.
+The JSON, XML and TSV documents decode on the driver after the capped
+collect: at most ``json_limit + 1`` undecoded rows come back, and only
+their ids are looked up in the dictionary.
 CONSTRUCT/DESCRIBE answer an RDF graph: N-Triples by default,
 subject-grouped Turtle (prefixes from the query's own prolog) under
 ``Accept: text/turtle``.
@@ -103,33 +106,48 @@ def _run_query(
     """Execute and serialize: returns (body, format-actually-used).
     The query FORM comes from the parsed query (not a text sniff —
     a PREFIX IRI containing 'describe' must not reroute a SELECT);
-    the parse is pure-Python and query-sized, so parsing once here
-    and once in Engine.sparql costs nothing measurable. ASK has no
-    CSV/TSV document form — those Accepts fall back to the JSON
-    boolean document (server-chosen format, per protocol)."""
+    the parse is pure-Python and query-sized: parsing once here and
+    once in Engine.sparql costs about 0.5 ms per parse against a
+    300-600 ms request on the benchmark's store. ASK has no CSV/TSV
+    document form — those Accepts fall back to the JSON boolean
+    document (server-chosen format, per protocol).
+
+    SELECT answers in JSON, XML and TSV are planned undecoded and
+    decode on the driver, after the capped collect, through the
+    dictionary's id → term cache (sparql/results.py); CSV, ASK and
+    graph answers keep the decode join."""
     from rdfproject_msc_spark.sparql import results as RES
     from rdfproject_msc_spark.sparql.parser import parse_sparql
+    from rdfproject_msc_spark.sparql.planner import id_columns
 
     bgp = parse_sparql(query, term_style=engine.term_style)
+    graph = bool(bgp.construct or bgp.describe_terms or bgp.describe_var)
+    join_decode = graph or bgp.ask or fmt == "csv"
+    dictionary = engine.dictionary
     df = engine.sparql(
         query,
-        decode=engine.dictionary is not None,
+        decode=dictionary is not None and join_decode,
         strict_terms=strict_terms,
     )
-    if bgp.construct or bgp.describe_terms or bgp.describe_var:
+    if graph:
         return _graph_body(df, bgp, fmt, limit)
     if bgp.ask:
         ans = bool(df.collect()[0]["ask"])
         if fmt == "xml":
             return RES.ask_xml(ans), "xml"
         return RES.ask_json(ans), "json"
-    if fmt == "xml":
-        return RES.results_xml(df, limit=limit), "xml"
     if fmt == "csv":
         return RES.results_csv(df, limit=limit), "csv"
+    decode = (
+        {"dictionary": dictionary, "columns": id_columns(bgp, df.columns)}
+        if dictionary is not None
+        else {}
+    )
+    if fmt == "xml":
+        return RES.results_xml(df, limit=limit, **decode), "xml"
     if fmt == "tsv":
-        return RES.results_tsv(df, limit=limit), "tsv"
-    return RES.results_json(df, limit=limit), "json"
+        return RES.results_tsv(df, limit=limit, **decode), "tsv"
+    return RES.results_json(df, limit=limit, **decode), "json"
 
 
 def _make_handler(engine, json_limit: int, strict_terms: bool,

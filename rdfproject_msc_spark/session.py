@@ -10,6 +10,17 @@ chosen so the same code scales on a multi-executor cluster:
   overridden (AQE coalescing makes the initial number less critical).
 - UTC session timezone so results hash-match the DuckDB oracle.
 - Arrow enabled for the Pandas-UDF slow path (similarity/multimodal ops).
+- PySpark's DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled``). With it on, every
+  PySpark API call goes through ``pyspark.errors.utils._with_origin``:
+  about five py4j round trips plus a Python stack walk, so that an
+  error can name the Python line that built the failing expression.
+  The SPARQL planner makes 22-134 such calls per query; for the
+  benchmark's numeric top-k query they were 43% of plan-build time. The call site the
+  capture would name is a line inside the planner, not the caller's
+  code, so errors lose nothing a user could act on. Spark documents
+  the capture as having non-trivial overhead. PySpark reads the
+  setting once per process, at its first DataFrame API call.
 """
 
 from __future__ import annotations
@@ -37,6 +48,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # NOTE: nanos-timestamp handling (events.parquet) lives in
         # sources.tables.load_table, which must work on ANY session —
         # including externally-built ones — so it is not configured here.

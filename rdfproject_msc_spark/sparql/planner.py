@@ -171,21 +171,16 @@ def _dict_relation(dictionary: "Dictionary", id_name: str, term_name: str):
     leaves read it instead of re-deriving per solution row (solutions
     ≥ dict always; the unescape chain must not run per output row)."""
     if _ACTIVE_STYLE.get() == "lexical":
-        sv = getattr(dictionary, "sv_df", None)
-        if sv is not None:
-            # the ingest pre-derived (and persisted) the STR values —
-            # read them instead of re-running the unescape chain over
-            # |dict| rows on every attach (r13, guide §2.3)
-            # ids are long like Dictionary.df's; an already-long id stays
-            # a bare column, so the attach still matches a cached sv_df
-            sid = F.col("id")
-            if dict(sv.dtypes)["id"] != "bigint":
-                sid = sid.cast("long").alias("id")
-            d = sv.select(sid, "term", F.col("__sv").alias(term_name + _SV))
-        else:
-            d = dictionary.df.withColumn(
-                term_name + _SV, _lex_str_value(F.col("id"), F.col("term"))
-            )
+        # the dictionary derives the STR values once (or the ingest
+        # persisted them) — read them instead of re-building the
+        # unescape chain on every attach
+        sv = dictionary.sv_df
+        # ids are long like Dictionary.df's; an already-long id stays
+        # a bare column, so the attach still matches a cached sv_df
+        sid = F.col("id")
+        if dict(sv.dtypes)["id"] != "bigint":
+            sid = sid.cast("long").alias("id")
+        d = sv.select(sid, "term", F.col("__sv").alias(term_name + _SV))
     else:
         d = dictionary.df
     d = d.withColumnRenamed("id", id_name).withColumnRenamed(
@@ -3486,6 +3481,30 @@ def sparql_to_df(
         _STRICT_MODE.reset(token)
 
 
+def id_columns(bgp: BGPQuery, columns: list[str]) -> list[str]:
+    """The result ``columns`` that may hold dictionary ids — the ones a
+    decode maps to terms. Aggregate aliases, post-aggregation
+    expression aliases and computed BIND targets hold VALUES: decoding
+    them would turn a COUNT of 3 into whatever term holds id 3. An
+    IDENTITY bind ``BIND(?x AS ?y)`` copies an id column and does
+    decode. (Decoders also skip non-integral columns by dtype.)"""
+    computed = (
+        {alias for _, _, _, alias, _ in bgp.aggregates}
+        | {alias for alias, _ in bgp.agg_exprs}
+        | {
+            bv
+            for g in _walk_groups(bgp.where)
+            for bv, bexpr in g.binds
+            if not (
+                isinstance(bexpr, tuple)
+                and len(bexpr) == 2
+                and bexpr[0] == "var"
+            )
+        }
+    )
+    return [c for c in columns if c not in computed]
+
+
 def _sparql_to_df_inner(
     store, query, dictionary, decode, term_style
 ) -> DataFrame:
@@ -3500,27 +3519,7 @@ def _sparql_to_df_inner(
     if decode:
         if dictionary is None:
             raise SparqlSyntaxError("decode=True requires a dictionary")
-        # decode only the ID-VALUED columns: aggregate aliases,
-        # post-aggregation expression aliases, and computed BIND
-        # targets hold VALUES — joining the dictionary on them would
-        # decode a COUNT of 3 into whatever term happens to hold rank
-        # 3 (string-valued targets are already skipped by dtype). An
-        # IDENTITY bind `BIND(?x AS ?y)` copies an id column and DOES
-        # decode.
-        computed = (
-            {alias for _, _, _, alias, _ in bgp.aggregates}
-            | {alias for alias, _ in bgp.agg_exprs}
-            | {
-                bv
-                for g in _walk_groups(bgp.where)
-                for bv, bexpr in g.binds
-                if not (
-                    isinstance(bexpr, tuple)
-                    and len(bexpr) == 2
-                    and bexpr[0] == "var"
-                )
-            }
-        )
+        columns = id_columns(bgp, df.columns)
         # decode joins would otherwise destroy the query's ORDER BY (a
         # shuffled dictionary join re-partitions arbitrarily): capture a
         # sort-consistent ordinal BEFORE the joins (monotonic ids are
@@ -3530,10 +3529,7 @@ def _sparql_to_df_inner(
         ordered = bool(bgp.order_by)
         if ordered:
             df = df.withColumn("__ord", F.monotonically_increasing_id())
-        df = dictionary.decode(
-            df,
-            [c for c in df.columns if c not in computed and c != "__ord"],
-        )
+        df = dictionary.decode(df, columns)
         if ordered:
             df = df.orderBy("__ord").drop("__ord")
     return df

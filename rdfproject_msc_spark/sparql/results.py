@@ -14,6 +14,14 @@ solution DataFrames serialize to the three standard result formats
   demand an explicit ``limit`` and raise when the result exceeds it —
   the didactic guard against collecting a data-sized result into one
   string (the NOW/UUID stance applied to memory).
+- Given a ``dictionary``, the one-document JSON, XML and TSV forms
+  decode on the driver: they collect at most ``limit + 1`` undecoded
+  rows, apply the row cap, and only then map the id columns to terms
+  with one bounded ``Dictionary.decode_ids`` lookup (none when its
+  cache has seen every id). The collect keeps the rows' order, so an
+  ORDER BY needs no re-sort after the decode. The one-document CSV
+  form keeps the decode join: its plain-string transform is the column
+  expression it shares with the distributed sink.
 
 Term-kind classification reads the engine's term text grammar (the
 same conventions the planner's accessors use): ``<iri>``/localized
@@ -152,26 +160,55 @@ def results_csv(df: DataFrame, limit: int, dictionary=None) -> str:
     return buf.getvalue()
 
 
-def results_tsv(df: DataFrame, limit: int, dictionary=None) -> str:
-    """Bounded ONE-document form of the TSV sink: '?var' header, cells
-    = N-Triples-encoded terms verbatim (tabs/newlines are escaped IN
-    the encoding, so raw separators never occur), unbound = empty;
-    same ``limit`` guard as ``results_json``."""
-    if dictionary is not None:
-        df = dictionary.decode(df)
+def _capped_rows(
+    df: DataFrame, limit: int, form: str, dictionary=None, columns=None
+) -> tuple[list[str], list]:
+    """The header and at most ``limit`` rows of a one-document result
+    form; raises ``ResultSizeExceeded`` past ``limit``. With a
+    ``dictionary``, the integral ``columns`` (default: every integral
+    column) are decoded on the driver AFTER the capped collect — an id
+    absent from the dictionary decodes to None (unbound), as the
+    decode join leaves it NULL."""
     rows = df.limit(limit + 1).collect()
     if len(rows) > limit:
         raise ResultSizeExceeded(
-            f"result exceeds limit={limit} rows — the one-document TSV "
-            "form is driver-sized; use write_results_tsv for data-sized "
-            "results"
+            f"result exceeds limit={limit} rows — the {form}"
         )
-    cols = list(df.columns)
+    dtypes = df.dtypes
+    cols = [c for c, _ in dtypes]
+    if dictionary is None:
+        return cols, rows
+    wanted = set(cols if columns is None else columns)
+    dec = {
+        i
+        for i, (c, t) in enumerate(dtypes)
+        if c in wanted and t in ("bigint", "int", "smallint", "tinyint")
+    }
+    terms = dictionary.decode_ids(
+        {r[i] for r in rows for i in dec if r[i] is not None}
+    )
+    return cols, [
+        tuple(terms.get(v) if i in dec else v for i, v in enumerate(r))
+        for r in rows
+    ]
+
+
+def results_tsv(
+    df: DataFrame, limit: int, dictionary=None, columns=None
+) -> str:
+    """Bounded ONE-document form of the TSV sink: '?var' header, cells
+    = N-Triples-encoded terms verbatim (tabs/newlines are escaped IN
+    the encoding, so raw separators never occur), unbound = empty;
+    same ``limit`` guard and driver-side decode as ``results_json``."""
+    cols, rows = _capped_rows(
+        df, limit,
+        "one-document TSV form is driver-sized; use write_results_tsv "
+        "for data-sized results",
+        dictionary, columns,
+    )
     lines = ["\t".join(f"?{c}" for c in cols)]
     for r in rows:
-        lines.append(
-            "\t".join("" if r[c] is None else str(r[c]) for c in cols)
-        )
+        lines.append("\t".join("" if v is None else str(v) for v in r))
     return "\n".join(lines) + "\n"
 
 
@@ -199,31 +236,25 @@ def write_results_tsv(df: DataFrame, path: str) -> None:
 
 
 def results_json(
-    df: DataFrame, limit: int, dictionary=None
+    df: DataFrame, limit: int, dictionary=None, columns=None
 ) -> str:
     """The W3C results-JSON document — ONE string, so driver-sized by
     construction: raises when the result exceeds ``limit`` rows (ask
-    for CSV/TSV sinks for data-sized results). ``dictionary`` decodes
-    id-valued columns first when given."""
-    if dictionary is not None:
-        df = dictionary.decode(df)
-    rows = df.limit(limit + 1).collect()
-    if len(rows) > limit:
-        raise ResultSizeExceeded(
-            f"result exceeds limit={limit} rows — the JSON results "
-            "format is one document (driver memory); use "
-            "write_results_csv/tsv for data-sized results"
-        )
-    cols = list(df.columns)
+    for CSV/TSV sinks for data-sized results). Given a ``dictionary``,
+    the id-valued ``columns`` (default: every integral column) decode
+    on the driver after the capped collect."""
+    cols, rows = _capped_rows(
+        df, limit,
+        "JSON results format is one document (driver memory); use "
+        "write_results_csv/tsv for data-sized results",
+        dictionary, columns,
+    )
     bindings = []
     for r in rows:
-        b = {}
-        for c in cols:
-            v = r[c]
-            if v is None:
-                continue  # unbound: the binding is omitted (spec)
-            b[c] = _term_kind(str(v))
-        bindings.append(b)
+        # unbound: the binding is omitted (spec)
+        bindings.append(
+            {c: _term_kind(str(v)) for c, v in zip(cols, r) if v is not None}
+        )
     return json.dumps(
         {"head": {"vars": cols}, "results": {"bindings": bindings}},
         ensure_ascii=False,
@@ -242,23 +273,20 @@ def _xml_escape(s: str, attr: bool = False) -> str:
     return out
 
 
-def results_xml(df: DataFrame, limit: int, dictionary=None) -> str:
+def results_xml(
+    df: DataFrame, limit: int, dictionary=None, columns=None
+) -> str:
     """The W3C sparql-results-xml document (the fourth standard format,
     completing CSV/TSV/JSON) — ONE string, so driver-sized by the same
-    ``limit`` guard as ``results_json``; ``dictionary`` decodes
-    id-valued columns first when given. Binding elements come from the
-    shared ``_term_kind`` classification: uri / bnode / literal with
-    optional ``xml:lang`` or ``datatype``."""
-    if dictionary is not None:
-        df = dictionary.decode(df)
-    rows = df.limit(limit + 1).collect()
-    if len(rows) > limit:
-        raise ResultSizeExceeded(
-            f"result exceeds limit={limit} rows — the XML results "
-            "format is one document (driver memory); use "
-            "write_results_csv/tsv for data-sized results"
-        )
-    cols = list(df.columns)
+    ``limit`` guard and driver-side decode as ``results_json``. Binding
+    elements come from the shared ``_term_kind`` classification: uri /
+    bnode / literal with optional ``xml:lang`` or ``datatype``."""
+    cols, rows = _capped_rows(
+        df, limit,
+        "XML results format is one document (driver memory); use "
+        "write_results_csv/tsv for data-sized results",
+        dictionary, columns,
+    )
     parts = [
         '<?xml version="1.0"?>',
         '<sparql xmlns="http://www.w3.org/2005/sparql-results#">',
@@ -271,8 +299,7 @@ def results_xml(df: DataFrame, limit: int, dictionary=None) -> str:
     ]
     for r in rows:
         b = ["<result>"]
-        for c in cols:
-            v = r[c]
+        for c, v in zip(cols, r):
             if v is None:
                 continue  # unbound: the binding is omitted (spec)
             k = _term_kind(str(v))

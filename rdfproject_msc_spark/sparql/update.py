@@ -1332,20 +1332,15 @@ def _apply_op(engine, store: TripleStore, op, negative_when) -> None:
                 on_error="fail",
                 caches=load_caches,
             )
-            # keep the STR values next to an ingested dictionary
-            with_sv = engine.dictionary.sv_df is not None
-            if with_sv:
-                from rdfproject_msc_spark.sparql.planner import (
-                    _lex_str_value,
-                )
+            # keep the STR values next to the loaded dictionary: the
+            # checkpoint below derives them once
+            from rdfproject_msc_spark.sparql.planner import _lex_str_value
 
-                dict_df = dict_df.select(
-                    "id",
-                    "term",
-                    _lex_str_value(F.col("id"), F.col("term")).alias(
-                        "__sv"
-                    ),
-                )
+            dict_df = dict_df.select(
+                "id",
+                "term",
+                _lex_str_value(F.col("id"), F.col("term")).alias("__sv"),
+            )
             # materialize INSIDE the try: SILENT must swallow
             # failures surfacing anywhere in the scan (a file
             # deleted between listing and read, a corrupt member
@@ -1366,7 +1361,7 @@ def _apply_op(engine, store: TripleStore, op, negative_when) -> None:
         engine.dictionary = Dictionary(
             dict_df.select("id", "term"),
             broadcast_hint=engine.dictionary.broadcast_hint,
-            sv_df=dict_df if with_sv else None,
+            sv_df=dict_df,
         )
         if op.graph_slot is None:
             store = store.with_changes(inserted=df)

@@ -117,6 +117,16 @@ def test_sparql_filter(spark, sf_dir):
     )
 
 
+def test_sparql_graph_matches_oracle(spark, sf_dir):
+    """Demoted from the 51st registry row (only 50 are recorded): a
+    GRAPH ?g block's same-graph 2-pattern join plus a default-graph hop
+    over the quad relation. sparql_from keeps the named-graph family's
+    registry row."""
+    assert_matches_oracle(
+        R.sparql_graph(spark, sf_dir), R.SPARQL_GRAPH_SQL, sf_dir
+    )
+
+
 def test_sparql_2hop_store(spark, sf_dir):
     """Demoted r5 (slot → sparql_nested): the persisted sign-split store
     variant of sparql_2hop — partition-pruned scans feeding the same

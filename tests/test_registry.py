@@ -19,3 +19,10 @@ def test_oracle_match(name, spark, sf_dir):
 def test_rows_only(name, spark, sf_dir):
     df = REGISTRY[name].fn(spark, sf_dir)
     assert df.count() >= 0
+
+
+def test_registry_is_frozen_at_50_rows():
+    """Only the first 50 registry rows are recorded as correctness rows:
+    a 51st row would run unchecked, so new variants demote to
+    tests/test_demoted.py instead."""
+    assert len(REGISTRY) == 50
