@@ -802,7 +802,10 @@ def main(argv: list[str] | None = None) -> int:
                     if args.results == "xml"
                     else RES.results_json
                 )
-                doc = build(df, limit=args.json_limit)
+                doc = build(
+                    RES.capped_frame(df, args.json_limit),
+                    limit=args.json_limit,
+                )
                 with open(args.results_out, "w") as fh:
                     fh.write(doc)
         _emit(df, args)

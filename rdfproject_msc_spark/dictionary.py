@@ -20,7 +20,11 @@ from the cache; a key the dictionary lacks is cached as absent. Each
 cache holds at most ``_CACHE_MAX`` entries and starts over when it
 would pass that. The caches cannot go stale because a ``Dictionary``
 never changes once built: ``extend``, ``Engine.vacuum``, ``Engine.open``
-and ``Engine.load_triples`` each build a new one, with empty caches.
+and ``Engine.load_triples`` each build a new one. An ``extend`` by
+driver rows (an update's new terms) carries both caches over: existing
+terms keep their ids, and the new rows replace whatever "absent"
+entries their terms and ids had. Every other new dictionary starts
+with empty caches.
 
 Id 0 is reserved: the translator's variable sentinel (MyOpVisitorBase.java:74-78).
 ``validate()`` enforces it plus id/term uniqueness at load time.
@@ -52,6 +56,13 @@ def _cached_lookup(cache: dict, keys, fetch) -> dict:
             cache.update(fresh)
         out.update(fresh)
     return {k: v for k, v in out.items() if v is not None}
+
+
+def _carried(cache: dict, fresh: dict) -> dict:
+    """``cache`` with the ``fresh`` entries learned, or an empty cache
+    when both would pass the bound."""
+    out = {**cache, **fresh}
+    return out if len(out) <= _CACHE_MAX else {}
 
 
 class DictionaryError(ValueError):
@@ -105,7 +116,8 @@ class Dictionary:
         DataFrame. A given STR-value relation extends by the new rows'
         ``__sv`` — computed over the new rows alone (for driver rows, on
         the local relation); a derived one derives again over the
-        extended ``df``."""
+        extended ``df``. Driver rows also carry both lookup caches over,
+        with the new rows learned (module doc)."""
         from rdfproject_msc_spark.sparql.planner import _lex_str_value
         from rdfproject_msc_spark.store import local_relation
 
@@ -123,7 +135,8 @@ class Dictionary:
                 self.broadcast_hint,
                 sv_df=None if sv is None else sv.unionAll(with_sv(fresh)),
             )
-        local = self._local + tuple(fresh)
+        fresh = tuple(fresh)
+        local = self._local + fresh
         extra = local_relation(self.df.sparkSession, local, ["id", "term"])
         sv = self._base_sv
         out = Dictionary(
@@ -132,6 +145,8 @@ class Dictionary:
             sv_df=None if sv is None else sv.unionAll(with_sv(extra)),
         )
         out._base, out._base_sv, out._local = self._base, sv, local
+        out._ids = _carried(self._ids, {t: i for i, t in fresh})
+        out._terms = _carried(self._terms, {i: t for i, t in fresh})
         return out
 
     def _dict_side(self) -> DataFrame:

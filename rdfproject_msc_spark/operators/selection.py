@@ -12,7 +12,7 @@ uses ``repartitionByRange`` on (score DESC, id) instead: Spark's range
 partitioner SAMPLES the score distribution, so partition boundaries adapt
 to skew (a million documents scoring 0.99 spread across partitions rather
 than serializing one), and the partition INDEX becomes the global order's
-coarse key. Then the same two-phase prefix as packing/batching:
+coarse key. Then the same two-phase prefix as packing:
 per-partition token totals (tiny relation, one row per partition) prefix
 over partition ids, broadcast back, window-cumsum WITHIN each partition.
 Selection membership is EXACT regardless of where the sampled boundaries

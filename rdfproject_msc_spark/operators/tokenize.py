@@ -103,8 +103,7 @@ def tokenize_ids(
     ``add_special`` wraps BOS … EOS (counted in ``max_len``'s budget:
     content truncates to max_len − 2 first, the trainer convention).
     ``pad_to_max`` right-pads with PAD to exactly max_len — fixed-shape
-    batches for frameworks that want them; length-bucketed batching
-    (operators/batching.py) is the padding-minimizing alternative.
+    batches for frameworks that want them.
     NULL text tokenizes like empty text (BOS EOS only / empty array)."""
     c = F.coalesce(F.col(content_col), F.lit(""))
     ids, n = _finalize_ids(

@@ -3305,8 +3305,8 @@ REGISTRY: dict[str, QuerySpec] = {
     # pinned in tests/test_demoted.py (HLL error pin already lives in
     # tests/test_registry_extras.py)
     # customer_running_revenue demoted r8 (slot → bloom_decontam): the
-    # running-window surface is carried by events_prev_asof + the batching
-    # window twins; oracle kept in tests/test_demoted.py
+    # running-window surface is carried by events_prev_asof; oracle kept
+    # in tests/test_demoted.py
     "bloom_decontam": QuerySpec(
         bloom_decontam, TEXT_DECONTAMINATE_SQL, headline=True
     ),

@@ -7,7 +7,10 @@ response is the content-negotiated W3C results document
 (sparql/results.py) — JSON by default, XML / CSV / TSV via ``Accept``.
 The JSON, XML and TSV documents decode on the driver after the capped
 collect: at most ``json_limit + 1`` undecoded rows come back, and only
-their ids are looked up in the dictionary.
+their ids are looked up in the dictionary. The engine keeps each
+planned request with the capped Dataset it collects, for as long as its
+store and dictionary stay the same (engine.py): a repeated query is one
+Spark action, with no parse and no plan build.
 CONSTRUCT/DESCRIBE answer an RDF graph: N-Triples by default,
 subject-grouped Turtle (prefixes from the query's own prolog) under
 ``Accept: text/turtle``.
@@ -19,12 +22,13 @@ OFF unless the server starts with ``enable_update=True`` (CLI
 ``--enable-update``); disabled servers answer 403.
 
 Error taxonomy (documented in README): **400** malformed query/update
-(the protocol's MalformedQuery) and — under ``strict_terms`` — the
-dictionary's unknown-term typo guard; **403** update against a
-query-only server; **413** exactly the one-document row-cap guard
-(the dedicated ``ResultSizeExceeded``); **500** everything else
-(QueryRequestRefused), including planner rejects like FROM against a
-triple-only store.
+(the protocol's MalformedQuery), a malformed POST (a non-numeric or
+negative ``Content-Length``, a body that is not UTF-8) and — under
+``strict_terms`` — the dictionary's unknown-term typo guard; **403**
+update against a query-only server; **413** exactly the one-document
+row-cap guard (the dedicated ``ResultSizeExceeded``); **500**
+everything else (QueryRequestRefused), including planner rejects like
+FROM against a triple-only store.
 
 Deliberately ``http.server``: the endpoint is an integration surface
 for standard tooling (curl, rdflib SPARQLStore, notebooks) against a
@@ -67,17 +71,18 @@ def _negotiate(accept: str) -> str:
     return "json"  # the protocol's server-chooses default
 
 
-def _graph_body(df, bgp, fmt: str, limit: int) -> tuple[str, str]:
+def _graph_body(capped, prefixes, fmt: str, limit: int) -> tuple[str, str]:
     """Serialize a CONSTRUCT/DESCRIBE answer — an RDF GRAPH, not a
-    results document — under the one-document row cap. N-Triples is
-    the server default (the engine's canonical term text IS the NT
-    form); ``Accept: text/turtle`` negotiates subject-grouped Turtle
+    results document — from its ``capped_frame``, under the
+    one-document row cap. N-Triples is the server default (the
+    engine's canonical term text IS the NT form);
+    ``Accept: text/turtle`` negotiates subject-grouped Turtle
     through the SAME formatter as the distributed sink
     (sources/turtle.py:format_turtle), with ``@prefix`` directives
     taken from the query's own prolog."""
     from rdfproject_msc_spark.sparql.results import ResultSizeExceeded
 
-    rows = df.limit(limit + 1).collect()
+    rows = capped.collect()
     if len(rows) > limit:
         raise ResultSizeExceeded(
             f"result exceeds limit={limit} rows — a graph answer "
@@ -89,8 +94,7 @@ def _graph_body(df, bgp, fmt: str, limit: int) -> tuple[str, str]:
         return body, "nt"
     from rdfproject_msc_spark.sources.turtle import format_turtle
 
-    prefixes = dict(bgp.prefixes)
-    spark = df.sparkSession
+    spark = capped.sparkSession
     graph = spark.createDataFrame(
         [(r["s"], r["p"], r["o"]) for r in rows],
         "s_term string, p_term string, o_term string",
@@ -100,17 +104,15 @@ def _graph_body(df, bgp, fmt: str, limit: int) -> tuple[str, str]:
     return "\n".join(header + lines) + "\n", "turtle"
 
 
-def _run_query(
-    engine, query: str, fmt: str, limit: int, strict_terms: bool
-) -> tuple[str, str]:
-    """Execute and serialize: returns (body, format-actually-used).
-    The query FORM comes from the parsed query (not a text sniff —
-    a PREFIX IRI containing 'describe' must not reroute a SELECT);
-    the parse is pure-Python and query-sized: parsing once here and
-    once in Engine.sparql costs about 0.5 ms per parse against a
-    300-600 ms request on the benchmark's store. ASK has no CSV/TSV
-    document form — those Accepts fall back to the JSON boolean
-    document (server-chosen format, per protocol).
+def _plan_answer(engine, query: str, fmt: str, limit: int,
+                 strict_terms: bool):
+    """Parse and plan one request. Returns the prepared answer: a
+    function of no arguments that runs the one action and returns
+    (body, format-actually-used). The query FORM comes from the parsed
+    query (not a text sniff — a PREFIX IRI containing 'describe' must
+    not reroute a SELECT). ASK has no CSV/TSV document form — those
+    Accepts fall back to the JSON boolean document (server-chosen
+    format, per protocol).
 
     SELECT answers in JSON, XML and TSV are planned undecoded and
     decode on the driver, after the capped collect, through the
@@ -130,24 +132,40 @@ def _run_query(
         strict_terms=strict_terms,
     )
     if graph:
-        return _graph_body(df, bgp, fmt, limit)
+        capped, prefixes = RES.capped_frame(df, limit), dict(bgp.prefixes)
+        return lambda: _graph_body(capped, prefixes, fmt, limit)
     if bgp.ask:
-        ans = bool(df.collect()[0]["ask"])
-        if fmt == "xml":
-            return RES.ask_xml(ans), "xml"
-        return RES.ask_json(ans), "json"
+        used = "xml" if fmt == "xml" else "json"
+        doc = RES.ask_xml if used == "xml" else RES.ask_json
+        return lambda: (doc(bool(df.collect()[0]["ask"])), used)
     if fmt == "csv":
-        return RES.results_csv(df, limit=limit), "csv"
+        capped = RES.capped_frame(df, limit, csv=True)
+        return lambda: (RES.results_csv(capped, limit), "csv")
     decode = (
         {"dictionary": dictionary, "columns": id_columns(bgp, df.columns)}
         if dictionary is not None
         else {}
     )
-    if fmt == "xml":
-        return RES.results_xml(df, limit=limit, **decode), "xml"
-    if fmt == "tsv":
-        return RES.results_tsv(df, limit=limit, **decode), "tsv"
-    return RES.results_json(df, limit=limit, **decode), "json"
+    capped = RES.capped_frame(df, limit)
+    used = fmt if fmt in ("xml", "tsv") else "json"
+    return lambda: (
+        getattr(RES, f"results_{used}")(capped, limit, **decode),
+        used,
+    )
+
+
+def _run_query(
+    engine, query: str, fmt: str, limit: int, strict_terms: bool
+) -> tuple[str, str]:
+    """Execute and serialize: returns (body, format-actually-used).
+    The engine keeps the prepared answer (``_plan_answer``) for its
+    current snapshot (engine.py), so a repeated request neither parses
+    nor plans: it collects the same capped Dataset again."""
+    return engine._reuse(
+        (query, fmt, limit, strict_terms),
+        lambda: _plan_answer(engine, query, fmt, limit, strict_terms),
+        lambda answer: answer(),
+    )
 
 
 def _make_handler(engine, json_limit: int, strict_terms: bool,
@@ -241,8 +259,23 @@ def _make_handler(engine, json_limit: int, strict_terms: bool,
             self._answer((qs.get("query") or [None])[0])
 
         def do_POST(self):  # noqa: N802
-            n = int(self.headers.get("Content-Length") or 0)
-            raw = self.rfile.read(n).decode("utf-8")
+            # a malformed body answers 400: a non-numeric length would
+            # raise, a negative one would read until the client closes
+            length = (self.headers.get("Content-Length") or "0").strip()
+            if not (length.isascii() and length.isdigit()):
+                return self._reply(
+                    400,
+                    f"invalid Content-Length: {length!r}",
+                    "text/plain; charset=utf-8",
+                )
+            try:
+                raw = self.rfile.read(int(length)).decode("utf-8")
+            except UnicodeDecodeError:
+                return self._reply(
+                    400,
+                    "request body is not UTF-8",
+                    "text/plain; charset=utf-8",
+                )
             ctype = (self.headers.get("Content-Type") or "").split(";")[0]
             ctype = ctype.strip().lower()
             if ctype == "application/sparql-query":

@@ -15,8 +15,8 @@ Design (all deterministic, no RNG state):
 - Shard assignment is that same key MODULO n_shards, so a shard is a
   uniform random 1/n_shards slice, independent of input partitioning.
   Expected shard skew is O(sqrt(N/n_shards)) rows — negligible at training
-  scale; exact-equal sharding would need a global prefix sum
-  (operators/batching.py has one) for no trainer-visible benefit.
+  scale; exact-equal sharding would need a global prefix sum (as
+  operators/packing.py computes) for no trainer-visible benefit.
 - Files are written with ``partitionBy("shard")`` after an explicit
   ``repartition(n_shards, shard)``: hashing the shard value sends EVERY
   row of a given shard to one task, so each shard directory holds a

@@ -22,6 +22,13 @@ solution DataFrames serialize to the three standard result formats
   ORDER BY needs no re-sort after the decode. The one-document CSV
   form keeps the decode join: its plain-string transform is the column
   expression it shares with the distributed sink.
+- Each one-document form takes the Dataset it collects, built by
+  ``capped_frame``, rather than the solution frame. Collecting the
+  same Dataset object again reuses its executed plan, with AQE's
+  finished broadcast and shuffle stages; a new ``df.limit`` is a new
+  Dataset, which plans and runs every stage again. The endpoint keeps
+  that Dataset with its planned request (engine.py), so a repeated
+  request costs one short action.
 
 Term-kind classification reads the engine's term text grammar (the
 same conventions the planner's accessors use): ``<iri>``/localized
@@ -134,18 +141,27 @@ def write_results_csv(df: DataFrame, path: str) -> None:
     )
 
 
-def results_csv(df: DataFrame, limit: int, dictionary=None) -> str:
+def capped_frame(df: DataFrame, limit: int, csv: bool = False) -> DataFrame:
+    """The Dataset a one-document form collects: at most ``limit + 1``
+    rows of ``df`` (one past the cap, so an overflow shows), in the
+    plain string forms for ``csv`` (``df`` decoded). Serializing the
+    same one again reuses its executed plan (module doc)."""
+    if csv:
+        df = df.select(*_csv_plain_cols(df))
+    return df.limit(limit + 1)
+
+
+def results_csv(capped: DataFrame, limit: int) -> str:
     """Bounded ONE-document form of the CSV sink (the endpoint's
-    negotiated ``text/csv``): the same plain string forms, RFC 4180
-    quoting, CRLF line ends; raises past ``limit`` rows exactly like
+    negotiated ``text/csv``) from ``capped_frame(df, limit, csv=True)``
+    of a decoded ``df``: the same plain string forms, RFC 4180 quoting,
+    CRLF line ends; raises past ``limit`` rows exactly like
     ``results_json`` — data-sized exports belong to the distributed
     sink."""
     import csv
     import io
 
-    if dictionary is not None:
-        df = dictionary.decode(df)
-    rows = df.select(*_csv_plain_cols(df)).limit(limit + 1).collect()
+    rows = capped.collect()
     if len(rows) > limit:
         raise ResultSizeExceeded(
             f"result exceeds limit={limit} rows — the one-document CSV "
@@ -154,27 +170,27 @@ def results_csv(df: DataFrame, limit: int, dictionary=None) -> str:
         )
     buf = io.StringIO()
     w = csv.writer(buf, lineterminator="\r\n")
-    w.writerow(df.columns)
-    for r in rows:
-        w.writerow([r[c] for c in df.columns])
+    w.writerow(capped.columns)
+    w.writerows(rows)
     return buf.getvalue()
 
 
 def _capped_rows(
-    df: DataFrame, limit: int, form: str, dictionary=None, columns=None
+    capped: DataFrame, limit: int, form: str, dictionary=None, columns=None
 ) -> tuple[list[str], list]:
     """The header and at most ``limit`` rows of a one-document result
-    form; raises ``ResultSizeExceeded`` past ``limit``. With a
-    ``dictionary``, the integral ``columns`` (default: every integral
-    column) are decoded on the driver AFTER the capped collect — an id
-    absent from the dictionary decodes to None (unbound), as the
-    decode join leaves it NULL."""
-    rows = df.limit(limit + 1).collect()
+    form, collected from its ``capped_frame``; raises
+    ``ResultSizeExceeded`` past ``limit``. With a ``dictionary``, the
+    integral ``columns`` (default: every integral column) are decoded
+    on the driver AFTER the capped collect — an id absent from the
+    dictionary decodes to None (unbound), as the decode join leaves it
+    NULL."""
+    rows = capped.collect()
     if len(rows) > limit:
         raise ResultSizeExceeded(
             f"result exceeds limit={limit} rows — the {form}"
         )
-    dtypes = df.dtypes
+    dtypes = capped.dtypes
     cols = [c for c, _ in dtypes]
     if dictionary is None:
         return cols, rows
@@ -194,14 +210,15 @@ def _capped_rows(
 
 
 def results_tsv(
-    df: DataFrame, limit: int, dictionary=None, columns=None
+    capped: DataFrame, limit: int, dictionary=None, columns=None
 ) -> str:
     """Bounded ONE-document form of the TSV sink: '?var' header, cells
     = N-Triples-encoded terms verbatim (tabs/newlines are escaped IN
     the encoding, so raw separators never occur), unbound = empty;
-    same ``limit`` guard and driver-side decode as ``results_json``."""
+    same ``capped`` input, ``limit`` guard and driver-side decode as
+    ``results_json``."""
     cols, rows = _capped_rows(
-        df, limit,
+        capped, limit,
         "one-document TSV form is driver-sized; use write_results_tsv "
         "for data-sized results",
         dictionary, columns,
@@ -236,15 +253,16 @@ def write_results_tsv(df: DataFrame, path: str) -> None:
 
 
 def results_json(
-    df: DataFrame, limit: int, dictionary=None, columns=None
+    capped: DataFrame, limit: int, dictionary=None, columns=None
 ) -> str:
-    """The W3C results-JSON document — ONE string, so driver-sized by
-    construction: raises when the result exceeds ``limit`` rows (ask
-    for CSV/TSV sinks for data-sized results). Given a ``dictionary``,
-    the id-valued ``columns`` (default: every integral column) decode
-    on the driver after the capped collect."""
+    """The W3C results-JSON document of ``capped_frame(df, limit)`` —
+    ONE string, so driver-sized by construction: raises when the result
+    exceeds ``limit`` rows (ask for CSV/TSV sinks for data-sized
+    results). Given a ``dictionary``, the id-valued ``columns``
+    (default: every integral column) decode on the driver after the
+    capped collect."""
     cols, rows = _capped_rows(
-        df, limit,
+        capped, limit,
         "JSON results format is one document (driver memory); use "
         "write_results_csv/tsv for data-sized results",
         dictionary, columns,
@@ -274,15 +292,16 @@ def _xml_escape(s: str, attr: bool = False) -> str:
 
 
 def results_xml(
-    df: DataFrame, limit: int, dictionary=None, columns=None
+    capped: DataFrame, limit: int, dictionary=None, columns=None
 ) -> str:
     """The W3C sparql-results-xml document (the fourth standard format,
     completing CSV/TSV/JSON) — ONE string, so driver-sized by the same
-    ``limit`` guard and driver-side decode as ``results_json``. Binding
-    elements come from the shared ``_term_kind`` classification: uri /
-    bnode / literal with optional ``xml:lang`` or ``datatype``."""
+    ``capped`` input, ``limit`` guard and driver-side decode as
+    ``results_json``. Binding elements come from the shared
+    ``_term_kind`` classification: uri / bnode / literal with optional
+    ``xml:lang`` or ``datatype``."""
     cols, rows = _capped_rows(
-        df, limit,
+        capped, limit,
         "XML results format is one document (driver memory); use "
         "write_results_csv/tsv for data-sized results",
         dictionary, columns,

@@ -124,14 +124,40 @@ def test_lookups_past_the_cache_bound_stay_correct(monkeypatch, opened):
         assert len(d._terms) <= 4
 
 
-def test_extend_starts_with_empty_caches(spark):
+def test_driver_row_extend_keeps_cache_entries(spark):
     d = Dictionary(
         spark.createDataFrame([(1, "a")], "id long, term string")
     )
-    assert d.lookup_terms(["a", "b"]) == {"a": 1}
+    assert d.lookup_terms(["a", "b"]) == {"a": 1}  # "b" cached absent
+    assert d.decode_ids([1, 2]) == {1: "a"}  # 2 cached absent
     ext = d.extend([(2, "b")])
+    before = _job_ids(spark)
     assert ext.lookup_terms(["a", "b"]) == {"a": 1, "b": 2}
     assert ext.decode_ids([1, 2]) == {1: "a", 2: "b"}
+    assert _job_ids(spark) - before == set()
+    assert d.lookup_terms(["b"]) == {}  # the base is unchanged
+    # an extension by a DataFrame starts with empty caches
+    frame = d.extend(spark.createDataFrame([(3, "c")], "id long, term string"))
+    assert frame._ids == {} and frame._terms == {}
+    assert frame.lookup_terms(["a", "b", "c"]) == {"a": 1, "c": 3}
+
+
+def test_vacuumed_and_reopened_dictionaries_start_empty(spark, stores):
+    eng = Engine(spark).open(stores[2][0], dict_path=stores[2][1])
+    q = f"SELECT ?o WHERE {{ <{EX}a> <{EX}knows> ?o }}"
+    for step in (
+        lambda: eng.vacuum(),
+        lambda: eng.vacuum(reindex=True),
+        lambda: eng.open(stores[2][0], dict_path=stores[2][1]),
+    ):
+        _run_query(eng, q, "json", 100, False)
+        assert eng.dictionary._ids and eng.dictionary._terms
+        step()
+        assert eng.dictionary._ids == {} and eng.dictionary._terms == {}
+        doc = json.loads(_run_query(eng, q, "json", 100, False)[0])
+        assert [b["o"]["value"] for b in doc["results"]["bindings"]] == [
+            f"{EX}b"
+        ]
 
 
 # -- driver-side decode of the one-document forms --------------------------
@@ -199,7 +225,7 @@ def test_driver_decode_matches_join_decode(stores, case):
     for fmt, build in _BUILD.items():
         got, used = _run_query(opened, query, fmt, 100, False)
         assert used == fmt
-        want = build(joined, limit=100)
+        want = build(RES.capped_frame(joined, 100), limit=100)
         assert _canonical(got, fmt, ordered) == _canonical(
             want, fmt, ordered
         ), (case, fmt)
@@ -222,7 +248,10 @@ def test_driver_decode_keeps_the_row_cap(stores):
             _run_query(opened, q, fmt, 3, False)
     for build in _BUILD.values():
         with pytest.raises(ResultSizeExceeded, match="exceeds limit=3"):
-            build(opened.sparql(q, decode=True), limit=3)
+            build(
+                RES.capped_frame(opened.sparql(q, decode=True), 3),
+                limit=3,
+            )
 
 
 # -- STR values over a derived (opened) vs persisted (ingest) relation -----

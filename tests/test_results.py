@@ -11,6 +11,7 @@ import pytest
 from rdfproject_msc_spark.engine import Engine
 from rdfproject_msc_spark.sparql.results import (
     ask_json,
+    capped_frame,
     results_json,
     write_results_csv,
     write_results_tsv,
@@ -36,7 +37,7 @@ def test_results_json_term_kinds(eng):
     df = eng.sparql(
         "SELECT ?s ?o WHERE { ?s <urn:name> ?o }", decode=True
     )
-    doc = json.loads(results_json(df, limit=10))
+    doc = json.loads(results_json(capped_frame(df, 10), limit=10))
     assert doc["head"]["vars"] == ["s", "o"]
     got = {
         b["s"]["value"]: b["o"] for b in doc["results"]["bindings"]
@@ -58,7 +59,7 @@ def test_results_json_typed_bnode_and_unbound(eng):
         "OPTIONAL { ?s <urn:age> ?age } }",
         decode=True,
     )
-    doc = json.loads(results_json(df, limit=10))
+    doc = json.loads(results_json(capped_frame(df, 10), limit=10))
     kinds = {}
     for b in doc["results"]["bindings"]:
         kinds[(b["s"]["type"], b["s"]["value"])] = b.get("age")
@@ -70,7 +71,7 @@ def test_results_json_typed_bnode_and_unbound(eng):
 def test_results_json_limit_guard(eng):
     df = eng.sparql("SELECT ?s ?p ?o WHERE { ?s ?p ?o }", decode=True)
     with pytest.raises(ValueError, match="limit"):
-        results_json(df, limit=2)
+        results_json(capped_frame(df, 2), limit=2)
 
 
 def test_ask_json():
@@ -204,7 +205,7 @@ def test_results_xml_term_kinds_and_escaping(eng):
     df = eng.sparql(
         "SELECT ?s ?p ?o WHERE { ?s ?p ?o }", decode=True
     )
-    doc = results_xml(df, limit=50)
+    doc = results_xml(capped_frame(df, 50), limit=50)
     root = ET.fromstring(doc)
     ns = "{http://www.w3.org/2005/sparql-results#}"
     heads = [
@@ -212,7 +213,7 @@ def test_results_xml_term_kinds_and_escaping(eng):
     ]
     assert heads == ["s", "p", "o"]
     results = root.find(f"{ns}results").findall(f"{ns}result")
-    jdoc = json.loads(results_json(df, limit=50))
+    jdoc = json.loads(results_json(capped_frame(df, 50), limit=50))
     assert len(results) == len(jdoc["results"]["bindings"])
     got = set()
     for res in results:
@@ -251,7 +252,7 @@ def test_results_xml_escapes_markup(spark):
     df = spark.createDataFrame(
         [('"a<b>&c"@en',), ("<urn:x?a=1&b=2>",)], ["o"]
     )
-    doc = results_xml(df, limit=5)
+    doc = results_xml(capped_frame(df, 5), limit=5)
     root = ET.fromstring(doc)  # must be well-formed despite markup chars
     texts = {el.text for el in root.iter() if el.text}
     assert "a<b>&c" in texts
@@ -263,7 +264,7 @@ def test_results_xml_limit_guard_and_ask(eng):
 
     df = eng.sparql("SELECT ?s ?o WHERE { ?s <urn:name> ?o }", decode=True)
     with pytest.raises(ValueError, match="one document"):
-        results_xml(df, limit=1)
+        results_xml(capped_frame(df, 1), limit=1)
     assert "<boolean>true</boolean>" in ask_xml(True)
     assert "<boolean>false</boolean>" in ask_xml(False)
 

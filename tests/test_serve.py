@@ -346,3 +346,43 @@ def test_update_operation_end_to_end(spark, tmp_path):
     finally:
         httpd.shutdown()
         httpd.server_close()
+
+
+def _raw_post(port: int, head: bytes, body: bytes = b"") -> bytes:
+    """One POST over a raw socket that stays open for writing, and the
+    whole reply (the server closes after one response)."""
+    with socket.create_connection(("127.0.0.1", port), timeout=10) as s:
+        s.sendall(
+            b"POST /sparql HTTP/1.1\r\nHost: localhost\r\n"
+            b"Content-Type: application/sparql-query\r\n"
+            + head + b"\r\n" + body
+        )
+        reply = b""
+        while chunk := s.recv(4096):
+            reply += chunk
+    return reply
+
+
+@pytest.mark.parametrize(
+    "head, body, message",
+    [
+        (b"Content-Length: abc\r\n", b"", b"invalid Content-Length"),
+        (b"Content-Length: -1\r\n", b"", b"invalid Content-Length"),
+        (b"Content-Length: 2\r\n", b"\xff\xfe", b"not UTF-8"),
+    ],
+    ids=["non_numeric_length", "negative_length", "non_utf8_body"],
+)
+def test_malformed_post_answers_400(head, body, message):
+    """A malformed POST body answers 400 at once: no dropped connection,
+    and no read that waits for the client to close. None of these
+    requests reaches the engine."""
+    httpd = make_server(None, port=0)
+    t = threading.Thread(target=httpd.serve_forever, daemon=True)
+    t.start()
+    try:
+        reply = _raw_post(httpd.server_address[1], head, body)
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
+    assert reply.startswith(b"HTTP/1.0 400 "), reply[:80]
+    assert message in reply
