@@ -8,23 +8,29 @@ joins; Catalyst broadcasts automatically under autoBroadcastJoinThreshold,
 and we add an explicit ``F.broadcast`` hint when the caller asserts the
 dictionary is small (J5).
 
-Constant lookups for the SPARQL translator (a handful of terms per query)
-are a targeted ``filter(...).collect()`` — bounded by query size, never by
-data size.
+Constant lookups for the SPARQL translator (a handful of terms per
+query) and the decode of a row-capped result are answered on the
+driver: term → id for ``lookup_terms``/``encode_terms``, and id → term
+for ``decode_ids`` (the endpoint's one-document results). A dictionary
+of at most ``_CACHE_MAX`` terms — the reference's HashMap, bounded —
+is collected whole on the first lookup its maps cannot answer, so
+every later key, present or absent, answers without a job. A larger
+one keeps two bounded
+caches instead: a lookup runs one filter job for the keys its cache
+has not seen and answers the rest from the cache; a key the
+dictionary lacks is cached as absent, and each cache starts over when
+it would pass ``_CACHE_MAX`` entries. Neither can go stale because a
+``Dictionary`` never changes once built: ``extend``,
+``Engine.vacuum``, ``Engine.open`` and ``Engine.load_triples`` each
+build a new one. An ``extend`` by driver rows (an update's new terms)
+carries the maps or caches over with the new rows learned; every other
+new dictionary starts empty.
 
-Each ``Dictionary`` keeps two driver-side caches over those lookups:
-term → id for ``lookup_terms``/``encode_terms``, and id → term for
-``decode_ids`` (the endpoint's one-document results). A lookup runs one
-filter job for the keys its cache has not seen and answers the rest
-from the cache; a key the dictionary lacks is cached as absent. Each
-cache holds at most ``_CACHE_MAX`` entries and starts over when it
-would pass that. The caches cannot go stale because a ``Dictionary``
-never changes once built: ``extend``, ``Engine.vacuum``, ``Engine.open``
-and ``Engine.load_triples`` each build a new one. An ``extend`` by
-driver rows (an update's new terms) carries both caches over: existing
-terms keep their ids, and the new rows replace whatever "absent"
-entries their terms and ids had. Every other new dictionary starts
-with empty caches.
+Under the lexical term style the planner reads each term's STR value
+from ``sv_df``. The raw-RDF ingest and LOAD hand it over persisted; a
+dictionary opened from parquet derives it once per base, as a local
+checkpoint that driver-row extensions share (they derive their own
+rows only) and that ``release`` drops.
 
 Id 0 is reserved: the translator's variable sentinel (MyOpVisitorBase.java:74-78).
 ``validate()`` enforces it plus id/term uniqueness at load time.
@@ -32,12 +38,11 @@ Id 0 is reserved: the translator's variable sentinel (MyOpVisitorBase.java:74-78
 
 from __future__ import annotations
 
-from functools import cached_property
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# entries each lookup cache of one Dictionary may hold
+# terms a Dictionary holds whole on the driver, and entries each lookup
+# cache of a larger one may hold
 _CACHE_MAX = 65_536
 
 
@@ -65,6 +70,15 @@ def _carried(cache: dict, fresh: dict) -> dict:
     return out if len(out) <= _CACHE_MAX else {}
 
 
+def _str_values(df: DataFrame) -> DataFrame:
+    """``(id, term)`` rows with their STR value ``__sv``: the §17.4.2.5
+    unquote/unescape chain the planner's lexical term attaches read."""
+    from rdfproject_msc_spark.sparql.planner import _lex_str_value
+
+    sv = _lex_str_value(F.col("id"), F.col("term"))
+    return df.select("id", "term", sv.alias("__sv"))
+
+
 class DictionaryError(ValueError):
     pass
 
@@ -82,71 +96,86 @@ class Dictionary:
             F.col("id").cast("long").alias("id"), F.col("term").alias("term")
         )
         self.broadcast_hint = broadcast_hint
-        # the STR-value relation as given (persisted by the raw-RDF
-        # ingest), or None: ``sv_df`` then derives it from ``df``
-        self._given_sv = sv_df
         # ``extend`` with driver rows keeps them in ONE local relation
-        # next to this base, so a chain of extensions stays two leaves
-        self._base, self._base_sv, self._local = self.df, sv_df, ()
+        # next to this base, so a chain of extensions stays two leaves;
+        # the base's STR values are the given relation, or None until
+        # ``sv_df`` derives them (then ``_own_sv``: ``release`` drops it)
+        self._base, self._local = self.df, ()
+        self._base_sv, self._own_sv = sv_df, False
+        self._sv: DataFrame | None = None
+        # term → id and id → term: the whole dictionary when ``_whole``,
+        # else bounded caches (None = absent); ``_whole`` is None until
+        # a lookup has tried to collect the dictionary
         self._ids: dict[str, int | None] = {}
         self._terms: dict[int, str | None] = {}
+        self._whole: bool | None = None
 
-    @cached_property
+    @property
     def sv_df(self) -> DataFrame:
-        """The STR-value relation ``(id, term, __sv)``: the §17.4.2.5
-        unquote/unescape chain over every term, which the planner's
+        """The STR-value relation ``(id, term, __sv)`` the planner's
         lexical term attaches read instead of re-deriving it per
-        solution row. The one given to the constructor when there is
-        one; otherwise derived from ``df`` on first use and kept. The
-        derived relation is not persisted: decode joins over a cached
-        relation lose AQE's broadcast reuse."""
-        if self._given_sv is not None:
-            return self._given_sv
-        from rdfproject_msc_spark.sparql.planner import _lex_str_value
+        solution row: the base's — given, or derived on first use and
+        materialized once — plus the driver rows' own."""
+        if self._sv is None:
+            if self._base_sv is None:
+                self._base_sv = _str_values(self._base).localCheckpoint(
+                    eager=True
+                )
+                self._own_sv = True
+            sv = self._base_sv
+            if self._local:
+                from rdfproject_msc_spark.store import local_relation
 
-        return self.df.select(
-            "id",
-            "term",
-            _lex_str_value(F.col("id"), F.col("term")).alias("__sv"),
-        )
+                extra = local_relation(
+                    self.df.sparkSession, self._local, ["id", "term"]
+                )
+                sv = sv.unionAll(_str_values(extra))
+            self._sv = sv
+        return self._sv
+
+    def release(self) -> None:
+        """Drop the STR values this dictionary's base derived, if it did;
+        relations planned over them can no longer run. The next
+        ``sv_df`` derives them again."""
+        if self._own_sv:
+            rel = self._base_sv._jdf.queryExecution().analyzed()
+            rel.rdd().unpersist(False)
+            self._base_sv, self._own_sv, self._sv = None, False, None
 
     def extend(self, fresh) -> "Dictionary":
         """This dictionary plus new ``(id, term)`` rows: a list of tuples
         sized by a request (``rank_new_terms``), or a data-sized
-        DataFrame. A given STR-value relation extends by the new rows'
-        ``__sv`` — computed over the new rows alone (for driver rows, on
-        the local relation); a derived one derives again over the
-        extended ``df``. Driver rows also carry both lookup caches over,
-        with the new rows learned (module doc)."""
-        from rdfproject_msc_spark.sparql.planner import _lex_str_value
+        DataFrame. Driver rows share this base and its STR values, and
+        carry the lookup maps over with the new rows learned (module
+        doc). A DataFrame is a new base: a given STR-value relation
+        extends by the new rows' ``__sv``, a derived one derives again,
+        and the maps start empty."""
         from rdfproject_msc_spark.store import local_relation
 
-        def with_sv(df):
-            return df.select(
-                "id",
-                "term",
-                _lex_str_value(F.col("id"), F.col("term")).alias("__sv"),
-            )
-
         if isinstance(fresh, DataFrame):
-            sv = self._given_sv
+            fresh = fresh.select("id", "term")
+            given = None if self._own_sv else self._base_sv
             return Dictionary(
-                self.df.unionAll(fresh.select("id", "term")),
+                self.df.unionAll(fresh),
                 self.broadcast_hint,
-                sv_df=None if sv is None else sv.unionAll(with_sv(fresh)),
+                sv_df=None if given is None
+                else self.sv_df.unionAll(_str_values(fresh)),
             )
         fresh = tuple(fresh)
         local = self._local + fresh
         extra = local_relation(self.df.sparkSession, local, ["id", "term"])
-        sv = self._base_sv
-        out = Dictionary(
-            self._base.unionAll(extra),
-            self.broadcast_hint,
-            sv_df=None if sv is None else sv.unionAll(with_sv(extra)),
-        )
-        out._base, out._base_sv, out._local = self._base, sv, local
-        out._ids = _carried(self._ids, {t: i for i, t in fresh})
-        out._terms = _carried(self._terms, {i: t for i, t in fresh})
+        out = Dictionary(self._base.unionAll(extra), self.broadcast_hint)
+        out._base, out._local = self._base, local
+        out._base_sv, out._own_sv = self._base_sv, self._own_sv
+        ids = {t: i for i, t in fresh}
+        terms = {i: t for i, t in fresh}
+        if self._whole and len(self._ids) + len(ids) <= _CACHE_MAX:
+            out._whole = True
+            out._ids, out._terms = {**self._ids, **ids}, {**self._terms, **terms}
+        else:  # a whole map grown past the bound empties: per-key caches
+            out._whole = None if self._whole is None else False
+            out._ids = _carried(self._ids, ids)
+            out._terms = _carried(self._terms, terms)
         return out
 
     def _dict_side(self) -> DataFrame:
@@ -167,6 +196,18 @@ class Dictionary:
         if row["n_terms"] != row["n"]:
             raise DictionaryError("dictionary terms are not unique (term→id not functional)")
 
+    def _held(self, keys, cache: dict) -> bool:
+        """Whether the whole dictionary is on the driver: it is collected
+        on the first lookup ``cache`` cannot answer, when it has at most
+        ``_CACHE_MAX`` terms."""
+        if self._whole is None and any(k not in cache for k in keys):
+            rows = self.df.limit(_CACHE_MAX + 1).collect()
+            self._whole = len(rows) <= _CACHE_MAX
+            if self._whole:
+                self._ids = {r["term"]: r["id"] for r in rows}
+                self._terms = {r["id"]: r["term"] for r in rows}
+        return bool(self._whole)
+
     def lookup_terms(self, terms: list[str]) -> dict[str, int]:
         """Non-raising bounded lookup (term → id): terms absent from the
         dictionary are simply missing from the result. FILTER term-equality
@@ -174,6 +215,8 @@ class Dictionary:
         than erroring (the query is legal, its match set is empty)."""
         if not terms:
             return {}
+        if self._held(terms, self._ids):
+            return {t: self._ids[t] for t in terms if t in self._ids}
 
         def fetch(new):
             rows = self.df.filter(F.col("term").isin(new)).collect()
@@ -188,6 +231,8 @@ class Dictionary:
         result, as the decode join leaves them NULL."""
         if not ids:
             return {}
+        if self._held(ids, self._terms):
+            return {i: self._terms[i] for i in ids if i in self._terms}
 
         def fetch(new):
             in_list = ", ".join(f"{int(i)}L" for i in new)

@@ -12,17 +12,18 @@ queries are methods, and decode is an option — every (layout × key ×
 query-path) combination the reference hard-coded is reachable, plus the
 persisted-Parquet path the reference lacked.
 
-The HTTP endpoint (serve.py) reuses planned requests. It keeps what it
-planned in one lock-protected cache per engine (``Engine._reuse``), so
-a repeated request skips the parse and the plan build and runs one
-action on the Dataset it ran before — which also reuses that Dataset's
-finished broadcast and shuffle stages. ``Engine.sparql`` itself plans
-anew on every call and returns a new DataFrame.
+The HTTP endpoint (serve.py) keeps its answers. One lock-protected
+cache per engine (``Engine._reuse``) holds each finished document with
+its format, so a repeated request runs no parse, no plan build and no
+Spark job, and the cache pins no executed plan. ``Engine.sparql``
+itself plans anew on every call and returns a new DataFrame.
 
-- The key is everything the plan reads besides the snapshot: the query
-  text, the answer format, the row cap, ``strict_terms`` and
-  ``term_style``.
-- Entries hold only for the snapshot they were planned on: the
+- The key is everything an answer reads besides the snapshot: the
+  query text, the answer format, the row cap, ``strict_terms`` and
+  ``term_style``. Nothing else can change an answer: the parser
+  rejects the nondeterministic built-ins (``NOW()`` without a clock,
+  ``RAND``, ``UUID``, ``STRUUID``), and the endpoint passes no clock.
+- Entries hold only for the snapshot they were answered on: the
   ``TripleStore`` object, its quad relation and ``graphs_disjoint``
   (``attach_quads``/``attach_quads_path`` change those in place) and
   the ``Dictionary`` object, compared by identity. Every update, open,
@@ -30,11 +31,9 @@ anew on every call and returns a new DataFrame.
   dictionary, so the next request that sees any of them differ clears
   the cache. ``release_caches()`` (so ``close()`` and ``vacuum()``)
   clears it at once.
-- At most ``_PLAN_CACHE_MAX`` entries; the least recently used goes.
-  The bound limits the count, not the memory: each entry keeps its
-  executed plan, so the driver holds its broadcast relations and the
-  executors its shuffle files, and what one entry retains grows with
-  those sizes.
+- The entries' bytes (UTF-8 body plus key text) stay within
+  ``_ANSWER_CACHE_BYTES``; the least recently used goes first, and an
+  answer larger than the whole budget is not kept.
 - A request that raises leaves no entry: errors are never cached.
 """
 
@@ -45,21 +44,27 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rdfproject_msc_spark.dictionary import Dictionary
+from rdfproject_msc_spark.dictionary import Dictionary, _str_values
 from rdfproject_msc_spark.sources import triples as TIO
 from rdfproject_msc_spark.sparql.planner import sparql_to_df
 from rdfproject_msc_spark.store import TripleStore
 
-# planned requests one Engine keeps for its current snapshot: room for
-# the distinct texts of a typical endpoint session (the benchmark's
-# query stream has about 36)
-_PLAN_CACHE_MAX = 64
+# bytes of endpoint answers one Engine keeps for its current snapshot:
+# room for a session's distinct texts (the benchmark's query stream has
+# about 36, a few KB each) and for a few full one-document answers
+_ANSWER_CACHE_BYTES = 16 << 20
+
+
+def _answer_bytes(key: tuple, value: tuple) -> int:
+    """What one cached answer weighs: its strings' UTF-8 bytes."""
+    return sum(
+        len(x.encode("utf-8")) for x in key + value if isinstance(x, str)
+    )
 
 
 class Engine:
     """One triple store + one dictionary + the query surface over them,
-    with the endpoint's planned-request cache described in the module
-    doc."""
+    with the endpoint's answer cache described in the module doc."""
 
     def __init__(
         self,
@@ -85,10 +90,12 @@ class Engine:
         # dictionary, rank intermediates) — released by release_caches()
         # / close() / vacuum() once nothing reads their lineage
         self._ingest_caches: list = []
-        # planned requests and the snapshot they were planned on
-        self._plans: dict = {}
-        self._plans_of: tuple = ()
-        self._plans_lock = threading.Lock()
+        # endpoint answers: key → (value, bytes), oldest use first; the
+        # snapshot they answer and their total bytes
+        self._answers: dict = {}
+        self._answers_of: tuple = ()
+        self._answers_size = 0
+        self._answers_lock = threading.Lock()
 
     # -- entry point 3: ingest + layout -----------------------------------
     def load_triples(
@@ -168,19 +175,17 @@ class Engine:
             # dictionary (one extra cached column) — every lexical-store
             # term attach re-ran the unquote/unescape regex chain over
             # |dict| rows per action before this.
-            from rdfproject_msc_spark.sparql.planner import _lex_str_value
-
-            dict_sv = dict_df.select(
-                "id",
-                "term",
-                _lex_str_value(F.col("id"), F.col("term")).alias("__sv"),
-            ).persist(StorageLevel.MEMORY_AND_DISK)
+            dict_sv = _str_values(dict_df).persist(
+                StorageLevel.MEMORY_AND_DISK
+            )
             self._ingest_caches.append(dict_sv)
             # built dictionaries scale with the corpus: no broadcast hint
-            self.dictionary = Dictionary(
-                dict_sv.select("id", "term"),
-                broadcast_hint=False,
-                sv_df=dict_sv,
+            self._swap_dictionary(
+                Dictionary(
+                    dict_sv.select("id", "term"),
+                    broadcast_hint=False,
+                    sv_df=dict_sv,
+                )
             )
             # built dictionaries store full lexical forms: SPARQL
             # constants must normalize to the same convention
@@ -196,8 +201,8 @@ class Engine:
         self._register_as = register_as or None
         self._negative_when = negative_when
         if dict_path is not None:
-            self.dictionary = Dictionary(
-                TIO.read_dictionary_tsv(self.spark, dict_path)
+            self._swap_dictionary(
+                Dictionary(TIO.read_dictionary_tsv(self.spark, dict_path))
             )
         return self
 
@@ -254,9 +259,11 @@ class Engine:
             self.spark, path, layout=layout, cluster_by=cluster_by
         )
         if dict_path is not None:
-            self.dictionary = Dictionary(
-                self.spark.read.parquet(dict_path),
-                broadcast_hint=dict_broadcast,
+            self._swap_dictionary(
+                Dictionary(
+                    self.spark.read.parquet(dict_path),
+                    broadcast_hint=dict_broadcast,
+                )
             )
             self.term_style = term_style or "lexical"
         elif term_style is not None:
@@ -294,40 +301,44 @@ class Engine:
             clock=clock,
         )
 
-    def _reuse(self, key: tuple, build, use):
-        """``use(value)`` for the value planned under ``key`` on the
-        current snapshot; ``build()`` makes it on a miss. A ``build`` or
-        ``use`` that raises leaves no entry behind. The endpoint's
-        request cache (module doc)."""
+    def _reuse(self, key: tuple, build):
+        """The answer made under ``key`` on the current snapshot;
+        ``build()`` makes it on a miss. A ``build`` that raises leaves
+        no entry behind. The endpoint's answer cache (module doc)."""
         key = (self.term_style,) + key
         store = self._require_store()
         # _quads, not quads_relation: that property composes a new
         # DataFrame per call, while attach_quads replaces _quads
         snap = (store, store._quads, store.graphs_disjoint, self.dictionary)
-        with self._plans_lock:
-            if len(snap) != len(self._plans_of) or any(
-                a is not b for a, b in zip(snap, self._plans_of)
+        with self._answers_lock:
+            if len(snap) != len(self._answers_of) or any(
+                a is not b for a, b in zip(snap, self._answers_of)
             ):
-                self._plans.clear()
-                self._plans_of = snap
-            snap = self._plans_of
-            value = self._plans.pop(key, None)
-            if value is not None:
-                self._plans[key] = value  # now the most recently used
-        if value is None:
-            value = build()
-            with self._plans_lock:
-                if self._plans_of is snap:
-                    while len(self._plans) >= _PLAN_CACHE_MAX:
-                        del self._plans[next(iter(self._plans))]
-                    self._plans[key] = value
-        try:
-            return use(value)
-        except BaseException:
-            with self._plans_lock:
-                if self._plans.get(key) is value:
-                    del self._plans[key]
-            raise
+                self._clear_answers()
+                self._answers_of = snap
+            snap = self._answers_of
+            hit = self._answers.pop(key, None)
+            if hit is not None:
+                self._answers[key] = hit  # now the most recently used
+                return hit[0]
+        value = build()
+        size = _answer_bytes(key, value)
+        with self._answers_lock:
+            if (
+                self._answers_of is snap
+                and key not in self._answers
+                and size <= _ANSWER_CACHE_BYTES
+            ):
+                while self._answers_size + size > _ANSWER_CACHE_BYTES:
+                    _, old = self._answers.pop(next(iter(self._answers)))
+                    self._answers_size -= old
+                self._answers[key] = (value, size)
+                self._answers_size += size
+        return value
+
+    def _clear_answers(self) -> None:
+        self._answers.clear()
+        self._answers_size = 0
 
     # -- SPARQL 1.1 Update (copy-on-write) ---------------------------------
     def update(self, update_str: str, negative_when=None) -> "Engine":
@@ -354,15 +365,15 @@ class Engine:
         property edges (the oriented property-graph mapping), and
         per-declared-property transitive closures — schema closures are
         ontology-sized broadcasts, the corpus pays one distinct. The
-        store swaps copy-on-write, exactly like ``update``; queries
-        over the materialized store see entailed triples with no
-        query-time rewriting. ``canonicalize_same_as()`` first when the
+        closure is materialized once and becomes the store's new base
+        (copy-on-write, like ``update``); queries over it see entailed
+        triples with no query-time rewriting and no re-run of the
+        rules. ``canonicalize_same_as()`` first when the
         data carries owl:sameAs identities."""
         from rdfproject_msc_spark.operators.rdfs import (
             rdfs_closure,
             resolve_vocab,
         )
-        from rdfproject_msc_spark.sparql.update import _clone_store
 
         if self.dictionary is None:
             raise ValueError(
@@ -371,23 +382,20 @@ class Engine:
             )
         store = self._require_store()
         vocab = resolve_vocab(self.dictionary, self.term_style)
-        self.store = _clone_store(store, df=rdfs_closure(store.df, vocab))
-        if self._register_as:
-            self.store.register(self.spark, self._register_as)
+        self._swap_base(store, rdfs_closure(store.df, vocab))
         return self
 
     def canonicalize_same_as(self) -> "Engine":
         """owl:sameAs smushing (operators/rdfs.py): identity clusters
         (connected components of the sameAs graph) collapse onto their
         min-id representative — every statement rewrites through the
-        mapping, the sameAs statements drop, the store swaps
-        copy-on-write. A dictionary without the sameAs term means no
+        mapping, the sameAs statements drop, and the result is
+        materialized once as the store's new base. A dictionary without the sameAs term means no
         such statements can exist: no-op."""
         from rdfproject_msc_spark.operators.rdfs import (
             resolve_vocab,
             same_as_fixpoint,
         )
-        from rdfproject_msc_spark.sparql.update import _clone_store
 
         if self.dictionary is None:
             raise ValueError("canonicalize_same_as needs a dictionary")
@@ -398,10 +406,16 @@ class Engine:
         out = same_as_fixpoint(store.df, vocab)
         if out is None:
             return self  # no identity vocabulary in this dictionary
-        self.store = _clone_store(store, df=out)
+        self._swap_base(store, out)
+        return self
+
+    def _swap_base(self, store: TripleStore, df: DataFrame) -> None:
+        """Replace ``store``'s triple base by ``df``, materialized once
+        (as ``vacuum`` does) so later actions read it instead of running
+        its lineage again."""
+        self.store = store.with_base(df.localCheckpoint(eager=True))
         if self._register_as:
             self.store.register(self.spark, self._register_as)
-        return self
 
     def decode(self, df: DataFrame, columns: list[str] | None = None) -> DataFrame:
         if self.dictionary is None:
@@ -410,8 +424,9 @@ class Engine:
 
     # -- lifecycle: cache release + compaction ------------------------------
     def release_caches(self) -> "Engine":
-        """Unpersist every DataFrame the raw-RDF ingest cached, and drop
-        the endpoint's planned requests with their executed plans. Only
+        """Unpersist every DataFrame the raw-RDF ingest cached, drop the
+        dictionary's materialized STR values and the endpoint's answers.
+        Only
         call once nothing live reads their lineage (after ``save()`` +
         re-``open()``, or after ``vacuum()`` — which calls this itself);
         unpersisting earlier silently recomputes the multi-shuffle rank
@@ -419,9 +434,11 @@ class Engine:
         for df in self._ingest_caches:
             df.unpersist()
         self._ingest_caches.clear()
-        with self._plans_lock:
-            self._plans.clear()
-            self._plans_of = ()
+        if self.dictionary is not None:
+            self.dictionary.release()
+        with self._answers_lock:
+            self._clear_answers()
+            self._answers_of = ()
         return self
 
     def close(self) -> None:
@@ -456,8 +473,6 @@ class Engine:
         through the old→new mapping — decoded answers identical, ids
         dense again. Returns ``{"terms_before", "terms_after",
         "dropped"}``."""
-        from pyspark.sql import functions as F
-
         from rdfproject_msc_spark.sources.ntriples import _lex_ranks
 
         store = self._require_store()
@@ -559,8 +574,8 @@ class Engine:
         after = new_dict.count()
         for c in rank_caches:
             c.unpersist()  # the checkpointed snapshot no longer reads them
-        self.dictionary = Dictionary(
-            new_dict, broadcast_hint=self.dictionary.broadcast_hint
+        self._swap_dictionary(
+            Dictionary(new_dict, broadcast_hint=self.dictionary.broadcast_hint)
         )
         self.store = store.with_base(new_df, new_quads, pin=False)
         store.release_deltas()
@@ -572,6 +587,13 @@ class Engine:
             "terms_after": after,
             "dropped": dropped,
         }
+
+    def _swap_dictionary(self, dictionary: Dictionary) -> None:
+        """Install a dictionary with a new base, dropping the STR values
+        the replaced one derived."""
+        if self.dictionary is not None:
+            self.dictionary.release()
+        self.dictionary = dictionary
 
     def _release_store(self) -> None:
         """Release the pending update deltas of the store being replaced."""

@@ -8,9 +8,9 @@ response is the content-negotiated W3C results document
 The JSON, XML and TSV documents decode on the driver after the capped
 collect: at most ``json_limit + 1`` undecoded rows come back, and only
 their ids are looked up in the dictionary. The engine keeps each
-planned request with the capped Dataset it collects, for as long as its
-store and dictionary stay the same (engine.py): a repeated query is one
-Spark action, with no parse and no plan build.
+finished answer for as long as its store and dictionary stay the same
+(engine.py): a repeated query runs no parse, no plan build and no Spark
+job.
 CONSTRUCT/DESCRIBE answer an RDF graph: N-Triples by default,
 subject-grouped Turtle (prefixes from the query's own prolog) under
 ``Accept: text/turtle``.
@@ -104,20 +104,18 @@ def _graph_body(capped, prefixes, fmt: str, limit: int) -> tuple[str, str]:
     return "\n".join(header + lines) + "\n", "turtle"
 
 
-def _plan_answer(engine, query: str, fmt: str, limit: int,
-                 strict_terms: bool):
-    """Parse and plan one request. Returns the prepared answer: a
-    function of no arguments that runs the one action and returns
-    (body, format-actually-used). The query FORM comes from the parsed
-    query (not a text sniff — a PREFIX IRI containing 'describe' must
-    not reroute a SELECT). ASK has no CSV/TSV document form — those
-    Accepts fall back to the JSON boolean document (server-chosen
-    format, per protocol).
+def _answer(engine, query: str, fmt: str, limit: int, strict_terms: bool):
+    """Parse, plan and run one request: returns (body,
+    format-actually-used). The query FORM comes from the parsed query
+    (not a text sniff — a PREFIX IRI containing 'describe' must not
+    reroute a SELECT). ASK has no CSV/TSV document form — those Accepts
+    fall back to the JSON boolean document (server-chosen format, per
+    protocol).
 
     SELECT answers in JSON, XML and TSV are planned undecoded and
     decode on the driver, after the capped collect, through the
-    dictionary's id → term cache (sparql/results.py); CSV, ASK and
-    graph answers keep the decode join."""
+    dictionary's id → term map (sparql/results.py); CSV, ASK and graph
+    answers keep the decode join."""
     from rdfproject_msc_spark.sparql import results as RES
     from rdfproject_msc_spark.sparql.parser import parse_sparql
     from rdfproject_msc_spark.sparql.planner import id_columns
@@ -132,39 +130,34 @@ def _plan_answer(engine, query: str, fmt: str, limit: int,
         strict_terms=strict_terms,
     )
     if graph:
-        capped, prefixes = RES.capped_frame(df, limit), dict(bgp.prefixes)
-        return lambda: _graph_body(capped, prefixes, fmt, limit)
+        capped = RES.capped_frame(df, limit)
+        return _graph_body(capped, dict(bgp.prefixes), fmt, limit)
     if bgp.ask:
         used = "xml" if fmt == "xml" else "json"
         doc = RES.ask_xml if used == "xml" else RES.ask_json
-        return lambda: (doc(bool(df.collect()[0]["ask"])), used)
+        return doc(bool(df.collect()[0]["ask"])), used
     if fmt == "csv":
         capped = RES.capped_frame(df, limit, csv=True)
-        return lambda: (RES.results_csv(capped, limit), "csv")
+        return RES.results_csv(capped, limit), "csv"
     decode = (
         {"dictionary": dictionary, "columns": id_columns(bgp, df.columns)}
         if dictionary is not None
         else {}
     )
-    capped = RES.capped_frame(df, limit)
     used = fmt if fmt in ("xml", "tsv") else "json"
-    return lambda: (
-        getattr(RES, f"results_{used}")(capped, limit, **decode),
-        used,
-    )
+    serialize = getattr(RES, f"results_{used}")
+    return serialize(RES.capped_frame(df, limit), limit, **decode), used
 
 
 def _run_query(
     engine, query: str, fmt: str, limit: int, strict_terms: bool
 ) -> tuple[str, str]:
     """Execute and serialize: returns (body, format-actually-used).
-    The engine keeps the prepared answer (``_plan_answer``) for its
-    current snapshot (engine.py), so a repeated request neither parses
-    nor plans: it collects the same capped Dataset again."""
+    The engine keeps the answer for its current snapshot (engine.py),
+    so a repeated request runs no parse, plan or Spark job."""
     return engine._reuse(
         (query, fmt, limit, strict_terms),
-        lambda: _plan_answer(engine, query, fmt, limit, strict_terms),
-        lambda answer: answer(),
+        lambda: _answer(engine, query, fmt, limit, strict_terms),
     )
 
 

@@ -17,18 +17,15 @@ solution DataFrames serialize to the three standard result formats
 - Given a ``dictionary``, the one-document JSON, XML and TSV forms
   decode on the driver: they collect at most ``limit + 1`` undecoded
   rows, apply the row cap, and only then map the id columns to terms
-  with one bounded ``Dictionary.decode_ids`` lookup (none when its
-  cache has seen every id). The collect keeps the rows' order, so an
-  ORDER BY needs no re-sort after the decode. The one-document CSV
-  form keeps the decode join: its plain-string transform is the column
-  expression it shares with the distributed sink.
+  with one ``Dictionary.decode_ids`` lookup (no job when the
+  dictionary is held whole on the driver or its cache has seen every
+  id). The collect keeps the rows' order, so an ORDER BY needs no
+  re-sort after the decode. The one-document CSV form keeps the decode
+  join: its plain-string transform is the column expression it shares
+  with the distributed sink.
 - Each one-document form takes the Dataset it collects, built by
-  ``capped_frame``, rather than the solution frame. Collecting the
-  same Dataset object again reuses its executed plan, with AQE's
-  finished broadcast and shuffle stages; a new ``df.limit`` is a new
-  Dataset, which plans and runs every stage again. The endpoint keeps
-  that Dataset with its planned request (engine.py), so a repeated
-  request costs one short action.
+  ``capped_frame`` (the one place that caps a solution frame), rather
+  than the solution frame.
 
 Term-kind classification reads the engine's term text grammar (the
 same conventions the planner's accessors use): ``<iri>``/localized
@@ -144,8 +141,7 @@ def write_results_csv(df: DataFrame, path: str) -> None:
 def capped_frame(df: DataFrame, limit: int, csv: bool = False) -> DataFrame:
     """The Dataset a one-document form collects: at most ``limit + 1``
     rows of ``df`` (one past the cap, so an overflow shows), in the
-    plain string forms for ``csv`` (``df`` decoded). Serializing the
-    same one again reuses its executed plan (module doc)."""
+    plain string forms for ``csv`` (``df`` decoded)."""
     if csv:
         df = df.select(*_csv_plain_cols(df))
     return df.limit(limit + 1)

@@ -96,7 +96,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rdfproject_msc_spark.dictionary import Dictionary
+from rdfproject_msc_spark.dictionary import Dictionary, _str_values
 from rdfproject_msc_spark.sparql.parser import (
     SparqlSyntaxError,
     _PREFIX_DECL,
@@ -1334,13 +1334,7 @@ def _apply_op(engine, store: TripleStore, op, negative_when) -> None:
             )
             # keep the STR values next to the loaded dictionary: the
             # checkpoint below derives them once
-            from rdfproject_msc_spark.sparql.planner import _lex_str_value
-
-            dict_df = dict_df.select(
-                "id",
-                "term",
-                _lex_str_value(F.col("id"), F.col("term")).alias("__sv"),
-            )
+            dict_df = _str_values(dict_df)
             # materialize INSIDE the try: SILENT must swallow
             # failures surfacing anywhere in the scan (a file
             # deleted between listing and read, a corrupt member
@@ -1358,10 +1352,12 @@ def _apply_op(engine, store: TripleStore, op, negative_when) -> None:
             raise
         for c in load_caches:
             c.unpersist()  # both outputs are checkpointed copies
-        engine.dictionary = Dictionary(
-            dict_df.select("id", "term"),
-            broadcast_hint=engine.dictionary.broadcast_hint,
-            sv_df=dict_df,
+        engine._swap_dictionary(
+            Dictionary(
+                dict_df.select("id", "term"),
+                broadcast_hint=engine.dictionary.broadcast_hint,
+                sv_df=dict_df,
+            )
         )
         if op.graph_slot is None:
             store = store.with_changes(inserted=df)

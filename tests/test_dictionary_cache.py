@@ -1,6 +1,7 @@
-"""The per-Dictionary lookup caches, the endpoint's driver-side decode
-and the lazily derived STR-value relation, on a save → open lexical
-store (the shape the HTTP endpoint serves)."""
+"""The per-Dictionary lookup maps (the whole dictionary on the driver
+when it fits, bounded caches otherwise), the endpoint's driver-side
+decode and the STR-value relation an opened dictionary derives once,
+on a save → open lexical store (the shape the HTTP endpoint serves)."""
 
 from __future__ import annotations
 
@@ -108,6 +109,7 @@ def test_lookups_past_the_cache_bound_stay_correct(monkeypatch, opened):
     d = opened.dictionary
     want = {t: expect[t] for t in terms if t in expect}
     assert d.lookup_terms(terms) == want  # more new keys than the bound
+    assert d._whole is False  # too large to hold whole: per-key path
     assert len(d._ids) <= 4
     for i in range(0, len(terms), 3):  # clears and refills repeatedly
         chunk = terms[i : i + 3]
@@ -122,6 +124,46 @@ def test_lookups_past_the_cache_bound_stay_correct(monkeypatch, opened):
         chunk = ids[i : i + 3]
         assert d.decode_ids(chunk) == {i: by_id[i] for i in chunk if i}
         assert len(d._terms) <= 4
+    # a driver-row extend of a large dictionary stays on the per-key path
+    ext = d.extend([(10**6, f"<{EX}zed>")])
+    assert ext._whole is False
+    assert ext.lookup_terms(terms[:2] + [f"<{EX}zed>"]) == {
+        **{t: expect[t] for t in terms[:2]}, f"<{EX}zed>": 10**6
+    }
+    assert ext.decode_ids([10**6, 0]) == {10**6: f"<{EX}zed>"}
+
+
+def test_whole_dictionary_answers_every_key_without_a_job(spark, opened):
+    d = opened.dictionary
+    expect = {r["term"]: r["id"] for r in d.df.collect()}
+    assert d._whole is None
+    before = _job_ids(spark)
+    assert d.lookup_terms([f"<{EX}a>"]) == {f"<{EX}a>": expect[f"<{EX}a>"]}
+    assert _job_ids(spark) - before  # the fill
+    assert d._whole and d._ids == expect
+    absent = [f"<{EX}absent{i}>" for i in range(3)]
+    by_id = {i: t for t, i in expect.items()}
+    before = _job_ids(spark)
+    assert d.lookup_terms(sorted(expect) + absent) == expect
+    assert d.decode_ids(sorted(by_id) + [0, 10**9]) == by_id
+    with pytest.raises(DictionaryError):
+        d.encode_terms(absent)
+    # an INSERT's driver-row extend carries the whole map
+    new = f"<{EX}zed>"
+    opened.update(f"INSERT DATA {{ {new} <{EX}knows> {absent[0]} }}")
+    ext = opened.dictionary
+    assert ext is not d and ext._whole
+    before = _job_ids(spark)
+    found = ext.lookup_terms([new, absent[0], absent[1], f"<{EX}a>"])
+    assert set(found) == {new, absent[0], f"<{EX}a>"}
+    assert ext.decode_ids([found[new], found[absent[0]], -(10**9)]) == {
+        found[new]: new, found[absent[0]]: absent[0]
+    }
+    assert _job_ids(spark) - before == set()
+    rows = opened.sparql(
+        f"SELECT ?o WHERE {{ {new} <{EX}knows> ?o }}", decode=True
+    ).collect()
+    assert [r["o"] for r in rows] == [absent[0]]
 
 
 def test_driver_row_extend_keeps_cache_entries(spark):
@@ -270,8 +312,8 @@ STR_QUERIES = [
 
 def test_str_values_agree_on_opened_and_ingested_stores(stores):
     mem, opened, _ = stores
-    assert opened.dictionary._given_sv is None  # derived lazily
-    assert mem.dictionary._given_sv is not None  # persisted by the ingest
+    assert not mem.dictionary._own_sv  # persisted by the ingest
+    assert mem.dictionary._base_sv is not None
     answers = []
     for q in STR_QUERIES:
         got = sorted(
@@ -285,3 +327,89 @@ def test_str_values_agree_on_opened_and_ingested_stores(stores):
         a: "Al\nice", b: 'say "hi"', c: "café", d: "smile \U0001F600 ok",
     }
     assert answers[2:] == [[(a,)], [(b,)], [(c,)], [(d,)], [(d,)]]
+    assert opened.dictionary._own_sv  # derived once, on first use
+
+
+def _derivations(monkeypatch) -> list:
+    """The relations the dictionary derives STR values over, as they
+    are derived."""
+    seen = []
+
+    def recording(df):
+        seen.append(df)
+        return derive(df)
+
+    derive = D._str_values
+    monkeypatch.setattr(D, "_str_values", recording)
+    return seen
+
+
+def _value_query(constant: str) -> str:
+    return (
+        f"SELECT ?s WHERE {{ ?s <{EX}name> ?n "
+        f"FILTER(CONTAINS(STR(?n), \"{constant}\")) }}"
+    )
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_second_value_query_runs_no_derivation(monkeypatch, opened):
+    seen = _derivations(monkeypatch)
+    assert opened.sparql(_value_query("hi"), decode=True).count() == 1
+    assert len(seen) == 1 and opened.dictionary._own_sv
+    seen.clear()
+    df = opened.sparql(_value_query("caf"), decode=True)
+    assert not seen
+    # the plan reads the materialized values: no unescape chain in it
+    plan = _optimized(df)
+    assert "array_join" not in plan and "LogicalRDD" in plan
+    assert [r["s"] for r in df.collect()] == [f"<{EX}c>"]
+
+
+def test_read_after_insert_derives_only_the_new_rows(monkeypatch, opened):
+    seen = _derivations(monkeypatch)
+    opened.sparql(_value_query("hi")).count()
+    base = opened.dictionary._base_sv
+    assert len(seen) == 1
+    seen.clear()
+    opened.update(
+        f'INSERT DATA {{ <{EX}e> <{EX}name> "fresh \\u00E9 one" . '
+        f'<{EX}f> <{EX}name> "another" }}'
+    )
+    ext = opened.dictionary
+    assert ext._base_sv is base and ext._own_sv
+    got = opened.sparql(_value_query("é on"), decode=True).collect()
+    assert [r["s"] for r in got] == [f"<{EX}e>"]
+    # one derivation, over the update's new terms alone
+    assert len(seen) == 1
+    assert sorted(r["term"] for r in seen[0].collect()) == sorted(
+        t for _, t in ext._local
+    )
+    assert len(ext._local) == 4  # two subjects, two literals
+
+
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_derived_str_values_release_with_their_base(spark, stores):
+    store, dict_path = stores[2]
+    eng = Engine(spark).open(store, dict_path=dict_path)
+    q = _value_query("hi")
+    for step in (
+        lambda: eng.vacuum(),
+        lambda: eng.open(store, dict_path=dict_path),
+        lambda: eng.close(),
+    ):
+        assert eng.sparql(q).count() == 1
+        d = eng.dictionary
+        rdd = d._base_sv._jdf.queryExecution().analyzed().rdd().id()
+        assert rdd in _persisted(spark)
+        step()
+        assert rdd not in _persisted(spark)
+        assert d._base_sv is None and not d._own_sv
+    # a closed engine's dictionary derives again when asked
+    assert eng.sparql(q, decode=True).collect()[0]["s"] == f"<{EX}b>"
+    eng.close()

@@ -1,7 +1,8 @@
-"""The endpoint's planned-request cache (engine.py): a repeated request
-neither parses nor plans, answers stay those of a fresh plan across
-every snapshot change, the key separates what the plan reads, errors
-are never cached, and the bound holds."""
+"""The endpoint's answer cache (engine.py): a repeated request runs no
+parse, plan or Spark job and returns the same bytes, answers stay those
+of a fresh plan across every snapshot change, the key separates what
+an answer reads, errors and nondeterministic queries are never cached,
+and the byte budget holds."""
 
 from __future__ import annotations
 
@@ -108,7 +109,13 @@ def _answer(eng, query: str) -> list:
 
 def _entry(eng, query: str):
     """The cached JSON answer of ``query`` at row cap 100, if any."""
-    return eng._plans.get((eng.term_style, query, "json", 100, False))
+    return eng._answers.get((eng.term_style, query, "json", 100, False))
+
+
+GRAPH_QUERY = (
+    f"CONSTRUCT {{ ?s <{EX}likes> ?o }} "
+    f"WHERE {{ ?s <{RDFS}subPropertyOf> ?o }}"
+)
 
 
 def test_repeated_request_skips_parse_and_plan(spark, eng, calls):
@@ -119,19 +126,22 @@ def test_repeated_request_skips_parse_and_plan(spark, eng, calls):
         ("tsv", knows("c")),
         ("csv", f"SELECT ?s WHERE {{ ?s <{EX}name> ?n }}"),
         ("json", f"ASK {{ ?s <{EX}knows> <{EX}meets> }}"),
-        ("turtle", f"CONSTRUCT {{ ?s <{EX}likes> ?o }} "
-                   f"WHERE {{ ?s <{RDFS}subPropertyOf> ?o }}"),
+        ("xml", f"ASK {{ ?s <{EX}knows> <{EX}b> }}"),
+        ("nt", GRAPH_QUERY),
+        ("turtle", GRAPH_QUERY),
     ):
         calls.clear()
         before = _job_ids(spark)
         first = _run_query(eng, query, fmt, 100, False)
-        first_jobs = _job_ids(spark) - before
+        assert _job_ids(spark) - before, fmt
         assert calls["parse"] and calls["plan"], fmt
         calls.clear()
         before = _job_ids(spark)
-        assert _run_query(eng, query, fmt, 100, False) == first
-        assert len(_job_ids(spark) - before) < len(first_jobs), fmt
+        again = _run_query(eng, query, fmt, 100, False)
+        assert _job_ids(spark) - before == set(), fmt
         assert not calls, fmt
+        assert again == first
+        assert again[0].encode("utf-8") == first[0].encode("utf-8")
     # Engine.sparql itself plans anew on every call
     calls.clear()
     assert eng.sparql(knows("a")) is not eng.sparql(knows("a"))
@@ -152,7 +162,7 @@ def test_answers_follow_every_snapshot_change(eng, paths):
     for reindex in (False, True):
         assert _entry(eng, knows("a")) is not None
         eng.vacuum(reindex=reindex)
-        assert not eng._plans  # released at once, not at the next read
+        assert not eng._answers  # released at once, not at the next read
         assert _answer(eng, knows("a")) == [(d,)]
     eng.open(paths["store"], dict_path=paths["dict"])
     assert _answer(eng, knows("a")) == [(b,)]
@@ -194,7 +204,7 @@ def test_strict_and_term_style_are_separate_entries(eng):
     eng.term_style = "localized"
     _answer(eng, q)
     assert _entry(eng, q) is not planned
-    assert len([k for k in eng._plans if k[1] == q]) == 2
+    assert len([k for k in eng._answers if k[1] == q]) == 2
     eng.term_style = "lexical"
     assert _answer(eng, q) == lexical
     assert _entry(eng, q) is planned
@@ -210,7 +220,7 @@ def test_errors_are_never_cached(eng, calls):
             _run_query(eng, absent, "json", 100, True)
         with pytest.raises(ResultSizeExceeded):
             _run_query(eng, everything, "json", 2, False)
-    queries = {key[1] for key in eng._plans}
+    queries = {key[1] for key in eng._answers}
     assert not queries & {"SELECT ?s WHERE {", absent, everything}
     calls.clear()
     with pytest.raises(ResultSizeExceeded):
@@ -218,36 +228,101 @@ def test_errors_are_never_cached(eng, calls):
     assert calls["plan"] == 1
 
 
+NONDETERMINISTIC = [
+    f"SELECT ?s ?v WHERE {{ ?s <{EX}knows> ?o BIND({fn} AS ?v) }}"
+    for fn in ("NOW()", "RAND()", "UUID()", "STRUUID()")
+] + [
+    f"SELECT ?s ({fn} AS ?v) WHERE {{ ?s <{EX}knows> ?o }}"
+    for fn in ("NOW()", "RAND()", "UUID()", "STRUUID()")
+] + [
+    f"SELECT ?s WHERE {{ ?s <{EX}knows> ?o FILTER({fn} != ?o) }}"
+    for fn in ("NOW()", "RAND()", "UUID()", "STRUUID()")
+]
+
+
+@pytest.mark.parametrize("query", NONDETERMINISTIC)
+def test_nondeterministic_queries_reject_and_leave_no_entry(eng, query):
+    """An answer depends only on the snapshot and the key: on the
+    endpoint path (no clock) every nondeterministic built-in rejects at
+    parse, on every repeat, in every format."""
+    for fmt in ("json", "csv", "xml"):
+        for _ in range(2):
+            with pytest.raises(SparqlSyntaxError):
+                _run_query(eng, query, fmt, 100, False)
+    assert not eng._answers
+
+
+def _sizes(eng) -> dict:
+    return {key[1]: size for key, (_, size) in eng._answers.items()}
+
+
 def test_answers_stay_correct_past_the_bound(monkeypatch, eng):
-    monkeypatch.setattr(E, "_PLAN_CACHE_MAX", 2)
     want = {"a": [(f"{EX}b",)], "b": [(f"{EX}c",)], "c": []}
+    for s, expect in want.items():
+        assert _answer(eng, knows(s)) == expect
+    budget = max(_sizes(eng).values())  # room for one answer at a time
+    monkeypatch.setattr(E, "_ANSWER_CACHE_BYTES", budget)
+    eng.release_caches()
     for _ in range(2):
         for s, expect in want.items():
             assert _answer(eng, knows(s)) == expect
-            assert len(eng._plans) <= 2
+            assert 0 < eng._answers_size <= budget
+            assert eng._answers_size == sum(_sizes(eng).values())
+    # an answer larger than the whole budget is served, not kept
+    monkeypatch.setattr(E, "_ANSWER_CACHE_BYTES", 1)
+    eng.release_caches()
+    assert _answer(eng, knows("a")) == want["a"]
+    assert not eng._answers and eng._answers_size == 0
+
+
+def test_small_byte_budget_evicts_least_recently_used(monkeypatch, eng, calls):
+    q1, q2, q3 = (knows(s) for s in "abc")
+    for q in (q1, q2, q3):
+        _run_query(eng, q, "json", 100, False)
+    sizes = _sizes(eng)
+    monkeypatch.setattr(E, "_ANSWER_CACHE_BYTES", sum(sizes.values()) - 1)
+    eng.release_caches()
+    _run_query(eng, q1, "json", 100, False)
+    _run_query(eng, q2, "json", 100, False)
+    calls.clear()
+    _run_query(eng, q1, "json", 100, False)  # a hit: q1 is now the newest
+    assert not calls
+    _run_query(eng, q3, "json", 100, False)  # evicts q2, the oldest use
+    assert set(_sizes(eng)) == {q1, q3}
+    assert eng._answers_size == sizes[q1] + sizes[q3]
+    calls.clear()
+    body = _run_query(eng, q2, "json", 100, False)[0]  # a miss again
+    assert calls["parse"] and calls["plan"]
+    assert [b["o"]["value"] for b in json.loads(body)["results"]["bindings"]] \
+        == [f"{EX}c"]
+    assert set(_sizes(eng)) == {q3, q2}  # q1 was the oldest use now
 
 
 def test_concurrent_requests_keep_the_bound(monkeypatch):
     """More threads than cores hit one engine's cache with a short
-    switch interval: every value answers its own key, and the cache
-    never holds more than its bound. No Spark: the cache only reads
-    the store's identity and two of its attributes."""
+    switch interval: every value answers its own key, and the cached
+    bytes never pass the budget. No Spark: the cache only reads the
+    store's identity and two of its attributes."""
     import sys
     import threading
     from types import SimpleNamespace
 
-    monkeypatch.setattr(E, "_PLAN_CACHE_MAX", 4)
+    def value(k: int) -> tuple:
+        return (f"body-{k}" * (1 + k), "json")
+
+    one = E._answer_bytes(("localized", "k", 8), value(8))
+    monkeypatch.setattr(E, "_ANSWER_CACHE_BYTES", 4 * one)
     eng = Engine(None, store=SimpleNamespace(_quads=None,
                                              graphs_disjoint=False))
     sizes, wrong = [], []
 
     def worker(n: int) -> None:
         for i in range(400):
-            key = ("k", (n + i) % 9)
-            got = eng._reuse(key, lambda key=key: key, lambda v: v)
-            if got != key:
-                wrong.append((key, got))
-            sizes.append(len(eng._plans))
+            k = (n + i) % 9
+            got = eng._reuse(("k", k), lambda k=k: value(k))
+            if got != value(k):
+                wrong.append((k, got))
+            sizes.append(eng._answers_size)
 
     old = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
@@ -263,4 +338,5 @@ def test_concurrent_requests_keep_the_bound(monkeypatch):
         sys.setswitchinterval(old)
     assert not any(t.is_alive() for t in threads)
     assert not wrong
-    assert len(sizes) == 16 * 400 and max(sizes) <= 4
+    assert len(sizes) == 16 * 400 and max(sizes) <= 4 * one
+    assert eng._answers_size == sum(s for _, s in eng._answers.values())

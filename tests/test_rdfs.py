@@ -317,6 +317,30 @@ def test_engine_materialize_rdfs_lexical(spark, tmp_path):
     )
 
 
+def test_materialized_closures_are_read_not_rerun(spark, tmp_path):
+    """materialize_rdfs and canonicalize_same_as install their result
+    once, materialized: the store's relation is a scan of it, not the
+    closure's joins and distinct, which every later action would run
+    again."""
+    OWL = "http://www.w3.org/2002/07/owl#"
+    nt = tmp_path / "m.nt"
+    nt.write_text(
+        f"<urn:Dog> <{RDFS}subClassOf> <urn:Animal> .\n"
+        f"<urn:rex> <{RDF}type> <urn:Dog> .\n"
+        f"<urn:rex> <{OWL}sameAs> <urn:rex2> .\n"
+    )
+    eng = Engine(spark).load_triples(str(nt), fmt="nt", layout="single")
+    for step in (eng.materialize_rdfs, eng.canonicalize_same_as):
+        step()
+        plan = eng.store.df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" in plan, plan
+        assert "Join" not in plan and "Aggregate" not in plan, plan
+    q = f"SELECT ?x WHERE {{ ?x <{RDF}type> <urn:Animal> }}"
+    assert [r["x"] for r in eng.sparql(q, decode=True).collect()] == [
+        "<urn:rex2>"
+    ]
+
+
 def test_vocabulary_absent_rules_disable(spark, tmp_path):
     """An ontology that never mentions rdfs:range derives no range
     typings and raises nothing — absent vocabulary disables its rule."""
