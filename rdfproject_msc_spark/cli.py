@@ -24,6 +24,16 @@ def _spark(cpus: int | None):
     return get_spark(app_name="rdfspark-cli", cpus=cpus)
 
 
+def _must_differ(a: str | None, b: str | None, message: str) -> None:
+    """Exit with ``message`` when ``a`` and ``b`` name the same path: a
+    command that reads one snapshot while writing the next must not
+    overwrite what it still reads. Checked before Spark starts."""
+    import os
+
+    if a and b and os.path.realpath(a) == os.path.realpath(b):
+        raise SystemExit(message)
+
+
 def _add_common(p: argparse.ArgumentParser) -> None:
     p.add_argument("--cpus", type=int, default=None)
     p.add_argument("--show", type=int, default=20, help="rows to print")
@@ -509,120 +519,63 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.command == "ingest":
-        from rdfproject_msc_spark.sources import ntriples as NT
+        from rdfproject_msc_spark.sources.ntriples import ingest_rdf
         from rdfproject_msc_spark.store import TripleStore
 
-        import os as _os
-
-        if sum(map(bool, (args.nt, args.nq, args.ttl, args.trig,
-                          args.rdfxml, args.jsonld))) != 1:
+        given = [
+            (fmt, getattr(args, fmt))
+            for fmt in ("nt", "nq", "ttl", "trig", "rdfxml", "jsonld")
+            if getattr(args, fmt)
+        ]
+        if len(given) != 1:
             raise SystemExit(
                 "ingest needs exactly one of --nt / --nq / --ttl / "
                 "--trig / --rdfxml / --jsonld"
             )
-        if args.dict_in and _os.path.realpath(args.dict_in) == _os.path.realpath(
-            args.dict_out
-        ):
-            # overwriting the parquet the lazy union still reads would
-            # destroy the existing ids mid-job — require a fresh path
-            raise SystemExit(
-                "--dict-out must differ from --dict-in (the append reads "
-                "the old dictionary while writing the new one)"
-            )
-        if (args.nq or args.trig) and not args.quads_out:
+        [(fmt, path)] = given
+        # overwriting the parquet the lazy union still reads would
+        # destroy the existing ids mid-job — require a fresh path
+        _must_differ(
+            args.dict_in, args.dict_out,
+            "--dict-out must differ from --dict-in (the append reads "
+            "the old dictionary while writing the new one)",
+        )
+        if fmt in ("nq", "trig") and not args.quads_out:
             raise SystemExit(
                 "--nq/--trig requires --quads-out: named-graph statements "
                 "would otherwise be parsed and silently discarded"
             )
+        if fmt in ("nq", "trig") and args.dict_in:
+            raise SystemExit(
+                "--dict-in applies to triple formats only "
+                "(--nt / --ttl / --rdfxml / --jsonld)"
+            )
         spark = _spark(args.cpus)
-        from pyspark import StorageLevel
-
-        # ONE parse pass per corpus (r10 ADVICE): the parsed relation
-        # persists and every downstream traversal — dictionary build,
-        # store encode, quads encode — reads the cache. The Turtle/TriG
-        # parser is a per-file Python stage, so re-parsing per sink
-        # multiplied the dominant ingest cost.
+        # ONE parse pass per corpus: ingest_rdf persists the parsed
+        # relation and the dictionary, so the dictionary, store and
+        # quads writes below all read those caches
         caches: list = []
-        if args.nt or args.ttl or args.rdfxml or args.jsonld:
-            existing = (
+        triples, quads, d = ingest_rdf(
+            spark,
+            path,
+            fmt,
+            negative_when=args.negative_when,
+            on_error=args.on_error,
+            dictionary=(
                 spark.read.parquet(args.dict_in) if args.dict_in else None
-            )
-            if args.ttl:
-                from rdfproject_msc_spark.sources.turtle import parse_turtle
-
-                spo = parse_turtle(spark, args.ttl, on_error=args.on_error)
-            elif args.rdfxml:
-                from rdfproject_msc_spark.sources.rdfxml import parse_rdfxml
-
-                spo = parse_rdfxml(
-                    spark, args.rdfxml, on_error=args.on_error
-                )
-            elif args.jsonld:
-                from rdfproject_msc_spark.sources.jsonld import parse_jsonld
-
-                spo = parse_jsonld(
-                    spark, args.jsonld, on_error=args.on_error
-                )
-            else:
-                spo = NT.parse_ntriples(
-                    spark, args.nt, on_error=args.on_error
-                )
-            spo = spo.persist(StorageLevel.MEMORY_AND_DISK)
-            caches.append(spo)
-            if existing is None:
-                d = NT.build_dictionary(
-                    spo, negative_when=args.negative_when, caches=caches
-                )
-            else:
-                d = existing.select("id", "term").unionAll(
-                    NT.extend_dictionary(
-                        existing,
-                        spo,
-                        negative_when=args.negative_when,
-                        caches=caches,
-                    )
-                )
-        else:
-            if args.dict_in:
-                raise SystemExit("--dict-in is N-Triples-only for now")
-            if args.trig:
-                from rdfproject_msc_spark.sources.turtle import parse_trig
-
-                nq = parse_trig(spark, args.trig, on_error=args.on_error)
-            else:
-                nq = NT.parse_nquads(spark, args.nq, on_error=args.on_error)
-            nq = nq.persist(StorageLevel.MEMORY_AND_DISK)
-            caches.append(nq)
-            spo = nq.filter("g_term IS NULL").select(
-                "s_term", "p_term", "o_term"
-            )
-            d = NT.build_dictionary(
-                NT.quad_term_relation(nq),
-                negative_when=args.negative_when,
-                caches=caches,
-            )
-        # persist the dictionary FIRST, then encode against the STORED
-        # relation: the store/quads writes read a materialized dictionary
-        # instead of re-running the distributed rank build per sink
+            ),
+            caches=caches,
+        )
         d.write.mode("overwrite").parquet(args.dict_out)
-        d_stored = spark.read.parquet(args.dict_out)
-        TripleStore(
-            NT.encode_triples(spo, d_stored), layout=args.layout
-        ).write(args.out)
-        if (args.nq or args.trig) and args.quads_out:
-            named = nq.filter("g_term IS NOT NULL")
-            dg = d_stored.selectExpr("id AS g", "term AS g_term")
-            q = NT.encode_triples(
-                named.join(dg, "g_term").select(
-                    "g", "s_term", "p_term", "o_term"
-                ),
-                d_stored,
-            ).select("g", "s", "p", "o")
-            q.write.mode("overwrite").partitionBy("g").parquet(args.quads_out)
+        TripleStore(triples, layout=args.layout).write(args.out)
+        if quads is not None:
+            quads.write.mode("overwrite").partitionBy("g").parquet(
+                args.quads_out
+            )
         for c in caches:
             c.unpersist()
         n = spark.read.parquet(args.out).count()
-        nd = d_stored.count()
+        nd = spark.read.parquet(args.dict_out).count()
         print(
             f"ingested {n} triples, {nd} dictionary terms "
             f"(store={args.out}, dict={args.dict_out})"
@@ -630,17 +583,15 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.command == "vacuum":
-        import os as _os
-
         for a, b, what in (
             (args.store, args.out, "--out/--store"),
             (args.dict_path, args.dict_out, "--dict-out/--dict"),
         ):
-            if _os.path.realpath(a) == _os.path.realpath(b):
-                raise SystemExit(
-                    f"{what} must differ (the compaction reads the old "
-                    "snapshot while writing the new one)"
-                )
+            _must_differ(
+                a, b,
+                f"{what} must differ (the compaction reads the old "
+                "snapshot while writing the new one)",
+            )
         spark = _spark(args.cpus)
         eng = Engine(spark).open(
             args.store, layout=args.layout, dict_path=args.dict_path
@@ -670,20 +621,16 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.command == "update":
-        import os as _os
-
-        if _os.path.realpath(args.dict_path) == _os.path.realpath(
-            args.dict_out
-        ):
-            raise SystemExit(
-                "--dict-out must differ from --dict (the copy-on-write "
-                "plan reads the old dictionary while writing the new one)"
-            )
-        if _os.path.realpath(args.store) == _os.path.realpath(args.out):
-            raise SystemExit(
-                "--out must differ from --store (the updated snapshot "
-                "reads the old store while writing)"
-            )
+        _must_differ(
+            args.dict_path, args.dict_out,
+            "--dict-out must differ from --dict (the copy-on-write "
+            "plan reads the old dictionary while writing the new one)",
+        )
+        _must_differ(
+            args.store, args.out,
+            "--out must differ from --store (the updated snapshot "
+            "reads the old store while writing)",
+        )
         spark = _spark(args.cpus)
         eng = Engine(spark).open(
             args.store,
@@ -714,13 +661,11 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.command == "materialize":
-        import os as _os
-
-        if _os.path.realpath(args.store) == _os.path.realpath(args.out):
-            raise SystemExit(
-                "--out must differ from --store (the materialized "
-                "snapshot reads the old store while writing)"
-            )
+        _must_differ(
+            args.store, args.out,
+            "--out must differ from --store (the materialized "
+            "snapshot reads the old store while writing)",
+        )
         spark = _spark(args.cpus)
         eng = Engine(spark).open(
             args.store,
@@ -739,26 +684,25 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.command in ("sparql", "serve"):
         spark = _spark(args.cpus)
-        eng = Engine(spark).open(args.store, layout=args.layout)
+        # a parquet dictionary is ingest-built: open() reads it without
+        # a broadcast hint and switches constants to lexical forms
+        eng = Engine(spark).open(
+            args.store,
+            layout=args.layout,
+            dict_path=(
+                args.dict_path if args.dict_format == "parquet" else None
+            ),
+            term_style=args.term_style,
+        )
         if args.quads:
             eng.load_quads(args.quads)
-        if args.dict_path:
+        if args.dict_path and args.dict_format == "tsv":
             from rdfproject_msc_spark.dictionary import Dictionary
             from rdfproject_msc_spark.sources.triples import read_dictionary_tsv
 
-            if args.dict_format == "parquet":
-                # an ingest-built dictionary: corpus-sized (no broadcast
-                # hint) and storing full lexical forms
-                eng.dictionary = Dictionary(
-                    spark.read.parquet(args.dict_path), broadcast_hint=False
-                )
-                eng.term_style = "lexical"
-            else:
-                eng.dictionary = Dictionary(
-                    read_dictionary_tsv(spark, args.dict_path)
-                )
-        if args.term_style:
-            eng.term_style = args.term_style
+            eng.dictionary = Dictionary(
+                read_dictionary_tsv(spark, args.dict_path)
+            )
         if args.command == "serve":
             from rdfproject_msc_spark.serve import serve
 

@@ -123,7 +123,8 @@ class Engine:
         sources/rdfxml.py, the ontology-interchange format), or
         ``"jsonld"`` (RAW JSON-LD — sources/jsonld.py, the web-embedded
         format; both share the per-file parse and built-dictionary
-        contract)."""
+        contract). The four raw formats run the one first mile,
+        ``ntriples.ingest_rdf``."""
         if fmt == "text":
             df = TIO.read_triples_text(self.spark, triples_path)
         elif fmt == "parquet":
@@ -134,26 +135,12 @@ class Engine:
                     f"fmt={fmt!r} builds its dictionary from the data; "
                     "dict_path must be None"
                 )
-            if fmt == "nt":
-                from rdfproject_msc_spark.sources.ntriples import (
-                    ingest_ntriples as _ingest,
-                )
-            elif fmt == "ttl":
-                from rdfproject_msc_spark.sources.turtle import (
-                    ingest_turtle as _ingest,
-                )
-            elif fmt == "rdfxml":
-                from rdfproject_msc_spark.sources.rdfxml import (
-                    ingest_rdfxml as _ingest,
-                )
-            else:
-                from rdfproject_msc_spark.sources.jsonld import (
-                    ingest_jsonld as _ingest,
-                )
+            from rdfproject_msc_spark.sources.ntriples import ingest_rdf
 
-            df, dict_df = _ingest(
+            df, _, dict_df = ingest_rdf(
                 self.spark,
                 triples_path,
+                fmt,
                 negative_when=negative_when,
                 on_error=on_error,
                 caches=self._ingest_caches,

@@ -18,8 +18,8 @@ architecture every other raw-RDF reader here proved out:
   order — identical on Spark task retry.
 - **Emitted relation ≡ the other parsers'**: ``(s_term, p_term,
   o_term)`` full lexical forms with the shared minimal N-Triples
-  escape set, so ``ingest_jsonld`` reuses the ntriples
-  dictionary/encode back half unchanged and a JSON-LD and an
+  escape set, so ``ingest_rdf(fmt="jsonld")`` runs the one first
+  mile (sources/ntriples.py) unchanged and a JSON-LD and an
   N-Triples serialization of one graph produce identical relations
   and ids.
 
@@ -49,8 +49,9 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
+
+from rdfproject_msc_spark.sources.ntriples import list_rdf_files
 
 PARSED_SCHEMA = "s_term string, p_term string, o_term string"
 
@@ -62,9 +63,7 @@ def parse_jsonld(
     strings, one Arrow ``mapInPandas`` stage over a ``binaryFile``
     listing. Helpers are nested inside the closure (shipped by value —
     workers need nothing on sys.path)."""
-    if on_error not in ("skip", "fail"):
-        raise ValueError(f"on_error must be 'skip' or 'fail', got {on_error!r}")
-    files = spark.read.format("binaryFile").load(path)
+    files = list_rdf_files(spark, path, on_error)
     fail = on_error == "fail"
 
     def parse_batches(
@@ -325,52 +324,6 @@ def parse_jsonld(
                     os_.append(o)
             yield pd.DataFrame({"s_term": ss, "p_term": ps, "o_term": os_})
 
-    return files.select("path", "content").mapInPandas(
+    return files.mapInPandas(
         parse_batches, schema=PARSED_SCHEMA
     )
-
-
-def ingest_jsonld(
-    spark: SparkSession,
-    path: str,
-    *,
-    negative_when: Column | str | None = None,
-    on_error: str = "skip",
-    num_partitions: int | None = None,
-    dictionary: DataFrame | None = None,
-    caches: list | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """JSON-LD first mile: parse → build/extend dictionary → encode —
-    the exact ``ingest_turtle`` contract over the JSON-LD parser (the
-    dictionary/encode machinery is shared, not re-implemented)."""
-    from rdfproject_msc_spark.sources.ntriples import (
-        build_dictionary,
-        encode_triples,
-        extend_dictionary,
-    )
-
-    parsed = parse_jsonld(spark, path, on_error=on_error).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    if caches is not None:
-        caches.append(parsed)
-    if dictionary is None:
-        full = build_dictionary(
-            parsed,
-            negative_when=negative_when,
-            num_partitions=num_partitions,
-            caches=caches,
-        )
-    else:
-        fresh = extend_dictionary(
-            dictionary,
-            parsed,
-            negative_when=negative_when,
-            num_partitions=num_partitions,
-            caches=caches,
-        )
-        full = dictionary.select("id", "term").unionAll(fresh)
-    full = full.persist(StorageLevel.MEMORY_AND_DISK)
-    if caches is not None:
-        caches.append(full)
-    return encode_triples(parsed, full), full

@@ -42,11 +42,13 @@ cannot onboard. This module closes that gap Spark-first:
   this is the standard distributed-RDF encode shape, one-time cost
   amortized by the persisted integer layout).
 
-``Engine.load_triples(path, fmt="nt")`` wires the full flow: parse →
-build dictionary → encode → layout, leaving the engine holding the built
-``Dictionary`` for SPARQL constants and decode.
+``ingest_rdf(spark, path, fmt)`` is the one first mile for every raw
+format (N-Triples and N-Quads here, Turtle/TriG, RDF/XML and JSON-LD
+from their per-file parsers): parse → build or extend the dictionary →
+encode. ``Engine.load_triples``, UPDATE's LOAD and CLI ``ingest`` all
+call it.
 
-Cache lifetime: the ingest paths persist the parsed relation and the
+Cache lifetime: ``ingest_rdf`` persists the parsed relation and the
 dictionary (both are traversed by several downstream subtrees; without
 the persist the multi-shuffle rank build re-runs per consumer). The
 returned DataFrames stay lazy over those caches, so they cannot be
@@ -54,11 +56,13 @@ unpersisted here. Callers that need the lifecycle pass ``caches=[...]``
 — every persisted frame is appended, and ``Engine`` releases them via
 ``release_caches()`` / ``close()`` / ``vacuum()`` once the compacted
 snapshot no longer reads them. Without a registry they live until the
-session ends (Spark evicts LRU under pressure); the CLI sidesteps this
-by persisting to Parquet and re-reading.
+session ends (Spark evicts LRU under pressure); the CLI passes a
+registry and unpersists it once its Parquet writes are done.
 """
 
 from __future__ import annotations
+
+import importlib
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -91,6 +95,25 @@ NT_TERM = rf"<[^>]*>|_:(?:[^\s.]|\.(?=\S))+|{NT_LITERAL}"
 _BLANK_OR_COMMENT = r"^[ \t]*(#|\r?$)"
 
 
+def _check_on_error(on_error: str) -> None:
+    if on_error not in ("skip", "fail"):
+        raise ValueError(f"on_error must be 'skip' or 'fail', got {on_error!r}")
+
+
+def list_rdf_files(
+    spark: SparkSession, path: str, on_error: str
+) -> DataFrame:
+    """The shared first step of the per-FILE parsers (Turtle/TriG,
+    RDF/XML, JSON-LD): check ``on_error`` and list ``path`` once as
+    ``(path, content)`` binary rows, the input of their ``mapInPandas``
+    parse stage. Runs on the driver only; nothing here ships to
+    workers."""
+    _check_on_error(on_error)
+    return spark.read.format("binaryFile").load(path).select(
+        "path", "content"
+    )
+
+
 def _tokenize_validated(
     lines: DataFrame, line_re: str, what: str, on_error: str
 ) -> DataFrame:
@@ -102,8 +125,7 @@ def _tokenize_validated(
     ``raise_error`` branch (``fail`` — no driver-side validation pass).
     One code path, so a grammar tweak lands once for batch NT,
     streaming NT, and NQ alike."""
-    if on_error not in ("skip", "fail"):
-        raise ValueError(f"on_error must be 'skip' or 'fail', got {on_error!r}")
+    _check_on_error(on_error)
     content = lines.filter(~F.col("value").rlike(_BLANK_OR_COMMENT))
     ok = F.col("value").rlike(line_re)
     toks = F.regexp_extract_all("value", F.lit(NT_TERM), 0)
@@ -396,27 +418,72 @@ def encode_triples(parsed: DataFrame, dictionary: DataFrame) -> DataFrame:
     return out.select(*extra, "s", "p", "o")
 
 
-def ingest_ntriples(
+# fmt -> (sources module, parser name, quad format?). The parser is looked
+# up by NAME on its module at call time, so a wrapper installed on the
+# module attribute (rdfbench's tracer patches ``ntriples.parse_ntriples``)
+# is the one that runs; ``build_dictionary``/``encode_triples`` are read as
+# this module's globals for the same reason.
+_FORMATS = {
+    "nt": ("ntriples", "parse_ntriples", False),
+    "nq": ("ntriples", "parse_nquads", True),
+    "ttl": ("turtle", "parse_turtle", False),
+    "trig": ("turtle", "parse_trig", True),
+    "rdfxml": ("rdfxml", "parse_rdfxml", False),
+    "jsonld": ("jsonld", "parse_jsonld", False),
+}
+
+
+def ingest_rdf(
     spark: SparkSession,
     path: str,
+    fmt: str,
     *,
     negative_when: Column | str | None = None,
     on_error: str = "skip",
     num_partitions: int | None = None,
     dictionary: DataFrame | None = None,
     caches: list | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Full first mile: parse → build dictionary → encode. Returns
-    ``(encoded_triples, dictionary)`` — both lazy plans over one parsed
-    relation (persisted, since the dictionary build and the encode both
-    traverse it).
+) -> tuple[DataFrame, DataFrame | None, DataFrame]:
+    """The one raw-RDF first mile: parse ``path`` as ``fmt`` (``nt``,
+    ``nq``, ``ttl``, ``trig``, ``rdfxml`` or ``jsonld``) → build the
+    dictionary → encode. Returns ``(triples, quads, dictionary)``, all
+    lazy plans over persisted relations; ``quads`` is None for the
+    triple formats.
 
-    Pass ``dictionary`` (an existing ``(id, term)`` relation) for
-    INCREMENTAL ingest: unseen terms append via ``extend_dictionary``
-    (existing ids untouched) and the returned dictionary is the union —
-    the delivery loop that pairs with the persisted MinHash index's
-    ``mode="append"``."""
-    parsed = parse_ntriples(spark, path, on_error=on_error).persist(
+    Triple formats persist the parsed relation (the dictionary build and
+    the encode both traverse it). Pass ``dictionary`` (an existing
+    ``(id, term)`` relation) for INCREMENTAL ingest: unseen terms append
+    via ``extend_dictionary`` (existing ids untouched) and the returned
+    dictionary is the union — the delivery loop that pairs with the
+    persisted MinHash index's ``mode="append"``.
+
+    Quad formats split through ``encode_quad_relation``: label-less
+    statements become the DEFAULT-graph triple relation ``(s, p, o)``,
+    labeled ones the named-graph relation ``(g, s, p, o)``, under ONE
+    dictionary over every term including graph labels. They always
+    build a fresh dictionary (``dictionary`` raises ``ValueError``)."""
+    if fmt not in _FORMATS:
+        raise ValueError(
+            f"unknown RDF format {fmt!r}; expected one of {sorted(_FORMATS)}"
+        )
+    module, parser, quad = _FORMATS[fmt]
+    parse = getattr(
+        importlib.import_module(f"rdfproject_msc_spark.sources.{module}"),
+        parser,
+    )
+    if quad:
+        if dictionary is not None:
+            raise ValueError(
+                f"fmt={fmt!r} builds its dictionary from the data; "
+                "incremental ingest applies to triple formats only"
+            )
+        return encode_quad_relation(
+            parse(spark, path, on_error=on_error),
+            negative_when=negative_when,
+            num_partitions=num_partitions,
+            caches=caches,
+        )
+    parsed = parse(spark, path, on_error=on_error).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     if caches is not None:
@@ -443,42 +510,7 @@ def ingest_ntriples(
     full = full.persist(StorageLevel.MEMORY_AND_DISK)
     if caches is not None:
         caches.append(full)
-    return encode_triples(parsed, full), full
-
-
-def ingest_nquads(
-    spark: SparkSession,
-    path: str,
-    *,
-    negative_when: Column | str | None = None,
-    on_error: str = "skip",
-    num_partitions: int | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """N-Quads first mile: parse → ONE dictionary over every term
-    (graph labels included) → encode. Returns ``(triples, quads,
-    dictionary)``: label-less statements become the DEFAULT-graph triple
-    relation ``(s, p, o)``; labeled statements become the named-graph
-    quad relation ``(g, s, p, o)`` — the exact split the engine's GRAPH
-    surface consumes (``TripleStore.attach_quads``: the default graph IS
-    the triple relation, SPARQL §13.3)."""
-    parsed = parse_nquads(spark, path, on_error=on_error)
-    return encode_quad_relation(
-        parsed, negative_when=negative_when, num_partitions=num_partitions
-    )
-
-
-def quad_term_relation(parsed: DataFrame) -> DataFrame:
-    """A quad relation's FULL vocabulary as a ``(s_term, p_term,
-    o_term)`` relation: graph labels fold in as extra rows so ONE
-    dictionary covers them too. Shared by ``encode_quad_relation`` and
-    the CLI's parse-once ingest path."""
-    spo = parsed.select("s_term", "p_term", "o_term")
-    g_terms = parsed.filter(F.col("g_term").isNotNull()).select(
-        F.col("g_term").alias("s_term"),
-        F.col("g_term").alias("p_term"),
-        F.col("g_term").alias("o_term"),
-    )
-    return spo.unionAll(g_terms)
+    return encode_triples(parsed, full), None, full
 
 
 def encode_quad_relation(
@@ -488,16 +520,21 @@ def encode_quad_relation(
     num_partitions: int | None = None,
     caches: list | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Shared back half of every quad-bearing first mile (N-Quads and
-    TriG): a ``(g_term | NULL, s_term, p_term, o_term)`` relation →
-    ``(triples, quads, dictionary)`` with ONE dictionary over every term
-    including graph labels. The input is persisted here (dictionary
-    build + two encodes traverse it)."""
+    """The quad back half of ``ingest_rdf`` (N-Quads and TriG): a
+    ``(g_term | NULL, s_term, p_term, o_term)`` relation → ``(triples,
+    quads, dictionary)`` with ONE dictionary over every term: graph
+    labels fold in as extra term rows. The input is persisted here
+    (dictionary build + two encodes traverse it)."""
     parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
     if caches is not None:
         caches.append(parsed)
+    g_terms = parsed.filter(F.col("g_term").isNotNull()).select(
+        F.col("g_term").alias("s_term"),
+        F.col("g_term").alias("p_term"),
+        F.col("g_term").alias("o_term"),
+    )
     dictionary = build_dictionary(
-        quad_term_relation(parsed),
+        parsed.select("s_term", "p_term", "o_term").unionAll(g_terms),
         negative_when=negative_when,
         num_partitions=num_partitions,
         caches=caches,

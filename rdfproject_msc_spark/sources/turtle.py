@@ -6,15 +6,16 @@ column expressions over ``spark.read.text``. Turtle is NOT: statements
 span lines, and ``@prefix``/``@base`` directives are document-scoped
 state, so an intra-file split is unsound without a stateful pre-scan.
 The honest Spark unit of parallelism is therefore the FILE:
-``spark.read.format("binaryFile")`` lists the input once, and an
+``ntriples.list_rdf_files`` lists the input once as binary files, and an
 Arrow-batched ``mapInPandas`` stage parses each file's text with a pure
 Python recursive-descent tokenizer, emitting the SAME ``(s_term,
 p_term, o_term)`` lexical-form relation the N-Triples reader produces —
-everything downstream (dictionary build, encode, layouts, SPARQL
-``term_style="lexical"``) is shared, not duplicated. At corpus scale a
-Turtle delivery is thousands of files, so per-file parallelism is real;
-one giant single file serializes by nature of the grammar (documented —
-re-shard or convert such inputs to N-Triples, which splits by line).
+everything downstream (``ingest_rdf``'s dictionary build and encode,
+layouts, SPARQL ``term_style="lexical"``) is shared, not duplicated. At
+corpus scale a Turtle delivery is thousands of files, so per-file
+parallelism is real; one giant single file serializes by nature of the
+grammar (documented — re-shard or convert such inputs to N-Triples,
+which splits by line).
 
 Canonical term forms (so Turtle- and NT-ingested graphs agree):
 
@@ -61,7 +62,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from rdfproject_msc_spark.sources.ntriples import list_rdf_files
 
 PARSED_SCHEMA = "s_term string, p_term string, o_term string"
 PARSED_QUAD_SCHEMA = (
@@ -108,9 +110,7 @@ def parse_trig(
 def _parse_files(
     spark: SparkSession, path: str, on_error: str, trig: bool
 ) -> DataFrame:
-    if on_error not in ("skip", "fail"):
-        raise ValueError(f"on_error must be 'skip' or 'fail', got {on_error!r}")
-    files = spark.read.format("binaryFile").load(path)
+    files = list_rdf_files(spark, path, on_error)
     fail = on_error == "fail"
 
     def parse_batches(
@@ -586,7 +586,7 @@ def _parse_files(
                 cols = {"g_term": gs, **cols}
             yield pd.DataFrame(cols)
 
-    return files.select("path", "content").mapInPandas(
+    return files.mapInPandas(
         parse_batches, schema=PARSED_QUAD_SCHEMA if trig else PARSED_SCHEMA
     )
 
@@ -710,72 +710,3 @@ def write_turtle(
     lines.mapInPandas(_with_header, schema="value string").write.mode(
         "overwrite"
     ).text(path)
-
-
-def ingest_turtle(
-    spark: SparkSession,
-    path: str,
-    *,
-    negative_when: Column | str | None = None,
-    on_error: str = "skip",
-    num_partitions: int | None = None,
-    dictionary: DataFrame | None = None,
-    caches: list | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Turtle first mile: parse → build/extend dictionary → encode —
-    the exact ``ingest_ntriples`` contract over the Turtle parser (the
-    dictionary/encode machinery is shared, not re-implemented)."""
-    from rdfproject_msc_spark.sources.ntriples import (
-        build_dictionary,
-        encode_triples,
-        extend_dictionary,
-    )
-
-    parsed = parse_turtle(spark, path, on_error=on_error).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    if caches is not None:
-        caches.append(parsed)
-    if dictionary is None:
-        full = build_dictionary(
-            parsed,
-            negative_when=negative_when,
-            num_partitions=num_partitions,
-            caches=caches,
-        )
-    else:
-        fresh = extend_dictionary(
-            dictionary,
-            parsed,
-            negative_when=negative_when,
-            num_partitions=num_partitions,
-            caches=caches,
-        )
-        full = dictionary.select("id", "term").unionAll(fresh)
-    full = full.persist(StorageLevel.MEMORY_AND_DISK)
-    if caches is not None:
-        caches.append(full)
-    return encode_triples(parsed, full), full
-
-
-def ingest_trig(
-    spark: SparkSession,
-    path: str,
-    *,
-    negative_when: Column | str | None = None,
-    on_error: str = "skip",
-    num_partitions: int | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """TriG first mile: parse → ONE dictionary over every term (graph
-    labels included) → encode. Returns ``(triples, quads, dictionary)``
-    with the exact ``ingest_nquads`` contract — the encode back half is
-    SHARED (sources/ntriples.py:encode_quad_relation), so a TriG and an
-    N-Quads serialization of the same dataset produce identical
-    relations and identical ids."""
-    from rdfproject_msc_spark.sources.ntriples import encode_quad_relation
-
-    return encode_quad_relation(
-        parse_trig(spark, path, on_error=on_error),
-        negative_when=negative_when,
-        num_partitions=num_partitions,
-    )

@@ -1308,19 +1308,14 @@ def _apply_op(engine, store: TripleStore, op, negative_when) -> None:
                 "add the data with INSERT DATA (whose constants "
                 "normalize per the engine's term style)"
             )
-        if op.path.endswith(".ttl"):
-            from rdfproject_msc_spark.sources.turtle import (
-                ingest_turtle as _load_ingest,
-            )
-        else:
-            from rdfproject_msc_spark.sources.ntriples import (
-                ingest_ntriples as _load_ingest,
-            )
+        from rdfproject_msc_spark.sources.ntriples import ingest_rdf
+
         load_caches: list = []
         try:
-            df, dict_df = _load_ingest(
+            df, _, dict_df = ingest_rdf(
                 spark,
                 op.path,
+                "ttl" if op.path.endswith(".ttl") else "nt",
                 dictionary=engine.dictionary.df,
                 negative_when=negative_when,
                 # always "fail", SILENT included: §3.1.4's SILENT

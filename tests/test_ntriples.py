@@ -15,7 +15,7 @@ from rdfproject_msc_spark.engine import Engine
 from rdfproject_msc_spark.sources.ntriples import (
     build_dictionary,
     encode_triples,
-    ingest_ntriples,
+    ingest_rdf,
     parse_ntriples,
 )
 
@@ -141,7 +141,9 @@ def test_ids_invariant_under_input_partitioning(spark, nt_path):
 
 def test_encode_decode_round_trip(spark, nt_path):
     parsed = parse_ntriples(spark, nt_path)
-    enc, d = ingest_ntriples(spark, nt_path, negative_when="term LIKE '_:%'")
+    enc, _, d = ingest_rdf(
+        spark, nt_path, "nt", negative_when="term LIKE '_:%'"
+    )
     assert enc.count() == parsed.count()
     dec = Dictionary(d, broadcast_hint=False).decode(
         enc.select(
@@ -215,7 +217,7 @@ def test_encode_at_sf(spark, sf_dir, tmp_path):
     )
     path = str(tmp_path / "nt")
     lines.write.mode("overwrite").text(path)
-    enc, d = ingest_ntriples(spark, path)
+    enc, _, d = ingest_rdf(spark, path, "nt")
     assert enc.count() == nation.count()
     n_terms = d.count()
     assert d.agg(F.max("id")).first()[0] == n_terms  # dense, all positive
@@ -232,12 +234,11 @@ _:bn <http://ex.org/in> <http://ex.org/c> _:g3 .
 
 
 def test_extend_dictionary_appends_without_touching_ids(spark, nt_path, tmp_path):
-    from rdfproject_msc_spark.sources.ntriples import (
-        extend_dictionary,
-        ingest_ntriples,
-    )
+    from rdfproject_msc_spark.sources.ntriples import extend_dictionary
 
-    _, d0 = ingest_ntriples(spark, nt_path, negative_when="term LIKE '_:%'")
+    _, _, d0 = ingest_rdf(
+        spark, nt_path, "nt", negative_when="term LIKE '_:%'"
+    )
     d0 = d0.cache()
     base = {r["term"]: r["id"] for r in d0.collect()}
     # a delivery: one known term, two new positives, one new negative
@@ -246,8 +247,8 @@ def test_extend_dictionary_appends_without_touching_ids(spark, nt_path, tmp_path
         "<http://ex.org/zzz> <http://ex.org/knows> _:blank9 .\n"
         "<http://ex.org/a> <http://ex.org/alpha> _:blank1 .\n"
     )
-    enc, d1 = ingest_ntriples(
-        spark, str(p), negative_when="term LIKE '_:%'", dictionary=d0
+    enc, _, d1 = ingest_rdf(
+        spark, str(p), "nt", negative_when="term LIKE '_:%'", dictionary=d0
     )
     after = {r["term"]: r["id"] for r in d1.collect()}
     for t, i in base.items():
@@ -287,11 +288,9 @@ def test_extend_dictionary_appends_without_touching_ids(spark, nt_path, tmp_path
 
 
 def test_nquads_ingest_splits_default_and_named(spark, tmp_path):
-    from rdfproject_msc_spark.sources.ntriples import ingest_nquads
-
     p = tmp_path / "data.nq"
     p.write_text(NQ_FIXTURE)
-    triples, quads, d = ingest_nquads(spark, str(p))
+    triples, quads, d = ingest_rdf(spark, str(p), "nq")
     dd = Dictionary(d, broadcast_hint=False)
     assert triples.count() == 1  # the label-less statement
     assert quads.count() == 4
@@ -315,12 +314,11 @@ def test_nquads_ingest_splits_default_and_named(spark, tmp_path):
 def test_nquads_attach_to_store_graph_query(spark, tmp_path):
     """Close the GRAPH loop: N-Quads in, TripleStore + attach_quads, a
     same-graph id query out."""
-    from rdfproject_msc_spark.sources.ntriples import ingest_nquads
     from rdfproject_msc_spark.store import TripleStore
 
     p = tmp_path / "data.nq"
     p.write_text(NQ_FIXTURE)
-    triples, quads, d = ingest_nquads(spark, str(p))
+    triples, quads, d = ingest_rdf(spark, str(p), "nq")
     store = TripleStore(triples, layout="single")
     store.attach_quads(quads)
     dd = Dictionary(d, broadcast_hint=False)
@@ -488,7 +486,6 @@ def test_streaming_nt_ingest_equals_batch(spark, tmp_path):
     from rdfproject_msc_spark import streaming as S
     from rdfproject_msc_spark.sources.ntriples import (
         extend_dictionary,
-        ingest_ntriples,
         parse_ntriples,
     )
     from rdfproject_msc_spark.store import TripleStore
@@ -497,8 +494,8 @@ def test_streaming_nt_ingest_equals_batch(spark, tmp_path):
     nt_dir.mkdir()
     (nt_dir / "a.nt").write_text(NT_FIXTURE)
     base_path = str(nt_dir / "a.nt")
-    enc_batch, d = ingest_ntriples(
-        spark, base_path, negative_when="term LIKE '_:%'"
+    enc_batch, _, d = ingest_rdf(
+        spark, base_path, "nt", negative_when="term LIKE '_:%'"
     )
     d = d.cache()
 
@@ -640,6 +637,21 @@ def test_cli_ingest_guards(tmp_path):
     with _pt.raises(SystemExit, match="--quads-out"):
         main(["ingest", "--nq", str(nq), "--out", str(tmp_path / "s"),
               "--dict-out", d])
+    with _pt.raises(SystemExit, match="triple formats only"):
+        main(["ingest", "--trig", str(nq), "--out", str(tmp_path / "s"),
+              "--dict-out", d, "--quads-out", str(tmp_path / "q"),
+              "--dict-in", str(tmp_path / "d0")])
+    s = str(tmp_path / "s")
+    # same path spelled two ways: the guard compares real paths
+    same = str(tmp_path / "x" / ".." / "s")
+    with _pt.raises(SystemExit, match="--dict-out must differ from --dict "):
+        main(["update", "--store", s, "--dict", d, "--request", "CLEAR ALL",
+              "--out", str(tmp_path / "s2"), "--dict-out", d])
+    with _pt.raises(SystemExit, match="--out must differ from --store"):
+        main(["update", "--store", s, "--dict", d, "--request", "CLEAR ALL",
+              "--out", same, "--dict-out", str(tmp_path / "d2")])
+    with _pt.raises(SystemExit, match="--out must differ from --store"):
+        main(["materialize", "--store", s, "--dict", d, "--out", same])
 
 
 def test_lexical_accessor_surface(spark, tmp_path):
@@ -992,7 +1004,6 @@ def test_graph_and_construct_over_lexical_quads(spark, tmp_path):
     emits decoded lexical terms, and (r11) a template constant the
     dictionary lacks mints a fresh id through the query-sized append."""
     from rdfproject_msc_spark.dictionary import Dictionary
-    from rdfproject_msc_spark.sources.ntriples import ingest_nquads
     from rdfproject_msc_spark.store import TripleStore
 
     nq = tmp_path / "d.nq"
@@ -1002,7 +1013,7 @@ def test_graph_and_construct_over_lexical_quads(spark, tmp_path):
         '<http://e/b> <http://e/n> "x" <http://e/g1> .\n'
         "<http://e/c> <http://e/p> <http://e/a> <http://e/g2> .\n"
     )
-    triples, quads, d = ingest_nquads(spark, str(nq))
+    triples, quads, d = ingest_rdf(spark, str(nq), "nq")
     eng = Engine(
         spark,
         store=TripleStore(triples, layout="single"),

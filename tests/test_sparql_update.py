@@ -994,7 +994,7 @@ def test_load_review_findings(spark, nt_path, tmp_path):
 
 def _quad_engine(spark, tmp_path):
     from rdfproject_msc_spark.dictionary import Dictionary
-    from rdfproject_msc_spark.sources.ntriples import ingest_nquads
+    from rdfproject_msc_spark.sources.ntriples import ingest_rdf
     from rdfproject_msc_spark.store import TripleStore
 
     nq = tmp_path / "wu.nq"
@@ -1004,7 +1004,7 @@ def _quad_engine(spark, tmp_path):
         f"<{EX}c> <{EX}p> <{EX}a> <{EX}g1> .\n"
         f"<{EX}x> <{EX}p> <{EX}y> <{EX}g2> .\n"
     )
-    triples, quads, d = ingest_nquads(spark, str(nq))
+    triples, quads, d = ingest_rdf(spark, str(nq), "nq")
     eng = Engine(
         spark,
         store=TripleStore(triples, layout="single"),

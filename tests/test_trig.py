@@ -1,8 +1,9 @@
-"""TriG ingestion (sources/turtle.py:parse_trig / ingest_trig): the
-named-graph TEXT format — graph blocks over the Turtle grammar, emitting
-the exact parse_nquads quad relation; encode shared with ingest_nquads
-(sources/ntriples.py:encode_quad_relation), so a TriG and an N-Quads
-serialization of the same dataset produce identical ids."""
+"""TriG ingestion (sources/turtle.py:parse_trig, ingest_rdf(fmt="trig")):
+the named-graph TEXT format — graph blocks over the Turtle grammar,
+emitting the exact parse_nquads quad relation; the encode is the one
+first mile's quad back half (sources/ntriples.py:encode_quad_relation),
+shared with fmt="nq", so a TriG and an N-Quads serialization of the same
+dataset produce identical ids."""
 
 from __future__ import annotations
 
@@ -11,12 +12,8 @@ from pyspark.sql import functions as F
 
 from rdfproject_msc_spark.dictionary import Dictionary
 from rdfproject_msc_spark.engine import Engine
-from rdfproject_msc_spark.sources.ntriples import ingest_nquads, parse_nquads
-from rdfproject_msc_spark.sources.turtle import (
-    ingest_trig,
-    parse_trig,
-    parse_turtle,
-)
+from rdfproject_msc_spark.sources.ntriples import ingest_rdf, parse_nquads
+from rdfproject_msc_spark.sources.turtle import parse_trig, parse_turtle
 from rdfproject_msc_spark.store import TripleStore
 
 # one dataset, two serializations — must parse to the SAME quad relation
@@ -137,13 +134,13 @@ def test_turtle_mode_still_rejects_blocks(spark, tmp_path):
 
 
 def test_ingest_trig_matches_ingest_nquads(spark, tmp_path):
-    """The shared encode back half: ingest_trig and ingest_nquads over
+    """The shared encode back half: ingest_rdf's "trig" and "nq" over
     the same dataset yield identical triples, quads, and dictionary ids
     (ids are a pure function of the term set)."""
     (tmp_path / "d.trig").write_text(TRIG)
     (tmp_path / "d.nq").write_text(NQ)
-    t1, q1, d1 = ingest_trig(spark, str(tmp_path / "d.trig"))
-    t2, q2, d2 = ingest_nquads(spark, str(tmp_path / "d.nq"))
+    t1, q1, d1 = ingest_rdf(spark, str(tmp_path / "d.trig"), "trig")
+    t2, q2, d2 = ingest_rdf(spark, str(tmp_path / "d.nq"), "nq")
     assert rows(t1) == rows(t2)
     assert rows(q1) == rows(q2)
     assert rows(d1) == rows(d2)
@@ -151,10 +148,10 @@ def test_ingest_trig_matches_ingest_nquads(spark, tmp_path):
 
 
 def test_trig_engine_graph_query_end_to_end(spark, tmp_path):
-    """TriG in, SPARQL GRAPH out: ingest_trig → TripleStore +
+    """TriG in, SPARQL GRAPH out: ingest_rdf(fmt="trig") → TripleStore +
     attach_quads → lexical-style GRAPH query over a block's content."""
     (tmp_path / "d.trig").write_text(TRIG)
-    triples, quads, d = ingest_trig(spark, str(tmp_path / "d.trig"))
+    triples, quads, d = ingest_rdf(spark, str(tmp_path / "d.trig"), "trig")
     eng = Engine(
         spark,
         store=TripleStore(triples, layout="single"),

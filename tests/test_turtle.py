@@ -6,8 +6,8 @@ from __future__ import annotations
 import pytest
 
 from rdfproject_msc_spark.engine import Engine
-from rdfproject_msc_spark.sources.ntriples import parse_ntriples
-from rdfproject_msc_spark.sources.turtle import ingest_turtle, parse_turtle
+from rdfproject_msc_spark.sources.ntriples import ingest_rdf, parse_ntriples
+from rdfproject_msc_spark.sources.turtle import parse_turtle
 
 TTL = """\
 @prefix ex: <http://ex.org/> .
@@ -356,7 +356,7 @@ def test_cli_ingest_ttl(spark, tmp_path):
 
 
 def test_incremental_ingest_turtle(spark, tmp_path):
-    """ingest_turtle(dictionary=…): unseen terms append, existing ids
+    """ingest_rdf(fmt="ttl", dictionary=…): unseen terms append, existing ids
     untouched — the same delivery-loop contract as N-Triples."""
     (tmp_path / "one").mkdir()
     (tmp_path / "two").mkdir()
@@ -366,9 +366,11 @@ def test_incremental_ingest_turtle(spark, tmp_path):
     (tmp_path / "two" / "b.ttl").write_text(
         "@prefix ex: <http://ex.org/> .\nex:b ex:knows ex:newguy .\n"
     )
-    enc1, d1 = ingest_turtle(spark, str(tmp_path / "one"))
+    enc1, _, d1 = ingest_rdf(spark, str(tmp_path / "one"), "ttl")
     ids1 = {r["term"]: r["id"] for r in d1.collect()}
-    enc2, d2 = ingest_turtle(spark, str(tmp_path / "two"), dictionary=d1)
+    enc2, _, d2 = ingest_rdf(
+        spark, str(tmp_path / "two"), "ttl", dictionary=d1
+    )
     ids2 = {r["term"]: r["id"] for r in d2.collect()}
     assert all(ids2[t] == i for t, i in ids1.items())  # untouched
     assert "<http://ex.org/newguy>" in ids2

@@ -161,7 +161,7 @@ def test_vacuum_with_quads_preserves_graph_answers(spark, tmp_path):
     """Vacuum counts quad references too: a term used ONLY in a named
     graph survives, and GRAPH answers are unchanged (both modes)."""
     from rdfproject_msc_spark.dictionary import Dictionary
-    from rdfproject_msc_spark.sources.ntriples import ingest_nquads
+    from rdfproject_msc_spark.sources.ntriples import ingest_rdf
     from rdfproject_msc_spark.store import TripleStore
 
     nq = tmp_path / "v.nq"
@@ -170,7 +170,7 @@ def test_vacuum_with_quads_preserves_graph_answers(spark, tmp_path):
         f"<{EX}a> <{EX}p> <{EX}c> <{EX}g1> .\n"
         f"<{EX}c> <{EX}p> <{EX}a> <{EX}g2> .\n"
     )
-    triples, quads, d = ingest_nquads(spark, str(nq))
+    triples, quads, d = ingest_rdf(spark, str(nq), "nq")
     eng = Engine(
         spark,
         store=TripleStore(triples, layout="single"),

@@ -201,7 +201,7 @@ def _trig_ingest(spark, sf_dir):
     import tempfile as _tf
 
     from rdfproject_msc_spark.registry import load_table
-    from rdfproject_msc_spark.sources.turtle import ingest_trig
+    from rdfproject_msc_spark.sources.ntriples import ingest_rdf
 
     tag = _os.path.basename(_os.path.normpath(sf_dir))
     base = _os.path.join(_tf.gettempdir(), "rdfproject_msc_trig_probe", tag)
@@ -226,7 +226,7 @@ def _trig_ingest(spark, sf_dir):
         ))
     )
     lines.repartition(32).write.mode("overwrite").text(base)
-    triples, quads, d = ingest_trig(spark, base)
+    triples, quads, d = ingest_rdf(spark, base, "trig")
     return triples.groupBy("p").count().unionAll(
         quads.groupBy("g").count()
     )
@@ -259,7 +259,7 @@ def _turtle_ingest(spark, sf_dir):
     import tempfile as _tf
 
     from rdfproject_msc_spark.registry import load_table
-    from rdfproject_msc_spark.sources.turtle import ingest_turtle
+    from rdfproject_msc_spark.sources.ntriples import ingest_rdf
 
     tag = _os.path.basename(_os.path.normpath(sf_dir))
     base = _os.path.join(_tf.gettempdir(), "rdfproject_msc_ttl_probe", tag)
@@ -284,7 +284,7 @@ def _turtle_ingest(spark, sf_dir):
         ))
     )
     lines.repartition(32).write.mode("overwrite").text(base)
-    enc, d = ingest_turtle(spark, base)
+    enc, _, d = ingest_rdf(spark, base, "ttl")
     return enc.groupBy("p").count()
 
 
