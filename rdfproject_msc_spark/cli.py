@@ -41,7 +41,7 @@ def _add_common(p: argparse.ArgumentParser) -> None:
 
 
 def _emit(df, args) -> None:
-    if args.out and getattr(args, "command", "") != "load":
+    if args.out:
         from rdfproject_msc_spark.sources.triples import write_result_csv
 
         write_result_csv(df, args.out)
@@ -272,11 +272,11 @@ def main(argv: list[str] | None = None) -> int:
         "EMPTY result instead — the right behavior for untrusted "
         "queries",
     )
-    _add_common(p_srv)
+    p_srv.add_argument("--cpus", type=int, default=None)
 
     p_run = sub.add_parser("run", help="run a registry query by name")
-    p_run.add_argument("--name", required=True)
-    p_run.add_argument("--sf-dir", required=True)
+    p_run.add_argument("--name", help="required unless --list")
+    p_run.add_argument("--sf-dir", help="required unless --list")
     p_run.add_argument("--list", action="store_true")
     _add_common(p_run)
 
@@ -683,6 +683,18 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.command in ("sparql", "serve"):
+        if (
+            getattr(args, "results", None)
+            and not args.decode
+            and not args.dict_path
+        ):
+            # a W3C results document of raw dictionary ids is never a
+            # valid serialization of the actual terms: refuse before
+            # Spark starts (with a dictionary, --results auto-decodes)
+            raise SystemExit(
+                "--results serializes TERMS, not dictionary ids: "
+                "pass --dict (or --decode with a dictionary)"
+            )
         spark = _spark(args.cpus)
         # a parquet dictionary is ingest-built: open() reads it without
         # a broadcast hint and switches constants to lexical forms
@@ -716,17 +728,8 @@ def main(argv: list[str] | None = None) -> int:
                 enable_update=args.enable_update,
             )
             return 0
-        decode = args.decode
-        if args.results and not decode:
-            # a W3C results document of raw dictionary ids is never a
-            # valid serialization of the actual terms: auto-decode when
-            # a dictionary is present, refuse otherwise
-            if eng.dictionary is None:
-                raise SystemExit(
-                    "--results serializes TERMS, not dictionary ids: "
-                    "pass --dict-path (or --decode with a dictionary)"
-                )
-            decode = True
+        # --results auto-decodes: the guard above saw a dictionary
+        decode = args.decode or bool(args.results)
         df = eng.sparql(args.query, decode=decode, clock=args.clock)
         if args.explain:
             df.explain("formatted")
@@ -1052,6 +1055,18 @@ def main(argv: list[str] | None = None) -> int:
     if args.command == "prepare":
         from rdfproject_msc_spark.operators.curate import prepare_training_set
 
+        rates = {}
+        for spec in args.rate:
+            src, _, r = spec.partition("=")
+            try:
+                rate = float(r)
+            except ValueError:
+                rate = None
+            if not src or rate is None:
+                raise SystemExit(
+                    f"--rate takes SOURCE=RATE with a numeric rate, got {spec!r}"
+                )
+            rates[src] = rate
         spark = _spark(args.cpus)
         docs = spark.read.parquet(args.docs)
         bench = (
@@ -1059,10 +1074,6 @@ def main(argv: list[str] | None = None) -> int:
             if args.benchmark
             else docs.filter("1 = 0")
         )
-        rates = {}
-        for spec in args.rate:
-            src, _, r = spec.partition("=")
-            rates[src] = float(r)
         out = prepare_training_set(
             docs,
             bench,
@@ -1113,6 +1124,8 @@ def main(argv: list[str] | None = None) -> int:
             for name in REGISTRY:
                 print(name)
             return 0
+        if args.name is None or args.sf_dir is None:
+            p_run.error("run needs --name and --sf-dir (or --list)")
         if args.name not in REGISTRY:
             print(f"unknown query {args.name!r}; --list to enumerate", file=sys.stderr)
             return 2

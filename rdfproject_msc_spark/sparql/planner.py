@@ -2770,6 +2770,63 @@ def plan_bgp(
         _ACTIVE_STYLE.reset(token)
 
 
+def mint_template_bnodes(
+    df: DataFrame,
+    labels: list[str],
+    key_cols: list[str],
+    prefix: str,
+    dictionary: Dictionary,
+) -> tuple[DataFrame, dict[str, str], Dictionary]:
+    """Template blank nodes minted fresh per row of ``df`` (CONSTRUCT
+    §16.2, INSERT templates §3.1.3.2): label ``i`` of ``labels`` becomes
+    the term ``prefix`` + md5(the row's ``key_cols``) + ``-i``. The same
+    label co-refers across one row's template triples, distinct rows
+    mint distinct nodes, and a replay re-derives the same text
+    (value-equal rows mint the same node: the output is a set). The
+    labels are data-sized vocabulary, so their ids come from the
+    distributed incremental append, materialized eagerly so its rank
+    caches release. → (``df`` plus a ``__fbl_<label>`` text and a
+    ``__fbid_<i>`` id column per label, {label: id column}, the
+    extended Dictionary)."""
+    from rdfproject_msc_spark.sources.ntriples import extend_dictionary
+
+    key = F.md5(
+        F.concat_ws(
+            "|",
+            *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in key_cols],
+        )
+    )
+    lab_rel = None
+    for i, lbl in enumerate(labels):
+        df = df.withColumn(
+            f"__fbl_{lbl}", F.concat(F.lit(prefix), key, F.lit(f"-{i}"))
+        )
+        part = df.select(F.col(f"__fbl_{lbl}").alias("term"))
+        lab_rel = part if lab_rel is None else lab_rel.unionAll(part)
+    parsed = lab_rel.select(
+        *(F.col("term").alias(c) for c in ("s_term", "p_term", "o_term"))
+    )
+    caches: list = []
+    fresh_ids = extend_dictionary(
+        dictionary.df, parsed, caches=caches
+    ).localCheckpoint(eager=True)
+    for c in caches:
+        c.unpersist()  # the checkpoint no longer reads them
+    ext = dictionary.extend(fresh_ids)
+    id_cols: dict[str, str] = {}
+    for i, lbl in enumerate(labels):
+        # resolve against the EXTENDED dictionary (a minted label
+        # colliding with a pre-existing bnode term must still resolve)
+        m = ext.df.withColumnRenamed("id", f"__fbid_{i}").withColumnRenamed(
+            "term", f"__fblt_{i}"
+        )
+        df = df.join(
+            m, F.col(f"__fbl_{lbl}") == F.col(f"__fblt_{i}"), "left"
+        ).drop(f"__fblt_{i}")
+        id_cols[lbl] = f"__fbid_{i}"
+    return df, id_cols, ext
+
+
 def _plan_bgp(
     store: TripleStore,
     bgp: BGPQuery,
@@ -2836,22 +2893,12 @@ def _plan_bgp(
     if bgp.construct:
         # fresh-per-solution template blank nodes (§16.2, r11): a
         # template bnode label NOT bound by the WHERE group mints one
-        # fresh node per SOLUTION — the label is a deterministic key,
-        # "_:c" + md5(the solution's bound ids) + a POSITIONAL suffix
-        # (anonymous parse labels are counter-unstable across runs), so
-        # (a) the same label co-refers ACROSS template triples of one
-        # solution, (b) distinct solutions mint distinct nodes, and
-        # (c) a replayed query re-derives identical labels (the
-        # oracle/determinism stance; value-equal duplicate solutions
-        # mint the same node — the output graph is a SET). The labels
-        # are DATA-sized vocabulary, so their ids come from the same
-        # distributed incremental append as ingest; the rank build
-        # materializes eagerly (data-sized checkpoint, the UPDATE
-        # precedent) and the extended dictionary is LOCAL — returned
-        # via fresh_dict_out so decode renders the minted labels.
-        # first-appearance order (NOT the parsed names: anonymous []
-        # labels carry a global parse counter, so replay determinism
-        # needs a positional suffix fixed by the query TEXT alone)
+        # fresh node per SOLUTION, keyed on its bound ids
+        # (mint_template_bnodes). The extended dictionary is LOCAL —
+        # returned via fresh_dict_out so decode renders the minted
+        # labels. First-appearance order: the label's position, not its
+        # parsed name, suffixes the minted text (anonymous [] labels
+        # carry a global parse counter).
         fresh_labels: list[str] = []
         for tp in bgp.construct:
             for pos in ("s", "p", "o"):
@@ -2870,57 +2917,15 @@ def _plan_bgp(
                     "CONSTRUCT template blank nodes need a dictionary "
                     "(fresh labels mint dictionary ids)"
                 )
-            from rdfproject_msc_spark.sources.ntriples import (
-                extend_dictionary,
-            )
-
-            key = F.md5(
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.coalesce(
-                            F.col(bound_cols[v]).cast("string"), F.lit("")
-                        )
-                        for v in sorted(bound_cols)
-                    ],
-                )
-            )
-            lab_rel = None
-            for i, lbl in enumerate(fresh_labels):
-                joined = joined.withColumn(
-                    f"__fbl_{lbl}",
-                    F.concat(F.lit("_:c"), key, F.lit(f"-{i}")),
-                )
-                part = joined.select(F.col(f"__fbl_{lbl}").alias("term"))
-                lab_rel = part if lab_rel is None else lab_rel.unionAll(part)
-            parsed = lab_rel.select(
-                F.col("term").alias("s_term"),
-                F.col("term").alias("p_term"),
-                F.col("term").alias("o_term"),
-            )
-            mint_caches: list = []
-            fresh_ids = extend_dictionary(
-                dictionary.df, parsed, caches=mint_caches
-            ).localCheckpoint(eager=True)
-            for c in mint_caches:
-                c.unpersist()  # the checkpoint no longer reads them
-            ext = Dictionary(
-                dictionary.df.unionAll(fresh_ids),
-                broadcast_hint=dictionary.broadcast_hint,
+            joined, fresh_cols, ext = mint_template_bnodes(
+                joined,
+                fresh_labels,
+                [bound_cols[v] for v in sorted(bound_cols)],
+                "_:c",
+                dictionary,
             )
             if fresh_dict_out is not None:
                 fresh_dict_out.append(ext)
-            for i, lbl in enumerate(fresh_labels):
-                # resolve against the EXTENDED dictionary (a minted
-                # label colliding with a pre-existing bnode term is
-                # freak-rare but must still resolve, not null out)
-                m = ext.df.withColumnRenamed(
-                    "id", f"__fbid_{i}"
-                ).withColumnRenamed("term", f"__fblt_{i}")
-                joined = joined.join(
-                    m, F.col(f"__fbl_{lbl}") == F.col(f"__fblt_{i}"), "left"
-                ).drop(f"__fblt_{i}")
-                fresh_cols[lbl] = f"__fbid_{i}"
         parts = []
         for tp in bgp.construct:
             tnull = sorted(

@@ -31,9 +31,10 @@ Supported operations (';'-separated, PREFIX decls shared):
   delete from that named graph); both template sets instantiate
   against the same pre-state solutions, deletes apply before inserts
   (§3.1.3's semantics: one solution mapping set, DELETE then INSERT).
-- ``CLEAR DEFAULT | NAMED | ALL | GRAPH <iri>`` (§3.2.2). Graphs are
-  rows here, not resources: clearing a graph that holds no quads is a
-  no-op (the SILENT distinction is moot and accepted).
+- ``CLEAR DEFAULT | NAMED | ALL | GRAPH <iri>`` (§3.2.2) runs as
+  ``DROP SILENT``. Graphs are rows here, not resources: clearing a graph
+  that holds no quads is a no-op (the SILENT distinction is moot and
+  accepted).
 - ``CREATE / DROP / COPY / MOVE / ADD`` (§3.2.3–3.2.7, r11): graph
   management over the quad relation. On a graphs-as-rows store these
   lower to quad filters / relabels / set-unions
@@ -65,7 +66,7 @@ materialized, deduplicated sets: ``removed ∪= D∩base; added −= D``, then
 added``, so the plan has the same leaves after one update or a hundred,
 each update's work is paid once instead of by every later read, and the
 base keeps its ``sign`` partition pruning. CLEAR /
-DROP / COPY / MOVE replace the base instead (``_clone_store``);
+DROP / COPY / MOVE replace the base instead (``TripleStore.with_base``);
 ``save()`` writes the composed relation and ``Engine.vacuum()`` folds
 both sets into one checkpoint.
 
@@ -90,6 +91,7 @@ Scale design (the asymmetry drives every join below):
 
 from __future__ import annotations
 
+import hashlib
 import re
 from dataclasses import dataclass
 
@@ -101,6 +103,7 @@ from rdfproject_msc_spark.sparql.parser import (
     SparqlSyntaxError,
     _PREFIX_DECL,
     _TERM_STYLE,
+    _normalize_term,
     _parse_patterns,
     _scan_delim,
     _skip_string,
@@ -116,14 +119,17 @@ TRIPLE_SCHEMA = "s long, p long, o long"
 QUAD_SCHEMA = "g long, s long, p long, o long"
 
 _GRAPH_KW = re.compile(r"GRAPH\b", re.I)
-_CLEAR_RE = re.compile(
-    r"CLEAR\s+(?:SILENT\s+)?(?P<tgt>DEFAULT|NAMED|ALL|GRAPH\s+\S+)", re.I
-)
+_DATA_RE = re.compile(r"(INSERT|DELETE)\s+DATA\b", re.I)
+_WITH_RE = re.compile(r"WITH\s+(<[^>]*>|[^\s;{]+)\s+", re.I)
+_DELETE_WHERE_RE = re.compile(r"DELETE\s+WHERE\b", re.I)
+_TEMPLATE_RE = re.compile(r"(DELETE|INSERT)\s*\{", re.I)
+_USING_RE = re.compile(r"USING\s+(NAMED\s+)?(<[^>]*>|[^\s;{]+)\s*", re.I)
 _CREATE_RE = re.compile(
     r"CREATE\s+(?P<silent>SILENT\s+)?GRAPH\s+(?P<g>[^\s;]+)", re.I
 )
+# CLEAR is DROP SILENT: graphs are rows, so an absent graph holds nothing
 _DROP_RE = re.compile(
-    r"DROP\s+(?P<silent>SILENT\s+)?"
+    r"(?P<op>CLEAR|DROP)\s+(?P<silent>SILENT\s+)?"
     r"(?P<tgt>DEFAULT\b|NAMED\b|ALL\b|GRAPH\s+[^\s;]+)",
     re.I,
 )
@@ -180,12 +186,6 @@ class Modify:
 
 
 @dataclass(frozen=True)
-class Clear:
-    target: str  # "default" | "named" | "all"
-    graph_slot: tuple | None = None  # ("term", text)|("id", int) for GRAPH
-
-
-@dataclass(frozen=True)
 class Load:
     """LOAD [SILENT] <document> [INTO GRAPH g] (§3.1.4): ground file
     ingestion through the update surface — the document parses with the
@@ -208,7 +208,7 @@ class GraphManage:
     are ``"default"`` or a constant graph slot; ``target`` is DROP's
     DEFAULT/NAMED/ALL/graph form."""
 
-    op: str  # "create" | "drop" | "copy" | "move" | "add"
+    op: str  # "create" | "drop" (CLEAR too) | "copy" | "move" | "add"
     silent: bool = False
     target: str | None = None  # drop: "default"|"named"|"all"|"graph"
     graph_slot: tuple | None = None  # create / DROP GRAPH
@@ -304,8 +304,6 @@ def _split_graph_blocks(src: str, prefixes, allow_graph_vars: bool = False):
     open a block, so strings are skipped with the parser's own
     ``_skip_string``. ``allow_graph_vars``: templates may name the
     graph with a WHERE-bound variable; ground DATA blocks must not."""
-    from rdfproject_msc_spark.sparql.parser import _normalize_term
-
     default_parts: list[str] = []
     graph_blocks = []
     i, seg_start, n = 0, 0, len(src)
@@ -354,7 +352,7 @@ def _split_graph_blocks(src: str, prefixes, allow_graph_vars: bool = False):
 
 def parse_update(src: str, term_style: str | None = None) -> list:
     """Parse an update string into a list of operations (GroundData /
-    Modify / Clear), applied in order by ``apply_update``."""
+    Modify / Load / GraphManage), applied in order by ``apply_update``."""
     token = None
     if term_style is not None:
         if term_style not in ("localized", "lexical"):
@@ -367,6 +365,14 @@ def parse_update(src: str, term_style: str | None = None) -> list:
     finally:
         if token is not None:
             _TERM_STYLE.reset(token)
+
+
+def _constant_graph(tok: str, prefixes, error: str) -> tuple:
+    """A graph token as a constant slot; a variable raises ``error``."""
+    slot = _normalize_term(tok, prefixes)
+    if slot[0] == "var":
+        raise SparqlSyntaxError(error)
+    return slot
 
 
 def _parse_update_inner(src: str) -> list:
@@ -383,35 +389,117 @@ def _parse_update_inner(src: str) -> list:
             i = _skip_ws(body, i + 1)
         if i >= n:
             break
-        head = body[i:]
-        if re.match(r"INSERT\s+DATA\b", head, re.I):
-            j = _skip_ws(body, i + len(re.match(r"INSERT\s+DATA", head, re.I).group(0)))
-            inner, j = _scan_delim(body, j, "{", "}", "INSERT DATA block")
+        m = _DATA_RE.match(body, i)
+        if m:
+            kw = m.group(1).upper()
+            inner, i = _scan_delim(
+                body, _skip_ws(body, m.end()), "{", "}", f"{kw} DATA block"
+            )
             default, graphs = _split_graph_blocks(inner, prefixes)
-            quads = [
-                (None, *_ground_slots(p, allow_bnodes=True))
-                for p in default
-            ] + [
-                (g, *_ground_slots(p, allow_bnodes=True))
-                for g, pats in graphs
-                for p in pats
+            insert = kw == "INSERT"
+            quads = [(None, p) for p in default] + [
+                (g, p) for g, pats in graphs for p in pats
             ]
-            ops.append(GroundData(insert=True, quads=tuple(quads)))
-            i = j
+            ops.append(
+                GroundData(
+                    insert=insert,
+                    quads=tuple(
+                        (g, *_ground_slots(p, allow_bnodes=insert))
+                        for g, p in quads
+                    ),
+                )
+            )
             continue
-        if re.match(r"DELETE\s+DATA\b", head, re.I):
-            j = _skip_ws(body, i + len(re.match(r"DELETE\s+DATA", head, re.I).group(0)))
-            inner, j = _scan_delim(body, j, "{", "}", "DELETE DATA block")
-            default, graphs = _split_graph_blocks(inner, prefixes)
-            quads = [(None, *_ground_slots(p)) for p in default] + [
-                (g, *_ground_slots(p)) for g, pats in graphs for p in pats
+        m = _DROP_RE.match(body, i)
+        if m:
+            kw, tgt = m.group("op").upper(), m.group("tgt").lower()
+            graph_slot = None
+            if tgt not in ("default", "named", "all"):
+                tgt = "graph"
+                graph_slot = _constant_graph(
+                    m.group("tgt").split(None, 1)[1],
+                    prefixes,
+                    f"{kw} GRAPH takes a constant IRI",
+                )
+            ops.append(
+                GraphManage(
+                    op="drop",
+                    silent=kw == "CLEAR" or bool(m.group("silent")),
+                    target=tgt,
+                    graph_slot=graph_slot,
+                )
+            )
+            i = m.end()
+            continue
+        m = _CREATE_RE.match(body, i)
+        if m:
+            ops.append(
+                GraphManage(
+                    op="create",
+                    silent=bool(m.group("silent")),
+                    graph_slot=_constant_graph(
+                        m.group("g"), prefixes, "CREATE GRAPH takes a constant IRI"
+                    ),
+                )
+            )
+            i = m.end()
+            continue
+        m = _CMA_RE.match(body, i)
+        if m:
+            kw = m.group("op").upper()
+            src_dst = [
+                "default"
+                if tok.upper() == "DEFAULT"
+                else _constant_graph(
+                    tok.split()[-1],  # past an optional GRAPH keyword
+                    prefixes,
+                    f"{kw} takes constant graph IRIs (or DEFAULT)",
+                )
+                for tok in (m.group("src"), m.group("dst"))
             ]
-            ops.append(GroundData(insert=False, quads=tuple(quads)))
-            i = j
+            ops.append(
+                GraphManage(
+                    op=kw.lower(),
+                    silent=bool(m.group("silent")),
+                    src=src_dst[0],
+                    dst=src_dst[1],
+                )
+            )
+            i = m.end()
             continue
-        if re.match(r"DELETE\s+WHERE\b", head, re.I):
-            j = _skip_ws(body, i + len(re.match(r"DELETE\s+WHERE", head, re.I).group(0)))
-            inner, j = _scan_delim(body, j, "{", "}", "DELETE WHERE block")
+        m = _LOAD_RE.match(body, i)
+        if m:
+            g = m.group("g")
+            ops.append(
+                Load(
+                    path=m.group("iri").removeprefix("file://"),
+                    graph_slot=None if g is None else _constant_graph(
+                        g, prefixes, "LOAD … INTO GRAPH takes a constant IRI"
+                    ),
+                    silent=bool(m.group("silent")),
+                )
+            )
+            i = m.end()
+            continue
+        with_token, with_slot = None, None
+        m = _WITH_RE.match(body, i)
+        if m:
+            with_token = m.group(1)
+            with_slot = _constant_graph(
+                with_token, prefixes, "WITH takes a constant IRI"
+            )
+            i = m.end()
+            if not re.match(r"(DELETE|INSERT)\s*", body[i:], re.I):
+                raise SparqlSyntaxError(
+                    "WITH prefixes a DELETE/INSERT … WHERE or DELETE "
+                    "WHERE operation (§3.1.3)"
+                )
+        # DELETE WHERE: the template is the pattern (§3.1.3.3)
+        m = _DELETE_WHERE_RE.match(body, i)
+        if m:
+            inner, i = _scan_delim(
+                body, _skip_ws(body, m.end()), "{", "}", "DELETE WHERE block"
+            )
             tpl = _template_quads(inner, prefixes, "DELETE WHERE")
             if not tpl:
                 raise SparqlSyntaxError("DELETE WHERE needs at least one pattern")
@@ -421,229 +509,58 @@ def _parse_update_inner(src: str) -> list:
                     insert_tpl=(),
                     where_src=inner,
                     prefixes_src=prefixes_src,
+                    with_slot=with_slot,
+                    with_token=with_token,
                 )
             )
-            i = j
             continue
-        with_token, with_slot = None, None
-        mwith = re.match(r"WITH\s+(<[^>]*>|[^\s;{]+)\s+", head, re.I)
-        if mwith:
-            from rdfproject_msc_spark.sparql.parser import _normalize_term
-
-            with_token = mwith.group(1)
-            with_slot = _normalize_term(with_token, prefixes)
-            if with_slot[0] == "var":
-                raise SparqlSyntaxError("WITH takes a constant IRI")
-            i = i + mwith.end()
-            head = body[i:]
-            if not re.match(r"(DELETE|INSERT)\s*", head, re.I):
-                raise SparqlSyntaxError(
-                    "WITH prefixes a DELETE/INSERT … WHERE or DELETE "
-                    "WHERE operation (§3.1.3)"
-                )
-            # WITH + DELETE WHERE: the template-is-pattern shortcut —
-            # handled by the dedicated branch below with the slot set
-            mdw = re.match(r"DELETE\s+WHERE\b", head, re.I)
-            if mdw:
-                j = _skip_ws(body, i + mdw.end())
-                inner, j = _scan_delim(body, j, "{", "}", "DELETE WHERE block")
-                tpl = _template_quads(inner, prefixes, "DELETE WHERE")
-                if not tpl:
-                    raise SparqlSyntaxError(
-                        "DELETE WHERE needs at least one pattern"
-                    )
-                ops.append(
-                    Modify(
-                        delete_tpl=tpl,
-                        insert_tpl=(),
-                        where_src=inner,
-                        prefixes_src=prefixes_src,
-                        with_slot=with_slot,
-                        with_token=with_token,
-                    )
-                )
-                i = j
-                continue
-        mm = re.match(r"(DELETE|INSERT)\s*\{", head, re.I)
-        if mm:
-            first_kw = mm.group(1).upper()
-            j = i + mm.end() - 1
-            tpl1_src, j = _scan_delim(body, j, "{", "}", f"{first_kw} template")
+        m = _TEMPLATE_RE.match(body, i)
+        if m:
+            first_kw = m.group(1).upper()
+            tpl_src = {}
+            tpl_src[first_kw], j = _scan_delim(
+                body, m.end() - 1, "{", "}", f"{first_kw} template"
+            )
             j = _skip_ws(body, j)
-            tpl2_src = None
-            second_kw = None
-            mm2 = re.match(r"(INSERT)\s*\{", body[j:], re.I)
-            if first_kw == "DELETE" and mm2:
-                second_kw = "INSERT"
-                j2 = j + mm2.end() - 1
-                tpl2_src, j = _scan_delim(body, j2, "{", "}", "INSERT template")
+            m = _TEMPLATE_RE.match(body, j)
+            if first_kw == "DELETE" and m and m.group(1).upper() == "INSERT":
+                tpl_src["INSERT"], j = _scan_delim(
+                    body, m.end() - 1, "{", "}", "INSERT template"
+                )
                 j = _skip_ws(body, j)
             using: list = []
-            while True:
-                mu = re.match(
-                    r"USING\s+(NAMED\s+)?(<[^>]*>|[^\s;{]+)\s*",
-                    body[j:],
-                    re.I,
-                )
-                if not mu:
-                    break
-                using.append(
-                    ("named" if mu.group(1) else "default", mu.group(2))
-                )
-                j = j + mu.end()
-            mw = re.match(r"WHERE\s*", body[j:], re.I)
-            if not mw:
+            while m := _USING_RE.match(body, j):
+                using.append(("named" if m.group(1) else "default", m.group(2)))
+                j = m.end()
+            m = re.match(r"WHERE\s*", body[j:], re.I)
+            if not m:
                 raise SparqlSyntaxError(
                     f"{first_kw} {{…}} needs a WHERE group (ground updates "
                     "use INSERT DATA / DELETE DATA)"
                 )
-            j = _skip_ws(body, j + mw.end())
-            where_src, j = _scan_delim(body, j, "{", "}", "WHERE group")
-            tpl1 = _template_quads(tpl1_src, prefixes, first_kw)
-            tpl2 = (
-                _template_quads(tpl2_src, prefixes, "INSERT")
-                if tpl2_src is not None
+            where_src, i = _scan_delim(
+                body, _skip_ws(body, j + m.end()), "{", "}", "WHERE group"
+            )
+            delete_tpl, insert_tpl = (
+                _template_quads(tpl_src[kw], prefixes, kw)
+                if kw in tpl_src
                 else ()
+                for kw in ("DELETE", "INSERT")
             )
-            if first_kw == "DELETE":
-                ops.append(
-                    Modify(
-                        delete_tpl=tpl1,
-                        insert_tpl=tpl2,
-                        where_src=where_src,
-                        prefixes_src=prefixes_src,
-                        with_slot=with_slot,
-                        with_token=with_token,
-                        using=tuple(using),
-                    )
-                )
-            else:
-                ops.append(
-                    Modify(
-                        delete_tpl=(),
-                        insert_tpl=tpl1,
-                        where_src=where_src,
-                        prefixes_src=prefixes_src,
-                        with_slot=with_slot,
-                        with_token=with_token,
-                        using=tuple(using),
-                    )
-                )
-            i = j
-            continue
-        mc = _CLEAR_RE.match(head)
-        if mc:
-            tgt = mc.group("tgt")
-            i = i + mc.end()
-            low = tgt.lower()
-            if low in ("default", "named", "all"):
-                ops.append(Clear(target=low))
-            else:
-                from rdfproject_msc_spark.sparql.parser import _normalize_term
-
-                g_tok = tgt.split(None, 1)[1]
-                g_slot = _normalize_term(g_tok, prefixes)
-                if g_slot[0] == "var":
-                    raise SparqlSyntaxError("CLEAR GRAPH takes a constant IRI")
-                ops.append(Clear(target="graph", graph_slot=g_slot))
-            continue
-        ml = _LOAD_RE.match(head)
-        if ml:
-            from rdfproject_msc_spark.sparql.parser import _normalize_term
-
-            path = ml.group("iri")
-            if path.startswith("file://"):
-                path = path[len("file://") :]
-            g_slot = None
-            if ml.group("g"):
-                g_slot = _normalize_term(ml.group("g"), prefixes)
-                if g_slot[0] == "var":
-                    raise SparqlSyntaxError(
-                        "LOAD … INTO GRAPH takes a constant IRI"
-                    )
             ops.append(
-                Load(
-                    path=path,
-                    graph_slot=g_slot,
-                    silent=bool(ml.group("silent")),
+                Modify(
+                    delete_tpl=delete_tpl,
+                    insert_tpl=insert_tpl,
+                    where_src=where_src,
+                    prefixes_src=prefixes_src,
+                    with_slot=with_slot,
+                    with_token=with_token,
+                    using=tuple(using),
                 )
             )
-            i = i + ml.end()
-            continue
-        mg = _CREATE_RE.match(head)
-        if mg:
-            from rdfproject_msc_spark.sparql.parser import _normalize_term
-
-            g_slot = _normalize_term(mg.group("g"), prefixes)
-            if g_slot[0] == "var":
-                raise SparqlSyntaxError("CREATE GRAPH takes a constant IRI")
-            ops.append(
-                GraphManage(
-                    op="create",
-                    silent=bool(mg.group("silent")),
-                    graph_slot=g_slot,
-                )
-            )
-            i = i + mg.end()
-            continue
-        mg = _DROP_RE.match(head)
-        if mg:
-            from rdfproject_msc_spark.sparql.parser import _normalize_term
-
-            tgt = mg.group("tgt")
-            low = tgt.lower()
-            if low in ("default", "named", "all"):
-                ops.append(
-                    GraphManage(
-                        op="drop",
-                        silent=bool(mg.group("silent")),
-                        target=low,
-                    )
-                )
-            else:
-                g_slot = _normalize_term(tgt.split(None, 1)[1], prefixes)
-                if g_slot[0] == "var":
-                    raise SparqlSyntaxError("DROP GRAPH takes a constant IRI")
-                ops.append(
-                    GraphManage(
-                        op="drop",
-                        silent=bool(mg.group("silent")),
-                        target="graph",
-                        graph_slot=g_slot,
-                    )
-                )
-            i = i + mg.end()
-            continue
-        mg = _CMA_RE.match(head)
-        if mg:
-            from rdfproject_msc_spark.sparql.parser import _normalize_term
-
-            def _graph_or_default(tok: str):
-                if tok.upper() == "DEFAULT":
-                    return "default"
-                parts = tok.split(None, 1)
-                if parts[0].upper() == "GRAPH":
-                    tok = parts[1]
-                slot = _normalize_term(tok, prefixes)
-                if slot[0] == "var":
-                    raise SparqlSyntaxError(
-                        f"{mg.group('op').upper()} takes constant graph "
-                        "IRIs (or DEFAULT)"
-                    )
-                return slot
-
-            ops.append(
-                GraphManage(
-                    op=mg.group("op").lower(),
-                    silent=bool(mg.group("silent")),
-                    src=_graph_or_default(mg.group("src")),
-                    dst=_graph_or_default(mg.group("dst")),
-                )
-            )
-            i = i + mg.end()
             continue
         raise SparqlSyntaxError(
-            f"unrecognized update operation at: {head[:60]!r}"
+            f"unrecognized update operation at: {body[i:i + 60]!r}"
         )
     if not ops:
         raise SparqlSyntaxError("empty update request")
@@ -653,22 +570,6 @@ def _parse_update_inner(src: str) -> list:
 # ---------------------------------------------------------------------------
 # application
 # ---------------------------------------------------------------------------
-
-
-def _clone_store(
-    store: TripleStore,
-    df: DataFrame | None = None,
-    quads: DataFrame | None | str = "keep",
-    graphs_disjoint: bool | None = None,
-) -> TripleStore:
-    """Replace a base: the copy reads ``df`` as its default-graph base
-    and/or ``quads`` as its quad base, with that relation's pending delta
-    emptied (CLEAR / DROP / COPY / MOVE, RDFS materialization, vacuum).
-    Layout clustering does NOT re-run: a ``repartitionByRange`` per
-    statement would re-shuffle the corpus. Row-level changes go through
-    ``TripleStore.with_changes`` instead, which keeps the base and folds
-    into its delta."""
-    return store.with_base(df, quads, graphs_disjoint)
 
 
 def _append_terms(spark, dictionary: Dictionary, terms, negative_when):
@@ -713,8 +614,6 @@ def _resolve_ground(
             ):
                 border[slot[1]] = len(border)
     if border:
-        import hashlib
-
         canon = repr(
             [
                 tuple(
@@ -823,6 +722,15 @@ def _fold_matches(
     )
 
 
+def _slot_values(templates, kind: str):
+    """The values of every ``kind`` slot (``"var"``, ``"term"``) of
+    template rows ``(g_slot | None, TriplePattern)``, in template order."""
+    for g_slot, tp in templates:
+        for slot in ((g_slot,) if g_slot else ()) + (tp.s, tp.p, tp.o):
+            if slot[0] == kind:
+                yield str(slot[1])
+
+
 def _instantiate(solutions: DataFrame, templates, const_ids):
     """Template quads × solution rows → ``(triples_df | None,
     quads_df | None)``. A solution leaving any used variable unbound
@@ -910,8 +818,8 @@ def _apply_graph_manage(
     - empty named graphs are not representable, so CREATE is a
       validated no-op (it errors on an EXISTING graph per §3.2.3
       unless SILENT — the only state it could check);
-    - DROP GRAPH ≡ CLEAR GRAPH on the rows, plus §3.2.4's
-      absent-graph error unless SILENT;
+    - DROP removes the target's rows and, for a graph, raises §3.2.4's
+      absent-graph error unless SILENT (CLEAR parses as DROP SILENT);
     - COPY/MOVE/ADD are one quad filter + relabel + set-union each —
       no store shuffle beyond the data-sized ADD dedup anti-join.
 
@@ -933,33 +841,25 @@ def _apply_graph_manage(
             )
         return store  # empty graphs are not representable: no-op
     if op.op == "drop":
-        if op.target == "default":
-            return _clone_store(
-                store, df=spark.createDataFrame([], TRIPLE_SCHEMA)
+        if op.target in ("default", "all"):
+            store = store.with_base(spark.createDataFrame([], TRIPLE_SCHEMA))
+        if op.target in ("named", "all") and store.has_quads:
+            store = store.with_base(
+                quads=spark.createDataFrame([], QUAD_SCHEMA),
+                graphs_disjoint=True,
             )
-        if op.target in ("named", "all"):
-            new = store
-            if op.target == "all":
-                new = _clone_store(
-                    new, df=spark.createDataFrame([], TRIPLE_SCHEMA)
-                )
-            if new.has_quads:
-                new = _clone_store(
-                    new,
-                    quads=spark.createDataFrame([], QUAD_SCHEMA),
-                    graphs_disjoint=True,
-                )
-            return new
-        gid = _slot_gid(engine, op.graph_slot)
+        if op.target != "graph":
+            return store
+        gid = _slot_gid(engine, op.graph_slot) if store.has_quads else None
         if not op.silent and not _named_graph_exists(store, gid):
             raise ValueError(
                 "DROP GRAPH: the graph does not exist (§3.2.4 errors on "
                 "an absent graph) — use DROP SILENT"
             )
-        if gid is None or not store.has_quads:
+        if gid is None:
             return store
-        return _clone_store(
-            store, quads=store.quads.filter(F.col("g") != F.lit(gid))
+        return store.with_base(
+            quads=store.quads.filter(F.col("g") != F.lit(gid))
         )
     # COPY / MOVE / ADD
     if op.src == "default":
@@ -986,10 +886,10 @@ def _apply_graph_manage(
             # genuinely-new rows (data-sized: no hint, AQE picks)
             new = store.with_changes(inserted=src_rows)
         else:
-            new = _clone_store(store, df=src_rows)
+            new = store.with_base(src_rows)
         if op.op == "move":
-            new = _clone_store(
-                new, quads=new.quads.filter(F.col("g") != F.lit(src_gid))
+            new = new.with_base(
+                quads=new.quads.filter(F.col("g") != F.lit(src_gid))
             )
         return new
     # named destination
@@ -1012,8 +912,7 @@ def _apply_graph_manage(
             if store.has_quads
             else spark.createDataFrame([], QUAD_SCHEMA)
         )
-        new = _clone_store(
-            store,
+        new = store.with_base(
             quads=base.filter(F.col("g") != F.lit(dst_gid)).unionAll(
                 relabeled
             ),
@@ -1021,12 +920,10 @@ def _apply_graph_manage(
         )
     if op.op == "move":
         if op.src == "default":
-            new = _clone_store(
-                new, df=spark.createDataFrame([], TRIPLE_SCHEMA)
-            )
+            new = new.with_base(spark.createDataFrame([], TRIPLE_SCHEMA))
         else:
-            new = _clone_store(
-                new, quads=new.quads.filter(F.col("g") != F.lit(src_gid))
+            new = new.with_base(
+                quads=new.quads.filter(F.col("g") != F.lit(src_gid))
             )
     return new
 
@@ -1052,7 +949,10 @@ def apply_update(engine, src: str, negative_when=None) -> None:
 def _apply_op(engine, store: TripleStore, op, negative_when) -> None:
     """Apply one parsed operation, swapping ``engine.store`` (and
     ``engine.dictionary`` when terms are appended)."""
-    from rdfproject_msc_spark.sparql.planner import sparql_to_df
+    from rdfproject_msc_spark.sparql.planner import (
+        mint_template_bnodes,
+        sparql_to_df,
+    )
 
     spark = engine.spark
     if isinstance(op, GroundData):
@@ -1087,17 +987,14 @@ def _apply_op(engine, store: TripleStore, op, negative_when) -> None:
 
         delete_tpl = _retarget(op.delete_tpl)
         insert_tpl = _retarget(op.insert_tpl)
+        # template blank nodes are NEVER WHERE bindings — §3.1.3.2
+        # instantiates them fresh per solution (minted below), so they
+        # must not project
         tpl_vars = sorted(
             {
-                str(slot[1])
-                for g_slot, tp in delete_tpl + insert_tpl
-                for slot in ((g_slot,) if g_slot else ())
-                + (tp.s, tp.p, tp.o)
-                if slot[0] == "var"
-                # template blank nodes are NEVER WHERE bindings —
-                # §3.1.3.2 instantiates them fresh per solution
-                # (minted below), so they must not project
-                and not str(slot[1]).startswith("__bn")
+                v
+                for v in _slot_values(delete_tpl + insert_tpl, "var")
+                if not v.startswith("__bn")
             }
         )
         proj = (
@@ -1134,125 +1031,53 @@ def _apply_op(engine, store: TripleStore, op, negative_when) -> None:
         solutions = sparql_to_df(
             store, query, engine.dictionary, term_style=engine.term_style
         )
-        # INSERT-template blank nodes (§3.1.3.2, r11): one FRESH
-        # node per solution — label = "_:u" + a template digest
-        # (positional, stable under anonymous-label renaming) + a
-        # solution-value key + the label's index; co-refers across
-        # that solution's template triples, distinct across
-        # solutions and across different templates, and replay-
-        # deterministic (value-equal duplicate solutions mint the
-        # same node — the inserted graph is a set). The labels are
-        # DATA-sized vocabulary: distributed incremental append
-        # (eager checkpoint, rank caches released), the engine's
-        # dictionary extends for real — inserts persist.
-        fresh_labels: list[str] = []
-        for g_slot, tp in insert_tpl:
-            for slot in (tp.s, tp.o):
-                name = str(slot[1])
-                if (
-                    slot[0] == "var"
-                    and name.startswith("__bn")
-                    and name not in fresh_labels
-                ):
-                    fresh_labels.append(name)
-        if fresh_labels:
-            import hashlib as _hashlib
-
-            from rdfproject_msc_spark.sources.ntriples import (
-                extend_dictionary,
+        # INSERT-template blank nodes (§3.1.3.2, r11): one FRESH node
+        # per solution (mint_template_bnodes), keyed on the solution's
+        # values under the prefix "_:u" + a template digest — positional,
+        # stable under anonymous-label renaming, so different templates
+        # mint different nodes. The engine's dictionary extends for
+        # real: inserts persist.
+        fresh_labels = list(
+            dict.fromkeys(
+                v
+                for v in _slot_values(insert_tpl, "var")
+                if v.startswith("__bn")
             )
-
+        )
+        if fresh_labels:
+            pos = {lbl: k for k, lbl in enumerate(fresh_labels)}
             canon = repr(
                 [
                     (
                         g,
                         tuple(
-                            ("bnode", fresh_labels.index(str(s[1])))
-                            if (
-                                s[0] == "var"
-                                and str(s[1]).startswith("__bn")
-                            )
-                            else s
-                            for s in (tp.s, tp.p, tp.o)
+                            ("bnode", pos[str(slot[1])])
+                            if slot[0] == "var" and str(slot[1]) in pos
+                            else slot
+                            for slot in (tp.s, tp.p, tp.o)
                         ),
                     )
                     for g, tp in insert_tpl
                 ]
             )
-            tdig = _hashlib.md5(canon.encode()).hexdigest()[:8]
-            base_cols = sorted(solutions.columns)
-            key = F.md5(
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.coalesce(F.col(c).cast("string"), F.lit(""))
-                        for c in base_cols
-                    ],
-                )
+            tdig = hashlib.md5(canon.encode()).hexdigest()[:8]
+            solutions, id_cols, engine.dictionary = mint_template_bnodes(
+                solutions,
+                fresh_labels,
+                sorted(solutions.columns),
+                f"_:u{tdig}-",
+                engine.dictionary,
             )
-            lab_rel = None
-            for k, lbl in enumerate(fresh_labels):
-                solutions = solutions.withColumn(
-                    f"__ulab{k}",
-                    F.concat(
-                        F.lit(f"_:u{tdig}-"), key, F.lit(f"-{k}")
-                    ),
-                )
-                part = solutions.select(
-                    F.col(f"__ulab{k}").alias("s_term")
-                )
-                lab_rel = (
-                    part if lab_rel is None else lab_rel.unionAll(part)
-                )
-            parsed = lab_rel.select(
-                "s_term",
-                F.col("s_term").alias("p_term"),
-                F.col("s_term").alias("o_term"),
-            )
-            mint_caches: list = []
-            fresh_ids = extend_dictionary(
-                engine.dictionary.df, parsed, caches=mint_caches
-            ).localCheckpoint(eager=True)
-            for c in mint_caches:
-                c.unpersist()  # the checkpoint no longer reads them
-            engine.dictionary = engine.dictionary.extend(fresh_ids)
-            ext = engine.dictionary.df
-            for k, lbl in enumerate(fresh_labels):
-                m = ext.withColumnRenamed(
-                    "id", f"__uid{k}"
-                ).withColumnRenamed("term", f"__ut{k}")
-                solutions = (
-                    solutions.join(
-                        m,
-                        F.col(f"__ulab{k}") == F.col(f"__ut{k}"),
-                        "left",
-                    )
-                    .drop(f"__ut{k}")
-                    .withColumn(lbl, F.col(f"__uid{k}"))
-                    .drop(f"__uid{k}", f"__ulab{k}")
+            for lbl, col in id_cols.items():
+                solutions = solutions.withColumn(lbl, F.col(col)).drop(
+                    col, f"__fbl_{lbl}"
                 )
         # template constants: insert-side terms may be NEW (extend);
         # delete-side unknown terms simply instantiate nothing
-        ins_texts = sorted(
-            {
-                slot[1]
-                for g_slot, tp in insert_tpl
-                for slot in ((g_slot,) if g_slot else ())
-                + (tp.s, tp.p, tp.o)
-                if slot[0] == "term"
-            }
-        )
-        del_texts = sorted(
-            {
-                slot[1]
-                for g_slot, tp in delete_tpl
-                for slot in ((g_slot,) if g_slot else ())
-                + (tp.s, tp.p, tp.o)
-                if slot[0] == "term"
-            }
-        )
+        ins_texts = sorted(set(_slot_values(insert_tpl, "term")))
+        del_texts = set(_slot_values(delete_tpl, "term"))
         const_ids = engine.dictionary.lookup_terms(
-            sorted(set(ins_texts) | set(del_texts))
+            sorted(set(ins_texts) | del_texts)
         )
         new_terms = [t for t in ins_texts if t not in const_ids]
         if new_terms:
@@ -1370,29 +1195,6 @@ def _apply_op(engine, store: TripleStore, op, negative_when) -> None:
                 quads=True,
                 graphs_disjoint=False,
             )
-        engine.store = store
-    elif isinstance(op, Clear):
-        if op.target in ("default", "all"):
-            empty = spark.createDataFrame([], TRIPLE_SCHEMA)
-            store = _clone_store(store, df=empty)
-        if op.target in ("named", "all") and store.has_quads:
-            store = _clone_store(
-                store,
-                quads=spark.createDataFrame([], QUAD_SCHEMA),
-                graphs_disjoint=True,
-            )
-        if op.target == "graph" and store.has_quads:
-            slot = op.graph_slot
-            gid = (
-                int(slot[1])
-                if slot[0] == "id"
-                else engine.dictionary.lookup_terms([slot[1]]).get(slot[1])
-            )
-            if gid is not None:
-                store = _clone_store(
-                    store,
-                    quads=store.quads.filter(F.col("g") != F.lit(gid)),
-                )
         engine.store = store
     elif isinstance(op, GraphManage):
         engine.store = _apply_graph_manage(

@@ -224,6 +224,27 @@ def test_clear_variants(spark, nt_path):
     eng.update(f"CLEAR GRAPH <{EX}nope>")
 
 
+def test_clear_parses_as_drop_silent():
+    """CLEAR is DROP SILENT (§3.2.2): a graph name ends at ';', so a
+    following operation parses exactly as with spaces around the ';'."""
+    from rdfproject_msc_spark.sparql.update import GraphManage, parse_update
+
+    def parse(src):
+        return parse_update(src, term_style="lexical")
+
+    insert = f"INSERT DATA {{ <{EX}a> <{EX}knows> <{EX}c> }}"
+    tight = parse(f"CLEAR GRAPH <{EX}g1>;{insert}")
+    assert tight == parse(f"CLEAR GRAPH <{EX}g1> ; {insert}")
+    drop = GraphManage(
+        op="drop", silent=True, target="graph",
+        graph_slot=("term", f"<{EX}g1>"),
+    )
+    assert tight[0] == drop
+    assert parse(f"CLEAR SILENT GRAPH <{EX}g1>") == [drop]
+    assert parse(f"DROP SILENT GRAPH <{EX}g1>") == [drop]
+    assert parse("CLEAR ALL") == parse("DROP SILENT ALL")
+
+
 def test_negative_when_rule_classes_new_terms(spark, nt_path):
     """New INSERTed terms follow the engine's ingest-time sign-class
     rule: event terms route to the Negative table."""
@@ -274,6 +295,7 @@ def test_ground_insert_plan_is_broadcast_only(spark, nt_path, tmp_path):
         ),
         (f"INSERT DATA {{ <{EX}s> _:b <{EX}o> }}", "predicate"),
         ("CREATE GRAPH ?g", "constant IRI"),
+        ("CLEAR GRAPH ?g", "constant IRI"),
         (f"DROP GRAPH ?g", "constant IRI"),
         (f"COPY ?g TO <{EX}g>", "constant graph"),
         (f"DELETE {{ ?s <{EX}p>+ ?o }} WHERE {{ ?s <{EX}p> ?o }}", ""),

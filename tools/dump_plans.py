@@ -14,12 +14,18 @@ Query sets, one subdirectory each:
   conformance/  the spec-conformance cases (tests/test_spec_conformance)
   masks/        nullable-key clauses over a small in-memory store — the
                 bound-mask lowerings none of the sets above reach
+  update/       one SPARQL UPDATE request per file, each over a fresh copy
+                of a small lexical store with one named graph: the plans
+                of the resulting `store.df` and `store.quads` plus the
+                sorted `_:` dictionary terms (minted blank-node labels),
+                and a CONSTRUCT whose template holds a blank node (its
+                plan and decoded rows)
 
-A query that raises writes `ERROR <type>: <first message line>` instead
-of a plan, so a changed rejection shows in the diff too. Normalization
-strips only what differs between two runs of the same code: expression
-ids, plan ids, AQE stage and codegen counters, RDD ids and the checkout
-and temp-directory paths.
+A query or request that raises writes `ERROR <type>: <first message
+line>` instead of a plan, so a changed rejection shows in the diff too.
+Normalization strips only what differs between two runs of the same
+code: expression ids, plan ids, AQE stage and codegen counters, RDD ids
+and the checkout and temp-directory paths.
 """
 
 from __future__ import annotations
@@ -111,6 +117,68 @@ MASK_QUERIES = {
     "path_star_seeded": "SELECT * WHERE { 1 (2/3)* ?o }",
 }
 
+_UPD_NQ = """\
+<http://ex.org/a> <http://ex.org/knows> <http://ex.org/b> .
+<http://ex.org/b> <http://ex.org/knows> <http://ex.org/c> .
+<http://ex.org/c> <http://ex.org/knows> <http://ex.org/a> .
+<http://ex.org/a> <http://ex.org/name> "Alice" .
+<http://ex.org/a> <http://ex.org/knows> <http://ex.org/c> <http://ex.org/g1> .
+<http://ex.org/c> <http://ex.org/name> "Cee" <http://ex.org/g1> .
+"""
+_UPD_LOAD_NT = "<http://ex.org/l> <http://ex.org/knows> <http://ex.org/a> .\n"
+# the LOAD document's path replaces {load}
+UPDATE_REQUESTS = {
+    "insert_data": (
+        "PREFIX : <http://ex.org/> INSERT DATA { :a :knows :d . "
+        "GRAPH :g1 { :d :knows :a } }"
+    ),
+    "insert_data_bnode": (
+        'PREFIX : <http://ex.org/> INSERT DATA { :a :knows _:x . _:x :name "X" }'
+    ),
+    "delete_data": (
+        "PREFIX : <http://ex.org/> DELETE DATA { :a :knows :b . "
+        "GRAPH :g1 { :a :knows :c } }"
+    ),
+    "delete_where": "PREFIX : <http://ex.org/> DELETE WHERE { ?s :knows ?o }",
+    "with_delete_where": (
+        "PREFIX : <http://ex.org/> WITH :g1 DELETE WHERE { ?s :knows ?o }"
+    ),
+    "modify_bnode": (
+        "PREFIX : <http://ex.org/> DELETE { ?s :knows ?o } "
+        "INSERT { ?s :via _:b . _:b :to ?o } WHERE { ?s :knows ?o }"
+    ),
+    "insert_where_graph_bnode": (
+        "PREFIX : <http://ex.org/> INSERT { GRAPH :g2 { [] :from ?s } } "
+        "WHERE { ?s :name ?n }"
+    ),
+    "modify_using": (
+        "PREFIX : <http://ex.org/> DELETE { } INSERT { ?s :seen ?o } "
+        "USING :g1 WHERE { ?s :knows ?o }"
+    ),
+    "with_modify": (
+        "PREFIX : <http://ex.org/> WITH :g1 DELETE { ?s :name ?n } "
+        "INSERT { ?s :label ?n } WHERE { ?s :name ?n }"
+    ),
+    "clear_default": "CLEAR DEFAULT",
+    "clear_named": "CLEAR NAMED",
+    "clear_all": "CLEAR ALL",
+    "clear_graph": "CLEAR GRAPH <http://ex.org/g1>",
+    "clear_silent_absent_graph": "CLEAR SILENT GRAPH <http://ex.org/nope>",
+    "drop_graph": "DROP GRAPH <http://ex.org/g1>",
+    "drop_absent_graph": "DROP GRAPH <http://ex.org/nope>",
+    "drop_all": "DROP ALL",
+    "create_existing": "CREATE GRAPH <http://ex.org/g1>",
+    "copy": "COPY <http://ex.org/g1> TO <http://ex.org/g2>",
+    "move_default": "MOVE DEFAULT TO <http://ex.org/g2>",
+    "add_to_default": "ADD GRAPH <http://ex.org/g1> TO DEFAULT",
+    "load": "LOAD <file://{load}>",
+    "load_into_graph": "LOAD <file://{load}> INTO GRAPH <http://ex.org/g3>",
+}
+CONSTRUCT_BNODE = (
+    "PREFIX : <http://ex.org/> CONSTRUCT { ?s :via _:b . _:b :to ?o } "
+    "WHERE { ?s :knows ?o }"
+)
+
 _NORMALIZE = [
     (re.compile(r"#\d+"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
@@ -129,13 +197,17 @@ def normalize(plan: str, paths: list[str]) -> str:
     return plan
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
 def _write(out_dir: str, sub: str, name: str, build, paths) -> None:
+    """``build`` returns a DataFrame (its plan is written) or the text."""
     os.makedirs(os.path.join(out_dir, sub), exist_ok=True)
     safe = re.sub(r"[^A-Za-z0-9_.-]", "_", name)
     try:
-        df = build()
-        text = df._jdf.queryExecution().optimizedPlan().toString()
-        text = normalize(text, paths)
+        out = build()
+        text = normalize(out if isinstance(out, str) else _plan(out), paths)
     except Exception as exc:  # noqa: BLE001 — the rejection IS the output
         msg = (str(exc).strip().splitlines() or [""])[0]
         text = f"ERROR {type(exc).__name__}: {normalize(msg, paths)}\n"
@@ -201,8 +273,68 @@ def main() -> None:
     for name, query in MASK_QUERIES.items():
         _write(out_dir, "masks", name,
                lambda: sparql_to_df(store, query), paths)
+
+    _dump_updates(spark, out_dir, tmp, paths)
     spark.stop()
     shutil.rmtree(tmp)
+
+
+def _dump_updates(spark, out_dir: str, tmp: str, paths) -> None:
+    """The ``update/`` set: each request runs on its own engine over the
+    same ingested relations, so every file stands alone."""
+    from pyspark.sql import functions as F
+
+    from rdfproject_msc_spark.dictionary import Dictionary
+    from rdfproject_msc_spark.engine import Engine
+    from rdfproject_msc_spark.sources.ntriples import ingest_rdf
+    from rdfproject_msc_spark.store import TripleStore
+
+    nq, load = os.path.join(tmp, "upd.nq"), os.path.join(tmp, "load.nt")
+    with open(nq, "w") as f:
+        f.write(_UPD_NQ)
+    with open(load, "w") as f:
+        f.write(_UPD_LOAD_NT)
+    # checkpointed: each plan shows the ingested relations as leaves
+    triples, quads, d = (
+        df.localCheckpoint() for df in ingest_rdf(spark, nq, "nq")
+    )
+
+    def engine():
+        eng = Engine(
+            spark,
+            store=TripleStore(triples, layout="single"),
+            dictionary=Dictionary(d, broadcast_hint=False),
+            term_style="lexical",
+        )
+        eng.store.attach_quads(quads)
+        return eng
+
+    def run(request):
+        eng = engine().update(request)
+        store = eng.store
+        bnodes = sorted(
+            r["term"]
+            for r in eng.dictionary.df.filter(
+                F.col("term").startswith("_:")
+            ).collect()
+        )
+        return "\n".join([
+            "== store.df", _plan(store.df),
+            "== store.quads",
+            _plan(store.quads) if store.has_quads else "(none)",
+            "== _: terms", *bnodes, "",
+        ])
+
+    for name, request in UPDATE_REQUESTS.items():
+        _write(out_dir, "update", name,
+               lambda: run(request.replace("{load}", load)), paths)
+
+    def construct():
+        df = engine().sparql(CONSTRUCT_BNODE, decode=True)
+        rows = sorted(" ".join(r) for r in df.collect())
+        return "\n".join([_plan(df), "== rows", *rows, ""])
+
+    _write(out_dir, "update", "construct_bnode", construct, paths)
 
 
 if __name__ == "__main__":
