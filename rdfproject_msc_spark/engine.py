@@ -54,6 +54,24 @@ from rdfproject_msc_spark.store import TripleStore
 # about 36, a few KB each) and for a few full one-document answers
 _ANSWER_CACHE_BYTES = 16 << 20
 
+# Parquet bytes up to which ``open`` holds a relation in memory. Held,
+# a relation takes 11-15 times its Parquet bytes (110,055 triples: a
+# 0.79 MB store held as 9.8 MB, a 0.75 MB dictionary as 11.0 MB), so
+# the bound, about a million triples, keeps each relation near 120 MB
+# of executor memory; a local checkpoint spills what does not fit to
+# local disk instead of failing
+HELD_BYTES = 8 << 20
+
+
+def _reads(df: DataFrame, rdd_id: int) -> bool:
+    """Whether ``df``'s plan has the checkpoint ``rdd_id`` as a leaf."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.nodeName() == "LogicalRDD" and leaf.rdd().id() == rdd_id:
+            return True
+    return False
+
 
 def _answer_bytes(key: tuple, value: tuple) -> int:
     """What one cached answer weighs: its strings' UTF-8 bytes."""
@@ -90,6 +108,10 @@ class Engine:
         # dictionary, rank intermediates) — released by release_caches()
         # / close() / vacuum() once nothing reads their lineage
         self._ingest_caches: list = []
+        # what ``open`` holds in memory: (local checkpoint, the object a
+        # snapshot holds it by — a store's base or a dictionary's base —
+        # and the Parquet read it copies); released by ``_release_held``
+        self._held: list = []
         # endpoint answers: key → (value, bytes), oldest use first; the
         # snapshot they answer and their total bytes
         self._answers: dict = {}
@@ -191,6 +213,7 @@ class Engine:
             self._swap_dictionary(
                 Dictionary(TIO.read_dictionary_tsv(self.spark, dict_path))
             )
+        self._release_held()
         return self
 
     def load_quads(self, quads_path: str) -> "Engine":
@@ -240,22 +263,90 @@ class Engine:
         dictionaries store lexical forms; pass "localized" explicitly
         for a reference-convention dictionary that was re-saved as
         parquet). ``dict_broadcast`` defaults False: built dictionaries
-        scale with the corpus."""
+        scale with the corpus.
+
+        A small snapshot is held in memory. When the files under
+        ``path`` come to at most ``HELD_BYTES`` (8 MiB of Parquet,
+        measured on the driver with no Spark job), the store is read
+        once into a local checkpoint, ``sign`` column included, and
+        every read scans that instead of reopening the files; the
+        dictionary under ``dict_path`` follows the same rule. Each
+        costs one job here. A larger relation is read as Parquet on
+        every scan, so a sign-split store keeps its directory pruning.
+        Held relations are released once nothing in the engine reads
+        them: on the next ``open``, ``load_triples`` or ``vacuum``
+        that replaces them, and on ``close``/``release_caches``, which
+        first point a store or dictionary still holding one back at
+        its Parquet read. Relations planned before a release can no
+        longer run."""
         self._release_store()
-        self.store = TripleStore.read(
+        store = TripleStore.read(
             self.spark, path, layout=layout, cluster_by=cluster_by
         )
+        read = store._df
+        held = self._hold(read, path)
+        if held is not None:
+            store = store.with_base(held, pin=False)
+            self._held.append((held, held, read))
+        self.store = store
         if dict_path is not None:
-            self._swap_dictionary(
-                Dictionary(
-                    self.spark.read.parquet(dict_path),
-                    broadcast_hint=dict_broadcast,
-                )
+            read = self.spark.read.parquet(dict_path)
+            held = self._hold(read, dict_path)
+            dictionary = Dictionary(
+                read if held is None else held, broadcast_hint=dict_broadcast
             )
+            if held is not None:
+                self._held.append((held, dictionary._base, read))
+            self._swap_dictionary(dictionary)
             self.term_style = term_style or "lexical"
         elif term_style is not None:
             self.term_style = term_style
+        self._release_held()
         return self
+
+    def _hold(self, df: DataFrame, path: str) -> DataFrame | None:
+        """A local checkpoint of ``df``, the Parquet read of ``path``,
+        when the files under ``path`` come to at most ``HELD_BYTES``;
+        else None. The size comes from the Hadoop FS API on the driver,
+        as ``TripleStore._marker_fs_path`` finds its marker."""
+        jpath = self.spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        if fs.getContentSummary(jpath).getLength() > HELD_BYTES:
+            return None
+        return df.localCheckpoint(eager=True)
+
+    def _release_held(self, reread: bool = False) -> None:
+        """Release each relation ``open`` held that the store and the
+        dictionary no longer read. ``reread`` first points a store base
+        or dictionary base that is one back at its Parquet read, keeping
+        the store's pending deltas and the dictionary's driver rows."""
+        for _, used, read in self._held if reread else ():
+            store, d = self.store, self.dictionary
+            if store is not None and store._df is used:
+                self.store = store._copy()
+                self.store._df = read
+                if self._register_as:
+                    self.store.register(self.spark, self._register_as)
+            if d is not None and d._base is used:
+                back = Dictionary(read, broadcast_hint=d.broadcast_hint)
+                self.dictionary = back.extend(d._local) if d._local else back
+        live = [
+            df
+            for df in (
+                self.store and self.store._df,
+                self.store and self.store._quads,
+                self.dictionary and self.dictionary.df,
+            )
+            if df is not None
+        ]
+        kept = []
+        for entry in self._held:
+            rdd = entry[0]._jdf.queryExecution().analyzed().rdd()
+            if any(_reads(df, rdd.id()) for df in live):
+                kept.append(entry)
+            else:
+                rdd.unpersist(False)
+        self._held = kept
 
     # -- entry point 2: SQL ------------------------------------------------
     def sql(self, query: str) -> DataFrame:
@@ -412,8 +503,9 @@ class Engine:
     # -- lifecycle: cache release + compaction ------------------------------
     def release_caches(self) -> "Engine":
         """Unpersist every DataFrame the raw-RDF ingest cached, drop the
-        dictionary's materialized STR values and the endpoint's answers.
-        Only
+        dictionary's materialized STR values and the endpoint's answers,
+        and release what ``open`` held, after pointing the store and
+        dictionary back at their Parquet reads. Only
         call once nothing live reads their lineage (after ``save()`` +
         re-``open()``, or after ``vacuum()`` — which calls this itself);
         unpersisting earlier silently recomputes the multi-shuffle rank
@@ -423,13 +515,15 @@ class Engine:
         self._ingest_caches.clear()
         if self.dictionary is not None:
             self.dictionary.release()
+        self._release_held(reread=True)
         with self._answers_lock:
             self._clear_answers()
             self._answers_of = ()
         return self
 
     def close(self) -> None:
-        """End-of-lifetime hook: release the ingest caches. The
+        """End-of-lifetime hook: release the ingest caches and what
+        ``open`` held (``release_caches``). The
         SparkSession is the caller's (not stopped here); the Engine
         object is reusable after a new ``load_triples``/``open``."""
         self.release_caches()

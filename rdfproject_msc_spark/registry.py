@@ -12,6 +12,11 @@ name before hashing values.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -69,6 +74,21 @@ _DEC = "decimal(18,2)"
 _ANN = dict(dim=64, n_planes=16, bands=8, seed=42, k=10, query_id=0)
 
 
+@functools.cache
+def _scratch_root() -> str:
+    """This process's scratch directory: one ``tempfile.mkdtemp``, made
+    on first use and removed at exit, so two processes running the same
+    row never write each other's inputs."""
+    root = tempfile.mkdtemp(prefix="rdfproject_msc_")
+    atexit.register(shutil.rmtree, root, True)
+    return root
+
+
+def _scratch(name: str, tag: str) -> str:
+    """Where a row writes its scratch inputs for one data directory."""
+    return os.path.join(_scratch_root(), name, tag)
+
+
 def _store(spark: SparkSession, sf_dir: str, **kw) -> TripleStore:
     # cache=True: the triple relation is DERIVED (6-way union over 4 parquet
     # tables); multi-leg self-joins would otherwise re-derive it per leg.
@@ -90,9 +110,6 @@ def _persisted_store(
     the files. This is the engine's actual 100 TB read path — layout cost is
     paid at ingest, after which every query gets directory pruning and
     row-group skipping instead of an in-query shuffle (store.py:24-27)."""
-    import os
-    import tempfile
-
     tag = os.path.basename(os.path.normpath(sf_dir))
     # _STORE_FORMAT versions the on-disk layout: /tmp persists across
     # rounds, and a write-once guard must never accept a store written by
@@ -491,14 +508,11 @@ def rdf_text_lifecycle(spark, sf_dir):
     the 2-hop SQL with typed literals (J1/P7/P9) → dictionary-join decode
     (J5) → CSV text out (S4) → read back. Every literal-I/O operator of the
     reference in one oracle-checked flow."""
-    import os
-    import tempfile
-
     from rdfproject_msc_spark.dictionary import Dictionary
     from rdfproject_msc_spark.sources import triples as TIO
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(tempfile.gettempdir(), "rdfproject_msc_text", tag)
+    base = _scratch("rdfproject_msc_text", tag)
     # materialize the derived graph in the reference's text formats
     triples_df(spark, sf_dir).write.mode("overwrite").csv(
         os.path.join(base, "triples"), sep=" "
@@ -537,13 +551,10 @@ def sparql_lexical_str(spark, sf_dir):
     tagged-literal string-function arm (CONTAINS + LCASE over STR) and
     a decimal-typed value arm (?b >= 5000 over '^^xsd:decimal'
     lexicals with STR-projected values)."""
-    import os
-    import tempfile
-
     from rdfproject_msc_spark.engine import Engine
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(tempfile.gettempdir(), "rdfproject_msc_lexstr", tag)
+    base = _scratch("rdfproject_msc_lexstr", tag)
 
     def _line(*parts):
         return F.concat(
@@ -607,13 +618,10 @@ def sparql_value_order(spark, sf_dir):
     typed values through the same _term_numeric routing. The LIMIT
     makes the ordering itself the selected SET, so the DuckDB twin
     verifies the order through the hash compare."""
-    import os
-    import tempfile
-
     from rdfproject_msc_spark.engine import Engine
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(tempfile.gettempdir(), "rdfproject_msc_vorder", tag)
+    base = _scratch("rdfproject_msc_vorder", tag)
 
     def _line(*parts):
         return F.concat(
@@ -677,13 +685,10 @@ def rdf_ingest_nt(spark, sf_dir):
     take the Negative class) → encode → sign-split layout → query on ids
     (static Positive routing) → decode. Ids in the output prove the
     dense-rank assignment end-to-end against the row_number oracle."""
-    import os
-    import tempfile
-
     from rdfproject_msc_spark.engine import Engine
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(tempfile.gettempdir(), "rdfproject_msc_nt", tag)
+    base = _scratch("rdfproject_msc_nt", tag)
 
     def _line(*parts):
         return F.concat(
@@ -807,13 +812,10 @@ def rdf_ingest_rdfxml(spark, sf_dir):
     language-tagged literal → decode. The DuckDB twin recomputes the
     join from the base tables with the same term spellings, so the
     hash compare proves the whole XML round trip."""
-    import os
-    import tempfile
-
     from rdfproject_msc_spark.engine import Engine
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(tempfile.gettempdir(), "rdfproject_msc_rdfxml", tag)
+    base = _scratch("rdfproject_msc_rdfxml", tag)
 
     nation = load_table(spark, sf_dir, "nation")
     customer = load_table(spark, sf_dir, "customer")
@@ -1727,11 +1729,8 @@ def bucketed_join(spark, sf_dir):
     tests/test_skew_and_plans.py). At 100 TB this converts the recurring
     fact⋈fact shuffle into a one-time layout cost, exactly like the
     TripleStore's persisted clustering does for scans."""
-    import os
-    import tempfile
-
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), "rdfproject_msc_bucketed", tag)
+    base = _scratch("rdfproject_msc_bucketed", tag)
     specs = {
         f"b_orders_{tag}": (
             load_table(spark, sf_dir, "orders").select(
@@ -2005,15 +2004,13 @@ def events_hourly_stream(spark, sf_dir):
     micro-batch), watermark + tumbling-window rollup, drain with
     availableNow into a memory sink, return the batch result. Oracle = the
     SAME SQL as the batch entry — stream-batch equivalence is the gate."""
-    import os
-    import tempfile
     import uuid
 
     from rdfproject_msc_spark import streaming as S
 
     tag = os.path.basename(os.path.normpath(sf_dir))
     run_id = uuid.uuid4().hex[:8]
-    base = os.path.join(tempfile.gettempdir(), "rdfproject_msc_stream", tag)
+    base = _scratch("rdfproject_msc_stream", tag)
     events_dir = S.stage_events_dir(spark, sf_dir, os.path.join(base, "events"))
     stream = S.read_events_stream(spark, events_dir, max_files_per_trigger=2)
     # fresh checkpoint + table name per run: a reused checkpoint would say

@@ -1,8 +1,14 @@
 """Extras around the analytics entries: the approx-sketch error bound that
 cannot be oracle-checked (HLL++ differs from DuckDB's HLL) is pinned here
-against the exact entry instead."""
+against the exact entry instead, and the rows' scratch directory is one
+per process."""
 
 from __future__ import annotations
+
+import os
+import subprocess
+import sys
+import tempfile
 
 from pyspark.sql import functions as F
 
@@ -45,3 +51,31 @@ def test_pivot_row_sums_match_totals(spark, sf_dir):
         ).alias("t")
     ).collect()[0].t
     assert total == load_table(spark, sf_dir, "events").count()
+
+
+def test_scratch_directory_is_one_per_process():
+    """Rows that write scratch inputs share one directory per process,
+    under the temp directory; another process gets its own, removed
+    when it exits."""
+    from rdfproject_msc_spark import registry as R
+
+    root = R._scratch_root()
+    for name in ("rdfproject_msc_text", "rdfproject_msc_nt"):
+        path = R._scratch(name, "sf0.001")
+        assert path == os.path.join(root, name, "sf0.001")
+    assert R._scratch_root() == root and os.path.isdir(root)
+    assert os.path.dirname(root) == tempfile.gettempdir()
+    code = (
+        "from rdfproject_msc_spark import registry as R; "
+        "print(R._scratch_root())"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    others = [
+        subprocess.run(
+            [sys.executable, "-c", code], cwd=repo, check=True,
+            capture_output=True, text=True,
+        ).stdout.strip()
+        for _ in range(2)
+    ]
+    assert len({root, *others}) == 3
+    assert not any(os.path.exists(o) for o in others)

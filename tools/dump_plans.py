@@ -20,12 +20,19 @@ Query sets, one subdirectory each:
                 sorted `_:` dictionary terms (minted blank-node labels),
                 and a CONSTRUCT whose template holds a blank node (its
                 plan and decoded rows)
+  opened/       the endpoint benchmark's seven read shapes (chain, star,
+                OPTIONAL, GROUP BY count, numeric FILTER … ORDER BY DESC
+                … LIMIT, CONTAINS(STR()), REGEX(STR())), decoded, over a
+                small sign-split store and dictionary saved and reopened
+                through `Engine.open`
 
 A query or request that raises writes `ERROR <type>: <first message
 line>` instead of a plan, so a changed rejection shows in the diff too.
 Normalization strips only what differs between two runs of the same
 code: expression ids, plan ids, AQE stage and codegen counters, RDD ids
-and the checkout and temp-directory paths.
+and the checkout and temp-directory paths. The registry rows' per-process
+scratch directory reads as the temp directory it sits in, so the dumps
+compare with those of a checkout whose rows wrote straight under it.
 """
 
 from __future__ import annotations
@@ -179,6 +186,34 @@ CONSTRUCT_BNODE = (
     "WHERE { ?s :knows ?o }"
 )
 
+_OPENED_NT = """\
+<http://ex.org/a> <http://ex.org/knows> <http://ex.org/b> .
+<http://ex.org/b> <http://ex.org/knows> <http://ex.org/c> .
+<http://ex.org/a> <http://ex.org/name> "Alice" .
+<http://ex.org/b> <http://ex.org/name> "Bob"@en .
+<http://ex.org/a> <http://ex.org/age> "31"^^<http://www.w3.org/2001/XMLSchema#decimal> .
+<http://ex.org/b> <http://ex.org/age> "42"^^<http://www.w3.org/2001/XMLSchema#decimal> .
+<urn:ev1> <http://ex.org/by> <http://ex.org/a> .
+<urn:ev1> <http://ex.org/price> "12.5"^^<http://www.w3.org/2001/XMLSchema#decimal> .
+<urn:ev2> <http://ex.org/by> <http://ex.org/b> .
+<urn:ev2> <http://ex.org/price> "3.0"^^<http://www.w3.org/2001/XMLSchema#decimal> .
+"""
+_EX = "PREFIX : <http://ex.org/> "
+OPENED_QUERIES = {
+    "chain": _EX + "SELECT ?x ?z WHERE { ?x :knows ?y . ?y :knows ?z }",
+    "star": _EX + "SELECT ?s ?n ?a WHERE { ?s :name ?n . ?s :age ?a . "
+    "?s :knows ?o }",
+    "optional": _EX + "SELECT ?s ?n WHERE { ?s :knows ?o "
+    "OPTIONAL { ?s :name ?n } }",
+    "count": _EX + "SELECT ?s (COUNT(?e) AS ?c) WHERE { ?e :by ?s } "
+    "GROUP BY ?s",
+    "top": _EX + "SELECT ?e ?p WHERE { ?e :price ?p FILTER(?p > 5) } "
+    "ORDER BY DESC(?p) LIMIT 2",
+    "contains": _EX + "SELECT ?s WHERE { ?s :name ?n "
+    'FILTER(CONTAINS(STR(?n), "o")) }',
+    "regex": _EX + 'SELECT ?s WHERE { ?s :name ?n FILTER(REGEX(STR(?n), "^A")) }',
+}
+
 _NORMALIZE = [
     (re.compile(r"#\d+"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
@@ -189,9 +224,9 @@ _NORMALIZE = [
 ]
 
 
-def normalize(plan: str, paths: list[str]) -> str:
-    for path in paths:
-        plan = plan.replace(path, "<path>")
+def normalize(plan: str, paths: list[tuple[str, str]]) -> str:
+    for path, name in paths:
+        plan = plan.replace(path, name)
     for pat, rep in _NORMALIZE:
         plan = pat.sub(rep, plan)
     return plan
@@ -217,6 +252,7 @@ def _write(out_dir: str, sub: str, name: str, build, paths) -> None:
 
 def main() -> None:
     out_dir, sf_dir = sys.argv[1], sys.argv[2]
+    from rdfproject_msc_spark import registry
     from rdfproject_msc_spark.engine import Engine
     from rdfproject_msc_spark.registry import REGISTRY
     from rdfproject_msc_spark.session import get_spark
@@ -233,7 +269,10 @@ def main() -> None:
         extra_conf={"spark.sql.maxMetadataStringLength": "100000"},
     )
     tmp = tempfile.mkdtemp(prefix="dump_plans_")
-    paths = [tmp, os.path.realpath(REPO), REPO]
+    paths = [(p, "<path>") for p in (tmp, os.path.realpath(REPO), REPO)]
+    scratch = getattr(registry, "_scratch_root", None)
+    if scratch is not None:
+        paths.insert(1, (scratch(), tempfile.gettempdir()))
 
     for name, spec in REGISTRY.items():
         if name.startswith(("sparql", "rdf")):
@@ -275,6 +314,7 @@ def main() -> None:
                lambda: sparql_to_df(store, query), paths)
 
     _dump_updates(spark, out_dir, tmp, paths)
+    _dump_opened(spark, out_dir, tmp, paths)
     spark.stop()
     shutil.rmtree(tmp)
 
@@ -335,6 +375,29 @@ def _dump_updates(spark, out_dir: str, tmp: str, paths) -> None:
         return "\n".join([_plan(df), "== rows", *rows, ""])
 
     _write(out_dir, "update", "construct_bnode", construct, paths)
+
+
+def _dump_opened(spark, out_dir: str, tmp: str, paths) -> None:
+    """The ``opened/`` set: the read shapes over a store and dictionary
+    that ``Engine.open`` reads back from ``save``'s Parquet."""
+    from rdfproject_msc_spark.engine import Engine
+
+    d = os.path.join(tmp, "opened")
+    os.makedirs(d)
+    nt, store, dct = (os.path.join(d, n) for n in ("g.nt", "store", "dict"))
+    with open(nt, "w") as f:
+        f.write(_OPENED_NT)
+    ingest = Engine(spark).load_triples(
+        nt, fmt="nt", layout="sign_split",
+        negative_when="term LIKE '<urn:ev%'",
+    )
+    ingest.save(store, dict_path=dct)
+    ingest.close()
+    eng = Engine(spark).open(store, layout="sign_split", dict_path=dct)
+    for name, query in OPENED_QUERIES.items():
+        _write(out_dir, "opened", name,
+               lambda: eng.sparql(query, decode=True), paths)
+    eng.close()
 
 
 if __name__ == "__main__":
