@@ -108,9 +108,11 @@ class Engine:
         # dictionary, rank intermediates) — released by release_caches()
         # / close() / vacuum() once nothing reads their lineage
         self._ingest_caches: list = []
-        # what ``open`` holds in memory: (local checkpoint, the object a
-        # snapshot holds it by — a store's base or a dictionary's base —
-        # and the Parquet read it copies); released by ``_release_held``
+        # what the engine holds in memory: (local checkpoint, the object
+        # a snapshot holds it by — a store's base or a dictionary's base —
+        # and the Parquet read it copies, or None for a checkpoint
+        # ``_checkpoint`` made with no read behind it); released by
+        # ``_release_held``
         self._held: list = []
         # endpoint answers: key → (value, bytes), oldest use first; the
         # snapshot they answer and their total bytes
@@ -315,12 +317,23 @@ class Engine:
             return None
         return df.localCheckpoint(eager=True)
 
+    def _checkpoint(self, df: DataFrame) -> DataFrame:
+        """A local checkpoint of ``df`` held until nothing in the engine
+        reads it; it has no Parquet read to point back at."""
+        held = df.localCheckpoint(eager=True)
+        self._held.append((held, held, None))
+        return held
+
     def _release_held(self, reread: bool = False) -> None:
-        """Release each relation ``open`` held that the store and the
+        """Release each held relation that the store and the
         dictionary no longer read. ``reread`` first points a store base
         or dictionary base that is one back at its Parquet read, keeping
-        the store's pending deltas and the dictionary's driver rows."""
+        the store's pending deltas and the dictionary's driver rows; a
+        checkpoint with no read stays, so a closed engine stays
+        readable."""
         for _, used, read in self._held if reread else ():
+            if read is None:
+                continue
             store, d = self.store, self.dictionary
             if store is not None and store._df is used:
                 self.store = store._copy()
@@ -491,7 +504,7 @@ class Engine:
         """Replace ``store``'s triple base by ``df``, materialized once
         (as ``vacuum`` does) so later actions read it instead of running
         its lineage again."""
-        self.store = store.with_base(df.localCheckpoint(eager=True))
+        self.store = store.with_base(self._checkpoint(df))
         if self._register_as:
             self.store.register(self.spark, self._register_as)
 
@@ -544,7 +557,9 @@ class Engine:
         caches the snapshot no longer reads. Reads need no vacuum to
         stay fast — updates keep the store's plan bounded — so what it
         buys is the dropped dead terms and one checkpoint in place of
-        base + delta.
+        base + delta. The checkpoints are released like what ``open``
+        holds, once nothing in the engine reads them; ``close`` keeps
+        them, since they have no Parquet read to fall back on.
 
         ``reindex=False`` (default) preserves every surviving id —
         query answers are bit-for-bit identical, encoded ids included.
@@ -648,10 +663,10 @@ class Engine:
             new_dict = live
         # materialize the compacted snapshot (cuts lineage to the
         # superseded ingest caches AND the stacked update deltas)
-        new_dict = new_dict.localCheckpoint(eager=True)
-        new_df = new_df.localCheckpoint(eager=True)
+        new_dict = self._checkpoint(new_dict)
+        new_df = self._checkpoint(new_df)
         if new_quads is not None:
-            new_quads = new_quads.localCheckpoint(eager=True)
+            new_quads = self._checkpoint(new_quads)
         after = new_dict.count()
         for c in rank_caches:
             c.unpersist()  # the checkpointed snapshot no longer reads them

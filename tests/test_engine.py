@@ -113,6 +113,37 @@ def test_cli_sparql_run_and_explain(engine, spark, tmp_path_factory, capsys):
     assert "Physical Plan" in out and "Scan" in out
 
 
+def test_cli_load_then_sql(engine, spark, sf_dir, tmp_path_factory, capsys):
+    """CLI ``load`` persists the reference's text triples, and ``sql``
+    over that store answers as ``Engine.sql`` does."""
+    import re
+
+    from rdfproject_msc_spark.cli import main
+
+    base = tmp_path_factory.mktemp("cli_load")
+    triples_df(spark, sf_dir).write.mode("overwrite").csv(
+        str(base / "triples"), sep=" "
+    )
+    dictionary_df(spark, sf_dir).write.mode("overwrite").csv(
+        str(base / "dict"), sep="\t"
+    )
+    store_path = str(base / "store")
+    q = "SELECT count(*) AS n FROM Positive"
+    want = engine.sql(q).collect()[0].n
+    assert main([
+        "load", "--triples", str(base / "triples"), "--dict",
+        str(base / "dict"), "--layout", "sign_split", "--cluster-by", "s",
+        "--out", store_path,
+    ]) == 0
+    n = spark.read.parquet(store_path).count()
+    assert f"persisted {n} triples to {store_path} " in capsys.readouterr().out
+    assert main(["sql", "--store", store_path, "--query", q]) == 0
+    assert re.findall(r"^\|(\d+)\s*\|$", capsys.readouterr().out, re.M) == [
+        str(want)
+    ]
+    engine.store.register(spark, "table")  # the CLI re-registered the views
+
+
 def test_engine_quads_lifecycle(engine, spark, tmp_path_factory, capsys):
     """Named graphs through the public API: attach a quad relation,
     answer a GRAPH query, persist with save(quads_path=...), reopen via

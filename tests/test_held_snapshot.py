@@ -198,3 +198,27 @@ def test_close_keeps_what_a_grown_dictionary_reads(spark, saved):
     assert _persisted(spark) == before + 1  # two held, the old one gone
     assert not any(e[0] is held for e in eng._held)
     eng.close()
+
+
+def test_vacuum_checkpoints_release_once_unread(spark, saved):
+    """The checkpoints ``vacuum`` installs are held like what ``open``
+    holds: ``close`` keeps them, so the engine still answers, and the
+    next ``open`` releases them. Compared as sets of RDD ids: the
+    context cleaner may drop an earlier test's relation meanwhile."""
+
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    store, dct = saved
+    before = persisted()
+    eng = Engine(spark)
+    for _ in range(3):
+        eng.open(store, layout="sign_split", dict_path=dct)
+        eng.update(P + "DELETE DATA { ex:b ex:knows ex:c }")
+        eng.vacuum()
+    want = answer(eng, READS["chain"])
+    eng.close()
+    assert answer(eng, READS["chain"]) == want
+    eng.open(store, layout="sign_split", dict_path=dct)
+    eng.close()
+    assert persisted() <= before
