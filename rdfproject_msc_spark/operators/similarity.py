@@ -647,15 +647,6 @@ def _py_plane_dots(
     return dots
 
 
-def _py_signature(query_vec: list[float], dim: int, n_planes: int, seed: int) -> int:
-    """Driver-side twin of lsh_signatures for ONE vector: MSB-first fold
-    over the plane dots, >= 0 bit rule — bit-exact vs the JVM expression."""
-    sig = 0
-    for dot in _py_plane_dots(query_vec, dim, n_planes, seed):
-        sig = sig * 2 + (1 if dot >= 0 else 0)
-    return sig
-
-
 def _multiprobe_bands(
     query_vec: list[float],
     dim: int,

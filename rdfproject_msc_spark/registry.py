@@ -804,15 +804,16 @@ def rdf_ingest_rdfxml(spark, sf_dir):
     """RDF/XML first mile (r12, sources/rdfxml.py): materialize genuine
     MULTI-FILE RDF/XML from the base tables — row fragments build
     JVM-side (F.concat, XML-escaped), and each writer partition wraps
-    its fragments into ONE well-formed document via an Arrow
-    ``mapInPandas`` header/footer (the same first-batch technique as
-    the Turtle ``@prefix`` prepend; per-FILE parse parallelism = the
-    partition count) — then parse per file → build the dictionary
+    its fragments into ONE well-formed document via
+    ``ntriples.write_text_parts``' header/footer (every part file,
+    empty ones included; per-FILE parse parallelism = the partition
+    count) — then parse per file → build the dictionary
     distributedly → encode → sign-split layout → SPARQL with a
     language-tagged literal → decode. The DuckDB twin recomputes the
     join from the base tables with the same term spellings, so the
     hash compare proves the whole XML round trip."""
     from rdfproject_msc_spark.engine import Engine
+    from rdfproject_msc_spark.sources.ntriples import write_text_parts
 
     tag = os.path.basename(os.path.normpath(sf_dir))
     base = _scratch("rdfproject_msc_rdfxml", tag)
@@ -848,19 +849,8 @@ def rdf_ingest_rdfxml(spark, sf_dir):
         ' xmlns:u="urn:v#">'
     )
 
-    def _wrap(batches):
-        # header ALWAYS first and footer ALWAYS last, so every part
-        # file — empty partitions included — is a well-formed document
-        import pandas as pd
-
-        yield pd.DataFrame({"value": [header]})
-        yield from batches
-        yield pd.DataFrame({"value": ["</rdf:RDF>"]})
-
     xml_dir = os.path.join(base, "xml")
-    frags.repartition(8).mapInPandas(
-        _wrap, schema="value string"
-    ).write.mode("overwrite").text(xml_dir)
+    write_text_parts(frags.repartition(8), xml_dir, [header], ["</rdf:RDF>"])
 
     eng = Engine(spark).load_triples(
         xml_dir, fmt="rdfxml", layout="sign_split",

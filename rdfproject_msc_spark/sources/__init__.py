@@ -13,7 +13,6 @@ from rdfproject_msc_spark.sources.triples import (
     read_triples_parquet,
     read_triples_text,
     write_result_csv,
-    write_triples_parquet,
 )
 
 __all__ = [
@@ -27,6 +26,5 @@ __all__ = [
     "read_triples_text",
     "read_triples_parquet",
     "read_dictionary_tsv",
-    "write_triples_parquet",
     "write_result_csv",
 ]

@@ -62,7 +62,10 @@ registry and unpersists it once its Parquet writes are done.
 
 from __future__ import annotations
 
+import hashlib
 import importlib
+import sys
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -94,24 +97,150 @@ NQ_LINE = rf"^[ \t]*{NT_SUBJECT}[ \t]+{NT_PREDICATE}[ \t]+{NT_OBJECT}{NQ_GRAPH}[
 NT_TERM = rf"<[^>]*>|_:(?:[^\s.]|\.(?=\S))+|{NT_LITERAL}"
 _BLANK_OR_COMMENT = r"^[ \t]*(#|\r?$)"
 
+# the relations every raw-RDF parser emits, and the RDF/XSD vocabulary
+# the per-file grammars mint terms from
+PARSED_SCHEMA = "s_term string, p_term string, o_term string"
+PARSED_QUAD_SCHEMA = "g_term string, " + PARSED_SCHEMA
+RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+XSD = "http://www.w3.org/2001/XMLSchema#"
+RDF_TYPE = f"<{RDF}type>"
+RDF_FIRST = f"<{RDF}first>"
+RDF_REST = f"<{RDF}rest>"
+RDF_NIL = f"<{RDF}nil>"
+
 
 def _check_on_error(on_error: str) -> None:
     if on_error not in ("skip", "fail"):
         raise ValueError(f"on_error must be 'skip' or 'fail', got {on_error!r}")
 
 
-def list_rdf_files(
-    spark: SparkSession, path: str, on_error: str
+def parse_rdf_files(
+    spark: SparkSession,
+    path: str,
+    on_error: str,
+    parse_file: Callable[[bytes, str], list],
+    fmt: str,
+    schema: str = PARSED_SCHEMA,
 ) -> DataFrame:
-    """The shared first step of the per-FILE parsers (Turtle/TriG,
-    RDF/XML, JSON-LD): check ``on_error`` and list ``path`` once as
-    ``(path, content)`` binary rows, the input of their ``mapInPandas``
-    parse stage. Runs on the driver only; nothing here ships to
-    workers."""
+    """The shared skeleton of the per-FILE parsers (Turtle/TriG,
+    RDF/XML, JSON-LD): list ``path`` once as ``(path, content)`` binary
+    rows and run ``parse_file(content, path) -> rows`` over each file in
+    ONE Arrow ``mapInPandas`` stage, the rows shaped as ``schema``'s
+    columns. A grammar raises ``ValueError`` for a malformed file;
+    ``on_error="fail"`` re-raises it naming the file and ``fmt``,
+    ``"skip"`` drops the WHOLE file (a document grammar has no sound
+    recovery point after an error).
+
+    ``parse_file`` is a module-level function of this package, so it
+    pickles by value (``_ship_by_value``): Python workers need no
+    importable copy of the package."""
     _check_on_error(on_error)
-    return spark.read.format("binaryFile").load(path).select(
+    _ship_by_value()
+    fail = on_error == "fail"
+    columns = [c.split()[0] for c in schema.split(",")]
+
+    def parse_batches(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows: list = []
+            for pathv, content in zip(pdf["path"], pdf["content"]):
+                try:
+                    rows += parse_file(bytes(content), str(pathv))
+                except ValueError as e:
+                    if fail:
+                        raise ValueError(
+                            f"{fmt} parse failed for {pathv}: {e}"
+                        ) from e
+                    # skip mode: drop the whole file
+            yield pd.DataFrame(rows, columns=columns)
+
+    files = spark.read.format("binaryFile").load(path).select(
         "path", "content"
     )
+    return files.mapInPandas(parse_batches, schema=schema)
+
+
+def _ship_by_value() -> None:
+    """Pickle the ``sources`` package's functions BY VALUE from here on:
+    a grammar and the helpers it calls travel inside the task, so Python
+    workers need no importable copy of the package (a module-level
+    function otherwise pickles as a module reference, and a worker whose
+    ``sys.path`` lacks the package fails to load it). Called where
+    worker code is handed to Spark, not at import."""
+    from pyspark import cloudpickle
+
+    cloudpickle.register_pickle_by_value(sys.modules[__package__])
+
+
+def write_text_parts(
+    lines: DataFrame,
+    path: str,
+    header: Sequence[str],
+    footer: Sequence[str] = (),
+) -> None:
+    """Write a one-column ``value`` line relation as text with the
+    ``header`` lines first and the ``footer`` lines last in EVERY part
+    file, empty partitions included — how a document format whose
+    declarations are file-scoped (Turtle's ``@prefix``, RDF/XML's
+    ``<rdf:RDF>`` root) writes distributed. Statement batches pass
+    through as whole Arrow frames; only the constant header and footer
+    lines are built in Python."""
+    header, footer = list(header), list(footer)
+
+    def framed(batches):
+        import pandas as pd
+
+        yield pd.DataFrame({"value": header})
+        yield from batches
+        if footer:
+            yield pd.DataFrame({"value": footer})
+
+    lines.mapInPandas(framed, schema="value string").write.mode(
+        "overwrite"
+    ).text(path)
+
+
+def canon_string(value: str) -> str:
+    """A string value as its N-Triples literal body: the minimal escape
+    set (``\\``, ``\"``, newline, CR) every raw-RDF parser here
+    canonicalizes to, so each syntax of one graph yields one term."""
+    out = (
+        value.replace("\\", "\\\\")
+        .replace('"', '\\"')
+        .replace("\n", "\\n")
+        .replace("\r", "\\r")
+    )
+    return f'"{out}"'
+
+
+def literal(value: str, lang: str | None = None, dt: str | None = None) -> str:
+    """A string literal term: a datatype IRI wins over a language tag."""
+    body = canon_string(value)
+    if dt:
+        return f"{body}^^<{dt}>"
+    if lang:
+        return f"{body}@{lang}"
+    return body
+
+
+def blank_nodes(
+    scheme: str, origin: str, one_counter: bool = False
+) -> Callable[[str], str]:
+    """The blank-node minter of one document: ``mint(kind)`` →
+    ``_:<scheme><kind>-<md5(origin)[:8]>-<n>`` with ``n`` counting in
+    document order, per kind or (``one_counter``) across kinds. Labels
+    are a pure function of the file path and the document, so a replayed
+    delivery or a retried Spark task re-derives identical terms."""
+    tag = hashlib.md5(origin.encode()).hexdigest()[:8]
+    counts: dict = {}
+
+    def mint(kind: str) -> str:
+        key = None if one_counter else kind
+        counts[key] = counts.get(key, 0) + 1
+        return f"_:{scheme}{kind}-{tag}-{counts[key]}"
+
+    return mint
 
 
 def _tokenize_validated(

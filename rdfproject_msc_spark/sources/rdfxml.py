@@ -51,18 +51,30 @@ expansion, rdf:ID statement reification, xml:base resolution
 ``on_error="fail"`` raises on the first malformed file; ``"skip"``
 drops the WHOLE offending file — after an XML parse error there is no
 sound recovery point (same stance as Turtle).
+
+The grammar is module-level (``parse_file`` and the ``_RdfXml``
+walker); ``ntriples.parse_rdf_files`` ships it to Python workers BY
+VALUE, so workers need no importable copy of this package.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import xml.etree.ElementTree as ET
+from urllib.parse import urljoin
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from rdfproject_msc_spark.sources.ntriples import list_rdf_files
-
-PARSED_SCHEMA = "s_term string, p_term string, o_term string"
+from rdfproject_msc_spark.sources.ntriples import (
+    RDF,
+    RDF_FIRST,
+    RDF_NIL,
+    RDF_REST,
+    RDF_TYPE,
+    blank_nodes,
+    literal,
+    parse_rdf_files,
+    write_text_parts,
+)
 
 
 def parse_rdfxml(
@@ -70,305 +82,222 @@ def parse_rdfxml(
 ) -> DataFrame:
     """RDF/XML files → ``(s_term, p_term, o_term)`` lexical-form
     strings, one Arrow ``mapInPandas`` stage over a ``binaryFile``
-    listing. Every helper is nested INSIDE the closure (shipped by
-    value — workers must not need the repo on sys.path)."""
-    files = list_rdf_files(spark, path, on_error)
-    fail = on_error == "fail"
+    listing."""
+    return parse_rdf_files(spark, path, on_error, parse_file, "RDF/XML")
 
-    def parse_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import xml.etree.ElementTree as ET
-        from urllib.parse import urljoin
 
-        RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-        XML = "http://www.w3.org/XML/1998/namespace"
-        TYPE = f"<{RDF}type>"
-        FIRST, REST = f"<{RDF}first>", f"<{RDF}rest>"
-        NIL = f"<{RDF}nil>"
-        XMLLIT = f"{RDF}XMLLiteral"
-        # rdf:* attributes that STEER the grammar (never property
-        # attributes); rdf:type IS a legal property attribute
-        STEER = {
-            f"{{{RDF}}}{n}"
-            for n in (
-                "about", "ID", "nodeID", "resource", "datatype",
-                "parseType",
+def parse_file(data: bytes, origin: str) -> list:
+    """One RDF/XML document → ``(s, p, o)`` rows; ``origin`` (the file
+    path) seeds the blank-node labels. Raises ``ValueError`` on
+    malformed input, XML syntax errors included."""
+    try:
+        root = ET.fromstring(data.decode("utf-8"))
+    except ET.ParseError as e:
+        raise ValueError(str(e)) from e
+    doc = _RdfXml(origin)
+    base, lang = _scope(root, "", None)
+    if _split_qname(root.tag, "root element") == f"{RDF}RDF":
+        for child in root:
+            doc.node_element(child, base, lang)
+    else:
+        # a bare node element is a legal document root
+        doc.node_element(root, base, lang)
+    return doc.rows
+
+
+_XML = "http://www.w3.org/XML/1998/namespace"
+_XMLLIT = f"{RDF}XMLLiteral"
+_ABOUT, _ID, _NODE_ID = f"{{{RDF}}}about", f"{{{RDF}}}ID", f"{{{RDF}}}nodeID"
+_RESOURCE, _DATATYPE = f"{{{RDF}}}resource", f"{{{RDF}}}datatype"
+_PARSE_TYPE, _TYPE_ATTR = f"{{{RDF}}}parseType", f"{{{RDF}}}type"
+_LANG, _BASE = f"{{{_XML}}}lang", f"{{{_XML}}}base"
+# attributes that are never property attributes: the rdf:* ones that
+# STEER the grammar (rdf:type IS a legal property attribute), the xml:
+# scopes, and xml:space
+_NOT_PROPERTY = {
+    _ABOUT, _ID, _NODE_ID, _RESOURCE, _DATATYPE, _PARSE_TYPE, _LANG, _BASE,
+    f"{{{_XML}}}space",
+}
+# node-element names the grammar forbids as subjects
+_NOT_NODE = {
+    f"{RDF}{n}"
+    for n in ("RDF", "ID", "about", "parseType", "resource", "nodeID",
+              "li", "aboutEach", "aboutEachPrefix", "bagID")
+}
+
+
+def _split_qname(tag: str, what: str) -> str:
+    # ElementTree expands to '{ns}local'; an UNNAMESPACED name cannot
+    # form an IRI — that is the pre-namespaces RDF/XML dialect, rejected
+    # loudly
+    if not tag.startswith("{"):
+        raise ValueError(
+            f"{what} {tag!r} has no XML namespace - cannot form an IRI "
+            "(pre-namespaces RDF/XML is not supported)"
+        )
+    ns, local = tag[1:].split("}", 1)
+    return ns + local
+
+
+def _resolve(ref: str, base: str) -> str:
+    # RFC 3986 resolution against the in-scope xml:base; with no base a
+    # relative reference stays verbatim (a VALID relative-IRI term, same
+    # stance as Turtle without @base)
+    return urljoin(base, ref) if base else ref
+
+
+def _scope(el, base: str, lang: str | None) -> tuple[str, str | None]:
+    b = el.get(_BASE)
+    if b is not None:
+        base = urljoin(base, b) if base else b
+    lg = el.get(_LANG)
+    if lg is not None:
+        lang = lg or None  # xml:lang="" clears the scope
+    return base, lang
+
+
+class _RdfXml:
+    """The walk of ONE document's element tree: node elements and
+    property elements, the rows they emit, and the blank-node minter
+    (``_:xmlanon-`` and ``_:xmllist-`` count separately)."""
+
+    def __init__(self, origin: str):
+        self.mint = blank_nodes("xml", origin)
+        self.rows: list = []
+
+    def emit(self, s: str, p: str, o: str) -> None:
+        self.rows.append((s, p, o))
+
+    def node_element(self, el, base: str, lang: str | None) -> str:
+        base, lang = _scope(el, base, lang)
+        tag = _split_qname(el.tag, "node element")
+        if tag in _NOT_NODE:
+            raise ValueError(f"{tag!r} is not a legal node element")
+        about, rid, nid = el.get(_ABOUT), el.get(_ID), el.get(_NODE_ID)
+        if sum(x is not None for x in (about, rid, nid)) > 1:
+            raise ValueError(
+                "at most one of rdf:about / rdf:ID / rdf:nodeID per node "
+                "element"
             )
-        }
-        LANG, BASE = f"{{{XML}}}lang", f"{{{XML}}}base"
-        # xml:space and the xmlns pseudo-attrs ElementTree may surface
-        IGNORED = {f"{{{XML}}}space"}
-        # node-element names the grammar forbids as subjects
-        NOT_NODE = {
-            f"{{{RDF}}}{n}"
-            for n in ("RDF", "ID", "about", "parseType", "resource",
-                      "nodeID", "li", "aboutEach", "aboutEachPrefix",
-                      "bagID")
-        }
+        if about is not None:
+            subj = f"<{_resolve(about, base)}>"
+        elif rid is not None:
+            subj = f"<{_resolve('#' + rid, base)}>"
+        elif nid is not None:
+            subj = f"_:{nid}"
+        else:
+            subj = self.mint("anon")
+        if tag != f"{RDF}Description":
+            self.emit(subj, RDF_TYPE, f"<{tag}>")
+        # property ATTRIBUTES (abbreviated syntax)
+        self.property_attributes(
+            subj,
+            {k: v for k, v in el.attrib.items() if k not in _NOT_PROPERTY},
+            base,
+            lang,
+        )
+        li = [0]
+        for child in el:
+            self.property_element(subj, child, base, lang, li)
+        return subj
 
-        def split_qname(tag: str, what: str) -> str:
-            # ElementTree expands to '{ns}local'; an UNNAMESPACED name
-            # cannot form an IRI — that is the pre-namespaces RDF/XML
-            # dialect, rejected loudly
-            if not tag.startswith("{"):
-                raise ValueError(
-                    f"{what} {tag!r} has no XML namespace - "
-                    "cannot form an IRI (pre-namespaces RDF/XML is "
-                    "not supported)"
-                )
-            ns, local = tag[1:].split("}", 1)
-            return ns + local
-
-        def canon_string(value: str) -> str:
-            out = (
-                value.replace("\\", "\\\\")
-                .replace('"', '\\"')
-                .replace("\n", "\\n")
-                .replace("\r", "\\r")
-            )
-            return f'"{out}"'
-
-        def literal(value: str, lang: str | None, dt: str | None) -> str:
-            body = canon_string(value)
-            if dt:
-                return f"{body}^^<{dt}>"
-            if lang:
-                return f"{body}@{lang}"
-            return body
-
-        def parse_file(data: bytes, origin: str) -> list:
-            anon_tag = hashlib.md5(origin.encode()).hexdigest()[:8]
-            anon_n = [0]
-            list_n = [0]
-            triples: list = []
-
-            def emit(s: str, p: str, o: str) -> None:
-                triples.append((s, p, o))
-
-            def fresh_anon() -> str:
-                anon_n[0] += 1
-                return f"_:xmlanon-{anon_tag}-{anon_n[0]}"
-
-            def fresh_cell() -> str:
-                list_n[0] += 1
-                return f"_:xmllist-{anon_tag}-{list_n[0]}"
-
-            def resolve(ref: str, base: str) -> str:
-                # RFC 3986 resolution against the in-scope xml:base;
-                # with no base a relative reference stays verbatim
-                # (a VALID relative-IRI term, same stance as Turtle
-                # without @base)
-                return urljoin(base, ref) if base else ref
-
-            def scope(el, base: str, lang: str | None):
-                b = el.get(BASE)
-                if b is not None:
-                    base = urljoin(base, b) if base else b
-                lg = el.get(LANG)
-                if lg is not None:
-                    lang = lg or None  # xml:lang="" clears the scope
-                return base, lang
-
-            def node_element(el, base: str, lang: str | None) -> str:
-                base, lang = scope(el, base, lang)
-                tag = split_qname(el.tag, "node element")
-                if (
-                    tag.startswith(RDF)
-                    and f"{{{RDF}}}{tag[len(RDF):]}" in NOT_NODE
-                ):
-                    raise ValueError(f"{tag!r} is not a legal node element")
-                about = el.get(f"{{{RDF}}}about")
-                rid = el.get(f"{{{RDF}}}ID")
-                nid = el.get(f"{{{RDF}}}nodeID")
-                if sum(x is not None for x in (about, rid, nid)) > 1:
-                    raise ValueError(
-                        "at most one of rdf:about / rdf:ID / "
-                        "rdf:nodeID per node element"
-                    )
-                if about is not None:
-                    subj = f"<{resolve(about, base)}>"
-                elif rid is not None:
-                    subj = f"<{resolve('#' + rid, base)}>"
-                elif nid is not None:
-                    subj = f"_:{nid}"
-                else:
-                    subj = fresh_anon()
-                if tag != f"{RDF}Description":
-                    emit(subj, TYPE, f"<{tag}>")
-                # property ATTRIBUTES (abbreviated syntax)
-                for k, v in el.attrib.items():
-                    if k in STEER or k in (LANG, BASE) or k in IGNORED:
-                        continue
-                    if k == f"{{{RDF}}}type":
-                        emit(subj, TYPE, f"<{resolve(v, base)}>")
-                        continue
-                    emit(
-                        subj,
-                        f"<{split_qname(k, 'property attribute')}>",
-                        literal(v, lang, None),
-                    )
-                li = [0]
-                for child in el:
-                    property_element(subj, child, base, lang, li)
-                return subj
-
-            def prop_iri(el, li) -> str:
-                tag = split_qname(el.tag, "property element")
-                if tag == f"{RDF}li":
-                    li[0] += 1
-                    return f"<{RDF}_{li[0]}>"
-                return f"<{tag}>"
-
-            def reify(rid: str, base: str, s: str, p: str, o: str):
-                st = f"<{resolve('#' + rid, base)}>"
-                emit(st, TYPE, f"<{RDF}Statement>")
-                emit(st, f"<{RDF}subject>", s)
-                emit(st, f"<{RDF}predicate>", p)
-                emit(st, f"<{RDF}object>", o)
-
-            def property_element(
-                subj: str, el, base: str, lang: str | None, li
-            ) -> None:
-                base, lang = scope(el, base, lang)
-                prop = prop_iri(el, li)
-                p_inner = prop[1:-1]
-                rid = el.get(f"{{{RDF}}}ID")
-                parse_type = el.get(f"{{{RDF}}}parseType")
-                resource = el.get(f"{{{RDF}}}resource")
-                nid = el.get(f"{{{RDF}}}nodeID")
-                dt = el.get(f"{{{RDF}}}datatype")
-                # property attributes on this PROPERTY element (legal
-                # only on the empty-element resource form)
-                pattrs = {
-                    k: v
-                    for k, v in el.attrib.items()
-                    if k not in STEER
-                    and k not in (LANG, BASE)
-                    and k not in IGNORED
-                    and k != f"{{{RDF}}}ID"
-                }
-                text = el.text or ""
-                children = list(el)
-
-                if parse_type == "Resource":
-                    # implicit bnode whose children are PROPERTY elements
-                    b = fresh_anon()
-                    emit(subj, prop, b)
-                    if rid is not None:
-                        reify(rid, base, subj, prop, b)
-                    inner_li = [0]
-                    for child in children:
-                        property_element(b, child, base, lang, inner_li)
-                    return
-                if parse_type == "Collection":
-                    # rdf:first/rdf:rest chain, one cell per node element
-                    cells = [
-                        (fresh_cell(), node_element(c, base, lang))
-                        for c in children
-                    ]
-                    head = cells[0][0] if cells else NIL
-                    emit(subj, prop, head)
-                    if rid is not None:
-                        reify(rid, base, subj, prop, head)
-                    for i, (cell, value) in enumerate(cells):
-                        emit(cell, FIRST, value)
-                        emit(
-                            cell,
-                            REST,
-                            cells[i + 1][0] if i + 1 < len(cells) else NIL,
-                        )
-                    return
-                if parse_type is not None:
-                    # "Literal" and every unrecognized parseType value
-                    # are XML-literal per the grammar
-                    xml_text = text + "".join(
-                        ET.tostring(c, encoding="unicode") for c in children
-                    )
-                    obj = literal(xml_text, None, XMLLIT)
-                    emit(subj, prop, obj)
-                    if rid is not None:
-                        reify(rid, base, subj, prop, obj)
-                    return
-                if children:
-                    if text.strip():
-                        raise ValueError(
-                            f"property element <{p_inner}> mixes text "
-                            "and element content (only "
-                            "rdf:parseType='Literal' may)"
-                        )
-                    if len(children) != 1:
-                        raise ValueError(
-                            f"property element <{p_inner}> has "
-                            f"{len(children)} node elements (exactly "
-                            "one allowed)"
-                        )
-                    obj = node_element(children[0], base, lang)
-                    emit(subj, prop, obj)
-                    if rid is not None:
-                        reify(rid, base, subj, prop, obj)
-                    return
-                if resource is not None or nid is not None or pattrs:
-                    # empty-element RESOURCE form
-                    if resource is not None and nid is not None:
-                        raise ValueError(
-                            "rdf:resource and rdf:nodeID are exclusive"
-                        )
-                    if resource is not None:
-                        obj = f"<{resolve(resource, base)}>"
-                    elif nid is not None:
-                        obj = f"_:{nid}"
-                    else:
-                        obj = fresh_anon()
-                    emit(subj, prop, obj)
-                    if rid is not None:
-                        reify(rid, base, subj, prop, obj)
-                    for k, v in pattrs.items():
-                        if k == f"{{{RDF}}}type":
-                            emit(obj, TYPE, f"<{resolve(v, base)}>")
-                            continue
-                        emit(
-                            obj,
-                            f"<{split_qname(k, 'property attribute')}>",
-                            literal(v, lang, None),
-                        )
-                    return
-                # literal form: the EXACT text content (no trimming —
-                # RDF/XML literals are verbatim character data)
-                obj = literal(text, lang, dt)
-                emit(subj, prop, obj)
-                if rid is not None:
-                    reify(rid, base, subj, prop, obj)
-
-            root = ET.fromstring(data.decode("utf-8"))
-            base, lang = scope(root, "", None)
-            if split_qname(root.tag, "root element") == f"{RDF}RDF":
-                for child in root:
-                    node_element(child, base, lang)
+    def property_attributes(
+        self, subj: str, attrs: dict, base: str, lang: str | None
+    ) -> None:
+        for k, v in attrs.items():
+            if k == _TYPE_ATTR:
+                self.emit(subj, RDF_TYPE, f"<{_resolve(v, base)}>")
             else:
-                # a bare node element is a legal document root
-                node_element(root, base, lang)
-            return triples
+                self.emit(
+                    subj,
+                    f"<{_split_qname(k, 'property attribute')}>",
+                    literal(v, lang),
+                )
 
-        for pdf in batches:
-            ss, ps, os_ = [], [], []
-            for pathv, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    rows = parse_file(bytes(content), str(pathv))
-                except (ValueError, ET.ParseError, UnicodeDecodeError):
-                    if fail:
-                        raise
-                    continue  # skip mode: drop the whole file
-                for s, p, o in rows:
-                    ss.append(s)
-                    ps.append(p)
-                    os_.append(o)
-            yield pd.DataFrame({"s_term": ss, "p_term": ps, "o_term": os_})
+    def reify(self, rid: str, base: str, s: str, p: str, o: str) -> None:
+        st = f"<{_resolve('#' + rid, base)}>"
+        self.emit(st, RDF_TYPE, f"<{RDF}Statement>")
+        self.emit(st, f"<{RDF}subject>", s)
+        self.emit(st, f"<{RDF}predicate>", p)
+        self.emit(st, f"<{RDF}object>", o)
 
-    return files.mapInPandas(
-        parse_batches, schema=PARSED_SCHEMA
-    )
+    def property_element(
+        self, subj: str, el, base: str, lang: str | None, li: list
+    ) -> None:
+        base, lang = _scope(el, base, lang)
+        tag = _split_qname(el.tag, "property element")
+        if tag == f"{RDF}li":  # container membership: rdf:_1, rdf:_2, …
+            li[0] += 1
+            tag = f"{RDF}_{li[0]}"
+        obj = self.property_object(el, tag, base, lang)
+        self.emit(subj, f"<{tag}>", obj)
+        rid = el.get(_ID)
+        if rid is not None:
+            self.reify(rid, base, subj, f"<{tag}>", obj)
+
+    def property_object(
+        self, el, tag: str, base: str, lang: str | None
+    ) -> str:
+        """The object term of one property element, after emitting what
+        the element's content says about it."""
+        parse_type = el.get(_PARSE_TYPE)
+        children = list(el)
+        text = el.text or ""
+        if parse_type == "Resource":
+            # implicit bnode whose children are PROPERTY elements
+            b = self.mint("anon")
+            li = [0]
+            for child in children:
+                self.property_element(b, child, base, lang, li)
+            return b
+        if parse_type == "Collection":
+            # rdf:first/rdf:rest chain, one cell per node element
+            cells = [
+                (self.mint("list"), self.node_element(c, base, lang))
+                for c in children
+            ]
+            for i, (cell, value) in enumerate(cells):
+                self.emit(cell, RDF_FIRST, value)
+                nxt = cells[i + 1][0] if i + 1 < len(cells) else RDF_NIL
+                self.emit(cell, RDF_REST, nxt)
+            return cells[0][0] if cells else RDF_NIL
+        if parse_type is not None:
+            # "Literal" and every unrecognized parseType value are
+            # XML-literal per the grammar
+            xml_text = text + "".join(
+                ET.tostring(c, encoding="unicode") for c in children
+            )
+            return literal(xml_text, dt=_XMLLIT)
+        if children:
+            if text.strip():
+                raise ValueError(
+                    f"property element <{tag}> mixes text and element "
+                    "content (only rdf:parseType='Literal' may)"
+                )
+            if len(children) != 1:
+                raise ValueError(
+                    f"property element <{tag}> has {len(children)} node "
+                    "elements (exactly one allowed)"
+                )
+            return self.node_element(children[0], base, lang)
+        resource, nid = el.get(_RESOURCE), el.get(_NODE_ID)
+        attrs = {k: v for k, v in el.attrib.items() if k not in _NOT_PROPERTY}
+        if resource is None and nid is None and not attrs:
+            # literal form: the EXACT text content (no trimming — RDF/XML
+            # literals are verbatim character data)
+            return literal(text, lang, el.get(_DATATYPE))
+        # empty-element RESOURCE form; its property attributes describe
+        # the object
+        if resource is not None and nid is not None:
+            raise ValueError("rdf:resource and rdf:nodeID are exclusive")
+        if resource is not None:
+            obj = f"<{_resolve(resource, base)}>"
+        elif nid is not None:
+            obj = f"_:{nid}"
+        else:
+            obj = self.mint("anon")
+        self.property_attributes(obj, attrs, base, lang)
+        return obj
 
 
 def format_rdfxml(
@@ -513,24 +442,15 @@ def write_rdfxml(
     """Persist a triple relation as RDF/XML text: one subject element
     per line, each part FILE wrapped into a well-formed document (the
     ``<rdf:RDF>`` root carries the xmlns declarations — per-partition
-    header/footer via the same Arrow ``mapInPandas`` first/last-batch
-    technique as the Turtle ``@prefix`` prepend; empty partitions
-    still write a valid empty document)."""
+    header/footer via ``ntriples.write_text_parts``, as the Turtle
+    ``@prefix`` header; empty partitions still write a valid empty
+    document)."""
     lines = format_rdfxml(parsed, prefixes)
     decls = "".join(
         f' xmlns:{k}="{v}"' for k, v in sorted(prefixes.items())
     )
     header = (
         '<?xml version="1.0" encoding="UTF-8"?>\n<rdf:RDF '
-        'xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"'
-        + decls + ">"
+        f'xmlns:rdf="{RDF}"' + decls + ">"
     )
-
-    def _wrap(batches):
-        yield pd.DataFrame({"value": [header]})
-        yield from batches
-        yield pd.DataFrame({"value": ["</rdf:RDF>"]})
-
-    lines.mapInPandas(_wrap, schema="value string").write.mode(
-        "overwrite"
-    ).text(path)
+    write_text_parts(lines, path, [header], ["</rdf:RDF>"])

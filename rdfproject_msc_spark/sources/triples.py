@@ -53,22 +53,6 @@ def read_dictionary_tsv(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.csv(path, sep="\t", schema=DICT_SCHEMA)
 
 
-def write_triples_parquet(
-    df: DataFrame, path: str, partition_by_sign: bool = False
-) -> None:
-    """Persist triples as Parquet; optionally partitioned by subject sign so
-    Catalyst partition pruning replaces the reference's hand-routed
-    Positive/Negative SQL (PartitionQueryingBRDSubject.java:142-146)."""
-    from pyspark.sql import functions as F
-
-    writer = df
-    if partition_by_sign:
-        writer = df.withColumn("sign", (F.col("s") >= 0).cast("int"))
-        writer.write.mode("overwrite").partitionBy("sign").parquet(path)
-    else:
-        writer.write.mode("overwrite").parquet(path)
-
-
 def write_result_csv(df: DataFrame, path: str) -> None:
     """Text sink for decoded results (S4)."""
     df.write.mode("overwrite").csv(path)

@@ -6,9 +6,9 @@ column expressions over ``spark.read.text``. Turtle is NOT: statements
 span lines, and ``@prefix``/``@base`` directives are document-scoped
 state, so an intra-file split is unsound without a stateful pre-scan.
 The honest Spark unit of parallelism is therefore the FILE:
-``ntriples.list_rdf_files`` lists the input once as binary files, and an
-Arrow-batched ``mapInPandas`` stage parses each file's text with a pure
-Python recursive-descent tokenizer, emitting the SAME ``(s_term,
+``ntriples.parse_rdf_files`` lists the input once as binary files, and
+its Arrow-batched ``mapInPandas`` stage parses each file's text with a
+pure Python recursive-descent tokenizer, emitting the SAME ``(s_term,
 p_term, o_term)`` lexical-form relation the N-Triples reader produces —
 everything downstream (``ingest_rdf``'s dictionary build and encode,
 layouts, SPARQL ``term_style="lexical"``) is shared, not duplicated. At
@@ -48,33 +48,33 @@ TriG graph blocks reject under ``parse_turtle`` but parse under
 document-scoped directives shared across blocks, optional final '.'
 inside a block.
 
-The parser lives INSIDE the mapInPandas closure: cloudpickle ships
-nested defs by value, so Python workers need no importable copy of this
-package (the multimodal decoder precedent — a module-level helper
-pickles as a module reference and fails on workers whose sys.path lacks
-the repo).
+The grammar is module-level: ``parse_file`` and the ``_Turtle`` cursor
+class, one method per production. ``ntriples.parse_rdf_files`` ships
+them to Python workers BY VALUE (the ``sources`` package is registered
+with cloudpickle), so workers need no importable copy of this package,
+and the driver, tests and other code call ``parse_file`` without Spark.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+import re
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rdfproject_msc_spark.sources.ntriples import list_rdf_files
-
-PARSED_SCHEMA = "s_term string, p_term string, o_term string"
-PARSED_QUAD_SCHEMA = (
-    "g_term string, s_term string, p_term string, o_term string"
+from rdfproject_msc_spark.sources.ntriples import (
+    PARSED_QUAD_SCHEMA,
+    RDF_FIRST,
+    RDF_NIL,
+    RDF_REST,
+    RDF_TYPE,
+    XSD,
+    blank_nodes,
+    canon_string,
+    parse_rdf_files,
+    write_text_parts,
 )
-
-RDF_TYPE = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
-RDF_FIRST = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#first>"
-RDF_REST = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#rest>"
-RDF_NIL = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#nil>"
-XSD = "http://www.w3.org/2001/XMLSchema#"
 
 
 def parse_turtle(
@@ -88,7 +88,7 @@ def parse_turtle(
     state makes statement-level recovery unsound (after a parse error
     the prefix table may be wrong, and silently mis-expanded IRIs are
     worse than a dropped file)."""
-    return _parse_files(spark, path, on_error, trig=False)
+    return parse_rdf_files(spark, path, on_error, parse_file, "Turtle")
 
 
 def parse_trig(
@@ -104,491 +104,438 @@ def parse_trig(
     ``<label> { … }`` / ``GRAPH <label> { … }`` blocks in that named
     graph. Directives declared anywhere apply document-wide from that
     point (TriG §5.2 — one prefix table across blocks)."""
-    return _parse_files(spark, path, on_error, trig=True)
-
-
-def _parse_files(
-    spark: SparkSession, path: str, on_error: str, trig: bool
-) -> DataFrame:
-    files = list_rdf_files(spark, path, on_error)
-    fail = on_error == "fail"
-
-    def parse_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import re as _re
-
-        _SCHEME = _re.compile(r"[A-Za-z][A-Za-z0-9+.\-]*:")
-        _INTEGER = _re.compile(r"[+-]?[0-9]+")
-        _DECIMAL = _re.compile(r"[+-]?[0-9]*\.[0-9]+")
-        _DOUBLE = _re.compile(
-            r"[+-]?(?:[0-9]+\.[0-9]*|\.?[0-9]+)[eE][+-]?[0-9]+"
-        )
-        # term-ish token: dots stay IN (decimals, dotted local names) and
-        # a trailing statement '.' strips afterwards; ';' ',' brackets and
-        # quotes delimit (PN_LOCAL escapes of those delimiters are outside
-        # the subset)
-        _PNAME = _re.compile(r"[^\s;,\[\]()<>\"'{}]+")
-        _ECHARS = {
-            "t": "\t", "b": "\b", "n": "\n", "r": "\r", "f": "\f",
-            '"': '"', "'": "'", "\\": "\\",
-        }
-        _LOCAL_ESC = set("_~.-!$&'()*+,;=/?#@%")
-
-        def canon_string(value: str) -> str:
-            # minimal N-Triples escaping of the raw value
-            out = (
-                value.replace("\\", "\\\\")
-                .replace('"', '\\"')
-                .replace("\n", "\\n")
-                .replace("\r", "\\r")
-            )
-            return f'"{out}"'
-
-        def parse_text(text: str, origin: str) -> list:
-            i = 0
-            n = len(text)
-            prefixes: dict[str, str] = {}
-            base: str | None = None
-            anon_tag = hashlib.md5(origin.encode()).hexdigest()[:8]
-            anon_n = [0]
-            triples: list = []  # (g | None, s, p, o) rows
-            cur_g: list = [None]  # active graph label inside a block
-
-            def err(msg: str):
-                line = text.count("\n", 0, i) + 1
-                raise ValueError(f"{origin}:{line}: {msg}")
-
-            def skip_ws():
-                nonlocal i
-                while i < n:
-                    c = text[i]
-                    if c in " \t\r\n":
-                        i += 1
-                    elif c == "#":
-                        j = text.find("\n", i)
-                        i = n if j < 0 else j + 1
-                    else:
-                        return
-
-            def resolve(iri: str) -> str:
-                if _SCHEME.match(iri) or base is None:
-                    return iri
-                if iri.startswith("#") or iri.startswith("?"):
-                    return base + iri
-                # practical resolution: base must end in '/' or '#'
-                # (enforced at @base time), so join is concatenation
-                return base + iri
-
-            def read_iriref() -> str:
-                nonlocal i
-                j = text.find(">", i)
-                if j < 0:
-                    err("unterminated IRI")
-                raw = text[i + 1 : j]
-                if any(c in raw for c in ' "{}|^`'):
-                    err(f"illegal character in IRI <{raw}>")
-                i = j + 1
-                return f"<{resolve(raw)}>"
-
-            def unescape_local(local: str) -> str:
-                if "\\" not in local:
-                    return local
-                out = []
-                k = 0
-                while k < len(local):
-                    if local[k] == "\\" and k + 1 < len(local):
-                        if local[k + 1] not in _LOCAL_ESC:
-                            err(f"bad local-name escape in {local!r}")
-                        out.append(local[k + 1])
-                        k += 2
-                    else:
-                        out.append(local[k])
-                        k += 1
-                return "".join(out)
-
-            def read_pname(tok: str) -> str:
-                if ":" not in tok:
-                    err(f"expected an IRI or prefixed name, got {tok!r}")
-                pfx, local = tok.split(":", 1)
-                if pfx not in prefixes:
-                    err(f"undeclared prefix {pfx + ':'!r}")
-                return f"<{prefixes[pfx]}{unescape_local(local)}>"
-
-            def read_string_body() -> str:
-                """Cursor on the opening quote; returns the UNESCAPED value."""
-                nonlocal i
-                q = text[i]
-                long_form = text[i : i + 3] == q * 3
-                i += 3 if long_form else 1
-                out = []
-                while i < n:
-                    c = text[i]
-                    if c == "\\":
-                        if i + 1 >= n:
-                            err("dangling escape in string")
-                        e = text[i + 1]
-                        if e in _ECHARS:
-                            out.append(_ECHARS[e])
-                            i += 2
-                        elif e in ("u", "U"):
-                            width = 4 if e == "u" else 8
-                            hexs = text[i + 2 : i + 2 + width]
-                            if len(hexs) != width:
-                                err("truncated \\u escape")
-                            try:
-                                out.append(chr(int(hexs, 16)))
-                            except ValueError:
-                                err(f"bad \\u escape {hexs!r}")
-                            i += 2 + width
-                        else:
-                            err(f"unknown string escape \\{e}")
-                        continue
-                    if long_form:
-                        if c == q:
-                            # greedy quote-run: content may contain up to
-                            # two consecutive quotes; in a longer run the
-                            # LAST three are the terminator
-                            r = i
-                            while r < n and text[r] == q:
-                                r += 1
-                            run = r - i
-                            if run >= 3:
-                                out.append(q * (run - 3))
-                                i = r
-                                return "".join(out)
-                            out.append(q * run)
-                            i = r
-                            continue
-                        out.append(c)
-                        i += 1
-                        continue
-                    if c == q:
-                        i += 1
-                        return "".join(out)
-                    if c in "\n\r":
-                        err("newline in single-quoted string")
-                    out.append(c)
-                    i += 1
-                err("unterminated string")
-
-            def read_literal() -> str:
-                nonlocal i
-                value = read_string_body()
-                body = canon_string(value)
-                if i < n and text[i] == "@":
-                    j = i + 1
-                    while j < n and (text[j].isalnum() or text[j] == "-"):
-                        j += 1
-                    tag = text[i + 1 : j]
-                    if not tag:
-                        err("empty language tag")
-                    i = j
-                    return f"{body}@{tag}"
-                if text[i : i + 2] == "^^":
-                    i += 2
-                    skip_ws()
-                    if i < n and text[i] == "<":
-                        dt = read_iriref()
-                    else:
-                        m = _PNAME.match(text, i)
-                        if not m:
-                            err("expected datatype after ^^")
-                        i = m.end()
-                        dt = read_pname(m.group(0))
-                    return f"{body}^^{dt}"
-                return body
-
-            def fresh_anon() -> str:
-                anon_n[0] += 1
-                return f"_:ttlanon-{anon_tag}-{anon_n[0]}"
-
-            def read_term(as_subject: bool) -> str:
-                nonlocal i
-                c = text[i]
-                if c == "<":
-                    return read_iriref()
-                if c in "\"'":
-                    if as_subject:
-                        err("a literal cannot be a subject")
-                    return read_literal()
-                if c == "[":
-                    i += 1
-                    skip_ws()
-                    label = fresh_anon()
-                    if text[i] == "]":
-                        i += 1
-                        return label
-                    read_po_list(label)
-                    skip_ws()
-                    if i >= n or text[i] != "]":
-                        err("unterminated [ property list ]")
-                    i += 1
-                    return label
-                if c == "(":
-                    # RDF collection (§2.8): ( e1 … en ) expands to its
-                    # rdf:first/rdf:rest chain — elements read first (a
-                    # nested […] or ( … ) mints ITS nodes inline, so the
-                    # shared counter stays document-ordered), then one
-                    # cell bnode per element. () is the IRI rdf:nil.
-                    i += 1
-                    elems = []
-                    while True:
-                        skip_ws()
-                        if i >= n:
-                            err("unterminated ( collection )")
-                        if text[i] == ")":
-                            i += 1
-                            break
-                        elems.append(read_term(as_subject=False))
-                    if not elems:
-                        return RDF_NIL
-                    cells = []
-                    for _ in elems:
-                        anon_n[0] += 1
-                        cells.append(f"_:ttllist-{anon_tag}-{anon_n[0]}")
-                    for k, (cell, e) in enumerate(zip(cells, elems)):
-                        triples.append((cur_g[0], cell, RDF_FIRST, e))
-                        nxt = cells[k + 1] if k + 1 < len(cells) else RDF_NIL
-                        triples.append((cur_g[0], cell, RDF_REST, nxt))
-                    return cells[0]
-                if text[i : i + 2] == "_:":
-                    m = _PNAME.match(text, i)
-                    tok = m.group(0)
-                    # the statement terminator can sit flush against a
-                    # blank-node label (`_:b1.`) — same strip as pnames
-                    while tok.endswith("."):
-                        tok = tok[:-1]
-                    i += len(tok)
-                    return tok
-                m = _PNAME.match(text, i)
-                if not m:
-                    err(f"unexpected character {c!r}")
-                tok = m.group(0)
-                # trailing '.' is the statement terminator, not part of
-                # the name/number (IRIs with inner dots keep them)
-                while tok.endswith(".") and not (
-                    _DECIMAL.fullmatch(tok) or _DOUBLE.fullmatch(tok)
-                ):
-                    tok = tok[:-1]
-                i += len(tok) if tok else 0
-                if not tok:
-                    err("expected a term")
-                if not as_subject:
-                    if _INTEGER.fullmatch(tok):
-                        return f'"{tok}"^^<{XSD}integer>'
-                    if _DECIMAL.fullmatch(tok):
-                        return f'"{tok}"^^<{XSD}decimal>'
-                    if _DOUBLE.fullmatch(tok):
-                        return f'"{tok}"^^<{XSD}double>'
-                    if tok in ("true", "false"):
-                        return f'"{tok}"^^<{XSD}boolean>'
-                return read_pname(tok)
-
-            def read_verb() -> str:
-                nonlocal i
-                if text[i] == "<":
-                    return read_iriref()
-                m = _PNAME.match(text, i)
-                if not m:
-                    err("expected a predicate")
-                tok = m.group(0)
-                while tok.endswith("."):
-                    tok = tok[:-1]
-                if not tok:
-                    err("expected a predicate")
-                i += len(tok)
-                if tok == "a":
-                    return RDF_TYPE
-                return read_pname(tok)
-
-            def read_po_list(subject: str):
-                nonlocal i
-                while True:
-                    skip_ws()
-                    verb = read_verb()
-                    while True:
-                        skip_ws()
-                        obj = read_term(as_subject=False)
-                        triples.append((cur_g[0], subject, verb, obj))
-                        skip_ws()
-                        if i < n and text[i] == ",":
-                            i += 1
-                            continue
-                        break
-                    if i < n and text[i] == ";":
-                        i += 1
-                        skip_ws()
-                        # trailing ';' before '.' or ']' is legal
-                        if i < n and text[i] in ".]};":
-                            while i < n and text[i] == ";":
-                                i += 1
-                                skip_ws()
-                            return
-                        continue
-                    return
-
-            def expect_dot():
-                nonlocal i
-                skip_ws()
-                if i >= n or text[i] != ".":
-                    err("expected '.' at end of statement")
-                i += 1
-
-            def read_graph_block(label):
-                """One ``{ … }`` block of triples statements into graph
-                ``label`` (None = the default graph). Blocks cannot
-                nest; the FINAL '.' inside a block is optional (TriG
-                triplesBlock ::= triples ('.' triplesBlock?)?)."""
-                nonlocal i
-                i += 1  # consume '{'
-                cur_g[0] = label
-                while True:
-                    skip_ws()
-                    if i >= n:
-                        err("unterminated { graph block }")
-                    if text[i] == "}":
-                        i += 1
-                        break
-                    if text[i] == "{" or _re.match(
-                        r"GRAPH(?=[\s#<])", text[i:], _re.I
-                    ):
-                        err("graph blocks cannot nest")
-                    subject = read_term(as_subject=True)
-                    skip_ws()
-                    if i < n and text[i] == "{":
-                        err("graph blocks cannot nest")
-                    if (
-                        subject.startswith("_:ttlanon-")
-                        and i < n
-                        and text[i] in ".}"
-                    ):
-                        if text[i] == ".":
-                            i += 1
-                        continue
-                    read_po_list(subject)
-                    skip_ws()
-                    if i < n and text[i] == ".":
-                        i += 1
-                    elif not (i < n and text[i] == "}"):
-                        err("expected '.' or '}' in graph block")
-                cur_g[0] = None
-
-            while True:
-                skip_ws()
-                if i >= n:
-                    break
-                # SPARQL-style directive disambiguation:
-                # `prefix:foo :p :o .` is a statement whose subject
-                # uses a prefix literally named "prefix" (a bare \b
-                # would misparse it as a directive), while the legal
-                # whitespace-free forms still parse as directives —
-                # `PREFIX: <i>` (empty prefix label: ':' followed by
-                # whitespace or '<') and `BASE<i>` ('<' cannot start a
-                # pname local part)
-                if text[i] == "@" or _re.match(
-                    r"(?:PREFIX(?=[\s#]|:(?=[\s#<]))|BASE(?=[\s#<]))",
-                    text[i:],
-                    _re.I,
-                ):
-                    at_form = text[i] == "@"
-                    m = _re.match(
-                        r"@?(prefix|base)\b", text[i:], _re.I
-                    )
-                    if not m:
-                        err(f"unknown directive at {text[i:i+12]!r}")
-                    kind = m.group(1).lower()
-                    i += m.end()
-                    skip_ws()
-                    if kind == "prefix":
-                        j = text.find(":", i)
-                        if j < 0:
-                            err("@prefix needs 'name:'")
-                        name = text[i:j].strip()
-                        i = j + 1
-                        skip_ws()
-                        if i >= n or text[i] != "<":
-                            err("@prefix needs an <iri>")
-                        iri = read_iriref()[1:-1]
-                        prefixes[name] = iri
-                    else:
-                        if i >= n or text[i] != "<":
-                            err("@base needs an <iri>")
-                        b = read_iriref()[1:-1]
-                        if not (b.endswith("/") or b.endswith("#")):
-                            err(
-                                "@base must end with '/' or '#' (the "
-                                "practical-resolution subset: relative "
-                                "IRIs join by concatenation)"
-                            )
-                        base = b
-                    if at_form:
-                        expect_dot()
-                    continue
-                if text[i] == "{":
-                    if not trig:
-                        err(
-                            "TriG graph blocks are not Turtle — parse "
-                            "with parse_trig / ingest --trig"
-                        )
-                    read_graph_block(None)  # bare block = default graph
-                    continue
-                if trig and _re.match(
-                    r"GRAPH(?=[\s#<])", text[i:], _re.I
-                ):
-                    # GRAPH <label> { … } — keyword requires following
-                    # whitespace or '<' (GRAPH:foo stays a prefixed
-                    # name; GRAPH<g>{…} is legal whitespace-free TriG)
-                    i += 5
-                    skip_ws()
-                    # read_term(as_subject=True) already rejects
-                    # literal labels ("a literal cannot be a subject")
-                    label = read_term(as_subject=True)
-                    skip_ws()
-                    if i >= n or text[i] != "{":
-                        err("GRAPH needs a { … } block")
-                    read_graph_block(label)
-                    continue
-                subject = read_term(as_subject=True)
-                skip_ws()
-                if trig and i < n and text[i] == "{":
-                    # labelOrSubject followed by a block: a graph label
-                    # (literals already rejected as subjects)
-                    read_graph_block(subject)
-                    continue
-                # `[ :p :o ] .` — a blankNodePropertyList statement with
-                # no outer predicate list is legal (§2.7)
-                if subject.startswith("_:ttlanon-") and i < n and text[i] == ".":
-                    i += 1
-                    continue
-                read_po_list(subject)
-                expect_dot()
-            return triples
-
-        for pdf in batches:
-            gs, ss, ps, os_ = [], [], [], []
-            for pathv, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    text = bytes(content).decode("utf-8")
-                    rows = parse_text(text, str(pathv))
-                except (ValueError, UnicodeDecodeError):
-                    if fail:
-                        raise
-                    continue  # skip mode: drop the whole file
-                for g, s, p, o in rows:
-                    gs.append(g)
-                    ss.append(s)
-                    ps.append(p)
-                    os_.append(o)
-            cols = {"s_term": ss, "p_term": ps, "o_term": os_}
-            if trig:
-                cols = {"g_term": gs, **cols}
-            yield pd.DataFrame(cols)
-
-    return files.mapInPandas(
-        parse_batches, schema=PARSED_QUAD_SCHEMA if trig else PARSED_SCHEMA
+    return parse_rdf_files(
+        spark,
+        path,
+        on_error,
+        functools.partial(parse_file, trig=True),
+        "TriG",
+        PARSED_QUAD_SCHEMA,
     )
+
+
+def parse_file(data: bytes, origin: str, trig: bool = False) -> list:
+    """One Turtle document → ``(s, p, o)`` rows, or with ``trig``
+    ``(g | None, s, p, o)`` rows; ``origin`` (the file path) seeds the
+    blank-node labels. Raises ``ValueError`` on malformed input."""
+    return _Turtle(data.decode("utf-8"), origin, trig).document()
+
+
+_SCHEME = re.compile(r"[A-Za-z][A-Za-z0-9+.\-]*:")
+_INTEGER = re.compile(r"[+-]?[0-9]+")
+_DECIMAL = re.compile(r"[+-]?[0-9]*\.[0-9]+")
+_DOUBLE = re.compile(r"[+-]?(?:[0-9]+\.[0-9]*|\.?[0-9]+)[eE][+-]?[0-9]+")
+# term-ish token: dots stay IN (decimals, dotted local names) and a
+# trailing statement '.' strips afterwards; ';' ',' brackets and quotes
+# delimit (PN_LOCAL escapes of those delimiters are outside the subset)
+_PNAME = re.compile(r"[^\s;,\[\]()<>\"'{}]+")
+# SPARQL-style directive disambiguation: `prefix:foo :p :o .` is a
+# statement whose subject uses a prefix literally named "prefix" (a bare
+# \b would misparse it as a directive), while the legal whitespace-free
+# forms still parse as directives — `PREFIX: <i>` (empty prefix label:
+# ':' followed by whitespace or '<') and `BASE<i>` ('<' cannot start a
+# pname local part)
+_SPARQL_DIRECTIVE = re.compile(
+    r"(?:PREFIX(?=[\s#]|:(?=[\s#<]))|BASE(?=[\s#<]))", re.I
+)
+_DIRECTIVE = re.compile(r"@?(prefix|base)\b", re.I)
+# the TriG keyword needs following whitespace or '<' (GRAPH:foo stays a
+# prefixed name; GRAPH<g>{…} is legal whitespace-free TriG)
+_GRAPH = re.compile(r"GRAPH(?=[\s#<])", re.I)
+_ECHARS = {
+    "t": "\t", "b": "\b", "n": "\n", "r": "\r", "f": "\f",
+    '"': '"', "'": "'", "\\": "\\",
+}
+_LOCAL_ESC = set("_~.-!$&'()*+,;=/?#@%")
+
+
+class _Turtle:
+    """The recursive-descent parse of ONE document: the cursor (``text``,
+    ``i``), the document-scoped directive state (``prefixes``, ``base``),
+    the blank-node minter and the active graph label (TriG blocks), one
+    method per production. ``_:ttlanon-``/``_:ttllist-`` labels share one
+    document-order counter."""
+
+    def __init__(self, text: str, origin: str, trig: bool):
+        self.text, self.i, self.n = text, 0, len(text)
+        self.trig = trig
+        self.prefixes: dict[str, str] = {}
+        self.base: str | None = None
+        self.mint = blank_nodes("ttl", origin, one_counter=True)
+        self.graph: str | None = None  # active graph label inside a block
+        self.rows: list = []
+
+    def emit(self, s: str, p: str, o: str) -> None:
+        self.rows.append((self.graph, s, p, o) if self.trig else (s, p, o))
+
+    def err(self, msg: str):
+        line = self.text.count("\n", 0, self.i) + 1
+        raise ValueError(f"line {line}: {msg}")
+
+    def at(self, chars: str) -> bool:
+        return self.i < self.n and self.text[self.i] in chars
+
+    def skip_ws(self) -> None:
+        text, n = self.text, self.n
+        while self.i < n:
+            c = text[self.i]
+            if c in " \t\r\n":
+                self.i += 1
+            elif c == "#":
+                j = text.find("\n", self.i)
+                self.i = n if j < 0 else j + 1
+            else:
+                return
+
+    def resolve(self, iri: str) -> str:
+        # practical resolution: base must end in '/' or '#' (enforced at
+        # @base time), so a join is concatenation
+        if _SCHEME.match(iri) or self.base is None:
+            return iri
+        return self.base + iri
+
+    def iriref(self) -> str:
+        j = self.text.find(">", self.i)
+        if j < 0:
+            self.err("unterminated IRI")
+        raw = self.text[self.i + 1 : j]
+        if any(c in raw for c in ' "{}|^`'):
+            self.err(f"illegal character in IRI <{raw}>")
+        self.i = j + 1
+        return f"<{self.resolve(raw)}>"
+
+    def pname(self, tok: str) -> str:
+        if ":" not in tok:
+            self.err(f"expected an IRI or prefixed name, got {tok!r}")
+        pfx, local = tok.split(":", 1)
+        if pfx not in self.prefixes:
+            self.err(f"undeclared prefix {pfx + ':'!r}")
+        if "\\" in local:  # PN_LOCAL_ESC: the escaped character itself
+            out, k = [], 0
+            while k < len(local):
+                if local[k] == "\\" and k + 1 < len(local):
+                    if local[k + 1] not in _LOCAL_ESC:
+                        self.err(f"bad local-name escape in {local!r}")
+                    out.append(local[k + 1])
+                    k += 2
+                else:
+                    out.append(local[k])
+                    k += 1
+            local = "".join(out)
+        return f"<{self.prefixes[pfx]}{local}>"
+
+    def string_body(self) -> str:
+        """Cursor on the opening quote; returns the UNESCAPED value."""
+        text, n = self.text, self.n
+        q = text[self.i]
+        long_form = text[self.i : self.i + 3] == q * 3
+        self.i += 3 if long_form else 1
+        out = []
+        while self.i < n:
+            c = text[self.i]
+            if c == "\\":
+                out.append(self.string_escape())
+                continue
+            if long_form and c == q:
+                # greedy quote-run: content may contain up to two
+                # consecutive quotes; in a longer run the LAST three are
+                # the terminator
+                r = self.i
+                while r < n and text[r] == q:
+                    r += 1
+                run = r - self.i
+                self.i = r
+                if run >= 3:
+                    out.append(q * (run - 3))
+                    return "".join(out)
+                out.append(q * run)
+                continue
+            if not long_form:
+                if c == q:
+                    self.i += 1
+                    return "".join(out)
+                if c in "\n\r":
+                    self.err("newline in single-quoted string")
+            out.append(c)
+            self.i += 1
+        self.err("unterminated string")
+
+    def string_escape(self) -> str:
+        """Cursor on a backslash inside a string; returns its character."""
+        text = self.text
+        if self.i + 1 >= self.n:
+            self.err("dangling escape in string")
+        e = text[self.i + 1]
+        if e in _ECHARS:
+            self.i += 2
+            return _ECHARS[e]
+        if e not in ("u", "U"):
+            self.err(f"unknown string escape \\{e}")
+        width = 4 if e == "u" else 8
+        hexs = text[self.i + 2 : self.i + 2 + width]
+        if len(hexs) != width:
+            self.err("truncated \\u escape")
+        try:
+            ch = chr(int(hexs, 16))
+        except ValueError:
+            self.err(f"bad \\u escape {hexs!r}")
+        self.i += 2 + width
+        return ch
+
+    def literal(self) -> str:
+        text, n = self.text, self.n
+        body = canon_string(self.string_body())
+        if self.at("@"):
+            j = self.i + 1
+            while j < n and (text[j].isalnum() or text[j] == "-"):
+                j += 1
+            tag = text[self.i + 1 : j]
+            if not tag:
+                self.err("empty language tag")
+            self.i = j
+            return f"{body}@{tag}"
+        if text[self.i : self.i + 2] == "^^":
+            self.i += 2
+            self.skip_ws()
+            if self.at("<"):
+                return f"{body}^^{self.iriref()}"
+            m = _PNAME.match(text, self.i)
+            if not m:
+                self.err("expected datatype after ^^")
+            self.i = m.end()
+            return f"{body}^^{self.pname(m.group(0))}"
+        return body
+
+    def term(self, as_subject: bool) -> str:
+        text = self.text
+        c = text[self.i]
+        if c == "<":
+            return self.iriref()
+        if c in "\"'":
+            if as_subject:
+                self.err("a literal cannot be a subject")
+            return self.literal()
+        if c == "[":
+            return self.blank_node_property_list()
+        if c == "(":
+            return self.collection()
+        m = _PNAME.match(text, self.i)
+        if text[self.i : self.i + 2] == "_:":
+            # the statement terminator can sit flush against a blank-node
+            # label (`_:b1.`) — same strip as pnames
+            tok = m.group(0).rstrip(".")
+            self.i += len(tok)
+            return tok
+        if not m:
+            self.err(f"unexpected character {c!r}")
+        tok = m.group(0)
+        # a trailing '.' is the statement terminator, not part of the
+        # name/number (IRIs with inner dots keep them)
+        while tok.endswith(".") and not (
+            _DECIMAL.fullmatch(tok) or _DOUBLE.fullmatch(tok)
+        ):
+            tok = tok[:-1]
+        if not tok:
+            self.err("expected a term")
+        self.i += len(tok)
+        if not as_subject:
+            for pattern, dt in (
+                (_INTEGER, "integer"), (_DECIMAL, "decimal"),
+                (_DOUBLE, "double"),
+            ):
+                if pattern.fullmatch(tok):
+                    return f'"{tok}"^^<{XSD}{dt}>'
+            if tok in ("true", "false"):
+                return f'"{tok}"^^<{XSD}boolean>'
+        return self.pname(tok)
+
+    def blank_node_property_list(self) -> str:
+        """``[ … ]``: its label mints before its contents parse."""
+        self.i += 1
+        self.skip_ws()
+        label = self.mint("anon")
+        if self.text[self.i] == "]":
+            self.i += 1
+            return label
+        self.po_list(label)
+        self.skip_ws()
+        if not self.at("]"):
+            self.err("unterminated [ property list ]")
+        self.i += 1
+        return label
+
+    def collection(self) -> str:
+        """RDF collection (§2.8): ``( e1 … en )`` expands to its
+        rdf:first/rdf:rest chain — elements read first (a nested […] or
+        ( … ) mints ITS nodes inline, so the shared counter stays
+        document-ordered), then one cell bnode per element. ``()`` is the
+        IRI rdf:nil."""
+        self.i += 1
+        elems = []
+        while True:
+            self.skip_ws()
+            if self.i >= self.n:
+                self.err("unterminated ( collection )")
+            if self.text[self.i] == ")":
+                self.i += 1
+                break
+            elems.append(self.term(as_subject=False))
+        if not elems:
+            return RDF_NIL
+        cells = [self.mint("list") for _ in elems]
+        for k, (cell, e) in enumerate(zip(cells, elems)):
+            self.emit(cell, RDF_FIRST, e)
+            nxt = cells[k + 1] if k + 1 < len(cells) else RDF_NIL
+            self.emit(cell, RDF_REST, nxt)
+        return cells[0]
+
+    def verb(self) -> str:
+        if self.text[self.i] == "<":
+            return self.iriref()
+        m = _PNAME.match(self.text, self.i)
+        if not m:
+            self.err("expected a predicate")
+        tok = m.group(0).rstrip(".")
+        if not tok:
+            self.err("expected a predicate")
+        self.i += len(tok)
+        return RDF_TYPE if tok == "a" else self.pname(tok)
+
+    def po_list(self, subject: str) -> None:
+        while True:
+            self.skip_ws()
+            verb = self.verb()
+            while True:
+                self.skip_ws()
+                self.emit(subject, verb, self.term(as_subject=False))
+                self.skip_ws()
+                if not self.at(","):
+                    break
+                self.i += 1
+            if not self.at(";"):
+                return
+            self.i += 1
+            self.skip_ws()
+            # a trailing ';' before '.' or ']' is legal
+            if self.at(".]};"):
+                while self.at(";"):
+                    self.i += 1
+                    self.skip_ws()
+                return
+
+    def expect_dot(self) -> None:
+        self.skip_ws()
+        if not self.at("."):
+            self.err("expected '.' at end of statement")
+        self.i += 1
+
+    def directive(self) -> None:
+        """``@prefix``/``@base`` (closed by '.') or their SPARQL forms."""
+        at_form = self.text[self.i] == "@"
+        m = _DIRECTIVE.match(self.text, self.i)
+        if not m:
+            self.err(f"unknown directive at {self.text[self.i:self.i+12]!r}")
+        self.i = m.end()
+        self.skip_ws()
+        if m.group(1).lower() == "prefix":
+            j = self.text.find(":", self.i)
+            if j < 0:
+                self.err("@prefix needs 'name:'")
+            name = self.text[self.i:j].strip()
+            self.i = j + 1
+            self.skip_ws()
+            if not self.at("<"):
+                self.err("@prefix needs an <iri>")
+            self.prefixes[name] = self.iriref()[1:-1]
+        else:
+            if not self.at("<"):
+                self.err("@base needs an <iri>")
+            b = self.iriref()[1:-1]
+            if not (b.endswith("/") or b.endswith("#")):
+                self.err(
+                    "@base must end with '/' or '#' (the practical-"
+                    "resolution subset: relative IRIs join by "
+                    "concatenation)"
+                )
+            self.base = b
+        if at_form:
+            self.expect_dot()
+
+    def graph_block(self, label: str | None) -> None:
+        """One ``{ … }`` block of triples statements into graph ``label``
+        (None = the default graph). Blocks cannot nest; the FINAL '.'
+        inside a block is optional (TriG triplesBlock ::= triples ('.'
+        triplesBlock?)?)."""
+        self.i += 1  # consume '{'
+        self.graph = label
+        while True:
+            self.skip_ws()
+            if self.i >= self.n:
+                self.err("unterminated { graph block }")
+            if self.text[self.i] == "}":
+                self.i += 1
+                break
+            if self.text[self.i] == "{" or _GRAPH.match(self.text, self.i):
+                self.err("graph blocks cannot nest")
+            subject = self.term(as_subject=True)
+            self.skip_ws()
+            if self.at("{"):
+                self.err("graph blocks cannot nest")
+            if subject.startswith("_:ttlanon-") and self.at(".}"):
+                if self.at("."):
+                    self.i += 1
+                continue
+            self.po_list(subject)
+            self.skip_ws()
+            if self.at("."):
+                self.i += 1
+            elif not self.at("}"):
+                self.err("expected '.' or '}' in graph block")
+        self.graph = None
+
+    def document(self) -> list:
+        while True:
+            self.skip_ws()
+            if self.i >= self.n:
+                return self.rows
+            if self.text[self.i] == "@" or _SPARQL_DIRECTIVE.match(
+                self.text, self.i
+            ):
+                self.directive()
+            elif self.text[self.i] == "{":
+                if not self.trig:
+                    self.err(
+                        "TriG graph blocks are not Turtle — parse with "
+                        "parse_trig / ingest --trig"
+                    )
+                self.graph_block(None)  # bare block = default graph
+            elif self.trig and _GRAPH.match(self.text, self.i):
+                self.i += 5
+                self.skip_ws()
+                # term(as_subject=True) already rejects literal labels
+                label = self.term(as_subject=True)
+                self.skip_ws()
+                if not self.at("{"):
+                    self.err("GRAPH needs a { … } block")
+                self.graph_block(label)
+            else:
+                self.triples()
+
+    def triples(self) -> None:
+        subject = self.term(as_subject=True)
+        self.skip_ws()
+        if self.trig and self.at("{"):
+            # labelOrSubject followed by a block: a graph label (literals
+            # already rejected as subjects)
+            self.graph_block(subject)
+            return
+        # `[ :p :o ] .` — a blankNodePropertyList statement with no outer
+        # predicate list is legal (§2.7)
+        if subject.startswith("_:ttlanon-") and self.at("."):
+            self.i += 1
+            return
+        self.po_list(subject)
+        self.expect_dot()
 
 
 def format_turtle(
@@ -613,14 +560,12 @@ def format_turtle(
     million-triple subjects belong in the N-Triples sink instead
     (format_ntriples — line-splittable both ways)."""
 
-    import re as _re
-
     def compact(col: Column, as_predicate: bool = False) -> Column:
         out = col
         for name, iri in sorted((prefixes or {}).items()):
             # only locals safe in PN_LOCAL without escaping compact;
             # everything else keeps the full <iri> form (still valid)
-            pat = "^<" + _re.escape(iri) + "([A-Za-z][A-Za-z0-9_-]*)>$"
+            pat = "^<" + re.escape(iri) + "([A-Za-z][A-Za-z0-9_-]*)>$"
             out = F.when(
                 col.rlike(pat),
                 F.concat(
@@ -691,22 +636,8 @@ def write_turtle(
     if not prefixes:
         lines.write.mode("overwrite").text(path)
         return
-    header = [f"@prefix {k}: <{v}> ." for k, v in sorted(prefixes.items())]
-
-    def _with_header(batches):
-        # Arrow-batched (NOT the row-at-a-time RDD API): the directive
-        # lines prepend to the partition's FIRST batch only; every
-        # statement batch passes through as a whole Arrow frame, so
-        # the per-row cost stays columnar. A partition that yields no
-        # batches writes an empty part file with no header — exactly
-        # the old behavior (a headerless EMPTY Turtle file is valid).
-        first = True
-        for pdf in batches:
-            if first:
-                first = False
-                yield pd.DataFrame({"value": header})
-            yield pdf
-
-    lines.mapInPandas(_with_header, schema="value string").write.mode(
-        "overwrite"
-    ).text(path)
+    write_text_parts(
+        lines,
+        path,
+        [f"@prefix {k}: <{v}> ." for k, v in sorted(prefixes.items())],
+    )

@@ -155,8 +155,11 @@ def test_under_the_bound_reads_scan_no_file(spark, saved):
     eng.close()
 
 
-def _persisted(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persisted(spark) -> set:
+    """The ids of the persisted RDDs. Tests compare sets, not counts:
+    the context cleaner may unpersist an earlier test's relation between
+    two readings."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def test_opens_and_close_leave_nothing_persisted(spark, saved):
@@ -166,13 +169,13 @@ def test_opens_and_close_leave_nothing_persisted(spark, saved):
     for _ in range(5):
         eng.open(store, layout="sign_split", dict_path=dct)
         assert answer(eng, READS["contains"])  # derives STR values too
-        assert _persisted(spark) == before + 3
+        assert len(_persisted(spark) - before) == 3
     # an open without a dictionary keeps reading the held one
     eng.open(store, layout="sign_split")
-    assert _persisted(spark) == before + 3
+    assert len(_persisted(spark) - before) == 3
     want = answer(eng, READS["chain"])
     eng.close()
-    assert _persisted(spark) == before
+    assert not _persisted(spark) - before
     # a closed engine reads its Parquet files again
     assert not eng._held
     assert answer(eng, READS["chain"]) == want
@@ -184,7 +187,9 @@ def test_close_keeps_what_a_grown_dictionary_reads(spark, saved):
     the held one; ``close`` keeps that held relation, and the next
     ``open`` releases it."""
     store, dct = saved
+    start = _persisted(spark)
     eng = opened(spark, saved)
+    held_at_open = _persisted(spark) - start  # the store and the dictionary
     eng.update(P + "INSERT { ?s ex:tag _:t } WHERE { ?s ex:age ?a }")
     q = P + "SELECT ?s WHERE { ?s ex:tag ?t }"
     want = answer(eng, q)
@@ -192,10 +197,14 @@ def test_close_keeps_what_a_grown_dictionary_reads(spark, saved):
     eng.close()
     held, used, _ = eng._held[0]
     assert len(eng._held) == 1 and used is not held  # the dictionary
+    old = (_persisted(spark) - start) & held_at_open
+    assert len(old) == 1  # the held dictionary stays persisted
     assert answer(eng, q) == want
     before = _persisted(spark)
     eng.open(store, layout="sign_split", dict_path=dct)
-    assert _persisted(spark) == before + 1  # two held, the old one gone
+    after = _persisted(spark)
+    assert len(after - before) == 2  # two held
+    assert not old & after  # the old one gone
     assert not any(e[0] is held for e in eng._held)
     eng.close()
 
@@ -205,12 +214,8 @@ def test_vacuum_checkpoints_release_once_unread(spark, saved):
     holds: ``close`` keeps them, so the engine still answers, and the
     next ``open`` releases them. Compared as sets of RDD ids: the
     context cleaner may drop an earlier test's relation meanwhile."""
-
-    def persisted() -> set:
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-
     store, dct = saved
-    before = persisted()
+    before = _persisted(spark)
     eng = Engine(spark)
     for _ in range(3):
         eng.open(store, layout="sign_split", dict_path=dct)
@@ -221,4 +226,4 @@ def test_vacuum_checkpoints_release_once_unread(spark, saved):
     assert answer(eng, READS["chain"]) == want
     eng.open(store, layout="sign_split", dict_path=dct)
     eng.close()
-    assert persisted() <= before
+    assert _persisted(spark) <= before

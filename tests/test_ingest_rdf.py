@@ -3,11 +3,19 @@
 triple format, and ``load_triples(fmt="nt")`` runs each of the three
 ``ntriples`` module hooks (``parse_ntriples``, ``build_dictionary``,
 ``encode_triples``) exactly once — the hooks rdfbench's tracer wraps to
-report its ``ntriples.*`` layer metrics."""
+report its ``ntriples.*`` layer metrics. The per-file parsers' worker
+code runs in an interpreter that cannot import the package."""
 
 from __future__ import annotations
 
+import collections
+import importlib
+import json
+import subprocess
+import sys
+
 import pytest
+from pyspark import cloudpickle
 
 from rdfproject_msc_spark.cli import main
 from rdfproject_msc_spark.engine import Engine
@@ -123,3 +131,127 @@ def test_ingest_rdf_rejects_before_reading(spark, tmp_path):
             ntriples.ingest_rdf(
                 spark, missing, fmt, dictionary=spark.range(1)
             )
+
+
+# one document per per-file parser, each minting blank-node labels
+EX = "http://ex.org/"
+RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+BY_VALUE = {
+    "parse_turtle": (
+        "turtle",
+        "g.ttl",
+        f"@prefix ex: <{EX}> .\n"
+        'ex:a ex:knows [ ex:name "Zoë" ] ; ex:items ( 1 ex:b ) .\n',
+    ),
+    "parse_trig": (
+        "turtle",
+        "g.trig",
+        f"@prefix ex: <{EX}> .\n"
+        'ex:g { ex:a ex:knows [ ex:name "Zoë" ] . }\n'
+        "ex:a ex:items ( ex:b ) .\n",
+    ),
+    "parse_rdfxml": (
+        "rdfxml",
+        "g.rdf",
+        f'<rdf:RDF xmlns:rdf="{RDF_NS}" xmlns:ex="{EX}">\n'
+        f'  <rdf:Description rdf:about="{EX}a">\n'
+        '    <ex:knows><rdf:Description><ex:name xml:lang="en">Zoë'
+        "</ex:name></rdf:Description></ex:knows>\n"
+        '    <ex:items rdf:parseType="Collection">'
+        f'<rdf:Description rdf:about="{EX}b"/></ex:items>\n'
+        "  </rdf:Description>\n</rdf:RDF>\n",
+    ),
+    "parse_jsonld": (
+        "jsonld",
+        "g.jsonld",
+        json.dumps({
+            "@context": {"ex": EX},
+            "@id": "ex:a",
+            "ex:knows": {"ex:name": "Zoë", "ex:age": 7},
+            "ex:items": {"@list": [{"@id": "ex:b"}, 1.5]},
+        }),
+    ),
+}
+
+# runs one pickled mapInPandas function over a one-document batch in an
+# isolated interpreter, after checking the package is not importable there
+_WORKER = """
+import json, pickle, sys
+import pandas as pd
+try:
+    import rdfproject_msc_spark
+except ModuleNotFoundError:
+    pass
+else:
+    sys.exit("rdfproject_msc_spark is importable")
+func, path, content = pickle.loads(sys.stdin.buffer.read())
+batch = pd.DataFrame({"path": [path], "content": [content]})
+rows = [r for out in func(iter([batch])) for r in out.values.tolist()]
+print(json.dumps(rows))
+"""
+
+
+def _run_isolated(payload: bytes, cwd) -> subprocess.CompletedProcess:
+    return subprocess.run(
+        [sys.executable, "-I", "-c", _WORKER],
+        input=payload, capture_output=True, cwd=cwd, timeout=120,
+    )
+
+
+@pytest.mark.parametrize("name", sorted(BY_VALUE))
+def test_parsers_run_where_the_package_cannot_be_imported(
+    spark, tmp_path, monkeypatch, name
+):
+    """The function each per-file parser hands to ``mapInPandas``,
+    pickled as Spark ships it, runs in ``python -I`` outside the repo
+    and yields the rows of the Spark parse; unregistered from
+    by-value pickling it cannot even load there."""
+    module, fname, text = BY_VALUE[name]
+    parse = getattr(
+        importlib.import_module(f"rdfproject_msc_spark.sources.{module}"),
+        name,
+    )
+    (tmp_path / fname).write_text(text)
+    doc = str(tmp_path / fname)
+    want = collections.Counter(
+        map(tuple, parse(spark, doc, on_error="fail").collect())
+    )
+    assert any(t and t.startswith("_:") for row in want for t in row)
+
+    shipped = []
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    real = frame.mapInPandas
+
+    def capture(self, func, schema, *args, **kwargs):
+        shipped.append(func)
+        return real(self, func, schema, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "mapInPandas", capture)
+    parse(spark, doc, on_error="fail")
+    (func,) = shipped
+    # the batch as the binaryFile listing hands it to the function: the
+    # listed path seeds the blank-node labels
+    path, content = (
+        spark.read.format("binaryFile").load(doc).select("path", "content")
+        .first()
+    )
+    work = tmp_path / "work"
+    work.mkdir()
+
+    done = _run_isolated(
+        cloudpickle.dumps((func, path, bytes(content))), work
+    )
+    assert done.returncode == 0, done.stderr.decode()
+    got = collections.Counter(map(tuple, json.loads(done.stdout)))
+    assert got == want
+
+    sources = sys.modules["rdfproject_msc_spark.sources"]
+    cloudpickle.unregister_pickle_by_value(sources)
+    try:
+        by_reference = cloudpickle.dumps((func, path, bytes(content)))
+    finally:
+        cloudpickle.register_pickle_by_value(sources)
+    failed = _run_isolated(by_reference, work)
+    assert failed.returncode != 0
+    assert "ModuleNotFoundError" in failed.stderr.decode()
+    assert "rdfproject_msc_spark" in failed.stderr.decode()

@@ -123,8 +123,9 @@ def test_documented_rejects_and_skip(spark, tmp_path):
     for i, doc in enumerate(cases):
         p = tmp_path / f"bad{i}.jsonld"
         p.write_text(json.dumps(doc))
-        with pytest.raises(Exception):
+        with pytest.raises(Exception) as failed:
             parse_jsonld(spark, str(p), on_error="fail").collect()
+        assert f"bad{i}.jsonld" in str(failed.value)  # names the file
     good = tmp_path / "good.jsonld"
     good.write_text(json.dumps(
         {"@context": {"ex": EX}, "@id": "ex:a", "ex:p": "v"}

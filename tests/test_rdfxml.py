@@ -155,8 +155,10 @@ def test_deterministic_labels_and_error_modes(spark, tmp_path):
     r1 = _rel(parse_rdfxml(spark, str(tmp_path), on_error="skip"))
     r2 = _rel(parse_rdfxml(spark, str(tmp_path), on_error="skip"))
     assert r1 == r2 and len(r1) == 2  # the bad file dropped whole
-    with pytest.raises(Exception):
+    with pytest.raises(Exception) as failed:
         parse_rdfxml(spark, str(tmp_path), on_error="fail").collect()
+    assert "RDF/XML parse failed for" in str(failed.value)
+    assert "bad.rdf" in str(failed.value)  # names the file that broke
 
 
 def test_engine_lifecycle_and_sparql(spark, tmp_path):

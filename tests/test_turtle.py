@@ -227,8 +227,10 @@ def test_skip_drops_whole_bad_file_fail_raises(spark, tmp_path):
     )
     got = rows(parse_turtle(spark, str(tmp_path), on_error="skip"))
     assert got == [("<http://ex.org/a>", "<http://ex.org/b>", "<http://ex.org/c>")]
-    with pytest.raises(Exception, match="expected"):
+    with pytest.raises(Exception, match="expected") as failed:
         parse_turtle(spark, str(tmp_path), on_error="fail").collect()
+    assert "Turtle parse failed for" in str(failed.value)
+    assert "bad.ttl" in str(failed.value)  # names the file that broke
 
 
 @pytest.mark.parametrize(
