@@ -1023,7 +1023,7 @@ COMMANDS = (
     ("load", "ingest triples text + dictionary, persist layout",
      _load_args, _load),
     ("ingest",
-     "RAW N-Triples/N-Quads in: build the dictionary distributedly, "
+     "RAW N-Triples/N-Quads in: build the dictionary, "
      "encode, persist store + dictionary (the first mile the pre-encoded "
      "'load' path assumes already happened)",
      _ingest_args, _ingest),

@@ -139,8 +139,8 @@ class Engine:
 
         ``fmt``: ``"text"`` (pre-encoded space-separated ints — the
         reference's contract), ``"parquet"`` (persisted encoded layout),
-        ``"nt"`` (RAW N-Triples: the dictionary is BUILT distributedly and
-        the terms encoded — sources/ntriples.py; ``negative_when`` chooses
+        ``"nt"`` (RAW N-Triples: the dictionary is BUILT and the terms
+        encoded — sources/ntriples.py; ``negative_when`` chooses
         the Negative sign class by term, ``dict_path`` must be None),
         ``"ttl"`` (RAW Turtle — sources/turtle.py parses per file, same
         built-dictionary contract as "nt"), ``"rdfxml"`` (RAW RDF/XML —
@@ -569,7 +569,7 @@ class Engine:
         through the old→new mapping — decoded answers identical, ids
         dense again. Returns ``{"terms_before", "terms_after",
         "dropped"}``."""
-        from rdfproject_msc_spark.sources.ntriples import _lex_ranks
+        from rdfproject_msc_spark.sources.ntriples import _rank_terms
 
         store = self._require_store()
         if self.dictionary is None:
@@ -619,23 +619,19 @@ class Engine:
         live = self.dictionary.df.join(refs, "id", "left_semi")
         new_df, new_quads = store.df, store.quads if store.has_quads else None
         rank_caches: list = []
+        # materialize the compacted snapshot (cuts lineage to the
+        # superseded ingest caches AND the stacked update deltas); the
+        # re-ranked dictionary first, so the store rewrite below joins
+        # the checkpoint instead of re-planning the rank per column
+        new_dict = self._checkpoint(
+            _rank_terms(
+                live.select("term", (F.col("id") < 0).alias("__neg")),
+                caches=rank_caches,
+            )
+            if reindex
+            else live
+        )
         if reindex:
-            npart = int(
-                self.spark.conf.get("spark.sql.shuffle.partitions")
-            )
-            pos = _lex_ranks(
-                live.filter(F.col("id") > 0).select("term"),
-                npart,
-                rank_caches,
-            )
-            neg = _lex_ranks(
-                live.filter(F.col("id") < 0).select("term"),
-                npart,
-                rank_caches,
-            )
-            new_dict = pos.select(
-                F.col("rank").alias("id"), "term"
-            ).unionAll(neg.select((-F.col("rank")).alias("id"), "term"))
             mapping = (
                 live.select(F.col("id").alias("__old"), "term")
                 .join(
@@ -659,11 +655,6 @@ class Engine:
             new_df = _remap(store.df, ["s", "p", "o"])
             if new_quads is not None:
                 new_quads = _remap(store.quads, ["g", "s", "p", "o"])
-        else:
-            new_dict = live
-        # materialize the compacted snapshot (cuts lineage to the
-        # superseded ingest caches AND the stacked update deltas)
-        new_dict = self._checkpoint(new_dict)
         new_df = self._checkpoint(new_df)
         if new_quads is not None:
             new_quads = self._checkpoint(new_quads)

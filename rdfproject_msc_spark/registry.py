@@ -680,7 +680,8 @@ def rdf_ingest_nt(spark, sf_dir):
     NEITHER repo had — the reference's input arrives pre-encoded
     (PartitionQueryingSubject.java:55) and its dictionary is consumed,
     never produced (:63-70). Here: materialize genuine N-Triples text from
-    the base tables, then parse → build the dictionary DISTRIBUTEDLY
+    the base tables, then parse → build the dictionary (ranked
+    distributed past 65,536 terms, as at sf0.1)
     (dense signed ids = lexicographic rank per sign class; event terms
     take the Negative class) → encode → sign-split layout → query on ids
     (static Positive routing) → decode. Ids in the output prove the
@@ -807,11 +808,11 @@ def rdf_ingest_rdfxml(spark, sf_dir):
     its fragments into ONE well-formed document via
     ``ntriples.write_text_parts``' header/footer (every part file,
     empty ones included; per-FILE parse parallelism = the partition
-    count) — then parse per file → build the dictionary
-    distributedly → encode → sign-split layout → SPARQL with a
-    language-tagged literal → decode. The DuckDB twin recomputes the
-    join from the base tables with the same term spellings, so the
-    hash compare proves the whole XML round trip."""
+    count) — then parse per file → build the dictionary → encode →
+    sign-split layout → SPARQL with a language-tagged literal →
+    decode. The DuckDB twin recomputes the join from the base tables
+    with the same term spellings, so the hash compare proves the whole
+    XML round trip."""
     from rdfproject_msc_spark.engine import Engine
     from rdfproject_msc_spark.sources.ntriples import write_text_parts
 
@@ -3322,7 +3323,7 @@ REGISTRY: dict[str, QuerySpec] = {
     "rdf_split_join": QuerySpec(rdf_split_join, RDF_SPLIT_JOIN_SQL, headline=True),
     "sparql_regex": QuerySpec(sparql_regex, SPARQL_REGEX_SQL, headline=True),
     "rdf_text_lifecycle": QuerySpec(rdf_text_lifecycle, RDF_DECODE_2HOP_SQL),
-    # r9: the raw-RDF first mile — N-Triples parse + distributed dictionary
+    # r9: the raw-RDF first mile — N-Triples parse + size-aware dictionary
     # build + encode + sign-split layout + id-level query + decode
     "rdf_ingest_nt": QuerySpec(rdf_ingest_nt, RDF_INGEST_NT_SQL, headline=True),
     "rdf_sign_union": QuerySpec(rdf_sign_union, RDF_SIGN_UNION_SQL),

@@ -1,4 +1,4 @@
-"""Raw-RDF ingestion: N-Triples parsing + distributed dictionary construction.
+"""Raw-RDF ingestion: N-Triples parsing + size-aware dictionary construction.
 
 The missing FIRST MILE of the reference's workflow. The reference consumes
 input that is already dictionary-encoded (PartitionQueryingSubject.java:55
@@ -17,30 +17,32 @@ cannot onboard. This module closes that gap Spark-first:
   ``"literal"@lang`` / ``^^<dt>``) — the dictionary stores lexical forms,
   so parse→encode→decode→format round-trips byte-identically.
 
-- ``build_dictionary``: term → dense signed id, fully distributed — the
-  term set is NEVER materialized driver-side (contrast the reference's
-  HashMap, fatal at 100 TB). The id of a term is its LEXICOGRAPHIC RANK
-  within its sign class: positives 1..P, negatives −1..−N (id 0 stays the
-  SPARQL translator's variable sentinel, MyOpVisitorBase.java:74-78; the
-  sign class implements the reference's semantic Positive/Negative
-  routing, PartitionQueryingBRDSubject.java:100-124, chosen here by a
-  caller predicate over the term text). Rank is computed with the same
-  two-phase prefix machinery as operators/packing.py:79 /
-  operators/selection.py: ``repartitionByRange(term)`` (sampled,
+- ``build_dictionary``: term → dense signed id. The id of a term is its
+  LEXICOGRAPHIC RANK within its sign class: positives 1..P, negatives
+  −1..−N (id 0 stays the SPARQL translator's variable sentinel,
+  MyOpVisitorBase.java:74-78; the sign class implements the reference's
+  semantic Positive/Negative routing, PartitionQueryingBRDSubject.java:
+  100-124, chosen here by a caller predicate over the term text). One
+  bounded term collect sizes the rank: up to ``_CACHE_MAX`` terms (what
+  a ``Dictionary`` holds whole on the driver anyway) rank there into a
+  local relation. A larger term set is NEVER materialized driver-side
+  (contrast the reference's HashMap, fatal at 100 TB): its rank uses
+  the two-phase prefix machinery of operators/packing.py:79 /
+  operators/selection.py — ``repartitionByRange(term)`` (sampled,
   skew-adaptive boundaries), per-partition counts → a #partitions-sized
   prefix relation, broadcast back, ``row_number`` within partitions. The
-  rank is EXACT wherever the sampled boundaries fall (the prefix respects
-  the total order across and within partitions), so ids are a pure
-  function of the term set — deterministic under any input partitioning,
-  and exactly replicable by a ``row_number() OVER (ORDER BY term)``
-  oracle. The ranged frame is persisted before the fork into the
-  totals/probe subtrees (one sampled boundary instantiation — the
-  selection.py rule).
+  rank is EXACT wherever the sampled boundaries fall, so ids are a pure
+  function of the term set — equal on both paths, deterministic under
+  any input partitioning, and exactly replicable by a ``row_number()
+  OVER (ORDER BY term)`` oracle. The ranged frame is persisted before
+  the fork into the totals/probe subtrees (one sampled boundary
+  instantiation — the selection.py rule).
 
 - ``encode_triples``: three term-keyed joins against the dictionary (the
-  dictionary GROWS with the corpus, so no broadcast hint — AQE picks;
-  this is the standard distributed-RDF encode shape, one-time cost
-  amortized by the persisted integer layout).
+  dictionary GROWS with the corpus, so no broadcast hint — AQE picks; a
+  local one has exact statistics and broadcasts). This is the standard
+  distributed-RDF encode shape, one-time cost amortized by the
+  persisted integer layout.
 
 ``ingest_rdf(spark, path, fmt)`` is the one first mile for every raw
 format (N-Triples and N-Quads here, Turtle/TriG, RDF/XML and JSON-LD
@@ -48,9 +50,10 @@ from their per-file parsers): parse → build or extend the dictionary →
 encode. ``Engine.load_triples``, UPDATE's LOAD and CLI ``ingest`` all
 call it.
 
-Cache lifetime: ``ingest_rdf`` persists the parsed relation and the
-dictionary (both are traversed by several downstream subtrees; without
-the persist the multi-shuffle rank build re-runs per consumer). The
+Cache lifetime: ``ingest_rdf`` persists the parsed relation and a
+distributed dictionary (both are traversed by several downstream
+subtrees; without the persist the multi-shuffle rank build re-runs per
+consumer; a driver-ranked dictionary is a local relation already). The
 returned DataFrames stay lazy over those caches, so they cannot be
 unpersisted here. Callers that need the lifecycle pass ``caches=[...]``
 — every persisted frame is appended, and ``Engine`` releases them via
@@ -70,6 +73,8 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from rdfproject_msc_spark.dictionary import _CACHE_MAX
 
 # Line validation (ONE anchored rlike per line) + term tokenization (ONE
 # global extract per line): subject (IRI | bnode), predicate (IRI), object
@@ -356,11 +361,9 @@ def _lex_ranks(
     within partitions."""
     from pyspark.sql import Window
 
-    ranged = terms.repartitionByRange(
-        num_partitions, F.col("term").asc()
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if caches is not None:
-        caches.append(ranged)
+    ranged = _persist(
+        terms.repartitionByRange(num_partitions, F.col("term").asc()), caches
+    )
     with_pid = ranged.withColumn("__pid", F.spark_partition_id())
     totals = with_pid.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
     w_parts = Window.orderBy("__pid").rowsBetween(
@@ -381,6 +384,70 @@ def _lex_ranks(
     )
 
 
+def _driver_ranks(rows, pos_base: int, neg_base: int) -> list[tuple[int, str]]:
+    """``_rank_terms`` over driver rows. Python sorts ``str`` by code
+    point, the UTF-8 byte order Spark sorts strings by, so both paths
+    give every term the same id."""
+    out = []
+    for neg, base, sign in ((False, pos_base, 1), (True, neg_base, -1)):
+        ranked = sorted(r["term"] for r in rows if r["__neg"] is neg)
+        out += [(sign * (base + k), t) for k, t in enumerate(ranked, start=1)]
+    return out
+
+
+def _rank_terms(
+    classed: DataFrame,
+    pos_base: int = 0,
+    neg_base: int = 0,
+    num_partitions: int | None = None,
+    caches: list | None = None,
+) -> DataFrame:
+    """Distinct ``(term, __neg)`` rows → ``(id, term)``: id = base + the
+    term's lexicographic rank within its sign class, ``pos_base + r``
+    or ``-(neg_base + r)``; a NULL class drops the term. One bounded
+    collect picks the path: up to ``_CACHE_MAX`` terms rank on the
+    driver into a local relation, a larger set ranks distributed."""
+    spark = classed.sparkSession
+    rows = classed.limit(_CACHE_MAX + 1).collect()
+    if len(rows) <= _CACHE_MAX:
+        import pandas as pd
+
+        ranked = pd.DataFrame(
+            _driver_ranks(rows, pos_base, neg_base), columns=["id", "term"]
+        )
+        return spark.createDataFrame(
+            ranked, "id long not null, term string not null"
+        )
+    npart = num_partitions or int(
+        spark.conf.get("spark.sql.shuffle.partitions")
+    )
+
+    def ids(neg: bool, base: int) -> DataFrame:
+        cls = F.col("__neg") if neg else ~F.col("__neg")
+        ranks = _lex_ranks(classed.filter(cls).select("term"), npart, caches)
+        # no "+ 0": a build keeps the plan it had before bases existed
+        rank = F.col("rank") + F.lit(base) if base else F.col("rank")
+        return ranks.select((-rank if neg else rank).alias("id"), "term")
+
+    return ids(False, pos_base).unionAll(ids(True, neg_base))
+
+
+def _classed_terms(
+    parsed: DataFrame, negative_when, known: DataFrame | None = None
+) -> DataFrame:
+    """The distinct terms of ``parsed`` that ``known`` (a dictionary)
+    lacks, with their sign class ``__neg``."""
+    terms = (
+        parsed.select(F.col("s_term").alias("term"))
+        .unionAll(parsed.select(F.col("p_term").alias("term")))
+        .unionAll(parsed.select(F.col("o_term").alias("term")))
+        .distinct()
+    )
+    if known is not None:
+        terms = terms.join(known.select("term"), "term", "left_anti")
+    return terms.withColumn("__neg", _negative_expr(negative_when))
+
+
 def build_dictionary(
     parsed: DataFrame,
     negative_when: Column | str | None = None,
@@ -394,25 +461,8 @@ def build_dictionary(
     ``negative_when``: boolean expression over ``term`` choosing the
     negative class (the reference's semantic Negative table routing);
     default: everything positive. Accepts a Column or a SQL string."""
-    spark = parsed.sparkSession
-    npart = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    terms = (
-        parsed.select(F.col("s_term").alias("term"))
-        .unionAll(parsed.select(F.col("p_term").alias("term")))
-        .unionAll(parsed.select(F.col("o_term").alias("term")))
-        .distinct()
-    )
-    classed = terms.withColumn("__neg", _negative_expr(negative_when))
-    pos = _lex_ranks(
-        classed.filter(~F.col("__neg")).select("term"), npart, caches
-    )
-    negs = _lex_ranks(
-        classed.filter(F.col("__neg")).select("term"), npart, caches
-    )
-    return pos.select(F.col("rank").alias("id"), "term").unionAll(
-        negs.select((-F.col("rank")).alias("id"), "term")
+    return _rank_terms(
+        _classed_terms(parsed, negative_when), 0, 0, num_partitions, caches
     )
 
 
@@ -427,9 +477,9 @@ def extend_dictionary(
     ``mode="append"``): assign ids to the terms of ``parsed`` that the
     existing ``dictionary`` does NOT hold, without touching any existing
     id — new positives take max(id)+rank, new negatives min(id)−rank
-    (rank = lexicographic rank among the NEW terms of that class, same
-    two-phase machinery as the initial build). Returns the id rows for
-    the NEW terms only; union with the existing dictionary to encode.
+    (rank = lexicographic rank among the NEW terms of that class, the
+    same ranking as the initial build). Returns the id rows for the NEW
+    terms only; union with the existing dictionary to encode.
 
     Ids stay dense per class across appends (appended blocks are dense
     and contiguous); they are no longer globally term-sorted — that was
@@ -438,32 +488,11 @@ def extend_dictionary(
     new term set): a replayed delivery re-derives the same ids, and two
     DIFFERENT deliveries must append serially (concurrent appends would
     both start from the same max)."""
-    spark = parsed.sparkSession
-    npart = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    terms = (
-        parsed.select(F.col("s_term").alias("term"))
-        .unionAll(parsed.select(F.col("p_term").alias("term")))
-        .unionAll(parsed.select(F.col("o_term").alias("term")))
-        .distinct()
-    )
-    fresh = terms.join(dictionary.select("term"), "term", "left_anti")
-    classed = fresh.withColumn("__neg", _negative_expr(negative_when))
-    row = _append_bases(dictionary)
-    pos = _lex_ranks(
-        classed.filter(~F.col("__neg")).select("term"), npart, caches
-    )
-    negs = _lex_ranks(
-        classed.filter(F.col("__neg")).select("term"), npart, caches
-    )
-    return pos.select(
-        (F.col("rank") + F.lit(int(row["pos_base"]))).alias("id"), "term"
-    ).unionAll(
-        negs.select(
-            (-(F.col("rank") + F.lit(int(row["neg_base"])))).alias("id"),
-            "term",
-        )
+    return _rank_terms(
+        _classed_terms(parsed, negative_when, dictionary),
+        *_append_bases(dictionary),
+        num_partitions,
+        caches,
     )
 
 
@@ -475,10 +504,10 @@ def _negative_expr(negative_when) -> Column:
     return negative_when
 
 
-def _append_bases(dictionary: DataFrame):
+def _append_bases(dictionary: DataFrame) -> tuple[int, int]:
     """One bounded aggregation: the append bases (0 when a class is
     empty, so a first append onto an empty class starts at 1 / -1)."""
-    return dictionary.agg(
+    row = dictionary.agg(
         F.coalesce(
             F.max(F.when(F.col("id") > 0, F.col("id"))), F.lit(0)
         ).alias("pos_base"),
@@ -486,6 +515,7 @@ def _append_bases(dictionary: DataFrame):
             F.max(F.when(F.col("id") < 0, -F.col("id"))), F.lit(0)
         ).alias("neg_base"),
     ).first()
+    return int(row["pos_base"]), int(row["neg_base"])
 
 
 def rank_new_terms(
@@ -493,13 +523,12 @@ def rank_new_terms(
     terms,
     negative_when: Column | str | None = None,
 ) -> list[tuple[int, str]]:
-    """The driver-side twin of ``extend_dictionary`` for term sets sized
-    by a request (SPARQL Update constants and graph names): ``terms`` the
-    ``dictionary`` does not hold → their ``(id, term)`` rows, bit-identical
-    to ``extend_dictionary``'s. ``negative_when`` is evaluated over a local
-    relation (no job); the only job is the append-bases aggregate.
-    Ranking sorts by code point, which is the UTF-8 byte order Spark's
-    binary string ordering uses."""
+    """``extend_dictionary`` for term sets sized by a request (SPARQL
+    Update constants and graph names), as driver rows: ``terms`` the
+    ``dictionary`` does not hold → their ``(id, term)`` rows, identical
+    to ``extend_dictionary``'s. ``negative_when`` is evaluated over a
+    local relation (no job); the only job is the append-bases
+    aggregate."""
     terms = sorted(set(terms))
     if not terms:
         return []
@@ -510,15 +539,7 @@ def rank_new_terms(
         .select("term", _negative_expr(negative_when).alias("__neg"))
         .collect()
     )
-    row = _append_bases(dictionary)
-    out = []
-    for neg, base, sign in ((False, row["pos_base"], 1),
-                            (True, row["neg_base"], -1)):
-        # a NULL class drops the term, as extend_dictionary's filters do
-        ranked = [r["term"] for r in classed if r["__neg"] is neg]
-        out += [(sign * (int(base) + k), t)
-                for k, t in enumerate(ranked, start=1)]
-    return out
+    return _driver_ranks(classed, *_append_bases(dictionary))
 
 
 def encode_triples(parsed: DataFrame, dictionary: DataFrame) -> DataFrame:
@@ -612,34 +633,39 @@ def ingest_rdf(
             num_partitions=num_partitions,
             caches=caches,
         )
-    parsed = parse(spark, path, on_error=on_error).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    if caches is not None:
-        caches.append(parsed)
+    parsed = _persist(parse(spark, path, on_error=on_error), caches)
     if dictionary is None:
-        full = build_dictionary(
-            parsed,
-            negative_when=negative_when,
-            num_partitions=num_partitions,
-            caches=caches,
-        )
+        full = build_dictionary(parsed, negative_when, num_partitions, caches)
     else:
         fresh = extend_dictionary(
-            dictionary,
-            parsed,
-            negative_when=negative_when,
-            num_partitions=num_partitions,
-            caches=caches,
+            dictionary, parsed, negative_when, num_partitions, caches
         )
         full = dictionary.select("id", "term").unionAll(fresh)
-    # persist the dictionary too: every downstream consumer re-traverses
-    # it (three encode joins, SPARQL constant lookups, decode joins) and
-    # would otherwise re-run the two-shuffle rank build each time
-    full = full.persist(StorageLevel.MEMORY_AND_DISK)
+    full = _persist(full, caches)
+    return (*_compact(parsed, encode_triples(parsed, full)), None, full)
+
+
+def _persist(df: DataFrame, caches: list | None) -> DataFrame:
+    """Persist what several consumers re-traverse (a distributed
+    dictionary would re-run its multi-shuffle rank per encode join,
+    lookup and decode). A local relation is held on the driver already:
+    caching it would only add a job to each broadcast of it."""
+    if df.isLocal():
+        return df
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
     if caches is not None:
-        caches.append(full)
-    return encode_triples(parsed, full), None, full
+        caches.append(df)
+    return df
+
+
+def _compact(parsed: DataFrame, *encoded: DataFrame) -> tuple[DataFrame, ...]:
+    """``encoded`` in one partition each when ``parsed`` holds at most
+    ``_CACHE_MAX`` statements. Broadcast encode joins keep the input's
+    splits; a small store is then written as one file per sign class,
+    not one per split, and a large one keeps its parallelism."""
+    if parsed.limit(_CACHE_MAX + 1).count() <= _CACHE_MAX:
+        return tuple(df.coalesce(1) for df in encoded)
+    return encoded
 
 
 def encode_quad_relation(
@@ -654,22 +680,19 @@ def encode_quad_relation(
     quads, dictionary)`` with ONE dictionary over every term: graph
     labels fold in as extra term rows. The input is persisted here
     (dictionary build + two encodes traverse it)."""
-    parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
-    if caches is not None:
-        caches.append(parsed)
+    parsed = _persist(parsed, caches)
     g_terms = parsed.filter(F.col("g_term").isNotNull()).select(
         F.col("g_term").alias("s_term"),
         F.col("g_term").alias("p_term"),
         F.col("g_term").alias("o_term"),
     )
-    dictionary = build_dictionary(
-        parsed.select("s_term", "p_term", "o_term").unionAll(g_terms),
-        negative_when=negative_when,
-        num_partitions=num_partitions,
-        caches=caches,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if caches is not None:
-        caches.append(dictionary)
+    dictionary = _persist(
+        build_dictionary(
+            parsed.select("s_term", "p_term", "o_term").unionAll(g_terms),
+            negative_when, num_partitions, caches,
+        ),
+        caches,
+    )
     triples = encode_triples(
         parsed.filter(F.col("g_term").isNull()).select(
             "s_term", "p_term", "o_term"
@@ -683,5 +706,5 @@ def encode_quad_relation(
     quads = encode_triples(
         named.join(d_g, "g_term").select("g", "s_term", "p_term", "o_term"),
         dictionary,
-    )
-    return triples, quads.select("g", "s", "p", "o"), dictionary
+    ).select("g", "s", "p", "o")
+    return (*_compact(parsed, triples, quads), dictionary)

@@ -172,6 +172,11 @@ class _Turtle:
         line = self.text.count("\n", 0, self.i) + 1
         raise ValueError(f"line {line}: {msg}")
 
+    def peek(self, what: str) -> str:
+        if self.i >= self.n:
+            self.err(f"expected {what}, found the end of the document")
+        return self.text[self.i]
+
     def at(self, chars: str) -> bool:
         return self.i < self.n and self.text[self.i] in chars
 
@@ -308,7 +313,7 @@ class _Turtle:
 
     def term(self, as_subject: bool) -> str:
         text = self.text
-        c = text[self.i]
+        c = self.peek("a term")
         if c == "<":
             return self.iriref()
         if c in "\"'":
@@ -354,7 +359,7 @@ class _Turtle:
         self.i += 1
         self.skip_ws()
         label = self.mint("anon")
-        if self.text[self.i] == "]":
+        if self.at("]"):
             self.i += 1
             return label
         self.po_list(label)
@@ -390,7 +395,7 @@ class _Turtle:
         return cells[0]
 
     def verb(self) -> str:
-        if self.text[self.i] == "<":
+        if self.peek("a predicate") == "<":
             return self.iriref()
         m = _PNAME.match(self.text, self.i)
         if not m:

@@ -3386,7 +3386,7 @@ def _with_construct_vocab(
     template constants absent from the dictionary mint ids through the
     incremental append path (r11) — the extension is QUERY-sized (the
     terms come from the query STRING, the encode_terms precedent) and
-    deterministic (extend_dictionary ranks), and the LOCAL extended
+    deterministic (``rank_new_terms`` ranks), and the LOCAL extended
     dictionary serves both the plan's constant encoding and decode.
     The caller's dictionary object is untouched: the supported
     round-trip for a minted-vocabulary CONSTRUCT is ``decode=True``
@@ -3409,20 +3409,12 @@ def _with_construct_vocab(
     missing = [t for t in tpl_terms if t not in known]
     if not missing:
         return dictionary
-    from rdfproject_msc_spark.sources.ntriples import extend_dictionary
+    from rdfproject_msc_spark.sources.ntriples import rank_new_terms
 
+    rows = rank_new_terms(dictionary.df, missing)  # query-sized
     spark = dictionary.df.sparkSession
-    parsed = spark.createDataFrame(
-        [(t, t, t) for t in missing],
-        "s_term string, p_term string, o_term string",
-    )
-    fresh = extend_dictionary(dictionary.df, parsed)
-    rows = fresh.collect()  # query-sized by construction
     ext = dictionary.df.unionAll(
-        spark.createDataFrame(
-            [(int(r["id"]), r["term"]) for r in rows],
-            "id long, term string",
-        )
+        spark.createDataFrame(rows, "id long, term string")
     )
     return Dictionary(ext, broadcast_hint=dictionary.broadcast_hint)
 

@@ -4,7 +4,10 @@ triple format, and ``load_triples(fmt="nt")`` runs each of the three
 ``ntriples`` module hooks (``parse_ntriples``, ``build_dictionary``,
 ``encode_triples``) exactly once — the hooks rdfbench's tracer wraps to
 report its ``ntriples.*`` layer metrics. The per-file parsers' worker
-code runs in an interpreter that cannot import the package."""
+code runs in an interpreter that cannot import the package. The
+driver and the distributed dictionary ranking give the same ids, STR
+values and encoded rows for a build, an incremental ingest and
+``vacuum(reindex=True)``."""
 
 from __future__ import annotations
 
@@ -255,3 +258,157 @@ def test_parsers_run_where_the_package_cannot_be_imported(
     assert failed.returncode != 0
     assert "ModuleNotFoundError" in failed.stderr.decode()
     assert "rdfproject_msc_spark" in failed.stderr.decode()
+
+
+# One graph for the two dictionary ranking paths. Both sign classes
+# hold non-ASCII and astral terms; U+E000 sorts before U+1F600 by code
+# point (and UTF-8 bytes) but after it in UTF-16, so a ranking in the
+# wrong order shows. NEG_OR_NULL gives the "drop" IRI a NULL class,
+# which drops that term (and its triple) on both paths.
+LINES = [
+    '<http://ex.org/café> <http://ex.org/p> "Zoë" .',
+    '<http://ex.org/a> <http://ex.org/p> "\ue000 private use" .',
+    '<http://ex.org/a> <http://ex.org/p> "\U0001f600 astral" .',
+    "<http://ex.org/a> <http://ex.org/q> <http://ex.org/\U00010000> .",
+    '_:b1 <http://ex.org/p> "中文"@zh .',
+    "<urn:ev:ü> <http://ex.org/p> <urn:ev:\U0001f600> .",
+    "<urn:ev:\ue000> <http://ex.org/q> _:b2 .",
+    "<http://ex.org/a> <http://ex.org/p> <http://ex.org/drop> .",
+]
+NEG_OR_NULL = (
+    "CASE WHEN term LIKE '%drop%' THEN NULL "
+    "ELSE left(term, 2) = '_:' OR term LIKE '<urn:ev%' END"
+)
+NT_DOC = "\n".join(LINES) + "\n"
+DOCS = {
+    "nt": NT_DOC,
+    "ttl": NT_DOC,  # N-Triples is Turtle
+    "nq": "\n".join(
+        LINES[:4]
+        + [line[:-1] + "<urn:ev:graph> ." for line in LINES[4:7]]
+        + [LINES[7][:-1] + "_:g1 ."]
+    )
+    + "\n",
+    "trig": "\n".join(
+        LINES[:4]
+        + ["<urn:ev:graph> {", *LINES[4:7], "}", "_:g1 {", LINES[7], "}"]
+    )
+    + "\n",
+}
+
+
+def _both_paths(monkeypatch, run):
+    """``run()`` under the default term bound, where the fixtures rank
+    on the driver, then with the bound at 0, where they rank
+    distributed."""
+    small = run()
+    with monkeypatch.context() as mp:
+        mp.setattr(ntriples, "_CACHE_MAX", 0)
+        return small, run()
+
+
+def _released(caches):
+    for c in caches:
+        c.unpersist()
+
+
+@pytest.mark.parametrize("fmt", ["nt", "nq", "ttl", "trig"])
+def test_driver_and_distributed_ranking_agree(
+    spark, tmp_path, monkeypatch, fmt
+):
+    from rdfproject_msc_spark.dictionary import _str_values
+
+    path = tmp_path / f"g.{fmt}"
+    path.write_text(DOCS[fmt], encoding="utf-8")
+
+    def run():
+        caches: list = []
+        triples, quads, d = ntriples.ingest_rdf(
+            spark, str(path), fmt, negative_when=NEG_OR_NULL, caches=caches
+        )
+        out = (
+            d.isLocal(),
+            _rows(_str_values(d)),
+            _rows(triples),
+            None if quads is None else _rows(quads),
+        )
+        _released(caches)
+        return out
+
+    small, large = _both_paths(monkeypatch, run)
+    assert (small[0], large[0]) == (True, False)
+    assert small[1:] == large[1:]
+    ids = {t: i for i, t, _ in small[1]}
+    assert "<http://ex.org/drop>" not in ids
+    assert ids['"\ue000 private use"'] < ids['"\U0001f600 astral"']
+    assert -ids["<urn:ev:\ue000>"] < -ids["<urn:ev:\U0001f600>"]
+    assert min(ids["_:b1"], ids["<urn:ev:ü>"]) < 0 < ids['"Zoë"']
+    triples, quads = small[2], small[3]
+    assert len(triples) + len(quads or []) == 7  # the "drop" triple is gone
+
+
+def test_incremental_ingest_agrees_on_both_paths(
+    spark, tmp_path, monkeypatch
+):
+    first, second = tmp_path / "a.nt", tmp_path / "b.nt"
+    first.write_text("\n".join(LINES[:5]) + "\n", encoding="utf-8")
+    second.write_text("\n".join(LINES[3:]) + "\n", encoding="utf-8")
+    base: list = []
+    _, _, d0 = ntriples.ingest_rdf(
+        spark, str(first), "nt", negative_when=NEG_OR_NULL, caches=base
+    )
+
+    def run():
+        caches: list = []
+        triples, _, d = ntriples.ingest_rdf(
+            spark, str(second), "nt", negative_when=NEG_OR_NULL,
+            dictionary=d0, caches=caches,
+        )
+        out = _rows(d), _rows(triples)
+        _released(caches)
+        return out
+
+    old = _rows(d0)
+    small, large = _both_paths(monkeypatch, run)
+    _released(base)
+    assert small == large
+    # existing ids untouched; the new negatives continue their class
+    # (the first file held one) in code-point order
+    assert set(old) <= set(small[0])
+    assert sorted(set(small[0]) - set(old)) == [
+        (-5, "_:b2"),
+        (-4, "<urn:ev:\U0001f600>"),
+        (-3, "<urn:ev:\ue000>"),
+        (-2, "<urn:ev:ü>"),
+    ]
+    assert len(small[1]) == 4
+
+
+def test_vacuum_reindex_agrees_on_both_paths(spark, tmp_path, monkeypatch):
+    path = tmp_path / "g.nt"
+    path.write_text(NT_DOC, encoding="utf-8")
+
+    def run():
+        eng = Engine(spark).load_triples(
+            str(path), fmt="nt", negative_when=NEG_OR_NULL
+        )
+        eng.update(
+            "DELETE DATA { "
+            '<http://ex.org/café> <http://ex.org/p> "Zoë" . '
+            "<urn:ev:ü> <http://ex.org/p> <urn:ev:\U0001f600> . }"
+        )
+        stats = eng.vacuum(reindex=True)
+        out = stats, _rows(eng.dictionary.df), _rows(eng.store.df)
+        eng.close()
+        return out
+
+    small, large = _both_paths(monkeypatch, run)
+    assert small == large
+    stats, d, _ = small
+    assert stats["dropped"] == 4
+    pos = sorted(t for i, t in d if i > 0)
+    neg = sorted(t for i, t in d if i < 0)
+    assert d == sorted(
+        [(k, t) for k, t in enumerate(pos, start=1)]
+        + [(-k, t) for k, t in enumerate(neg, start=1)]
+    )

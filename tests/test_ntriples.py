@@ -2,7 +2,8 @@
 literals with escapes/lang/datatype, comments, malformed lines), the
 dictionary builder vs a DuckDB row_number twin, dense/signed/no-zero id
 invariants, determinism under re-partitioning, encode→decode round-trip,
-Engine fmt="nt" end-to-end, and the no-driver-materialization plan shape."""
+Engine fmt="nt" end-to-end, the no-driver-materialization plan shape over
+the term bound, and the jobs and files of a small cold ingest under it."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ from pyspark.sql import functions as F
 
 from rdfproject_msc_spark.dictionary import Dictionary
 from rdfproject_msc_spark.engine import Engine
+from rdfproject_msc_spark.sources import ntriples
 from rdfproject_msc_spark.sources.ntriples import (
     build_dictionary,
     encode_triples,
@@ -92,7 +94,7 @@ def test_dictionary_dense_signed_ids(spark, nt_path):
     Dictionary(d).validate()  # unique ids, unique terms, no zero
 
 
-def test_dictionary_matches_duckdb_row_number(spark, nt_path):
+def _assert_dictionary_matches_duckdb(spark, nt_path):
     parsed = parse_ntriples(spark, nt_path).cache()
     got = sorted(
         map(tuple, build_dictionary(parsed, "term LIKE '_:%'").collect())
@@ -125,7 +127,20 @@ FROM (SELECT term, term LIKE '_:%' AS neg,
     assert got == want
 
 
-def test_ids_invariant_under_input_partitioning(spark, nt_path):
+def test_dictionary_matches_duckdb_row_number(spark, nt_path):
+    # the fixture is under the default term bound: ranked on the driver
+    _assert_dictionary_matches_duckdb(spark, nt_path)
+
+
+def test_dictionary_matches_duckdb_row_number_distributed(
+    spark, nt_path, monkeypatch
+):
+    monkeypatch.setattr(ntriples, "_CACHE_MAX", 0)  # rank distributed
+    _assert_dictionary_matches_duckdb(spark, nt_path)
+
+
+def test_ids_invariant_under_input_partitioning(spark, nt_path, monkeypatch):
+    monkeypatch.setattr(ntriples, "_CACHE_MAX", 0)  # rank distributed
     parsed = parse_ntriples(spark, nt_path)
     a = sorted(map(tuple, build_dictionary(parsed, num_partitions=2).collect()))
     b = sorted(
@@ -189,10 +204,12 @@ def test_engine_nt_end_to_end(spark, nt_path):
         Engine(spark).load_triples(nt_path, dict_path="/x", fmt="nt")
 
 
-def test_build_plan_never_collects_terms(spark, nt_path):
-    """The dictionary build must stay distributed: no driver-side term-set
-    materialization anywhere in the plan (the broadcasted offsets relation
-    is #partitions-sized, not data-sized) and no Python."""
+def test_build_plan_never_collects_terms(spark, nt_path, monkeypatch):
+    """Over the term bound the dictionary build stays distributed: no
+    driver-side term-set materialization anywhere in the plan (the
+    broadcasted offsets relation is #partitions-sized, not data-sized)
+    and no Python. The bound is forced to 0 so the fixture is over it."""
+    monkeypatch.setattr(ntriples, "_CACHE_MAX", 0)
     parsed = parse_ntriples(spark, nt_path)
     d = build_dictionary(parsed, num_partitions=4)
     d.collect()
@@ -200,6 +217,45 @@ def test_build_plan_never_collects_terms(spark, nt_path):
     final = plan.split("Initial Plan")[0]
     assert "Python" not in final
     assert "CollectLimit" not in final
+
+
+def test_small_cold_ingest_jobs_and_files(
+    spark, nt_path, tmp_path, monkeypatch
+):
+    """Under the term bound a cold ingest ranks its dictionary from one
+    term collect and writes one store file per sign class; the same
+    ingest ranked distributed (bound 0) runs more than twice the jobs."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job():
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    def cold(out):
+        first = last_job()
+        eng = Engine(spark).load_triples(
+            nt_path, fmt="nt", layout="sign_split",
+            negative_when="term LIKE '_:%'",
+        )
+        eng.save(str(out / "store"), dict_path=str(out / "dict"))
+        eng.close()
+        return last_job() - first
+
+    small = cold(tmp_path / "small")
+    with monkeypatch.context() as mp:
+        mp.setattr(ntriples, "_CACHE_MAX", 0)
+        large = cold(tmp_path / "large")
+    assert small <= 12
+    assert large > 2 * small
+    store = tmp_path / "small" / "store"
+    files = sorted(p.parent.name for p in store.rglob("*.parquet"))
+    assert files == ["sign=0", "sign=1"]
+    for name in ("store", "dict"):
+        a, b = (
+            sorted(map(tuple, spark.read.parquet(
+                str(tmp_path / run / name)).collect()))
+            for run in ("small", "large")
+        )
+        assert a == b
 
 
 def test_encode_at_sf(spark, sf_dir, tmp_path):

@@ -1379,8 +1379,9 @@ def test_nt_format_parse_identity_fuzz(spark, tmp_path_factory, stmts, tight_dot
 @settings(**SETTINGS)
 def test_dictionary_ids_match_duckdb_fuzz(spark, tmp_path_factory, stmts):
     """Dense signed ids == DuckDB row_number over the same term set for
-    adversarial (incl. non-ASCII) terms — pins that Spark's UTF8_BINARY
-    sort and DuckDB's memcmp collation agree on the rank order."""
+    adversarial (incl. non-ASCII) terms — pins that the driver ranking's
+    code-point sort and DuckDB's memcmp collation agree on the rank
+    order (tests/test_ingest_rdf.py pins it equal to Spark's)."""
     import duckdb
 
     from rdfproject_msc_spark.sources.ntriples import (

@@ -236,6 +236,28 @@ def test_skip_drops_whole_bad_file_fail_raises(spark, tmp_path):
 @pytest.mark.parametrize(
     "body, msg",
     [
+        ("<urn:a> ", "expected a predicate"),
+        ("<urn:a> <urn:b> [", "expected a predicate"),
+        ("<urn:a> <urn:b> <urn:c> ;", "expected a predicate"),
+        ("<urn:a> <urn:b> ", "expected a term"),
+    ],
+)
+def test_truncated_file_is_a_parse_error(spark, tmp_path, body, msg):
+    """A document that ends inside a statement is malformed like any
+    other: skip mode drops that file alone, fail mode names it."""
+    (tmp_path / "good.ttl").write_text("<urn:x> <urn:y> <urn:z> .\n")
+    (tmp_path / "cut.ttl").write_text(body)
+    got = rows(parse_turtle(spark, str(tmp_path), on_error="skip"))
+    assert got == [("<urn:x>", "<urn:y>", "<urn:z>")]
+    with pytest.raises(Exception, match=msg) as failed:
+        parse_turtle(spark, str(tmp_path), on_error="fail").collect()
+    assert "cut.ttl" in str(failed.value)
+    assert "line 1: " in str(failed.value)
+
+
+@pytest.mark.parametrize(
+    "body, msg",
+    [
         ("(1 2) .", "expected a predicate"),
         ("ex:a ex:list (1 2", "unterminated"),
         ("{ ex:a ex:b ex:c . }", "TriG"),

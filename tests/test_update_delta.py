@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from rdfproject_msc_spark import engine
 from rdfproject_msc_spark.engine import Engine
+from rdfproject_msc_spark.sources import ntriples
 from rdfproject_msc_spark.sources.ntriples import (
     extend_dictionary,
     rank_new_terms,
@@ -124,7 +125,9 @@ _ALPHABET = "az~éÿĀ中퟿�\U00010000\U0001f600"
 
 
 @pytest.mark.parametrize("seed", [1, 2])
-def test_driver_ranking_matches_extend_dictionary(spark, seed):
+def test_driver_ranking_matches_extend_dictionary(spark, seed, monkeypatch):
+    # the term bound at 0: extend_dictionary ranks distributed
+    monkeypatch.setattr(ntriples, "_CACHE_MAX", 0)
     rng = random.Random(seed)
 
     def term():
