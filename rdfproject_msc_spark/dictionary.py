@@ -14,7 +14,8 @@ driver: term → id for ``lookup_terms``/``encode_terms``, and id → term
 for ``decode_ids`` (the endpoint's one-document results). A dictionary
 of at most ``_CACHE_MAX`` terms — the reference's HashMap, bounded —
 is collected whole on the first lookup its maps cannot answer, so
-every later key, present or absent, answers without a job. A larger
+every later key, present or absent, answers without a job, and an
+update's new terms take their append bases from its ids. A larger
 one keeps two bounded
 caches instead: a lookup runs one filter job for the keys its cache
 has not seen and answers the rest from the cache; a key the
@@ -207,6 +208,11 @@ class Dictionary:
                 self._ids = {r["term"]: r["id"] for r in rows}
                 self._terms = {r["id"]: r["term"] for r in rows}
         return bool(self._whole)
+
+    def held_ids(self):
+        """Every id of the dictionary when a lookup has collected it whole
+        onto the driver, else None."""
+        return self._terms.keys() if self._whole else None
 
     def lookup_terms(self, terms: list[str]) -> dict[str, int]:
         """Non-raising bounded lookup (term → id): terms absent from the

@@ -62,6 +62,10 @@ _ANSWER_CACHE_BYTES = 16 << 20
 # local disk instead of failing
 HELD_BYTES = 8 << 20
 
+# the Parquet columns ``save(dict_path=…)`` writes, given to ``open`` so
+# it reads the dictionary without a footer-inference job
+DICTIONARY_SCHEMA = "id long, term string"
+
 
 def _reads(df: DataFrame, rdd_id: int) -> bool:
     """Whether ``df``'s plan has the checkpoint ``rdd_id`` as a leaf."""
@@ -267,14 +271,21 @@ class Engine:
         parquet). ``dict_broadcast`` defaults False: built dictionaries
         scale with the corpus.
 
+        ``open`` reads what ``save`` wrote: the store and the dictionary
+        are read with the schemas ``save`` writes
+        (``store.TRIPLE_SCHEMA``, ``DICTIONARY_SCHEMA``), so no Spark job
+        infers them from the Parquet footers. Parquet from elsewhere goes
+        through ``load_triples(fmt="parquet")``, which keeps inference.
+
         A small snapshot is held in memory. When the files under
         ``path`` come to at most ``HELD_BYTES`` (8 MiB of Parquet,
         measured on the driver with no Spark job), the store is read
         once into a local checkpoint, ``sign`` column included, and
         every read scans that instead of reopening the files; the
         dictionary under ``dict_path`` follows the same rule. Each
-        costs one job here. A larger relation is read as Parquet on
-        every scan, so a sign-split store keeps its directory pruning.
+        costs one job here, and those checkpoints are the only jobs
+        ``open`` runs. A larger relation is read as Parquet on every
+        scan, so a sign-split store keeps its directory pruning.
         Held relations are released once nothing in the engine reads
         them: on the next ``open``, ``load_triples`` or ``vacuum``
         that replaces them, and on ``close``/``release_caches``, which
@@ -292,7 +303,7 @@ class Engine:
             self._held.append((held, held, read))
         self.store = store
         if dict_path is not None:
-            read = self.spark.read.parquet(dict_path)
+            read = self.spark.read.schema(DICTIONARY_SCHEMA).parquet(dict_path)
             held = self._hold(read, dict_path)
             dictionary = Dictionary(
                 read if held is None else held, broadcast_hint=dict_broadcast

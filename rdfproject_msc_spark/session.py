@@ -21,6 +21,18 @@ chosen so the same code scales on a multi-executor cluster:
   code, so errors lose nothing a user could act on. Spark documents
   the capture as having non-trivial overhead. PySpark reads the
   setting once per process, at its first DataFrame API call.
+- Bounded collects read one wave of cores
+  (``spark.sql.limit.initialNumPartitions`` = the session's cores). A
+  ``limit(n).collect()``, ``take``, ``first`` or ``isEmpty`` starts by
+  scanning that many partitions; Spark's default of one runs a second
+  job whenever the first partition holds fewer than ``n`` rows. The
+  engine's capped collects (the endpoint's result cap, the whole
+  dictionary collect, the update folds and the ingest's term collect)
+  are sized to answer in one job, and on a relation of at most
+  ``cores`` partitions they now do. The cost at scale: such an action
+  launches up to ``cores`` tasks in its first wave where one would
+  have served, each stopping once it has ``n`` rows, so a ``first``
+  over a large relation may read ``cores`` splits instead of one.
 """
 
 from __future__ import annotations
@@ -49,6 +61,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.limit.initialNumPartitions", str(cpus))
         # NOTE: nanos-timestamp handling (events.parquet) lives in
         # sources.tables.load_table, which must work on ANY session —
         # including externally-built ones — so it is not configured here.

@@ -74,7 +74,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from rdfproject_msc_spark.dictionary import _CACHE_MAX
+from rdfproject_msc_spark.dictionary import _CACHE_MAX, Dictionary
 
 # Line validation (ONE anchored rlike per line) + term tokenization (ONE
 # global extract per line): subject (IRI | bnode), predicate (IRI), object
@@ -519,7 +519,7 @@ def _append_bases(dictionary: DataFrame) -> tuple[int, int]:
 
 
 def rank_new_terms(
-    dictionary: DataFrame,
+    dictionary: Dictionary,
     terms,
     negative_when: Column | str | None = None,
 ) -> list[tuple[int, str]]:
@@ -527,19 +527,29 @@ def rank_new_terms(
     Update constants and graph names), as driver rows: ``terms`` the
     ``dictionary`` does not hold → their ``(id, term)`` rows, identical
     to ``extend_dictionary``'s. ``negative_when`` is evaluated over a
-    local relation (no job); the only job is the append-bases
-    aggregate."""
+    local relation (no job). A dictionary held whole on the driver gives
+    the append bases from its ids, so the ranking runs no job; a larger
+    one runs the append-bases aggregate."""
     terms = sorted(set(terms))
     if not terms:
         return []
     from rdfproject_msc_spark.store import local_relation
 
+    spark = dictionary.df.sparkSession
     classed = (
-        local_relation(dictionary.sparkSession, [(t,) for t in terms], ["term"])
+        local_relation(spark, [(t,) for t in terms], ["term"])
         .select("term", _negative_expr(negative_when).alias("__neg"))
         .collect()
     )
-    return _driver_ranks(classed, *_append_bases(dictionary))
+    ids = dictionary.held_ids()
+    if ids is None:
+        bases = _append_bases(dictionary.df)
+    else:
+        bases = (
+            max((i for i in ids if i > 0), default=0),
+            max((-i for i in ids if i < 0), default=0),
+        )
+    return _driver_ranks(classed, *bases)
 
 
 def encode_triples(parsed: DataFrame, dictionary: DataFrame) -> DataFrame:

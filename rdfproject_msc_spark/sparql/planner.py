@@ -3411,7 +3411,7 @@ def _with_construct_vocab(
         return dictionary
     from rdfproject_msc_spark.sources.ntriples import rank_new_terms
 
-    rows = rank_new_terms(dictionary.df, missing)  # query-sized
+    rows = rank_new_terms(dictionary, missing)  # query-sized
     spark = dictionary.df.sparkSession
     ext = dictionary.df.unionAll(
         spark.createDataFrame(rows, "id long, term string")

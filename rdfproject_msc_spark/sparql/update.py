@@ -76,7 +76,8 @@ Scale design (the asymmetry drives every join below):
   by the query STRING — driver-side handling is query-sized, never
   data-sized (the ``encode_terms`` precedent). New terms rank on the
   driver (``rank_new_terms``) with the ids ``extend_dictionary`` would
-  give; the one job is the append-bases aggregate.
+  give. A dictionary held whole on the driver gives the append bases,
+  so the ranking runs no job.
 - A change that fits a local delta (``LOCAL_DELTA_ROWS``) folds on the
   driver: a hash-set filter over the base is its only job, and reads
   apply the sets as that filter plus a local relation — no join and no
@@ -578,7 +579,7 @@ def _append_terms(spark, dictionary: Dictionary, terms, negative_when):
     → (extended Dictionary, {term: id})."""
     from rdfproject_msc_spark.sources.ntriples import rank_new_terms
 
-    rows = rank_new_terms(dictionary.df, terms, negative_when)
+    rows = rank_new_terms(dictionary, terms, negative_when)
     return dictionary.extend(rows), {t: i for i, t in rows}
 
 

@@ -50,6 +50,12 @@ CLUSTER_KEYS = ("s", "p", None)
 TRIPLE_KEYS = ("s", "p", "o")
 QUAD_KEYS = ("g", "s", "p", "o")
 
+# the Parquet data columns ``write`` and ``write_quads`` produce, given to
+# ``read``/``read_quads`` so an open runs no footer-inference job; the
+# partition columns (``sign``, ``g``) come from the directory names, which
+# Spark reads on the driver
+TRIPLE_SCHEMA = "s long, p long, o long"
+
 # a folded delta up to this many rows is held on the driver (reads apply
 # it as a filter and a local relation; nothing to release); a larger one
 # is a localCheckpoint, released explicitly once an update supersedes it
@@ -333,6 +339,7 @@ class TripleStore:
         self._delta: Delta | None = None
         self._qdelta: Delta | None = None
         self._pinned: tuple = ()
+        self._views: dict = {}
         # invariant: no (s, p, o) triple appears in more than one named
         # graph. The RDF-merge semantics of a multi-graph FROM then need
         # NO duplicate elimination, so the planner skips the merge's
@@ -371,25 +378,37 @@ class TripleStore:
     def _spo(df: DataFrame) -> DataFrame:
         return df.select("s", "p", "o")
 
-    def _with_delta(self, base: DataFrame, where=None) -> DataFrame:
-        base = self._spo(base)
-        if self._delta is None:
-            return base
-        return self._delta.compose(base, where)
+    def _view(self, name: str, sign: int | None) -> DataFrame:
+        """The ``name`` view of this base and delta, composed on first use
+        and kept: a planner reads it once per pattern scan, and each
+        composition costs a round of DataFrame analysis. Copies share
+        the kept views and then replace ``_df`` or ``_delta``
+        (``with_changes``, ``with_base``, ``Engine._release_held``), so a
+        view is reused only while both are the ones it was built from."""
+        kept = self._views.get(name)
+        if kept is not None and kept[0] is self._df and kept[1] is self._delta:
+            return kept[2]
+        base, where = self._df, None
+        if sign is not None:
+            where = F.col("s") >= 0 if sign else F.col("s") < 0
+            base = base.filter(
+                F.col("sign") == sign if self._has_sign else where
+            )
+        out = self._spo(base)
+        if self._delta is not None:
+            out = self._delta.compose(out, where)
+        self._views[name] = (self._df, self._delta, out)
+        return out
 
     @property
     def df(self) -> DataFrame:
         """The full triple relation (Positive ∪ Negative when split)."""
-        return self._with_delta(self._df)
+        return self._view("df", None)
 
     @property
     def positive(self) -> DataFrame:
         """Subjects ≥ 0 (P4; PartitionQueryingBRDSubject.java:100-104)."""
-        if self._has_sign:
-            base = self._df.filter(F.col("sign") == 1)
-        else:
-            base = self._df.filter(F.col("s") >= 0)
-        return self._with_delta(base, F.col("s") >= 0)
+        return self._view("positive", 1)
 
     @property
     def negative(self) -> DataFrame:
@@ -402,11 +421,7 @@ class TripleStore:
         """Negative side WITHOUT the broadcast hint: the right view for
         plans that need the pruned scan (sign=0 PartitionFilter on a
         persisted store) but must leave the join strategy to AQE."""
-        if self._has_sign:
-            base = self._df.filter(F.col("sign") == 0)
-        else:
-            base = self._df.filter(F.col("s") < 0)
-        return self._with_delta(base, F.col("s") < 0)
+        return self._view("negative_raw", 0)
 
     # backwards-compatible private alias
     _negative_raw = negative_raw
@@ -513,8 +528,13 @@ class TripleStore:
     def read_quads(spark: SparkSession, path: str) -> DataFrame:
         """Open a ``write_quads`` layout without re-shuffling; pass to
         ``attach_quads`` / the ``quads=`` constructor arg (or use
-        ``attach_quads_path`` to auto-apply the disjointness proof)."""
-        return spark.read.parquet(path)
+        ``attach_quads_path`` to auto-apply the disjointness proof).
+        The data columns are given (``TRIPLE_SCHEMA``; ``g`` comes from
+        the directory names), so the open runs no Spark job. Quads with
+        ``g`` as a data column instead have no ``g`` directories and are
+        read with the schema inferred."""
+        df = spark.read.schema(TRIPLE_SCHEMA).parquet(path)
+        return df if "g" in df.columns else spark.read.parquet(path)
 
     def attach_quads_path(self, spark: SparkSession, path: str) -> None:
         """Open a ``write_quads`` layout AND apply its write-time
@@ -549,6 +569,7 @@ class TripleStore:
     def _copy(self) -> "TripleStore":
         new = TripleStore.__new__(TripleStore)
         new.__dict__.update(self.__dict__)
+        new._views = dict(self._views)
         return new
 
     def with_changes(
@@ -649,8 +670,10 @@ class TripleStore:
     ) -> "TripleStore":
         """Open a persisted store WITHOUT re-shuffling: the on-disk layout IS
         the layout. The ``sign`` partition column (when present) is kept in
-        the backing df so the split views prune at directory level."""
-        df = spark.read.parquet(path)
+        the backing df so the split views prune at directory level. The
+        data columns are given (``TRIPLE_SCHEMA``), so the open runs no
+        Spark job."""
+        df = spark.read.schema(TRIPLE_SCHEMA).parquet(path)
         store = cls.__new__(cls)
         store.layout = layout
         store.cluster_by = cluster_by
@@ -660,5 +683,6 @@ class TripleStore:
         store._quads = None  # attach_quads(read_quads(...)) to add graphs
         store._delta = store._qdelta = None
         store._pinned = ()
+        store._views = {}
         store.graphs_disjoint = kwargs.get("graphs_disjoint", False)
         return store

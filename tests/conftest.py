@@ -19,6 +19,24 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` → (Spark jobs ``fn()`` ran, its result): job
+    ids compared before and after, once the listener bus is drained."""
+    sc = spark.sparkContext
+
+    def job_ids() -> set:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    def count(fn):
+        before = job_ids()
+        out = fn()
+        return len(job_ids() - before), out
+
+    return count
+
+
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",

@@ -227,3 +227,52 @@ def test_vacuum_checkpoints_release_once_unread(spark, saved):
     eng.open(store, layout="sign_split", dict_path=dct)
     eng.close()
     assert _persisted(spark) <= before
+
+
+def test_open_runs_only_the_held_checkpoints(spark, saved, count_jobs):
+    """``open`` reads the store and dictionary with the schemas ``save``
+    writes: the two local checkpoints are its only jobs, none infers a
+    schema from the Parquet footers."""
+    store, dct = saved
+    eng = Engine(spark)
+    jobs, _ = count_jobs(
+        lambda: eng.open(store, layout="sign_split", dict_path=dct)
+    )
+    assert len(eng._held) == 2
+    assert jobs == 2
+    eng.close()
+
+
+def test_insert_data_ranks_from_the_held_dictionary(
+    spark, saved, count_jobs, monkeypatch
+):
+    """New terms of an INSERT DATA take their append bases from the
+    dictionary a lookup already holds whole: the ranking runs no job
+    and gives the ids the aggregate over the dictionary would."""
+    from rdfproject_msc_spark.sources import ntriples
+
+    eng = opened(spark, saved)
+    assert answer(eng, READS["chain"])  # holds the dictionary
+    held = eng.dictionary
+    assert held.held_ids() is not None
+    rank, ranked = ntriples.rank_new_terms, []
+
+    def counted(*args, **kwargs):
+        ranked.append(count_jobs(lambda: rank(*args, **kwargs)))
+        return ranked[-1][1]
+
+    monkeypatch.setattr(ntriples, "rank_new_terms", counted)
+    eng.update(P + 'INSERT DATA { ex:e ex:name "Eve" . <urn:ev9> ex:by ex:e }')
+    [(jobs, rows)] = ranked
+    assert jobs == 0
+    pos, neg = ntriples._append_bases(held.df)
+    assert sorted(rows) == [
+        (-(neg + 1), "<urn:ev9>"),
+        (pos + 1, '"Eve"'),
+        (pos + 2, f"<{EX}e>"),
+    ]
+    q = P + "SELECT ?n WHERE { ?e ex:by ex:e . ex:e ex:name ?n }"
+    assert answer(eng, q) == [json.dumps(
+        {"n": {"type": "literal", "value": "Eve"}}, sort_keys=True
+    )]
+    eng.close()

@@ -82,12 +82,6 @@ def calls(monkeypatch):
     return n
 
 
-def _job_ids(spark) -> set:
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return set(sc.statusTracker().getJobIdsForGroup(None))
-
-
 def _answer(eng, query: str) -> list:
     """The endpoint's JSON answer as sorted value tuples, asked twice
     (the second is a hit) and checked against an uncached plan."""
@@ -118,7 +112,7 @@ GRAPH_QUERY = (
 )
 
 
-def test_repeated_request_skips_parse_and_plan(spark, eng, calls):
+def test_repeated_request_skips_parse_and_plan(eng, calls, count_jobs):
     # a new constant per request: a first run resolves it with a job
     for fmt, query in (
         ("json", knows("a")),
@@ -130,15 +124,16 @@ def test_repeated_request_skips_parse_and_plan(spark, eng, calls):
         ("nt", GRAPH_QUERY),
         ("turtle", GRAPH_QUERY),
     ):
+        def ask():
+            return _run_query(eng, query, fmt, 100, False)
+
         calls.clear()
-        before = _job_ids(spark)
-        first = _run_query(eng, query, fmt, 100, False)
-        assert _job_ids(spark) - before, fmt
+        jobs, first = count_jobs(ask)
+        assert jobs, fmt
         assert calls["parse"] and calls["plan"], fmt
         calls.clear()
-        before = _job_ids(spark)
-        again = _run_query(eng, query, fmt, 100, False)
-        assert _job_ids(spark) - before == set(), fmt
+        jobs, again = count_jobs(ask)
+        assert jobs == 0, fmt
         assert not calls, fmt
         assert again == first
         assert again[0].encode("utf-8") == first[0].encode("utf-8")

@@ -304,3 +304,18 @@ def test_results_csv_unescapes_unicode_escapes(spark, tmp_path):
     )
     assert "café" in raw
     assert "bs\bmid\fend" in raw
+
+
+def test_capped_frame_under_the_cap_collects_in_one_job(
+    spark, count_jobs, tmp_path
+):
+    """The session reads one wave of cores per bounded collect, so a
+    result under the cap over at most that many partitions takes one
+    job, however few rows its first partition holds."""
+    cores = spark.sparkContext.defaultParallelism
+    spark.range(0, 40, 1, cores).write.parquet(str(tmp_path / "r"))
+    df = spark.read.parquet(str(tmp_path / "r")).filter("id % 7 = 3")
+    assert 1 < df.rdd.getNumPartitions() <= cores
+    jobs, rows = count_jobs(lambda: capped_frame(df, 100).collect())
+    assert sorted(r.id for r in rows) == [3, 10, 17, 24, 31, 38]
+    assert jobs == 1

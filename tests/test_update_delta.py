@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rdfproject_msc_spark import engine
+from rdfproject_msc_spark.dictionary import Dictionary
 from rdfproject_msc_spark.engine import Engine
 from rdfproject_msc_spark.sources import ntriples
 from rdfproject_msc_spark.sources.ntriples import (
@@ -126,8 +127,6 @@ _ALPHABET = "az~éÿĀ中퟿�\U00010000\U0001f600"
 
 @pytest.mark.parametrize("seed", [1, 2])
 def test_driver_ranking_matches_extend_dictionary(spark, seed, monkeypatch):
-    # the term bound at 0: extend_dictionary ranks distributed
-    monkeypatch.setattr(ntriples, "_CACHE_MAX", 0)
     rng = random.Random(seed)
 
     def term():
@@ -135,27 +134,53 @@ def test_driver_ranking_matches_extend_dictionary(spark, seed, monkeypatch):
         return cls + "".join(rng.choice(_ALPHABET) for _ in range(3)) + ">"
 
     old = sorted({term() for _ in range(20)})
-    dictionary = spark.createDataFrame(
-        [(i + 5, t) for i, t in enumerate(old)] + [(-3, "<urn:ev-seed>")],
-        "id long, term string",
-    )
-    new = sorted({term() for _ in range(40)} - set(old))
+    positives = [(i + 5, t) for i, t in enumerate(old)]
+    seeded = positives + [(-3, "<urn:ev-seed>")]
+    grown_by = sorted({term() for _ in range(10)} - set(old))
+    new = sorted({term() for _ in range(40)} - set(old) - set(grown_by))
     parsed = spark.createDataFrame(
         [(t, t, t) for t in new], "s_term string, p_term string, o_term string"
     )
-    for neg in (F.col("term").startswith("<urn:x"), NEG, None):
+
+    def unheld(rows) -> Dictionary:
+        return Dictionary(spark.createDataFrame(rows, "id long, term string"))
+
+    def held(rows) -> Dictionary:
+        """A dictionary its first lookup collects whole onto the driver."""
+        d = unheld(rows)
+        d.lookup_terms([rows[0][1]])
+        assert d.held_ids() is not None
+        return d
+
+    def check(dictionaries, neg):
         caches: list = []
         want = sorted(
             map(
                 tuple,
                 extend_dictionary(
-                    dictionary, parsed, negative_when=neg, caches=caches
+                    dictionaries[0].df, parsed, negative_when=neg,
+                    caches=caches,
                 ).collect(),
             )
         )
         for c in caches:
             c.unpersist()
-        assert sorted(rank_new_terms(dictionary, new, neg)) == want
+        for d in dictionaries:
+            assert sorted(rank_new_terms(d, new, neg)) == want
+
+    # the bases of a held dictionary with an empty Negative class (base
+    # 0), and of one grown by a driver-row extend
+    check([held(positives)], NEG)
+    first = held(seeded)
+    grown = first.extend(rank_new_terms(first, grown_by, NEG))
+    assert grown.held_ids() is not None
+    check([grown], NEG)
+    # the term bound at 0: extend_dictionary ranks distributed; against
+    # it, the append-bases aggregate and the bases of a held dictionary
+    monkeypatch.setattr(ntriples, "_CACHE_MAX", 0)
+    for neg in (F.col("term").startswith("<urn:x"), NEG, None):
+        assert unheld(seeded).held_ids() is None
+        check([unheld(seeded), held(seeded)], neg)
 
 
 def test_readded_and_deleted_rows_roundtrip_save_open(spark, saved, tmp_path):
